@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -24,7 +25,7 @@ object Bench {
       .filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
         try spark.conf.set(k, v)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"WARN: extra conf $k=$v not applied: $e") }
       })
     // warmup: JVM/codegen/parquet-listing costs land here, not on the
@@ -42,7 +43,7 @@ object Bench {
       new java.io.File(sfDir).listFiles()
         .filter(_.getName.endsWith(".parquet")).foreach { f =>
           try spark.read.parquet(f.getPath).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
         }
       // Session-scoped graph artifacts are the analogue of the
       // reference's explicit CSR step (csr_creation: the CSR is built
@@ -85,7 +86,7 @@ object Bench {
         """trade MATCH (c:Customer)-[pl:Placed]->(o:Order)-[ct:Contains]->(p:Part)
            COLUMNS (c.c_custkey AS k)""")
         .queryExecution.analyzed
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     finally OpCaches.releaseAll()
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
     // optional comma-separated subset (e.g. the data-scaling queries for
@@ -102,7 +103,7 @@ object Bench {
       // instead of the operator
       val ok =
         try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
         finally OpCaches.releaseAll() // operator caches die with the query
       // a failed query must be visibly failed in the artifact, not a
       // plausible-looking wall time
@@ -147,7 +148,7 @@ object Bench {
         } catch {
           // a missing ann_split field in the artifact must be
           // attributable, not silent
-          case t: Throwable =>
+          case NonFatal(t) =>
             System.err.println(s"WARN ann_split failed: $t")
             ""
         }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import scala.util.control.NonFatal
 
 /** Dumps `.explain("formatted")` for declared queries to files — the
   * optimization-round plan evidence (`plans/rNN/<query>_{before,after}.txt`).
@@ -37,7 +38,7 @@ object PlanDump {
       .filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
         try spark.conf.set(k, v)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"WARN: extra conf $k=$v not applied: $e") }
       })
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

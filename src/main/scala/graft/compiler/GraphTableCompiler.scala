@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model._
 import graft.pgq._
-import graft.graph.PathFinder
+import graft.graph.{PathFinder, PlanMemo}
 
 /** Compiles a [[MatchSpec]] (the SQL/PGQ `GRAPH_TABLE(... MATCH ...)` body)
   * to a plain DataFrame — the Spark-native analogue of the reference's
@@ -24,66 +24,26 @@ import graft.graph.PathFinder
   */
 object GraphTableCompiler {
 
-  /** Session-wide verdicts of the non-unique-vertex probe, keyed by
-    * (analyzed-plan hash, key tuple) — bounded LRU. */
-  private[compiler] val uniqueKeyVerdicts =
-    new java.util.LinkedHashMap[(Int, String), java.lang.Boolean](
-      32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), java.lang.Boolean])
-          : Boolean = size() > 64
-    }
+  /** Non-unique-vertex probe verdicts by lower-cased key tuple. */
+  private val uniqueKeyVerdicts = new PlanMemo[Boolean](64)
 
-  /** SESSION-scoped memo for the dense-id mapping frames (composite
-    * rowid maps, dense edge ids). These were per-compile caches, which
-    * made every graphTable() call (a) re-run the distinct+sort+
+  /** Dense-id mapping frames (composite rowid maps, dense edge ids) by
+    * tag, keyed on the BASE table plan. These were per-compile caches,
+    * which made every graphTable() call (a) re-run the distinct+sort+
     * zipWithIndex jobs at COMPILE time and (b) produce a FRESH
     * RDD-backed plan, so every downstream plan-identity memo (edge
     * memo, gate memo, session edge index) missed on every call — the
     * measured q93 warm-compile wall was exactly these rebuild jobs.
-    * It also leaked one persisted mapping per compile. Keyed like
-    * [[graft.graph.PathFinder]]'s edge memos: (session identity,
-    * 32-bit semanticHash of the BASE table plan, tag) as the index,
-    * the canonicalized base plan string as proof (a hash collision is
-    * a miss, never a wrong frame); a data change produces a different
-    * base plan. Bounded LRU; eviction unpersists (lazy consumers
+    * Every frame the memo lets go of is unpersisted (lazy consumers
     * recompute — same contract as the session edge index). */
-  private val idMapMemo =
-    new java.util.LinkedHashMap[(Int, Int, String), (String, DataFrame)](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Int, String), (String, DataFrame)])
-          : Boolean = {
-        val evict = size() > 16
-        if (evict) e.getValue._2.unpersist(false)
-        evict
-      }
-    }
+  private[graft] val idMapMemo =
+    new PlanMemo[DataFrame](16, df => { df.unpersist(false); () })
 
-  /** Spec hook: drop every cached id-mapping frame. */
-  private[graft] def clearIdMapMemo(): Unit = idMapMemo.synchronized {
-    val it = idMapMemo.values().iterator()
-    while (it.hasNext) it.next()._2.unpersist(false)
-    idMapMemo.clear()
-    localMapMemo.synchronized(localMapMemo.clear())
-  }
-
-  /** Session memo of COLLECTED (`__from` → `__to`) bijection maps for
-    * the size-gated local translation path — Some(map) under the gate,
-    * None (= use the distributed join pipeline) over it. Keyed/proved
-    * like [[idMapMemo]] (semanticHash index, canonicalized plan +
-    * data-snapshot token proof). Entries are plain driver maps bounded
-    * by the gate, so eviction needs no unpersist. */
-  private val localMapMemo =
-    new java.util.LinkedHashMap[(Int, Int), (String, Option[Map[Long, Long]])](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Int),
-            (String, Option[Map[Long, Long]])]): Boolean = size() > 16
-    }
-
-  /** Count of local-map COLLECTS (memo misses) — spec hook. */
-  @volatile private[graft] var localMapBuilds: Long = 0L
+  /** COLLECTED (`__from` → `__to`) bijection maps for the size-gated
+    * local translation path, by gate value — Some(map) under the gate,
+    * None (= use the distributed join pipeline) over it. Entries are
+    * plain driver maps bounded by the gate. */
+  private val localMapMemo = new PlanMemo[Option[Map[Long, Long]]](16)
 
   /** Size-gated driver collect of a two-long-column bijection frame:
     * Some(map) when the pair set fits
@@ -96,67 +56,26 @@ object GraphTableCompiler {
     val gate = spark.conf
       .get("spark.graft.compiler.localMapMaxRows", "65536").toLong
     if (gate <= 0 || gate > Int.MaxValue - 1) return None
-    val key = (System.identityHashCode(spark),
-      m.queryExecution.analyzed.semanticHash())
-    lazy val p = m.queryExecution.analyzed.canonicalized.toString +
-      "#tok=" + PathFinder.dataSnapshotToken(m) + "#gate=" + gate
-    localMapMemo.synchronized {
-      val hit = localMapMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
-    }
-    localMapBuilds += 1
-    val rows = m.limit(gate.toInt + 1).collect()
-    // Bijection contract, asserted at collect time: a null key/value
-    // would unbox to 0L (a spurious 0 -> x mapping the join branch's
-    // null-never-matches semantics would not emit), and a duplicate
-    // __from would silently collapse to one entry where the join branch
-    // emits both matches. Either defect → fall back to the join path.
-    val res = if (rows.length <= gate && rows.forall(r =>
-        !r.isNullAt(0) && !r.isNullAt(1))) {
-      val built = rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
-      if (built.size == rows.length) Some(built) else None
-    } else None
-    localMapMemo.synchronized { localMapMemo.put(key, (p, res)) }
-    res
-  }
-
-  /** Count of id-map BUILDS (memo misses) — spec hook for the
-    * build-once contract. */
-  @volatile private[graft] var idMapBuilds: Long = 0L
-
-  private def sessionIdMap(spark: SparkSession, base: DataFrame,
-      tag: String)(build: => DataFrame): DataFrame = {
-    val key = (System.identityHashCode(spark),
-      base.queryExecution.analyzed.semanticHash(), tag)
-    // proof = canonicalized plan + data-snapshot token
-    // (PathFinder.planIdentity's discipline): same-path re-reads after a
-    // file append/overwrite canonicalize identically, so without the
-    // token the memo would serve stale persisted mappings — wrong
-    // results, not a perf miss
-    lazy val p = base.queryExecution.analyzed.canonicalized.toString +
-      "#tok=" + PathFinder.dataSnapshotToken(base)
-    idMapMemo.synchronized {
-      val hit = idMapMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
-    }
-    idMapBuilds += 1
-    val built = build
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // put under the lock with a re-check: the loser of a concurrent
-    // build race — or an entry displaced by a hash collision with a
-    // different proof — must be unpersisted here, because
-    // removeEldestEntry only fires on size-eviction and the displaced
-    // frame would otherwise stay cached for the session
-    idMapMemo.synchronized {
-      val hit = idMapMemo.get(key)
-      if (hit != null && hit._1 == p) { built.unpersist(false); hit._2 }
-      else {
-        val prev = idMapMemo.put(key, (p, built))
-        if (prev != null) prev._2.unpersist(false)
-        built
-      }
+    localMapMemo.getOrBuild(PlanMemo.id(m), gate) {
+      val rows = m.limit(gate.toInt + 1).collect()
+      // Bijection contract, asserted at collect time: a null key/value
+      // would unbox to 0L (a spurious 0 -> x mapping the join branch's
+      // null-never-matches semantics would not emit), and a duplicate
+      // __from would silently collapse to one entry where the join branch
+      // emits both matches. Either defect → fall back to the join path.
+      if (rows.length <= gate && rows.forall(r =>
+          !r.isNullAt(0) && !r.isNullAt(1))) {
+        val built = rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        if (built.size == rows.length) Some(built) else None
+      } else None
     }
   }
+
+  private def sessionIdMap(base: DataFrame, tag: String)(
+      build: => DataFrame): DataFrame =
+    idMapMemo.getOrBuild(PlanMemo.id(base), tag) {
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   private final case class Binding(alias: String, isVertex: Boolean,
       table: String, keyCols: Seq[String] = Nil)
@@ -366,7 +285,7 @@ object GraphTableCompiler {
         // session memo: same rationale as rowidMapping — a fresh
         // zipWithIndex RDD per compile re-paid the sort jobs and broke
         // downstream plan-identity memos
-        sessionIdMap(spark, df, "eid:" + order.mkString("\u0001")) {
+        sessionIdMap(df, "eid:" + order.mkString("\u0001")) {
           graft.graph.Snapshot.denseEdgeIds(spark, df, order, "__geid")
         }
       })
@@ -556,30 +475,15 @@ object GraphTableCompiler {
     def hasDuplicateKeysTable(tableName: String, keys: Seq[String])
         : Boolean = {
       val df = resolver(spark, tableName)
-      // session-wide memo keyed by the analyzed plan + data-snapshot
-      // token (file listings canonicalize by root path, so the token —
-      // not the plan — is what moves when files are appended/overwritten
-      // in place), and repeated queries over the same tables skip
-      // the probe job entirely (it cost ~0.3 s of local-mode job
-      // overhead PER QUERY on the composite-path bench set)
-      val k = (df.queryExecution.analyzed.semanticHash(),
-        PathFinder.dataSnapshotToken(df) + ":" +
-          keys.map(_.toLowerCase).mkString(","))
-      val dup = GraphTableCompiler.uniqueKeyVerdicts.synchronized {
-        GraphTableCompiler.uniqueKeyVerdicts.get(k)
-      } match {
-        case null =>
-          val d = df.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__c"))
-            .filter(col("__c") > 1).limit(1).count() > 0
-          GraphTableCompiler.uniqueKeyVerdicts.synchronized {
-            GraphTableCompiler.uniqueKeyVerdicts.put(k, java.lang.Boolean
-              .valueOf(d))
-          }
-          d
-        case v => v.booleanValue()
+      // repeated queries over the same tables skip the probe job
+      // entirely (it cost ~0.3 s of local-mode job overhead PER QUERY on
+      // the composite-path bench set)
+      GraphTableCompiler.uniqueKeyVerdicts.getOrBuild(PlanMemo.id(df),
+          keys.map(_.toLowerCase).mkString(",")) {
+        df.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("__c"))
+          .filter(col("__c") > 1).limit(1).count() > 0
       }
-      dup
     }
 
     def numericKey(vt: VertexTable, key: String): Boolean =
@@ -677,7 +581,7 @@ object GraphTableCompiler {
         // it every call re-ran the sort+zipWithIndex jobs AND broke all
         // downstream plan-identity memos (fresh RDD plan per call)
         val base = resolver(spark, tableName)
-        sessionIdMap(spark, base, "rowid:" + keys.mkString("\u0001")) {
+        sessionIdMap(base, "rowid:" + keys.mkString("\u0001")) {
           val keyRows = base
             .select(keyStruct(keys, None).as("__raw")).distinct()
           spark.createDataFrame(

@@ -55,34 +55,18 @@ object PathFinder {
       localMaxSeeds = 0L
     }
 
-  /** Driver-side memo of collected edge arrays, keyed by the ANALYZED
-    * plan's semantic hash — the analogue of the reference's per-session
-    * CSR reuse (a csr id, once built, serves every subsequent query until
-    * delete_csr; csr_creation checks existence first). A data change
-    * produces a different plan (new scan/checkpoint), so entries can't go
-    * stale; bounded to 2 arrays ≤ localMaxEdges each so the worst case
-    * stays a couple hundred MB on a driver sized for local kernels. */
-  // Value carries the CANONICALIZED PLAN STRING alongside the array: the
-  // 32-bit semanticHash key alone could collide across two different edge
-  // views, and a collision here would silently serve one graph's edges to
-  // another query. Lookup verifies plan equality and treats a mismatch as
-  // a miss (fall through to collect) — the hash is an index, never proof.
-  private val edgeMemo =
-    new java.util.LinkedHashMap[(Int, String),
-        (String, Array[(Long, Long, Long)])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String),
-            (String, Array[(Long, Long, Long)])])
-          : Boolean = size() > 3
-    }
+  /** Collected edge arrays by slot ("raw", "eid", "denseLocal"): the
+    * analogue of the reference's per-session CSR reuse (a csr id, once
+    * built, serves every subsequent query until delete_csr). Bounded to
+    * 3 arrays ≤ localMaxEdges each so the worst case stays a couple
+    * hundred MB on a driver sized for local kernels. */
+  private[graft] val edgeMemo = new PlanMemo[Array[(Long, Long, Long)]](3)
 
-  /** Canonical plan identity for memo verification — semanticHash's own
+  /** Canonical plan identity, the [[PlanMemo]] proof: semanticHash's own
     * preimage, so equal strings ⇔ Spark considers the plans
-    * semantically equal. O(plan-size) string render: callers pass it
-    * BY NAME so a memo miss (the common case on first contact) never
-    * pays for the render — it is evaluated only to validate a hash hit
-    * or to store alongside a freshly built entry.
+    * semantically equal, plus the data-snapshot token. O(plan-size)
+    * render, so [[PlanMemo.Id]] evaluates it only on an index hit or a
+    * store.
     *
     * The canonicalized string alone is NOT enough for session-lived
     * memos: Spark compares file relations by their root paths, so a
@@ -98,17 +82,31 @@ object PathFinder {
     edges.queryExecution.analyzed.canonicalized.toString +
       "#tok=" + dataSnapshotToken(edges)
 
-  /** Order-independent fold of (path, length, modificationTime) over the
-    * file listings of every file-source scan leaf — the data-snapshot
-    * component of [[planIdentity]]. Driver cost is a loop over the file
-    * index's already-materialized listing (the same statuses Spark walked
-    * to plan the scan); non-file leaves (local relations, RDD-backed
-    * checkpoints) contribute nothing — their canonicalized form already
-    * changes with the data. Best-effort by construction: an unreadable
-    * index contributes a FRESH salt from a monotonic counter, so every
-    * token computed over a failing leaf differs from every previous
-    * one — a failure genuinely forces a memo miss (rebuild), never a
-    * stale hit. */
+  /** Per scan leaf of `df`: Some(files) for a file-source relation, read
+    * from its file index's already-materialized listing (the statuses
+    * Spark walked to plan the scan — no job), None for any other leaf,
+    * a Failure when the index cannot be read. */
+  private def leafFiles(df: DataFrame): Seq[scala.util.Try[Option[
+      Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata]]]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
+    df.queryExecution.analyzed.collectLeaves().map { leaf =>
+      scala.util.Try(leaf match {
+        case lr: LogicalRelation => lr.relation match {
+          case fs: HadoopFsRelation =>
+            Some(fs.location.listFiles(Nil, Nil).flatMap(_.files))
+          case _ => None
+        }
+        case v2: DataSourceV2Relation => v2.table match {
+          case ft: FileTable =>
+            Some(ft.fileIndex.listFiles(Nil, Nil).flatMap(_.files))
+          case _ => None
+        }
+        case _ => None
+      })
+    }
+  }
+
   /** Monotonic salt for [[dataSnapshotToken]]'s failure path: a leaf
     * whose file index cannot be read contributes a NEVER-REPEATING value
     * instead of a constant, so a consistently-failing leaf still
@@ -116,71 +114,39 @@ object PathFinder {
     * built over it. */
   private val tokenFailSalt = new java.util.concurrent.atomic.AtomicLong(1L)
 
+  /** Order-independent fold of (path, length, modificationTime) over the
+    * file listings of every file-source scan leaf — the data-snapshot
+    * component of [[planIdentity]]. Non-file leaves (local relations,
+    * RDD-backed checkpoints) contribute nothing — their canonicalized
+    * form already changes with the data. An unreadable index contributes
+    * a fresh [[tokenFailSalt]], so a failure forces a memo miss
+    * (rebuild), never a stale hit. */
   private[graft] def dataSnapshotToken(df: org.apache.spark.sql.DataFrame)
-      : Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def fold(files: Iterator[(String, Long, Long)]): Long =
-      files.map { case (p, len, mt) =>
-        var h = p.hashCode.toLong * 0x9E3779B97F4A7C15L
-        h ^= java.lang.Long.rotateLeft(len, 17)
-        h ^ java.lang.Long.rotateLeft(mt, 41)
-      }.foldLeft(0L)(_ + _)
-    df.queryExecution.analyzed.collectLeaves().map { leaf =>
-      try leaf match {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation =>
-            fold(fs.location.listFiles(Nil, Nil).iterator
-              .flatMap(_.files.iterator)
-              .map(f => (f.getPath.toString, f.getLen,
-                f.getModificationTime)))
-          case _ => 0L
-        }
-        case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-          v2.table match {
-            case ft: org.apache.spark.sql.execution.datasources.v2.FileTable =>
-              fold(ft.fileIndex.listFiles(Nil, Nil).iterator
-                .flatMap(_.files.iterator)
-                .map(f => (f.getPath.toString, f.getLen,
-                  f.getModificationTime)))
-            case _ => 0L
-          }
-        case _ => 0L
-      } catch { case _: Throwable => tokenFailSalt.incrementAndGet() }
+      : Long =
+    leafFiles(df).map {
+      case scala.util.Success(files) =>
+        files.fold(0L)(_.map { f =>
+          var h = f.getPath.toString.hashCode.toLong * 0x9E3779B97F4A7C15L
+          h ^= java.lang.Long.rotateLeft(f.getLen, 17)
+          h ^ java.lang.Long.rotateLeft(f.getModificationTime, 41)
+        }.sum)
+      case scala.util.Failure(_) => tokenFailSalt.incrementAndGet()
     }.sum
-  }
 
   /** Total on-disk bytes behind a frame's file-source scan leaves, or
-    * -1 when ANY leaf is not a file relation (an unknown size must
-    * never look small). Same already-materialized file listings
-    * [[dataSnapshotToken]] walks — no Spark job. The MATCH compiler's
+    * -1 when ANY leaf is not a file relation or cannot be listed (an
+    * unknown size must never look small). Same listings
+    * [[dataSnapshotToken]] folds — no Spark job. The MATCH compiler's
     * compile-time broadcast-side choice reads this: the decision input
     * is the actual data footprint, so it scales itself out of the way
     * (at 100 TB nothing qualifies). */
   private[graft] def relationFootprintBytes(
-      df: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    var total = 0L
-    var ok = true
-    df.queryExecution.analyzed.collectLeaves().foreach { leaf =>
-      try leaf match {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation =>
-            fs.location.listFiles(Nil, Nil)
-              .foreach(_.files.foreach(f => total += f.getLen))
-          case _ => ok = false
-        }
-        case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-          v2.table match {
-            case ft: org.apache.spark.sql.execution.datasources.v2.FileTable =>
-              ft.fileIndex.listFiles(Nil, Nil)
-                .foreach(_.files.foreach(f => total += f.getLen))
-            case _ => ok = false
-          }
-        case _ => ok = false
-      } catch { case _: Throwable => ok = false }
+      df: org.apache.spark.sql.DataFrame): Long =
+    leafFiles(df).foldLeft(0L) {
+      case (total, scala.util.Success(Some(files))) if total >= 0 =>
+        total + files.map(_.getLen).sum
+      case _ => -1L
     }
-    if (ok) total else -1L
-  }
 
   /** Exact-ish byte size of a frame whose every leaf is a driver-local
     * relation (the LOCAL kernel branches' output shape), or -1 when any
@@ -195,40 +161,18 @@ object PathFinder {
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lp: LocalRelation =>
         try total += lp.stats.sizeInBytes
-        catch { case _: Throwable => ok = false }
+        catch { case scala.util.control.NonFatal(_) => ok = false }
       case _ => ok = false
     }
     if (ok && total <= Long.MaxValue) total.toLong else -1L
   }
 
-  private def memoized(key: (Int, String), plan: => String)(
-      build: => Array[(Long, Long, Long)]): Array[(Long, Long, Long)] = {
-    lazy val p = plan
-    edgeMemo.synchronized {
-      val hit = edgeMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
-    }
-    val arr = build
-    edgeMemo.synchronized { edgeMemo.put(key, (p, arr)) }
-    arr
-  }
-
-  /** Size-gate VERDICT memo: the limit-probe executes the (usually
-    * uncached) edge-view plan, so on the distributed branch — where no
-    * edge-array memo entry ever forms — every query over the same view
-    * re-paid the probe scan. The verdict is as stable as the plan
-    * identity (a data change produces a different plan — the edgeMemo
-    * argument), and the gate threshold is part of the key because specs
-    * flip [[localMaxEdges]] to force branches. Hash-collision discipline
-    * matches edgeMemo: the 32-bit key is an index, the canonicalized
-    * plan string is the proof, misses never render it. */
-  private val gateMemo =
-    new java.util.LinkedHashMap[(Int, Long), (String, Boolean)](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Long), (String, Boolean)]): Boolean =
-        size() > 8
-    }
+  /** Size-gate verdicts by gate value: the limit-probe executes the
+    * (usually uncached) edge-view plan, so on the distributed branch —
+    * where no edge-array memo entry ever forms — every query over the
+    * same view re-paid the probe scan. The gate is the slot because
+    * specs flip [[localMaxEdges]] to force branches. */
+  private val gateMemo = new PlanMemo[Boolean](8)
 
   /** Fused size gate + collect: ONE `limit(gate+1)` job answers the gate
     * AND, when under it, IS the memoized edge collect. The previous
@@ -271,75 +215,61 @@ object PathFinder {
     }
   }
 
-  /** Row-probe memo (seedMemo's discipline) for the direct
-    * [[probeRowsUnderGate]] callers (weighted PR / wLPA / earliest
-    * arrival edge frames, [[probeVertexIds]]): without it, a frame that
-    * passes its own gate while the OTHER side's gate then fails re-hauls
-    * up to cap+1 rows to the driver on EVERY call. Tier-1 positives
-    * (≤ fusedProbeCap rows) and all negative verdicts are memoized;
-    * mid-tier positives (cap < rows ≤ gate) are returned uncached — they
-    * are too heavy to pin (up to 2M Row objects) and that tier keeps its
-    * pre-existing per-call cost. Key = (semanticHash, gate) as index,
-    * canonicalized plan string as proof; callers never mutate the shared
-    * array (they `.map` it). */
+  /** Row-probe memo for the direct [[probeRowsUnderGate]] callers
+    * (weighted PR / wLPA / earliest arrival edge frames,
+    * [[probeVertexIds]]): without it, a frame that passes its own gate
+    * while the OTHER side's gate then fails re-hauls up to cap+1 rows to
+    * the driver on EVERY call. Tier-1 positives (≤ fusedProbeCap rows)
+    * and all negative verdicts are memoized; mid-tier positives
+    * (cap < rows ≤ gate) are returned uncached — they are too heavy to
+    * pin (up to 2M Row objects) and that tier keeps its pre-existing
+    * per-call cost. Callers never mutate the shared array (they `.map`
+    * it). */
   private val rowProbeMemo =
-    new java.util.LinkedHashMap[(Int, Long),
-        (String, Option[Array[org.apache.spark.sql.Row]])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Long),
-            (String, Option[Array[org.apache.spark.sql.Row]])]): Boolean =
-        size() > 4
-    }
+    new PlanMemo[Option[Array[org.apache.spark.sql.Row]]](4)
 
   private[graft] def probeRowsUnderGateMemo(df: DataFrame)
       : Option[Array[org.apache.spark.sql.Row]] = {
-    val key = (df.queryExecution.analyzed.semanticHash(), localMaxEdges)
-    lazy val p = planIdentity(df)
-    rowProbeMemo.synchronized {
-      val hit = rowProbeMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
+    val id = PlanMemo.id(df)
+    val gate = localMaxEdges
+    rowProbeMemo.get(id, gate).getOrElse {
+      val res = probeRowsUnderGate(df)
+      if (res.forall(_.length <= fusedProbeCap))
+        rowProbeMemo.put(id, gate, res)
+      else res
     }
-    val res = probeRowsUnderGate(df)
-    if (res.forall(_.length <= fusedProbeCap))
-      rowProbeMemo.synchronized { rowProbeMemo.put(key, (p, res)) }
-    res
   }
 
   private def probeEdgesFused(e: DataFrame, withEid: Boolean)
       : Option[Array[(Long, Long, Long)]] = {
+    val id = PlanMemo.id(e)
     val slot = if (withEid) "eid" else "raw"
-    val key = (e.queryExecution.analyzed.semanticHash(), slot)
-    lazy val p = planIdentity(e)
-    edgeMemo.synchronized {
-      val hit = edgeMemo.get(key)
-      if (hit != null && hit._1 == p && hit._2.length <= localMaxEdges)
-        return Some(hit._2)
-    }
-    val gateKey = (key._1, localMaxEdges)
-    gateMemo.synchronized {
-      val hit = gateMemo.get(gateKey)
-      if (hit != null && hit._1 == p && !hit._2) return None
-    }
-    val probe = probeRowsUnderGate(
-      if (withEid)
-        e.select(col("src").cast("long"), col("dst").cast("long"),
-          col("eid").cast("long"))
-      else e.select(col("src").cast("long"), col("dst").cast("long")))
-    gateMemo.synchronized { gateMemo.put(gateKey, (p, probe.isDefined)) }
-    probe.map { rows =>
-      val arr =
-        if (withEid) rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        else rows.map(r => (r.getLong(0), r.getLong(1), 0L))
-      edgeMemo.synchronized { edgeMemo.put(key, (p, arr)) }
-      arr
+    val gate = localMaxEdges
+    // an array memoized under a higher gate must not answer a lower one
+    edgeMemo.get(id, slot).filter(_.length <= gate).orElse {
+      // only a negative verdict is read back: a positive one whose array
+      // was evicted must re-collect anyway
+      if (gateMemo.get(id, gate).contains(false)) None
+      else {
+        val probe = probeRowsUnderGate(
+          if (withEid)
+            e.select(col("src").cast("long"), col("dst").cast("long"),
+              col("eid").cast("long"))
+          else e.select(col("src").cast("long"), col("dst").cast("long")))
+        gateMemo.put(id, gate, probe.isDefined)
+        probe.map { rows =>
+          edgeMemo.put(id, slot,
+            if (withEid)
+              rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+            else rows.map(r => (r.getLong(0), r.getLong(1), 0L)))
+        }
+      }
     }
   }
 
   private def collectEdges(edges: org.apache.spark.sql.DataFrame,
       withEid: Boolean): Array[(Long, Long, Long)] =
-    memoized((edges.queryExecution.analyzed.semanticHash(),
-        if (withEid) "eid" else "raw"), planIdentity(edges)) {
+    edgeMemo.getOrBuild(PlanMemo.id(edges), if (withEid) "eid" else "raw") {
       if (withEid)
         edges.select(col("src").cast("long"), col("dst").cast("long"),
           col("eid").cast("long")).collect()
@@ -422,35 +352,22 @@ object PathFinder {
     }
   }
 
-  /** Seed-probe memo (gateMemo's discipline): the probe is a real
-    * driver job per call, and seed frames are often compiled subplans
-    * that repeat verbatim across a query's quantifier splits AND across
-    * repeated queries — q93's warm compile paid ~0.5 s of identical
-    * seed probes per call. Key = (semanticHash, gate) as index,
-    * canonicalized plan as proof; kernels never mutate the shared
-    * array (`.distinct.sorted` copies). */
-  private val seedMemo =
-    new java.util.LinkedHashMap[(Int, Long), (String, Option[Array[Long]])](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Long),
-            (String, Option[Array[Long]])]): Boolean = size() > 8
-    }
+  /** Seed probes by gate value: the probe is a real driver job per call,
+    * and seed frames are often compiled subplans that repeat verbatim
+    * across a query's quantifier splits AND across repeated queries —
+    * q93's warm compile paid ~0.5 s of identical seed probes per call.
+    * Kernels never mutate the shared array (`.distinct.sorted` copies). */
+  private val seedMemo = new PlanMemo[Option[Array[Long]]](8)
 
   /** One `limit(localMaxSeeds+1)` collect: Some(ids) when under the gate,
     * None (→ distributed) otherwise. */
   private def probeSeeds(seeds: DataFrame): Option[Array[Long]] = {
-    val key = (seeds.queryExecution.analyzed.semanticHash(), localMaxSeeds)
-    lazy val p = planIdentity(seeds)
-    seedMemo.synchronized {
-      val hit = seedMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
+    val gate = localMaxSeeds
+    seedMemo.getOrBuild(PlanMemo.id(seeds), gate) {
+      val arr = seeds.select(col("id").cast("long"))
+        .limit(gate.toInt + 1).collect().map(_.getLong(0))
+      if (arr.length <= gate) Some(arr) else None
     }
-    val arr = seeds.select(col("id").cast("long"))
-      .limit(localMaxSeeds.toInt + 1).collect().map(_.getLong(0))
-    val res = if (arr.length <= localMaxSeeds) Some(arr) else None
-    seedMemo.synchronized { seedMemo.put(key, (p, res)) }
-    res
   }
 
   /** Gate + edge-IDENTITY provisioning for the path kernels: the local
@@ -473,8 +390,7 @@ object PathFinder {
     val seedProbe = if (eSmall) probeSeeds(seeds) else None
     if (seedProbe.isDefined) {
       val arr = if (hasEid) collectEdges(clean, withEid = true)
-        else memoized((clean.queryExecution.analyzed.semanticHash(),
-          "denseLocal"), planIdentity(clean)) {
+        else edgeMemo.getOrBuild(PlanMemo.id(clean), "denseLocal") {
           denseEidsLocal(collectEdges(clean, withEid = false))
         }
       local(arr, seedProbe.get)
@@ -493,29 +409,17 @@ object PathFinder {
     }
   }
 
-  /** Distributed twin of [[edgeMemo]]: caches the dense-eid EDGE-INDEX
-    * frame — the range-sort + zipWithIndex over the full edge set that is
-    * the expensive, input-identical prefix of every distributed path
-    * query (it cost q55 a full 4M-row sort + persist PER CALL at sf4).
-    * Entries are persisted OUTSIDE OpCaches on purpose: the harness's
-    * per-query releaseAll() tears down operator caches, but the edge
-    * index is session state, same ownership rule as the ANN index frames
-    * ([[graft.ops.Similarity]] buildIvfIndex). Bounded LRU; eviction
-    * unpersists (a dropped entry merely recomputes on next use). Key =
-    * 32-bit semanticHash as an INDEX, canonicalized plan string as PROOF
-    * (edgeMemo's collision discipline — misses never render the plan). */
-  private val distEidMemoMax = 4
-  private val distEidMemo =
-    new java.util.LinkedHashMap[(Int, String), (String, DataFrame)](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          en: java.util.Map.Entry[(Int, String), (String, DataFrame)])
-          : Boolean = {
-        val evict = size() > distEidMemoMax
-        if (evict) en.getValue._2.unpersist(false)
-        evict
-      }
-    }
+  /** Distributed twin of [[edgeMemo]]: persisted edge-index frames by
+    * variant. The dense-eid range-sort + zipWithIndex over the full edge
+    * set is the expensive, input-identical prefix of every distributed
+    * path query (it cost q55 a full 4M-row sort + persist PER CALL at
+    * sf4). Entries are persisted OUTSIDE OpCaches on purpose: the
+    * harness's per-query releaseAll() tears down operator caches, but
+    * the edge index is session state, same ownership rule as the ANN
+    * index frames ([[graft.ops.Similarity]] buildIvfIndex). Every frame
+    * the memo lets go of is unpersisted. */
+  private[graft] val distEidMemo =
+    new PlanMemo[DataFrame](4, df => { df.unpersist(false); () })
 
   /** Memo-owned SESSION EDGE INDEX for the distributed path kernels —
     * the distributed CSR. `build` shapes the columns (dense-eid
@@ -524,96 +428,34 @@ object PathFinder {
     * the cached partitioning + ordering and shuffles only the (small)
     * frontier, never the edge set (without this the per-level SMJ
     * re-exchanged + re-sorted all 4M edges PER LEVEL — the q55 sf4
-    * wall). Entries persist OUTSIDE OpCaches on purpose: the harness's
-    * per-query releaseAll() tears down operator caches, but the edge
-    * index is session state, same ownership rule as the ANN index frames
-    * ([[graft.ops.Similarity]] buildIvfIndex) — build once, traverse
-    * many. Bounded LRU; eviction unpersists (a dropped entry merely
-    * recomputes). Key = (32-bit semanticHash of the PRE-BUILD input,
-    * variant) as an INDEX, canonicalized plan string as PROOF (edgeMemo's
-    * collision discipline — misses never render the plan). Keying on the
-    * pre-build input matters: builds that synthesize eids create a new
-    * RDD-backed plan per call, which would never hit. */
-  /** Count of session edge-index BUILDS (memo misses) — spec hook
-    * guarding the build-once contract. */
-  @volatile private[graft] var distEidBuilds: Long = 0L
-
+    * wall). Build once, traverse many. Keyed on the PRE-BUILD input:
+    * builds that synthesize eids create a new RDD-backed plan per call,
+    * which would never hit. */
   private def sessionEdgeIndex(spark: SparkSession, clean: DataFrame,
-      variant: String)(build: => DataFrame): DataFrame = {
-    // the session identity is part of the key (unlike edgeMemo's plain
-    // arrays, a cached FRAME dies with its session — a later session
-    // with an identical plan must rebuild, not receive a dead handle)
-    val key = (clean.queryExecution.analyzed.semanticHash(),
-      variant + "@" + System.identityHashCode(spark))
-    lazy val p = planIdentity(clean)
-    distEidMemo.synchronized {
-      val hit = distEidMemo.get(key)
-      if (hit != null && hit._1 == p) return hit._2
+      variant: String)(build: => DataFrame): DataFrame =
+    distEidMemo.getOrBuild(PlanMemo.id(clean), variant) {
+      val built = build
+      // Size the index to the DATA, not the session width: a
+      // session-width index (numShufflePartitions partitions) makes EVERY
+      // per-level frontier join a session-width stage, so a ≤50-seed
+      // depth-2 BFS pays 32 tasks × levels × stages of pure scheduling
+      // (measured: q35 sf4 2.6-2.7 s at 32 partitions vs 1.7-2.1 s at 4 —
+      // ProbeQ35). One count at build time (the edge view is typically
+      // already cached) sizes partitions at ~1M edges (~16 MB) each,
+      // floored at 4 for level parallelism and capped at the session
+      // width — a 100 TB edge set still gets the full cluster width.
+      val rowsPer = spark.conf
+        .get("spark.graft.edgeIndex.rowsPerPartition", (1L << 20).toString)
+        .toLong
+      val confParts = spark.sessionState.conf.numShufflePartitions
+      val n = built.count()
+      val parts = math.max(math.min(confParts, 4),
+        math.min(confParts.toLong, (n + rowsPer - 1) / rowsPer).toInt)
+      built
+        .repartition(parts, col("src"))
+        .sortWithinPartitions("src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
-    distEidBuilds += 1
-    val built = build
-    // Size the index to the DATA, not the session width: a
-    // session-width index (numShufflePartitions partitions) makes EVERY
-    // per-level frontier join a session-width stage, so a ≤50-seed
-    // depth-2 BFS pays 32 tasks × levels × stages of pure scheduling
-    // (measured: q35 sf4 2.6-2.7 s at 32 partitions vs 1.7-2.1 s at 4 —
-    // ProbeQ35). One count at build time (the edge view is typically
-    // already cached) sizes partitions at ~1M edges (~16 MB) each,
-    // floored at 4 for level parallelism and capped at the session
-    // width — a 100 TB edge set still gets the full cluster width.
-    val rowsPer = spark.conf
-      .get("spark.graft.edgeIndex.rowsPerPartition", (1L << 20).toString)
-      .toLong
-    val confParts = spark.sessionState.conf.numShufflePartitions
-    val n = built.count()
-    val parts = math.max(math.min(confParts, 4),
-      math.min(confParts.toLong, (n + rowsPer - 1) / rowsPer).toInt)
-    val e = built
-      .repartition(parts, col("src"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // put under the lock with a re-check: a concurrent build of the same
-    // key (or a 32-bit collision replacing a different-proof entry) must
-    // unpersist whichever frame loses, or the displaced cache blocks
-    // leak for the session — removeEldestEntry only fires on size.
-    distEidMemo.synchronized {
-      val hit = distEidMemo.get(key)
-      if (hit != null && hit._1 == p) { e.unpersist(false); hit._2 }
-      else {
-        val prev = distEidMemo.put(key, (p, e))
-        if (prev != null) prev._2.unpersist(false)
-        e
-      }
-    }
-  }
-
-  /** Spec hook: drop every cached session edge-index frame. */
-  private[graft] def clearDistEidMemo(): Unit = distEidMemo.synchronized {
-    val it = distEidMemo.values().iterator()
-    while (it.hasNext) it.next()._2.unpersist(false)
-    distEidMemo.clear()
-  }
-
-  /** Spec/refresh hook: drop every memoized probe verdict and collected
-    * array (seed probes, gate verdicts, edge arrays). The data-snapshot
-    * token in [[planIdentity]] already invalidates these when the
-    * underlying FILES change; this hook covers sources the token cannot
-    * see (e.g. an external system mutating data behind an unchanged
-    * listing). */
-  private[graft] def clearProbeMemos(): Unit = {
-    seedMemo.synchronized(seedMemo.clear())
-    gateMemo.synchronized(gateMemo.clear())
-    edgeMemo.synchronized(edgeMemo.clear())
-    rowProbeMemo.synchronized(rowProbeMemo.clear())
-  }
-
-  /** Spec hook: combined entry count of the probe memos, so
-    * [[clearProbeMemos]]'s contract (everything dropped) is assertable. */
-  private[graft] def probeMemoEntries: Int =
-    seedMemo.synchronized(seedMemo.size()) +
-      gateMemo.synchronized(gateMemo.size()) +
-      edgeMemo.synchronized(edgeMemo.size()) +
-      rowProbeMemo.synchronized(rowProbeMemo.size())
 
   /** Driver-side twin of [[Snapshot.denseEdgeIds]] for already-collected
     * pairs: stable (src, dst) sort, index = id. */

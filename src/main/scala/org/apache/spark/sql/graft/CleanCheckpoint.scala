@@ -65,3 +65,11 @@ object CleanCheckpoint {
       case _ => ()
     }
 }
+
+/** Spark's per-session `sessionUUID` (`private[sql]`): a random UUID per
+  * session, never reused, unlike `System.identityHashCode`. Keys
+  * [[graft.graph.PlanMemo]] entries to the session that built them. */
+object SessionId {
+  def apply(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[SparkSession].sessionUUID
+}

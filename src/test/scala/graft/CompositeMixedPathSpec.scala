@@ -57,6 +57,24 @@ class CompositeMixedPathSpec extends AnyFunSuite {
       (0L, 1L, 3L, 3L, "a|0,a|1,a|2,a|3")))
   }
 
+  test("the composite rowid map is built once per session: a repeat " +
+      "compile of the same MATCH builds no id map") {
+    val g = graftWithRing()
+    val memo = graft.compiler.GraphTableCompiler.idMapMemo
+    memo.clear()
+    def compile() = g.graphTable(
+      """cpg MATCH (x:CV WHERE x.id = 0)-[e:CR]->{1,2}(y:CV)
+         COLUMNS (x.id AS src, y.id AS dst)""")
+    val b0 = memo.builds
+    compile()
+    assert(memo.builds == b0 + 1, "a cold compile must build the id map")
+    val warm = compile()
+    assert(memo.builds == b0 + 1,
+      "a warm compile re-built the id map — memo regressed")
+    assert(warm.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((0L, 1L), (0L, 2L)))
+  }
+
   test("ACYCLIC vs SIMPLE over a composite mixed pattern: the closing " +
       "walk discriminates") {
     val g = graftWithRing()

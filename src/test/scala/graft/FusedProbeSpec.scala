@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.graph.{Algorithms, PathFinder}
+import graft.graph.{Algorithms, PathFinder, PlanMemo}
 
 /** Round-14 optimization invariants: the fused edge gate+collect
   * (one limited job answers the gate AND is the memoized collect) and
@@ -39,15 +39,15 @@ class FusedProbeSpec extends AnyFunSuite {
     val saved = PathFinder.localMaxEdges
     try {
       PathFinder.localMaxEdges = 10L
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       assert(PathFinder.localEdgePairs(edges).isEmpty)
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       val got = PathFinder.localEdgePairs(edges)
       assert(got.isDefined && got.get.length == 50)
     } finally {
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
     }
   }
 
@@ -57,14 +57,14 @@ class FusedProbeSpec extends AnyFunSuite {
     val edges = (1L to 20L).map(i => (i, i + 1)).toDF("src", "dst")
     val saved = PathFinder.localMaxEdges
     try {
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       assert(PathFinder.localEdgePairs(edges).isDefined) // memoize 20 rows
       PathFinder.localMaxEdges = 5L
       assert(PathFinder.localEdgePairs(edges).isEmpty,
         "memo hit must respect the CURRENT gate, not the one it was built under")
     } finally {
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
     }
   }
 
@@ -82,11 +82,11 @@ class FusedProbeSpec extends AnyFunSuite {
     val saved = PathFinder.localMaxEdges
     try {
       PathFinder.localMaxEdges = n - 1
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       assert(PathFinder.localEdgePairs(edges).isEmpty)
     } finally {
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
     }
   }
 
@@ -128,10 +128,10 @@ class FusedProbeSpec extends AnyFunSuite {
     val saved = PathFinder.localMaxEdges
     try {
       PathFinder.localMaxEdges = 8L // raw 40 > 8, distinct 4 ≤ 8 → local
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       val local = run()
       PathFinder.localMaxEdges = 0L // FORCE_DIST posture
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       val dist = run()
       assert(local.map(_._1) == dist.map(_._1))
       local.zip(dist).foreach { case ((id, l), (_, d)) =>
@@ -140,7 +140,7 @@ class FusedProbeSpec extends AnyFunSuite {
       }
     } finally {
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
     }
   }
 
@@ -162,15 +162,15 @@ class FusedProbeSpec extends AnyFunSuite {
     val saved = PathFinder.localMaxEdges
     try {
       PathFinder.localMaxEdges = 8L // raw 30 > 8, |und| 3 ≤ 8 → local
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       val local = run()
       PathFinder.localMaxEdges = 0L
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
       val dist = run()
       assert(local == dist)
     } finally {
       PathFinder.localMaxEdges = saved
-      PathFinder.clearProbeMemos()
+      PlanMemo.clearAll()
     }
   }
 

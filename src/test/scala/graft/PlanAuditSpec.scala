@@ -302,7 +302,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "invalidates every plan-keyed memo (data-snapshot token)") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
+    import graft.graph.{PathFinder, PlanMemo}
     val dir = java.nio.file.Files.createTempDirectory("graft_snap")
     val path = dir.resolve("edges").toString
     Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
@@ -328,10 +328,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // the explicit refresh hook drops every probe memo — the escape
     // hatch for sources the snapshot token cannot see (an external
     // system mutating data behind an unchanged listing)
-    assert(PathFinder.probeMemoEntries > 0,
+    assert(PathFinder.edgeMemo.size > 0,
       "the WCC runs above should have populated a probe memo")
-    PathFinder.clearProbeMemos()
-    assert(PathFinder.probeMemoEntries == 0,
+    PlanMemo.clearAll()
+    assert(PlanMemo.entries == 0,
       "clearProbeMemos must drop every seed/gate/edge memo entry")
     val r3 = graft.graph.Algorithms.weaklyConnectedComponents(verts, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -345,23 +345,23 @@ class PlanAuditSpec extends AnyFunSuite {
     import graft.graph.PathFinder
     val g0 = PathFinder.localMaxEdges
     PathFinder.localMaxEdges = 0 // force the distributed branch
-    PathFinder.clearDistEidMemo()
+    PathFinder.distEidMemo.clear()
     try {
       // branching cyclic graph so k-shortest has real work at every level
       val edges = (for (i <- 0L until 40L; j <- Seq(1L, 3L, 7L))
         yield (i, (i + j) % 40L)).toDF("src", "dst")
       val seeds = Seq(0L, 5L).toDF("id")
-      val before = PathFinder.distEidBuilds
+      val before = PathFinder.distEidMemo.builds
       val r1 = PathFinder.kShortestPaths(s, edges, seeds, 1L, Some(2L),
         graft.pgq.PathMode.Walk, k = 2)
         .collect().map(_.mkString("|")).sorted.toSeq
-      assert(PathFinder.distEidBuilds == before + 1,
+      assert(PathFinder.distEidMemo.builds == before + 1,
         "cold call must build the index exactly once")
       graft.OpCaches.releaseAll() // bench shape: operator caches die
       val r2 = PathFinder.kShortestPaths(s, edges, seeds, 1L, Some(2L),
         graft.pgq.PathMode.Walk, k = 2)
         .collect().map(_.mkString("|")).sorted.toSeq
-      assert(PathFinder.distEidBuilds == before + 1,
+      assert(PathFinder.distEidMemo.builds == before + 1,
         "warm call re-built the session edge index — memo regressed")
       assert(r1 == r2, "memo-served index changed the results")
       // a DIFFERENT edge view must not serve the cached index
@@ -369,11 +369,11 @@ class PlanAuditSpec extends AnyFunSuite {
         yield (i, (i + j) % 40L)).toDF("src", "dst")
         .filter($"src" =!= 39L)
       PathFinder.bfsDistances(s, edges2, seeds, Some(2L)).collect()
-      assert(PathFinder.distEidBuilds == before + 2,
+      assert(PathFinder.distEidMemo.builds == before + 2,
         "a different edge view must build its own index")
     } finally {
       PathFinder.localMaxEdges = g0
-      PathFinder.clearDistEidMemo()
+      PathFinder.distEidMemo.clear()
       graft.OpCaches.releaseAll()
     }
   }

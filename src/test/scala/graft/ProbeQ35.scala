@@ -12,7 +12,7 @@ class ProbeQ35 extends AnyFunSuite {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_SF", "")
     assume(sfDir.nonEmpty, "set SPARK_GRAFT_PROBE_SF to run the probe")
     val s = Fixture.init()
-    def builds = graph.PathFinder.distEidBuilds
+    def builds = graph.PathFinder.distEidMemo.builds
     def time(label: String)(f: => Unit): Unit = {
       val b0 = builds
       val t0 = System.nanoTime()

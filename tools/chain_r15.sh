@@ -1,6 +1,6 @@
 #!/bin/sh
 # Round-15 certification chain — one coherent chain at a single HEAD.
-# Differences vs chain_r14.sh:
+# Differences vs the round-14 chain script (removed; see git history):
 #  - full-set oracle compares at sf0.01 AND sf0.1 first (untimed);
 #  - fresh DuckDB sf0.1 baseline twins (3-rep medians);
 #  - Spark bench: sf0.1 full x3, sf1 subset x3 @32 cores + x1 @8 cores
