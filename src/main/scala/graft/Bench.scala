@@ -1,33 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_FORCE_DIST=1 → time the distributed kernel branch
-    graph.PathFinder.applyEnvGates()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // experiment hook: semicolon-separated k=v runtime confs (e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.graft.edgeIndex.rowsPerPartition=1").
-    // The applied string is echoed into the JSON line so a certified
-    // artifact can never silently carry a non-default conf, and a
-    // non-runtime-settable key warns instead of aborting the run.
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-    extraConf.foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        try spark.conf.set(k, v)
-        catch { case NonFatal(e) =>
-          System.err.println(s"WARN: extra conf $k=$v not applied: $e") }
-      })
+    // SPARK_GRAFT_EXTRA_CONF (see LocalSession) is echoed into the JSON
+    // line so a certified artifact can never silently carry a
+    // non-default conf; `spark.graft.local.maxRows=0` times the
+    // distributed kernel branch
+    val spark = LocalSession(32)
     // warmup: JVM/codegen/parquet-listing costs land here, not on the
     // first measured query. Timed and reported as "warmup_sec" in the
     // JSON line so A/B comparisons against benches without the same
@@ -154,10 +134,10 @@ object Bench {
         }
         finally OpCaches.releaseAll()
       } else ""
-    val confTag = extraConf
+    val confTag = LocalSession.extraConf
       .map(c => s""","extra_conf":"${c.replace("\"", "'")}"""")
       .getOrElse("")
-    val dist = graph.PathFinder.localMaxEdges == 0L
+    val dist = graph.PathFinder.localMaxRows(spark) == 0L
     // self-diagnosis for anomalous runs (the r11 driver run recorded a
     // 22 s q56 that two exact-convention reproductions put at 1.5-1.8 s):
     // total JVM GC time separates box/memory-pressure noise from a real
@@ -169,9 +149,12 @@ object Bench {
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","force_dist":$dist,"gc_ms":$gcMs,"warmup_sec":${f3(warmupSec)}$annSplit$confTag}"""
     // the JSON must be the LAST stdout line (build.sbt suppresses sbt's
     // trailing "[success]" banner for bench runs); print after
-    // spark.stop() so no shutdown logging can land behind it
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // spark.stop() so no shutdown logging can land behind it, and in a
+    // finally so a throwing stop cannot lose it
+    try spark.stop()
+    finally {
+      println(line)
+      System.out.flush()
+    }
   }
 }

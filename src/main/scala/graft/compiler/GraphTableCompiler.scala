@@ -45,17 +45,17 @@ object GraphTableCompiler {
     * plain driver maps bounded by the gate. */
   private val localMapMemo = new PlanMemo[Option[Map[Long, Long]]](16)
 
+  /** Row cap of the local translation path's collected maps. */
+  private val localMapMaxRows = 65536L
+
   /** Size-gated driver collect of a two-long-column bijection frame:
-    * Some(map) when the pair set fits
-    * `spark.graft.compiler.localMapMaxRows` (0 disables the local
-    * path), else None. A fused limit-probe + collect, memoized for the
-    * session — repeated compiles (and the quantifier splits within one
-    * compile) pay ZERO jobs after the first. */
+    * Some(map) when the pair set fits [[localMapMaxRows]], else None. A
+    * fused limit-probe + collect, memoized for the session — repeated
+    * compiles (and the quantifier splits within one compile) pay ZERO
+    * jobs after the first. */
   private def localPairMap(spark: SparkSession, m: DataFrame)
       : Option[Map[Long, Long]] = {
-    val gate = spark.conf
-      .get("spark.graft.compiler.localMapMaxRows", "65536").toLong
-    if (gate <= 0 || gate > Int.MaxValue - 1) return None
+    val gate = localMapMaxRows
     localMapMemo.getOrBuild(PlanMemo.id(m), gate) {
       val rows = m.limit(gate.toInt + 1).collect()
       // Bijection contract, asserted at collect time: a null key/value
@@ -128,15 +128,11 @@ object GraphTableCompiler {
     // on key equality, so the Σ of the bound tables' ON-DISK footer bytes
     // is a sound size signal for the accumulated side WHILE row counts
     // provably cannot multiply (tracked below). When a side's footprint
-    // is under `spark.graft.compiler.broadcastFootprintMaxBytes`
-    // (default 64 MB on disk — far under the guide's "few hundred MB is
+    // is under 64 MB on disk (far under the guide's "few hundred MB is
     // fine" and Spark's 8 GB broadcast cap), hint THAT side. The decision
     // input is the data's actual footprint, never a tuned constant: at
-    // production scale no side qualifies and plans are unchanged. 0
-    // disables.
-    val broadcastMax = spark.conf.get(
-      "spark.graft.compiler.broadcastFootprintMaxBytes",
-      (64L * 1024 * 1024).toString).toLong
+    // production scale no side qualifies and plans are unchanged.
+    val broadcastMax = 64L * 1024 * 1024
     // Σ on-disk bytes of the tables joined into `plan`; -1 = unknown or
     // poisoned (kernel frames, cross joins, possible row multiplication,
     // or simply grown past broadcastMax — no future plan-side hint, so
@@ -174,8 +170,7 @@ object GraphTableCompiler {
     def chainUniqueThunk: () => Boolean = footprintState.chainUniqueEval
 
     def tableFootprintBytes(tableName: String): Long =
-      if (broadcastMax <= 0) -1L
-      else graft.graph.PathFinder.relationFootprintBytes(
+      graft.graph.PathFinder.relationFootprintBytes(
         resolver(spark, tableName))
 
     /** Emit `plan ⋈ df` with a broadcast hint on a side whose footprint
@@ -187,8 +182,8 @@ object GraphTableCompiler {
       * big-side shuffle. Callers advance or poison the bound with the
       * join's multiplicity knowledge. */
     def sizedJoin(df: DataFrame, cond: Column, dfBytes: Long): Unit = {
-      val hintDf = broadcastMax > 0 && dfBytes >= 0 && dfBytes <= broadcastMax
-      val hintPlan = !hintDf && broadcastMax > 0 && {
+      val hintDf = dfBytes >= 0 && dfBytes <= broadcastMax
+      val hintPlan = !hintDf && {
         val pB = planFootprint // forces the bound (and its lazy probes)
         pB >= 0 && pB <= broadcastMax
       }
@@ -373,8 +368,6 @@ object GraphTableCompiler {
           // Qualified references `v.prop` rewrite to the edge alias
           // through [[rexpr]]/[[fusedAliases]].
           val fusible = fuse.exists { case (_, eTable, eKeys, eRefKeys) =>
-            spark.conf.get("spark.graft.compiler.fuseIdentityJoins", "true")
-              .toBoolean &&
             plan != null && vt.tableName == eTable &&
             eKeys.map(_.toLowerCase) == eRefKeys.map(_.toLowerCase) &&
             eRefKeys.map(_.toLowerCase) == vt.keyCols.map(_.toLowerCase) &&
@@ -1990,8 +1983,7 @@ object GraphTableCompiler {
         if (kernelFrameBytes >= 0L && joinedExtraBytes >= 0L)
           kernelFrameBytes + joinedExtraBytes else -1L
       plan =
-        if (broadcastMax > 0 && joinedBytes >= 0L &&
-            joinedBytes <= broadcastMax)
+        if (joinedBytes >= 0L && joinedBytes <= broadcastMax)
           plan.join(broadcast(joined), srcCond, "inner")
         else plan.join(joined, srcCond, "inner")
       setPlanFootprint(-1L) // kernel frame: rows may multiply downstream

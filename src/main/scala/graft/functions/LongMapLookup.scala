@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Replaces `element_at` over a `MapType` literal in the compiler's
   * local id-translation fast path: Catalyst's `GetMapValue` on an
   * ArrayBasedMapData literal is a LINEAR scan per lookup, so a 65k-entry
-  * map (the `spark.graft.compiler.localMapMaxRows` default gate) paid up
+  * map (the compiler's local-map row cap) paid up
   * to 65k comparisons per array slot — O(1) probing here. Linear
   * probing, power-of-two table at ≤50% load, `Long.MinValue` as the
   * empty-slot sentinel (a real `Long.MinValue` key is carried in a side

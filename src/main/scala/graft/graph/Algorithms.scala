@@ -47,8 +47,9 @@ object Algorithms {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nReal = v.count()
     // small graphs: run the exact same iteration on driver arrays (the
-    // reference's in-memory-kernel strategy, size-gated — see LocalKernels)
-    if (nReal <= PathFinder.localMaxSeeds * 16) {
+    // reference's in-memory-kernel strategy, size-gated — see LocalKernels;
+    // the vertex cap is 16× the path kernels' 4096-seed cap)
+    if (nReal <= 65536L) {
       // shared gate+collect (memoized probe, null-endpoint-safe)
       PathFinder.localEdgePairs(edges).foreach { earr =>
         val ids = v.select(col("id").cast("long")).collect().map(_.getLong(0))
@@ -646,9 +647,8 @@ object Algorithms {
     * A hot key's d²/2 pair CPU lands in one task here (the blocked
     * join spread it) — acceptable because the member buffer is only
     * O(d) bytes and a degree so hot that d²/2 pairs straggle is already
-    * an infeasible OUTPUT the degree cap exists for. Conf kill switch:
-    * `spark.graft.copurchase.distKernel` (default true); non-packable
-    * ids keep the r14 blocked-join plan.
+    * an infeasible OUTPUT the degree cap exists for. Non-packable ids
+    * take the r14 blocked-join plan.
     *
     * @return (id_a, id_b, weight) with id_a < id_b
     */
@@ -671,19 +671,18 @@ object Algorithms {
     // (fused limit-probe + collect, the standard gate idiom), a parallel
     // in-memory kernel absorbs distinct + degree cap + pair counting
     // into two driver sorts with ZERO exchanges — the strategy DuckDB's
-    // in-memory aggregate wins with at the 10× point. Gates:
-    // spark.graft.copurchase.localMaxRows bounds the collect (default
-    // 16M rows) and spark.graft.copurchase.localMaxPairs (default 120M
-    // packed longs ≈ 1 GB + sort workspace; 0 forces distributed)
-    // bounds the pair array — the kernel knows the EXACT volume from
-    // the degree histogram before committing memory and returns None
-    // over the gate (fall through to the distributed branch).
+    // in-memory aggregate wins with at the 10× point. Gates: at most 16M
+    // membership rows are collected, and
+    // `spark.graft.copurchase.localMaxPairs` (default 120M packed longs
+    // ≈ 1 GB + sort workspace; 0 forces distributed) bounds the pair
+    // array — the kernel knows the EXACT volume from the degree
+    // histogram before committing memory and returns None over the gate
+    // (fall through to the distributed branch).
     val maxPairs = sp2.conf
       .get("spark.graft.copurchase.localMaxPairs", "120000000").toLong
-    val maxRows = sp2.conf
-      .get("spark.graft.copurchase.localMaxRows", "16000000").toLong
+    val maxRows = 16000000L
     var packableDist: Option[Boolean] = None
-    if (maxPairs > 0 && maxRows > 0 && maxRows <= Int.MaxValue - 1) {
+    if (maxPairs > 0) {
       // decide with ONE exchange-free scan (count + id ranges as partial
       // aggs) — a limit-probe would route the whole join through
       // CollectLimitExec's incremental single-task job ladder. The
@@ -716,29 +715,27 @@ object Algorithms {
     // exchanges + streaming per-partition kernels when both id spaces
     // pack into 31 bits. Partition counts stay AQE/conf-derived
     // (repartition without an explicit N), never a local constant.
-    if (sp2.conf.get("spark.graft.copurchase.distKernel", "true").toBoolean) {
-      val packable = packableDist.getOrElse {
-        val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
-          min("v").as("vlo"), max("v").as("vhi")).first()
-        !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
-          st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
-      }
-      if (packable) {
-        val capDeg = maxKeyDegree
-        val minW = minWeight
-        // pk ≥ 0 (both halves are 31-bit), so arithmetic shiftright on
-        // the partitioning expression is the v value
-        val byV = m0
-          .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("pk"))
-          .repartition(shiftright(col("pk"), 32))
-          .sortWithinPartitions("pk").as[Long]
-        val pairs = byV.mapPartitions(it =>
-          Algorithms.copurchasePairsStream(it, capDeg))
-        return pairs.repartition(col("value"))
-          .sortWithinPartitions("value")
-          .mapPartitions(it => Algorithms.packedRunCounts(it, minW))
-          .toDF("id_a", "id_b", "weight")
-      }
+    val streamable = packableDist.getOrElse {
+      val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
+        min("v").as("vlo"), max("v").as("vhi")).first()
+      !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
+        st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
+    }
+    if (streamable) {
+      val capDeg = maxKeyDegree
+      val minW = minWeight
+      // pk ≥ 0 (both halves are 31-bit), so arithmetic shiftright on
+      // the partitioning expression is the v value
+      val byV = m0
+        .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("pk"))
+        .repartition(shiftright(col("pk"), 32))
+        .sortWithinPartitions("pk").as[Long]
+      val pairs = byV.mapPartitions(it =>
+        Algorithms.copurchasePairsStream(it, capDeg))
+      return pairs.repartition(col("value"))
+        .sortWithinPartitions("value")
+        .mapPartitions(it => Algorithms.packedRunCounts(it, minW))
+        .toDF("id_a", "id_b", "weight")
     }
     val m = m0.distinct()
     // with an unbounded cap the hot-key frame is provably empty — skip

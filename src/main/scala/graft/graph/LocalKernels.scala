@@ -10,7 +10,7 @@ import graft.pgq.PathMode
   * (`compressed_sparse_row.hpp:25-47`) — that is exactly the right call
   * when the graph fits in one node's memory, and exactly wrong at 100 TB.
   * We therefore pick the strategy by statistics: graphs under the
-  * size gates (see [[PathFinder.localGate]]) run on these array kernels
+  * size gates (see [[PathFinder.localMaxRows]]) run on these array kernels
   * (micro/small graphs cost milliseconds instead of one Spark job per BFS
   * level), larger graphs take the distributed DataFrame loops. Both paths
   * implement identical semantics; the gate only changes performance.

@@ -27,13 +27,25 @@ import graft.pgq.{PathMode, PathPattern, SearchPrefix}
   */
 object PathFinder {
 
-  /** Strategy gate: graphs with at most this many edges AND seeds run on
-    * the driver-local array kernels ([[LocalKernels]]) — the analogue of
-    * the reference's in-memory CSR, correct only because it is size-gated.
-    * Bigger inputs always take the distributed DataFrame loops.
-    * Mutable so tests can force the distributed path on small fixtures. */
-  @volatile var localMaxEdges: Long = 2000000L
-  @volatile var localMaxSeeds: Long = 4096L
+  /** Strategy gate, a session conf: kernel inputs with at most this many
+    * rows (edges, distinct vertex ids) run on the driver-local array
+    * kernels ([[LocalKernels]]) — the analogue of the reference's
+    * in-memory CSR, correct only because it is size-gated. Bigger inputs
+    * take the distributed DataFrame loops; 0 forces every kernel
+    * distributed. Read from the INPUT FRAME's session at probe time, so
+    * two sessions in one JVM never flip each other's branches. */
+  private[graft] val LocalMaxRowsKey = "spark.graft.local.maxRows"
+
+  /** The [[LocalMaxRowsKey]] gate of `spark` (default 2M), clamped to
+    * what a `limit(gate + 1)` probe can express. */
+  private[graft] def localMaxRows(spark: SparkSession): Long =
+    math.max(0L, math.min(Int.MaxValue - 1L,
+      spark.conf.get(LocalMaxRowsKey, "2000000").toLong))
+
+  /** Seed cap of the local path kernels. Only read once the edge gate
+    * has passed, so `spark.graft.local.maxRows = 0` already forces every
+    * seeded kernel distributed. */
+  private val localMaxSeeds = 4096L
 
   /** Lineage-cutting checkpoint used by every iterative kernel:
     * `localCheckpoint` plus the constraint scrub of
@@ -44,21 +56,10 @@ object PathFinder {
   private[graft] def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.CleanCheckpoint.cleanLocalCheckpoint(df)
 
-  /** Env hook (`SPARK_GRAFT_FORCE_DIST=1`): zero both gates so every
-    * kernel takes the distributed branch regardless of input size — how
-    * Bench/Verify time and value-check the cluster-scale path on data
-    * that would otherwise ride the driver-local arrays. */
-  def applyEnvGates(): Unit =
-    if (sys.env.get("SPARK_GRAFT_FORCE_DIST")
-        .exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
-      localMaxEdges = 0L
-      localMaxSeeds = 0L
-    }
-
   /** Collected edge arrays by slot ("raw", "eid", "denseLocal"): the
     * analogue of the reference's per-session CSR reuse (a csr id, once
     * built, serves every subsequent query until delete_csr). Bounded to
-    * 3 arrays ≤ localMaxEdges each so the worst case stays a couple
+    * 3 arrays ≤ the local gate each so the worst case stays a couple
     * hundred MB on a driver sized for local kernels. */
   private[graft] val edgeMemo = new PlanMemo[Array[(Long, Long, Long)]](3)
 
@@ -171,7 +172,7 @@ object PathFinder {
     * (usually uncached) edge-view plan, so on the distributed branch —
     * where no edge-array memo entry ever forms — every query over the
     * same view re-paid the probe scan. The gate is the slot because
-    * specs flip [[localMaxEdges]] to force branches. */
+    * sessions lower [[LocalMaxRowsKey]] to force branches. */
   private val gateMemo = new PlanMemo[Boolean](8)
 
   /** Fused size gate + collect: ONE `limit(gate+1)` job answers the gate
@@ -182,7 +183,7 @@ object PathFinder {
     * user-interaction graph paid ~0.3-0.5 s twice). An over-gate probe
     * hauls ≤ gate+1 narrow rows to the driver once per view per session
     * (the same bound the local kernels already accept for their collect;
-    * with the gates forced to 0 — FORCE_DIST / production posture — the
+    * with the gate forced to 0 — the forced-distributed posture — the
     * probe is `limit(1)`). Verdicts land in [[gateMemo]], under-gate
     * arrays in [[edgeMemo]]'s usual slot so [[collectEdges]] hits memo. */
   /** Row cap for the FUSED tier of the probe+collect strategy gates: a
@@ -191,7 +192,7 @@ object PathFinder {
     * count-then-collect shape — without the cap, an OVER-GATE view
     * (sf4's 4M-edge user graph) shipped gate+1 rows to the driver per
     * probe just to learn "distributed", where the count probe ships one
-    * long. Under FORCE_DIST (gates = 0) both tiers are `limit(1)`. */
+    * long. With the gate at 0 both tiers are `limit(1)`. */
   private[graft] val fusedProbeCap = 262144L
 
   /** Two-tier fused probe for ANY kernel-input frame: ONE limited
@@ -199,19 +200,19 @@ object PathFinder {
     * — the common local-twin case), legacy count-then-collect between
     * the fuse cap and the gate, None over the gate with no gate-sized
     * driver haul. */
-  private[graft] def probeRowsUnderGate(df: DataFrame)
+  private def probeRowsUnderGate(df: DataFrame, gate: Long)
       : Option[Array[org.apache.spark.sql.Row]] = {
-    val cap = math.min(fusedProbeCap, localMaxEdges)
+    val cap = math.min(fusedProbeCap, gate)
     val head = df.limit(cap.toInt + 1).collect()
     if (head.length <= cap) Some(head)
-    else if (cap >= localMaxEdges) None // cap == gate: over-gate proven
+    else if (cap >= gate) None // cap == gate: over-gate proven
     else {
       // mid-tier (cap < rows ≤ gate): the collect is LIMIT-bounded too,
       // so a nondeterministic frame or a data change between the count
       // and the collect can never haul more than gate+1 rows to the
       // driver — the same hard bound tier 1 has
-      val full = df.limit(localMaxEdges.toInt + 1).collect()
-      if (full.length <= localMaxEdges) Some(full) else None
+      val full = df.limit(gate.toInt + 1).collect()
+      if (full.length <= gate) Some(full) else None
     }
   }
 
@@ -231,9 +232,9 @@ object PathFinder {
   private[graft] def probeRowsUnderGateMemo(df: DataFrame)
       : Option[Array[org.apache.spark.sql.Row]] = {
     val id = PlanMemo.id(df)
-    val gate = localMaxEdges
+    val gate = localMaxRows(df.sparkSession)
     rowProbeMemo.get(id, gate).getOrElse {
-      val res = probeRowsUnderGate(df)
+      val res = probeRowsUnderGate(df, gate)
       if (res.forall(_.length <= fusedProbeCap))
         rowProbeMemo.put(id, gate, res)
       else res
@@ -244,7 +245,7 @@ object PathFinder {
       : Option[Array[(Long, Long, Long)]] = {
     val id = PlanMemo.id(e)
     val slot = if (withEid) "eid" else "raw"
-    val gate = localMaxEdges
+    val gate = localMaxRows(e.sparkSession)
     // an array memoized under a higher gate must not answer a lower one
     edgeMemo.get(id, slot).filter(_.length <= gate).orElse {
       // only a negative verdict is read back: a positive one whose array
@@ -255,7 +256,8 @@ object PathFinder {
           if (withEid)
             e.select(col("src").cast("long"), col("dst").cast("long"),
               col("eid").cast("long"))
-          else e.select(col("src").cast("long"), col("dst").cast("long")))
+          else e.select(col("src").cast("long"), col("dst").cast("long")),
+          gate)
         gateMemo.put(id, gate, probe.isDefined)
         probe.map { rows =>
           edgeMemo.put(id, slot,
@@ -307,7 +309,7 @@ object PathFinder {
 
   /** Fused vertex-side gate + collect for the algorithm wrappers (the
     * [[probeSeeds]] pattern at the EDGE gate): Some(distinct ids) when
-    * the distinct-id count is under [[localMaxEdges]], None otherwise —
+    * the distinct-id count is under [[LocalMaxRowsKey]], None otherwise —
     * ONE limited job instead of a count probe plus a second full
     * evaluation of the (often derived: events→distinct users) vertex
     * frame. Gating on the DISTINCT count is more permissive than the
@@ -444,9 +446,7 @@ object PathFinder {
       // already cached) sizes partitions at ~1M edges (~16 MB) each,
       // floored at 4 for level parallelism and capped at the session
       // width — a 100 TB edge set still gets the full cluster width.
-      val rowsPer = spark.conf
-        .get("spark.graft.edgeIndex.rowsPerPartition", (1L << 20).toString)
-        .toLong
+      val rowsPer = 1L << 20
       val confParts = spark.sessionState.conf.numShufflePartitions
       val n = built.count()
       val parts = math.max(math.min(confParts, 4),

@@ -245,11 +245,11 @@ object Sampling {
     // range-exchange + cache + two-pass machinery is pure stage floor
     // (~1 s of jobs for a 0.02 s local sort at sf0.1); over it the
     // probe is a bounded prefix scan, trivial next to the exchange.
-    // `spark.graft.quantiles.localMaxRows` = 0 forces distributed
-    // (plan-guard specs); output is rank-identical by the parity spec.
-    val localMax = spark.conf
-      .get("spark.graft.quantiles.localMaxRows", "2000000").toLong
-    if (localMax > 0 && localMax <= Int.MaxValue - 1) {
+    // The shared local gate (`spark.graft.local.maxRows`) = 0 forces
+    // distributed (plan-guard specs); output is rank-identical by the
+    // parity spec.
+    val localMax = graft.graph.PathFinder.localMaxRows(spark)
+    if (localMax > 0) {
       val probed = df.filter(col(valueCol).isNotNull)
         .select(col(valueCol).cast("double").as("__v"))
         .limit(localMax.toInt + 1).collect()

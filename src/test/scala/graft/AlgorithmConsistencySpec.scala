@@ -12,6 +12,21 @@ import graft.graph.Algorithms
   * covers the space of shapes). */
 class AlgorithmConsistencySpec extends AnyFunSuite {
 
+  import Fixture.withConf
+
+  /** Runs `body` with every size-gated kernel forced distributed. */
+  private def withDist[T](body: => T): T =
+    withConf(Fixture.spark)(Fixture.ForceDist)(body)
+
+  /** Turns off co-purchase's local kernel (its pair gate is its own). */
+  private val NoLocalPairs = "spark.graft.copurchase.localMaxPairs" -> "0"
+
+  /** Co-purchase memberships whose v no longer packs into 31 bits, so
+    * the distributed branch runs the blocked join instead of the packed
+    * streaming kernel; u, and so every output pair, is unchanged. */
+  private def unpackableV(ms: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    ms.map { case (u, v) => (u, v + (1L << 31)) }
+
   private def randomGraph(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
     val rnd = new scala.util.Random(seed)
     val n = 8 + rnd.nextInt(10)
@@ -121,12 +136,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "wedge join agree on random graphs") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     for (seed <- 71L to 76L) {
       val (vs, es) = randomGraph(seed)
       val localTri = Algorithms.triangleCounts(
@@ -153,12 +162,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "brute-force fixpoint on random graphs") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     for (seed <- 81L to 86L; k <- Seq(2, 3)) {
       val (vs, es) = randomGraph(seed)
       // brute-force oracle: recompute undirected simple degrees over the
@@ -190,15 +193,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "distance oracle on random digraphs") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val (e0, s0) = (PathFinder.localMaxEdges, PathFinder.localMaxSeeds)
-      PathFinder.localMaxEdges = 0
-      PathFinder.localMaxSeeds = 0
-      try body finally {
-        PathFinder.localMaxEdges = e0; PathFinder.localMaxSeeds = s0
-      }
-    }
     for (seed <- 91L to 94L) {
       val (vs, es) = randomGraph(seed)
       // Floyd-Warshall distances as the oracle
@@ -238,12 +232,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "conserve mass, and keep non-reachable vertices at zero") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     for (seed <- 101L to 104L) {
       val (vs, es) = randomGraph(seed)
       val seedSet = vs.filter(_ % 3 == 0).toSet
@@ -336,12 +324,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "edge picked by the hash argmin; dead ends halt in place") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     // test-side hash oracle: an INDEPENDENT md5 route (hex via BigInteger
     // formatting, not the kernel's byte loop)
     def h(start: Long, r: Int, t: Int, d: Long): String = {
@@ -394,12 +376,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "update; a dense clique holds its label against one bridge") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     def naive(vs: Seq[Long], es: Seq[(Long, Long)],
         rounds: Int): Map[Long, Long] = {
       val und = es.filter(e => e._1 != e._2)
@@ -445,12 +421,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "oracle on random digraphs; source sampling sums only those sources") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     // independent oracle: enumerate every shortest path by BFS-layered
     // DP-free expansion, then count interior occurrences / sigma_st —
     // no Brandes recurrence anywhere
@@ -518,12 +488,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "k-core but not the truss") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     def naive(es: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
       var cur = es.filter(e => e._1 != e._2)
         .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).toSet
@@ -563,12 +527,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "iteration, conserve mass, and redistribute dangling uniformly") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     for (seed <- 901L to 904L) {
       val (vs, es0) = randomGraph(seed)
       val es = es0.zipWithIndex.map { case ((a, b), i) =>
@@ -614,22 +572,18 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       .toMap
     // the size-gated LOCAL kernel (default on this fixture) must match
     // BOTH distributed branches exactly: the packed streaming kernel
-    // (distKernel, the default) and the r14 blocked-join plan
-    s.conf.set("spark.graft.copurchase.localMaxPairs", "0")
-    val gotDist = try Algorithms.bipartiteProjection(ms.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    finally s.conf.unset("spark.graft.copurchase.localMaxPairs")
+    // (packable ids) and the r14 blocked-join plan, reached by offsetting
+    // v past 31 bits — the membership stream no longer packs while u
+    // (the output ids) still does, so the pair count stays packed
+    val gotDist = withConf(s)(NoLocalPairs)(
+      Algorithms.bipartiteProjection(ms.toDF("u", "v"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap)
     assert(gotDist == got, "local kernel diverged from distributed kernel")
-    s.conf.set("spark.graft.copurchase.localMaxPairs", "0")
-    s.conf.set("spark.graft.copurchase.distKernel", "false")
-    val gotJoin = try Algorithms.bipartiteProjection(ms.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    finally {
-      s.conf.unset("spark.graft.copurchase.localMaxPairs")
-      s.conf.unset("spark.graft.copurchase.distKernel")
-    }
+    val gotJoin = withConf(s)(NoLocalPairs)(
+      Algorithms.bipartiteProjection(unpackableV(ms).toDF("u", "v"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap)
     assert(gotJoin == got, "blocked-join branch diverged from kernels")
     val dm = ms.distinct
     val byV = dm.groupBy(_._2).map { case (v, xs) => v -> xs.map(_._1) }
@@ -649,12 +603,10 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
     val keptV = byV.filter(_._2.size <= 3)
     assert(capped == brute(keptV.values.map(_.sorted)))
     // the distributed streaming kernel applies the cap per group too
-    s.conf.set("spark.graft.copurchase.localMaxPairs", "0")
-    val cappedDist = try Algorithms.bipartiteProjection(ms.toDF("u", "v"),
-        maxKeyDegree = 3L)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    finally s.conf.unset("spark.graft.copurchase.localMaxPairs")
+    val cappedDist = withConf(s)(NoLocalPairs)(
+      Algorithms.bipartiteProjection(ms.toDF("u", "v"), maxKeyDegree = 3L)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap)
     assert(cappedDist == capped, "distKernel cap diverged from local cap")
     // minWeight prunes the tail exactly
     val pruned = Algorithms.bipartiteProjection(ms.toDF("u", "v"),
@@ -675,24 +627,20 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
         yield (u, v))
     // force the distributed BLOCKED-JOIN branch — that join is what this
     // test audits: the local kernel would answer the fixture first, and
-    // the packed streaming kernel (distKernel) would answer it second
-    s.conf.set("spark.graft.copurchase.localMaxPairs", "0")
-    s.conf.set("spark.graft.copurchase.distKernel", "false")
-    def run(bs: Int) = Algorithms.bipartiteProjection(ms.toDF("u", "v"),
-        blockSize = bs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val fine = try {
-      val fine = run(8)
-      assert(fine == run(1024), "blocked split must be exactly-once")
+    // the packed streaming kernel would answer it second unless v is
+    // offset past 31 bits (u, the output ids, still packs)
+    def run(rows: Seq[(Long, Long)], bs: Int) =
+      Algorithms.bipartiteProjection(rows.toDF("u", "v"), blockSize = bs)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap
+    val fine = withConf(s)(NoLocalPairs) {
+      val fine = run(unpackableV(ms), 8)
+      assert(fine == run(unpackableV(ms), 1024),
+        "blocked split must be exactly-once")
       // and the packed streaming kernel must agree on the hot-key fixture
-      s.conf.unset("spark.graft.copurchase.distKernel")
-      assert(run(1024) == fine,
+      assert(run(ms, 1024) == fine,
         "distKernel diverged from blocked join on the hot-key fixture")
       fine
-    } finally {
-      s.conf.unset("spark.graft.copurchase.localMaxPairs")
-      s.conf.unset("spark.graft.copurchase.distKernel")
     }
     // the hot key alone contributes C(60,2) = 1770 pairs of weight >= 1
     assert(fine.size >= 1770)
@@ -736,15 +684,11 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
   test("OpCaches: tracked operator caches release on demand") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
     graft.OpCaches.releaseAll()
     val es = (for (i <- 0L to 5L; j <- 0L to 5L if i < j) yield (i, j))
     // force the distributed branch — only it forms the tracked cache
     // (the size-gated local kernel never touches OpCaches)
-    val e0 = PathFinder.localMaxEdges
-    PathFinder.localMaxEdges = 0
-    try Algorithms.linkPredictionScores(es.toDF("src", "dst")).count()
-    finally PathFinder.localMaxEdges = e0
+    withDist(Algorithms.linkPredictionScores(es.toDF("src", "dst")).count())
     assert(graft.OpCaches.trackedCount >= 1)
     graft.OpCaches.releaseAll()
     assert(graft.OpCaches.trackedCount == 0)
@@ -754,12 +698,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "exactly (rounded doubles included)") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getDouble(4),
@@ -818,12 +756,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "enumeration on random timestamped digraphs") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     // independent oracle: enumerate EVERY temporal path of <= maxHops
     // edges (no label pruning at all), take the min arrival per pair
     def oracle(es: Seq[(Long, Long, Long)], seeds: Seq[Long], t0: Long,
@@ -864,12 +796,6 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
       "weighted argmax; a heavy edge outvotes a count majority") {
     val s = Fixture.init()
     import s.implicits._
-    import graft.graph.PathFinder
-    def withDist[T](body: => T): T = {
-      val e = PathFinder.localMaxEdges
-      PathFinder.localMaxEdges = 0
-      try body finally PathFinder.localMaxEdges = e
-    }
     def r9(x: Double): Double =
       java.math.BigDecimal.valueOf(x)
         .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()

@@ -11,15 +11,8 @@ import graft.model.TableResolver
 class DistributedKernelsSpec extends AnyFunSuite {
   import Fixture._
 
-  private def withDistributed[T](body: => T): T = {
-    val (e, s) = (PathFinder.localMaxEdges, PathFinder.localMaxSeeds)
-    PathFinder.localMaxEdges = 0
-    PathFinder.localMaxSeeds = 0
-    try body finally {
-      PathFinder.localMaxEdges = e
-      PathFinder.localMaxSeeds = s
-    }
-  }
+  private def withDistributed[T](body: => T): T =
+    withConf(spark)(ForceDist)(body)
 
   test("compiler-embedded distributed kernel output survives constraint " +
       "propagation (localCheckpoint leak regression)") {

@@ -20,6 +20,10 @@ import graft.graph.{Algorithms, PathFinder, PlanMemo}
   */
 class FusedProbeSpec extends AnyFunSuite {
 
+  private def withGate[T](s: org.apache.spark.sql.SparkSession, rows: Long)(
+      body: => T): T =
+    Fixture.withConf(s)("spark.graft.local.maxRows" -> rows.toString)(body)
+
   test("localEdgePairs under gate returns the complete cleaned multiset") {
     val s = Fixture.init()
     import s.implicits._
@@ -36,36 +40,29 @@ class FusedProbeSpec extends AnyFunSuite {
     val s = Fixture.init()
     import s.implicits._
     val edges = (1L to 50L).map(i => (i, i + 1)).toDF("src", "dst")
-    val saved = PathFinder.localMaxEdges
     try {
-      PathFinder.localMaxEdges = 10L
-      PlanMemo.clearAll()
-      assert(PathFinder.localEdgePairs(edges).isEmpty)
-      PathFinder.localMaxEdges = saved
+      withGate(s, 10L) {
+        PlanMemo.clearAll()
+        assert(PathFinder.localEdgePairs(edges).isEmpty)
+      }
       PlanMemo.clearAll()
       val got = PathFinder.localEdgePairs(edges)
       assert(got.isDefined && got.get.length == 50)
-    } finally {
-      PathFinder.localMaxEdges = saved
-      PlanMemo.clearAll()
-    }
+    } finally PlanMemo.clearAll()
   }
 
   test("a memoized under-gate array does not answer a lowered gate") {
     val s = Fixture.init()
     import s.implicits._
     val edges = (1L to 20L).map(i => (i, i + 1)).toDF("src", "dst")
-    val saved = PathFinder.localMaxEdges
     try {
       PlanMemo.clearAll()
       assert(PathFinder.localEdgePairs(edges).isDefined) // memoize 20 rows
-      PathFinder.localMaxEdges = 5L
-      assert(PathFinder.localEdgePairs(edges).isEmpty,
-        "memo hit must respect the CURRENT gate, not the one it was built under")
-    } finally {
-      PathFinder.localMaxEdges = saved
-      PlanMemo.clearAll()
-    }
+      withGate(s, 5L) {
+        assert(PathFinder.localEdgePairs(edges).isEmpty,
+          "memo hit must respect the CURRENT gate, not the one it was built under")
+      }
+    } finally PlanMemo.clearAll()
   }
 
   test("mid-tier probe (cap < rows <= gate) still returns the complete frame") {
@@ -79,15 +76,10 @@ class FusedProbeSpec extends AnyFunSuite {
     assert(got.isDefined && got.get.length == n,
       s"mid-tier collect must be complete (got ${got.map(_.length)})")
     // and over-gate stays None with the same input under a lowered gate
-    val saved = PathFinder.localMaxEdges
-    try {
-      PathFinder.localMaxEdges = n - 1
+    try withGate(s, n - 1) {
       PlanMemo.clearAll()
       assert(PathFinder.localEdgePairs(edges).isEmpty)
-    } finally {
-      PathFinder.localMaxEdges = saved
-      PlanMemo.clearAll()
-    }
+    } finally PlanMemo.clearAll()
   }
 
   test("earliestArrivalFromMin == earliestArrival(minTs), null-row min included") {
@@ -125,23 +117,17 @@ class FusedProbeSpec extends AnyFunSuite {
     def run(): Seq[(Long, Double)] =
       Algorithms.weightedPageRank(vertices, edges, 0.85, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
-    val saved = PathFinder.localMaxEdges
     try {
-      PathFinder.localMaxEdges = 8L // raw 40 > 8, distinct 4 ≤ 8 → local
       PlanMemo.clearAll()
-      val local = run()
-      PathFinder.localMaxEdges = 0L // FORCE_DIST posture
+      val local = withGate(s, 8L)(run()) // raw 40 > 8, distinct 4 ≤ 8 → local
       PlanMemo.clearAll()
-      val dist = run()
+      val dist = withGate(s, 0L)(run()) // forced-distributed posture
       assert(local.map(_._1) == dist.map(_._1))
       local.zip(dist).foreach { case ((id, l), (_, d)) =>
         assert(math.abs(l - d) <= 1e-9 * math.max(1.0, math.abs(d)),
           s"rank diverged for id=$id: local=$l dist=$d")
       }
-    } finally {
-      PathFinder.localMaxEdges = saved
-      PlanMemo.clearAll()
-    }
+    } finally PlanMemo.clearAll()
   }
 
   test("wLPA |und| gate (raw clean > gate, aggregated und ≤ gate): " +
@@ -159,19 +145,13 @@ class FusedProbeSpec extends AnyFunSuite {
     def run(): Seq[(Long, Long)] =
       Algorithms.weightedLabelPropagation(vertices, edges, 4).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val saved = PathFinder.localMaxEdges
     try {
-      PathFinder.localMaxEdges = 8L // raw 30 > 8, |und| 3 ≤ 8 → local
       PlanMemo.clearAll()
-      val local = run()
-      PathFinder.localMaxEdges = 0L
+      val local = withGate(s, 8L)(run()) // raw 30 > 8, |und| 3 ≤ 8 → local
       PlanMemo.clearAll()
-      val dist = run()
+      val dist = withGate(s, 0L)(run())
       assert(local == dist)
-    } finally {
-      PathFinder.localMaxEdges = saved
-      PlanMemo.clearAll()
-    }
+    } finally PlanMemo.clearAll()
   }
 
   test("earliestArrivalFromMin on an empty graph is empty") {

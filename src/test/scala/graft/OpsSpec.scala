@@ -8,7 +8,7 @@ import graft.ops.{Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis
 /** Unit coverage for the pipeline ops: IVF vs brute-force recall,
   * mapPartitions decode, LSH determinism, dedup invariants. */
 class OpsSpec extends AnyFunSuite {
-  import Fixture.init
+  import Fixture.{init, withConf, ForceDist}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -1131,8 +1131,7 @@ class OpsSpec extends AnyFunSuite {
     val probs = Seq(0.01, 0.25, 0.5, 0.75, 1.0)
     // force the DISTRIBUTED branch (the default gate would answer this
     // small fixture from the driver sort)
-    s.conf.set("spark.graft.quantiles.localMaxRows", "0")
-    val got = try {
+    val got = withConf(s)(ForceDist) {
       val got = graft.ops.Sampling.exactQuantiles(rows, "v", probs,
           numPartitions = 7)
         .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
@@ -1146,7 +1145,7 @@ class OpsSpec extends AnyFunSuite {
         assert(alt == got, s"numPartitions=$p diverged")
       }
       got
-    } finally s.conf.unset("spark.graft.quantiles.localMaxRows")
+    }
     val sortedVals = vals.map(_.toDouble).sorted
     def qd(p: Double) = sortedVals(math.ceil(p * sortedVals.length).toInt - 1)
     assert(got.map(_._1) == probs)
@@ -1158,13 +1157,12 @@ class OpsSpec extends AnyFunSuite {
       .toList.sortBy(_._1)
     assert(local == got, "local branch diverged from distributed")
     // a gate SMALLER than the column still answers distributed, exactly
-    s.conf.set("spark.graft.quantiles.localMaxRows", "10")
-    try {
+    withConf(s)("spark.graft.local.maxRows" -> "10") {
       val over = graft.ops.Sampling.exactQuantiles(rows, "v", probs)
         .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
         .toList.sortBy(_._1)
       assert(over == got, "over-gate fallthrough diverged")
-    } finally s.conf.unset("spark.graft.quantiles.localMaxRows")
+    }
     // the sampled op at rate 1.0 sees the identical multiset: same ranks
     val sampled = graft.ops.Sampling
       .sampleQuantiles(rows, "k", "v", 1.0, probs)
@@ -1179,10 +1177,8 @@ class OpsSpec extends AnyFunSuite {
     assert(one == List((5.0, 1L)))
     assert(graft.ops.Sampling.exactQuantiles(
       Seq.empty[(Long, Long)].toDF("k", "v"), "v", Seq(0.5)).count() == 0)
-    s.conf.set("spark.graft.quantiles.localMaxRows", "0")
-    try assert(graft.ops.Sampling.exactQuantiles(
-      Seq.empty[(Long, Long)].toDF("k", "v"), "v", Seq(0.5)).count() == 0)
-    finally s.conf.unset("spark.graft.quantiles.localMaxRows")
+    withConf(s)(ForceDist)(assert(graft.ops.Sampling.exactQuantiles(
+      Seq.empty[(Long, Long)].toDF("k", "v"), "v", Seq(0.5)).count() == 0))
   }
 
   private def annRows(df: org.apache.spark.sql.DataFrame) =
@@ -1428,8 +1424,7 @@ class OpsSpec extends AnyFunSuite {
     assert(!pTiny.contains("Exchange"), pTiny.take(600))
     // compact input OVER the gate (threshold floored for the test):
     // exactly one round-robin spread
-    s.conf.set("spark.graft.spread.minScanBytes", "1")
-    try {
+    withConf(s)("spark.graft.spread.minScanBytes" -> "1") {
       val pNarrow = TextAnalysis.redactPii(docs, "text")
         .queryExecution.executedPlan.toString
       assert("Exchange RoundRobinPartitioning".r
@@ -1442,7 +1437,7 @@ class OpsSpec extends AnyFunSuite {
         .select("doc_id", "n_emails", "n_ips", "redacted_text")
         .collect().map(_.toString).sorted
       assert(a.sameElements(b))
-    } finally s.conf.unset("spark.graft.spread.minScanBytes")
+    }
   }
 
   test("searchIvfPq tolerates nprobe beyond the live list count") {

@@ -142,15 +142,14 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = Fixture.init()
     // default gate answers the fixture from the driver sort; the guard
     // is about the DISTRIBUTED plan, so force that branch
-    s.conf.set("spark.graft.quantiles.localMaxRows", "0")
-    try {
+    Fixture.withConf(s)(Fixture.ForceDist) {
       val plan = SparkEntry.queries("q120_exact_quantiles")(s, sf)
         .queryExecution.executedPlan.toString
       // the naive form is a no-partition Window (one task sorts the
       // whole column); the distributed form never materializes a rank
       assert(!plan.contains("Window"), plan.take(800))
       assert(!plan.contains("Exchange SinglePartition"), plan.take(800))
-    } finally s.conf.unset("spark.graft.quantiles.localMaxRows")
+    }
   }
 
   /** The only exchange a per-row text pass may carry is the deliberate
@@ -343,10 +342,9 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = Fixture.init()
     import s.implicits._
     import graft.graph.PathFinder
-    val g0 = PathFinder.localMaxEdges
-    PathFinder.localMaxEdges = 0 // force the distributed branch
     PathFinder.distEidMemo.clear()
-    try {
+    // force the distributed branch
+    try Fixture.withConf(s)(Fixture.ForceDist) {
       // branching cyclic graph so k-shortest has real work at every level
       val edges = (for (i <- 0L until 40L; j <- Seq(1L, 3L, 7L))
         yield (i, (i + j) % 40L)).toDF("src", "dst")
@@ -372,7 +370,6 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(PathFinder.distEidMemo.builds == before + 2,
         "a different edge view must build its own index")
     } finally {
-      PathFinder.localMaxEdges = g0
       PathFinder.distEidMemo.clear()
       graft.OpCaches.releaseAll()
     }

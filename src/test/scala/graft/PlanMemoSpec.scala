@@ -129,17 +129,17 @@ class PlanMemoSpec extends AnyFunSuite {
     assert(released.toSet == Set(f1, f2))
     released.foreach(_.unpersist(false))
     // the real session edge index: one build per session, same answers
-    val g0 = PathFinder.localMaxEdges
-    PathFinder.localMaxEdges = 0 // force the distributed branch
+    // (the distributed branch forced in both sessions)
     PathFinder.distEidMemo.clear()
-    try {
-      def run(s: org.apache.spark.sql.SparkSession) = {
+    def run(s: org.apache.spark.sql.SparkSession) =
+      Fixture.withConf(s)(Fixture.ForceDist) {
         val edges = s.createDataFrame(Seq((0L, 1L), (1L, 2L), (2L, 0L)))
           .toDF("src", "dst")
         PathFinder.kShortestPaths(s, edges, s.range(1).toDF("id"), 1L,
           Some(2L), graft.pgq.PathMode.Walk, k = 1)
           .collect().map(_.mkString("|")).sorted.toSeq
       }
+    try {
       val before = PathFinder.distEidMemo.builds
       val r1 = run(s1)
       val r2 = run(s2)
@@ -150,7 +150,6 @@ class PlanMemoSpec extends AnyFunSuite {
       assert(PathFinder.distEidMemo.builds == before + 2,
         "a repeat call in either session must hit its own index")
     } finally {
-      PathFinder.localMaxEdges = g0
       PathFinder.distEidMemo.clear()
       OpCaches.releaseAll()
     }

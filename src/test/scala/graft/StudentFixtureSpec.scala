@@ -48,6 +48,21 @@ object Fixture {
 
   def matchDF(spec: MatchSpec): DataFrame =
     GraphTableCompiler.compile(init(), spec, pg, TableResolver.catalog)
+
+  /** Runs `body` with the given session confs set on `s`, then restores
+    * each key's previous value (or unsets it when it had none). */
+  def withConf[T](s: SparkSession)(kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Forces every size-gated kernel of `s` onto its distributed branch. */
+  val ForceDist: (String, String) = "spark.graft.local.maxRows" -> "0"
 }
 
 class StudentFixtureSpec extends AnyFunSuite {
