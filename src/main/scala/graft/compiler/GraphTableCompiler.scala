@@ -1089,9 +1089,6 @@ object GraphTableCompiler {
           p0a.copy(prefix = Some(SearchPrefix.AnyShortest))
         else p0a
       }
-      // prefix guards apply to every pattern, quantified or not
-      // (reference PGQCheckPathModeSupport runs unconditionally)
-      PathFinder.checkSupported(p)
       val quantifiedEdgeCount = p.elements.count {
         case e: EdgePattern => e.quantifier.isDefined
         case _ => false
@@ -1648,7 +1645,6 @@ object GraphTableCompiler {
       * `CheckNamedSubpath`/shortest-path CTE :709-790. */
     def bindPathEdge(p: PathPattern, ep: EdgePattern, vp: VertexPattern,
         aAlias: String): (String, Option[String]) = {
-      PathFinder.checkSupported(p)
       val et = resolveEdge(ep.varName.getOrElse("(edge)"), ep.label)
       val q = ep.quantifier.getOrElse(Quantifier(1, Some(1)))
       // reference guard (match.cpp:100-104, subpath_match.test): an

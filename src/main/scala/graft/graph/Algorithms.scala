@@ -20,6 +20,20 @@ import graft.model.{PropertyGraph, TableResolver}
   */
 object Algorithms {
 
+  /** The local branch of the (vertices, edges) kernels: `kernel` over the
+    * distinct vertex ids and the cleaned edge pairs when both fit their
+    * gate (vertices: `vertexCap`, default the session gate), None (→ the
+    * distributed branch) otherwise. Edges are gated first: every kernel
+    * needs them, and a memoized verdict answers without a job. */
+  private def localGraph[A](vertices: DataFrame, edges: DataFrame,
+      vertexCap: Option[Long] = None)(
+      kernel: (Array[Long], Array[(Long, Long)]) => A): Option[A] =
+    for {
+      earr <- PathFinder.localEdgePairs(edges)
+      ids <- vertexCap.fold(PathFinder.localVertexIds(vertices))(
+        PathFinder.localVertexIds(vertices, _))
+    } yield kernel(ids, earr)
+
   /** PageRank with the reference's constants (damping 0.85, ε = 1e-6,
     * dangling-mass redistribution — `pagerank.cpp:30-82`).
     *
@@ -43,77 +57,72 @@ object Algorithms {
       damping: Double = 0.85, tol: Double = 1e-6,
       maxIter: Int = 100, fixedIter: Option[Int] = None,
       phantomNodes: Int = 2): DataFrame = {
-    val v = vertices.select(col("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nReal = v.count()
+    val sp = vertices.sparkSession
+    import sp.implicits._
     // small graphs: run the exact same iteration on driver arrays (the
     // reference's in-memory-kernel strategy, size-gated — see LocalKernels;
     // the vertex cap is 16× the path kernels' 4096-seed cap)
-    if (nReal <= 65536L) {
-      // shared gate+collect (memoized probe, null-endpoint-safe)
-      PathFinder.localEdgePairs(edges).foreach { earr =>
-        val ids = v.select(col("id").cast("long")).collect().map(_.getLong(0))
-        v.unpersist()
-        val res = LocalKernels.pageRank(ids, earr, damping, tol, maxIter,
-          fixedIter, phantomNodes)
-        val sp = vertices.sparkSession
-        import sp.implicits._
-        return res.toSeq.toDF("id", "pagerank")
-      }
-    }
-    val n = nReal.toDouble + phantomNodes
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-    // vertex, outdeg (0 for dangling)
-    val vd = v.join(outDeg, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vd.count()
+    localGraph(vertices, edges, vertexCap = Some(65536L)) { (ids, earr) =>
+      LocalKernels.pageRank(ids, earr, damping, tol, maxIter, fixedIter,
+        phantomNodes).toSeq.toDF("id", "pagerank")
+    }.getOrElse {
+      val v = vertices.select(col("id")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nReal = v.count()
+      val n = nReal.toDouble + phantomNodes
+      val e = edges.select(col("src"), col("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val outDeg = e.groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("outdeg"))
+      // vertex, outdeg (0 for dangling)
+      val vd = v.join(outDeg, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      vd.count()
 
-    var ranks = vd.select(col("id"), col("outdeg"),
-      lit(1.0 / n).as("rank")).transform(graft.graph.PathFinder.ckpt)
-    var phantomRank = 1.0 / n
-    var iter = 0
-    var delta = Double.MaxValue
-    val iters = fixedIter.getOrElse(maxIter)
-    // dangling mass of the initial uniform ranks: one startup count, then
-    // each iteration's fused stats action keeps it current
-    var danglingReal = vd.filter(col("outdeg") === 0).count() / n
-    while (iter < iters && (fixedIter.isDefined || delta > tol)) {
-      iter += 1
-      // dangling mass redistributed uniformly (reference pagerank.cpp:50-71)
-      val corr = (danglingReal + phantomNodes * phantomRank) / n
-      val contribs = ranks.filter(col("outdeg") > 0)
-        .join(e, ranks("id") === e("src"))
-        .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy("id").agg(sum("c").as("inflow"))
-      val next = ranks.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), col("outdeg"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("inflow"), lit(0.0)) +
-              lit(corr))).as("rank"),
-          col("rank").as("prev"))
-        .transform(graft.graph.PathFinder.ckpt)
-      val phantomNext = (1.0 - damping) / n + damping * corr
-      // ONE fused action per iteration over the checkpointed result:
-      // next iteration's dangling mass + this iteration's convergence
-      // delta (previously two separate driver actions ⇒ two extra full
-      // passes over the rank table per iteration at scale)
-      val stats = next.agg(
-        coalesce(sum(when(col("outdeg") === 0, col("rank"))), lit(0.0))
-          .as("dang"),
-        max(abs(col("rank") - col("prev"))).as("delta")).first()
-      danglingReal = stats.getDouble(0)
-      if (fixedIter.isEmpty)
-        delta = math.max(stats.getDouble(1),
-          math.abs(phantomNext - phantomRank))
-      phantomRank = phantomNext
-      ranks = next.drop("prev")
+      var ranks = vd.select(col("id"), col("outdeg"),
+        lit(1.0 / n).as("rank")).transform(graft.graph.PathFinder.ckpt)
+      var phantomRank = 1.0 / n
+      var iter = 0
+      var delta = Double.MaxValue
+      val iters = fixedIter.getOrElse(maxIter)
+      // dangling mass of the initial uniform ranks: one startup count, then
+      // each iteration's fused stats action keeps it current
+      var danglingReal = vd.filter(col("outdeg") === 0).count() / n
+      while (iter < iters && (fixedIter.isDefined || delta > tol)) {
+        iter += 1
+        // dangling mass redistributed uniformly (reference pagerank.cpp:50-71)
+        val corr = (danglingReal + phantomNodes * phantomRank) / n
+        val contribs = ranks.filter(col("outdeg") > 0)
+          .join(e, ranks("id") === e("src"))
+          .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
+          .groupBy("id").agg(sum("c").as("inflow"))
+        val next = ranks.join(contribs, Seq("id"), "left_outer")
+          .select(col("id"), col("outdeg"),
+            (lit((1.0 - damping) / n) +
+              lit(damping) * (coalesce(col("inflow"), lit(0.0)) +
+                lit(corr))).as("rank"),
+            col("rank").as("prev"))
+          .transform(graft.graph.PathFinder.ckpt)
+        val phantomNext = (1.0 - damping) / n + damping * corr
+        // ONE fused action per iteration over the checkpointed result:
+        // next iteration's dangling mass + this iteration's convergence
+        // delta (previously two separate driver actions ⇒ two extra full
+        // passes over the rank table per iteration at scale)
+        val stats = next.agg(
+          coalesce(sum(when(col("outdeg") === 0, col("rank"))), lit(0.0))
+            .as("dang"),
+          max(abs(col("rank") - col("prev"))).as("delta")).first()
+        danglingReal = stats.getDouble(0)
+        if (fixedIter.isEmpty)
+          delta = math.max(stats.getDouble(1),
+            math.abs(phantomNext - phantomRank))
+        phantomRank = phantomNext
+        ranks = next.drop("prev")
+      }
+      v.unpersist(); e.unpersist(); vd.unpersist()
+      ranks.select(col("id"), col("rank").as("pagerank"))
     }
-    v.unpersist(); e.unpersist(); vd.unpersist()
-    ranks.select(col("id"), col("rank").as("pagerank"))
   }
 
   /** Weakly connected components. The reference uses sequential union-find
@@ -127,54 +136,49 @@ object Algorithms {
     */
   def weaklyConnectedComponents(vertices: DataFrame,
       edges: DataFrame): DataFrame = {
-    // small-graph strategy: union-find on driver arrays (size-gated by
-    // FUSED limit-probes, not count-then-collect — see PathFinder
-    // strategy gates; a kernel-memo hit answers gate and collect jobless)
-    val preArr = PathFinder.localEdgePairs(edges)
-    if (preArr.isDefined) {
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        val earr = preArr.get
-        val sp = vertices.sparkSession
-        import sp.implicits._
-        return LocalKernels.wcc(ids, earr).toSeq.toDF("id", "component")
+    val sp = vertices.sparkSession
+    import sp.implicits._
+    // small-graph strategy: union-find on driver arrays
+    localGraph(vertices, edges) { (ids, earr) =>
+      LocalKernels.wcc(ids, earr).toSeq.toDF("id", "component")
+    }.getOrElse {
+      val und = edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      // propagate over vertices ∪ edge endpoints so components merge through
+      // endpoints absent from `vertices` (matches the union-find local path);
+      // output is restricted back to `vertices` at the end
+      val domain = vertices.select(col("id"))
+        .union(und.select(col("src").as("id")))
+        .distinct()
+      var comp = domain.withColumn("component", col("id")).transform(graft.graph.PathFinder.ckpt)
+      var changed = true
+      while (changed) {
+        // neighbor-min propagation (one hop)...
+        val nbrMin = comp.join(und, comp("id") === und("src"))
+          .select(und("dst").as("id"), col("component"))
+          .groupBy("id").agg(min("component").as("nbc"))
+        val step1 = comp.join(nbrMin, Seq("id"), "left_outer")
+          .select(col("id"),
+            least(col("component"), coalesce(col("nbc"), col("component")))
+              .as("component"))
+        // ...then pointer jumping (component := component's component):
+        // labels chase the min in O(log diameter) rounds instead of O(diameter)
+        val ptr = step1.select(col("id").as("pid"), col("component").as("pc"))
+        val next = step1.join(ptr, step1("component") === ptr("pid"),
+            "left_outer")
+          .select(step1("id"),
+            least(step1("component"), coalesce(col("pc"), step1("component")))
+              .as("component"))
+          .transform(graft.graph.PathFinder.ckpt)
+        val prev = comp.select(col("id"), col("component").as("prevc"))
+        changed = !next.join(prev, Seq("id"))
+          .filter(col("component") < col("prevc")).isEmpty
+        comp = next
       }
+      und.unpersist()
+      comp.join(vertices.select(col("id")).distinct(), Seq("id"), "left_semi")
     }
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    // propagate over vertices ∪ edge endpoints so components merge through
-    // endpoints absent from `vertices` (matches the union-find local path);
-    // output is restricted back to `vertices` at the end
-    val domain = vertices.select(col("id"))
-      .union(und.select(col("src").as("id")))
-      .distinct()
-    var comp = domain.withColumn("component", col("id")).transform(graft.graph.PathFinder.ckpt)
-    var changed = true
-    while (changed) {
-      // neighbor-min propagation (one hop)...
-      val nbrMin = comp.join(und, comp("id") === und("src"))
-        .select(und("dst").as("id"), col("component"))
-        .groupBy("id").agg(min("component").as("nbc"))
-      val step1 = comp.join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbc"), col("component")))
-            .as("component"))
-      // ...then pointer jumping (component := component's component):
-      // labels chase the min in O(log diameter) rounds instead of O(diameter)
-      val ptr = step1.select(col("id").as("pid"), col("component").as("pc"))
-      val next = step1.join(ptr, step1("component") === ptr("pid"),
-          "left_outer")
-        .select(step1("id"),
-          least(step1("component"), coalesce(col("pc"), step1("component")))
-            .as("component"))
-        .transform(graft.graph.PathFinder.ckpt)
-      val prev = comp.select(col("id"), col("component").as("prevc"))
-      changed = !next.join(prev, Seq("id"))
-        .filter(col("component") < col("prevc")).isEmpty
-      comp = next
-    }
-    und.unpersist()
-    comp.join(vertices.select(col("id")).distinct(), Seq("id"), "left_semi")
   }
 
   /** Strongly connected components over the DIRECTED edge set (beyond
@@ -201,7 +205,7 @@ object Algorithms {
     * Every step is a join+agg over narrow (id, label) rows with
     * map-side combine; `localCheckpoint` cuts lineage per round.
     * Small graphs take the iterative-Tarjan array kernel instead
-    * ([[LocalKernels.scc]]), size-gated by limit-probes like WCC.
+    * ([[LocalKernels.scc]]), size-gated like WCC.
     *
     * @param vertices (id) — output domain
     * @param edges (src, dst) — directed
@@ -211,104 +215,102 @@ object Algorithms {
       edges: DataFrame): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    val preArr = PathFinder.localEdgePairs(edges)
-    if (preArr.isDefined) {
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        return LocalKernels.scc(ids, preArr.get).toSeq.toDF("id", "component")
-      }
-    }
-    // self-loops never change SCC membership; dedup once up front
-    val e0 = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(e0.select(col("src").as("id")))
-      .union(e0.select(col("dst").as("id")))
-      .distinct()
-    def restrict(ed: DataFrame, rem: DataFrame): DataFrame = ed
-      .join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .select(col("src"), col("dst"))
-    var remaining = domain.transform(graft.graph.PathFinder.ckpt)
-    var e = e0.transform(graft.graph.PathFinder.ckpt)
-    var assigned = Seq.empty[(Long, Long)].toDF("id", "root")
-    var done = remaining.isEmpty
-    while (!done) {
-      // 1. TRIM to fixpoint
-      var trimming = true
-      while (trimming) {
-        val core = e.select(col("src").as("id")).distinct()
-          .join(e.select(col("dst").as("id")).distinct(), Seq("id"))
-        val trimmed = remaining.join(core, Seq("id"), "left_anti")
-        if (trimmed.isEmpty) trimming = false
+    localGraph(vertices, edges) { (ids, earr) =>
+      LocalKernels.scc(ids, earr).toSeq.toDF("id", "component")
+    }.getOrElse {
+      // self-loops never change SCC membership; dedup once up front
+      val e0 = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .filter(col("src") =!= col("dst")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(e0.select(col("src").as("id")))
+        .union(e0.select(col("dst").as("id")))
+        .distinct()
+      def restrict(ed: DataFrame, rem: DataFrame): DataFrame = ed
+        .join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst"))
+      var remaining = domain.transform(graft.graph.PathFinder.ckpt)
+      var e = e0.transform(graft.graph.PathFinder.ckpt)
+      var assigned = Seq.empty[(Long, Long)].toDF("id", "root")
+      var done = remaining.isEmpty
+      while (!done) {
+        // 1. TRIM to fixpoint
+        var trimming = true
+        while (trimming) {
+          val core = e.select(col("src").as("id")).distinct()
+            .join(e.select(col("dst").as("id")).distinct(), Seq("id"))
+          val trimmed = remaining.join(core, Seq("id"), "left_anti")
+          if (trimmed.isEmpty) trimming = false
+          else {
+            assigned = assigned
+              .unionAll(trimmed.select(col("id"), col("id").as("root")))
+              .transform(graft.graph.PathFinder.ckpt)
+            remaining = remaining.join(core, Seq("id"), "left_semi")
+              .transform(graft.graph.PathFinder.ckpt)
+            e = restrict(e, remaining).transform(graft.graph.PathFinder.ckpt)
+          }
+        }
+        if (remaining.isEmpty) done = true
         else {
-          assigned = assigned
-            .unionAll(trimmed.select(col("id"), col("id").as("root")))
+          // 2. COLOR: forward max propagation + pointer jumping
+          var color = remaining.select(col("id"), col("id").as("color"))
             .transform(graft.graph.PathFinder.ckpt)
-          remaining = remaining.join(core, Seq("id"), "left_semi")
+          var changed = true
+          while (changed) {
+            val nbrMax = color.join(e, color("id") === e("src"))
+              .select(e("dst").as("id"), col("color"))
+              .groupBy("id").agg(max("color").as("nc"))
+            val step1 = color.join(nbrMax, Seq("id"), "left_outer")
+              .select(col("id"),
+                greatest(col("color"), coalesce(col("nc"), col("color")))
+                  .as("color"))
+            val ptr = step1.select(col("id").as("pid"), col("color").as("pc"))
+            val next = step1.join(ptr, step1("color") === ptr("pid"),
+                "left_outer")
+              .select(step1("id"),
+                greatest(step1("color"), coalesce(col("pc"), step1("color")))
+                  .as("color"))
+              .transform(graft.graph.PathFinder.ckpt)
+            changed = !next
+              .join(color.select(col("id"), col("color").as("prev")), Seq("id"))
+              .filter(col("color") > col("prev")).isEmpty
+            color = next
+          }
+          // 3. CONTAIN: backward growth from each root within its color
+          var members = color.filter(col("color") === col("id"))
+            .select(col("id"), col("id").as("root")).transform(graft.graph.PathFinder.ckpt)
+          var growing = true
+          while (growing) {
+            val grow = e
+              .join(members.select(col("id").as("dst"), col("root")),
+                Seq("dst"))
+              .select(col("src").as("id"), col("root"))
+              .join(color, Seq("id"))
+              .filter(col("color") === col("root"))
+              .select(col("id"), col("root"))
+              .join(members, Seq("id"), "left_anti")
+              .distinct()
+            if (grow.isEmpty) growing = false
+            else members = members.unionAll(grow).transform(graft.graph.PathFinder.ckpt)
+          }
+          assigned = assigned.unionAll(members).transform(graft.graph.PathFinder.ckpt)
+          remaining = remaining
+            .join(members.select(col("id")), Seq("id"), "left_anti")
             .transform(graft.graph.PathFinder.ckpt)
           e = restrict(e, remaining).transform(graft.graph.PathFinder.ckpt)
+          done = remaining.isEmpty
         }
       }
-      if (remaining.isEmpty) done = true
-      else {
-        // 2. COLOR: forward max propagation + pointer jumping
-        var color = remaining.select(col("id"), col("id").as("color"))
-          .transform(graft.graph.PathFinder.ckpt)
-        var changed = true
-        while (changed) {
-          val nbrMax = color.join(e, color("id") === e("src"))
-            .select(e("dst").as("id"), col("color"))
-            .groupBy("id").agg(max("color").as("nc"))
-          val step1 = color.join(nbrMax, Seq("id"), "left_outer")
-            .select(col("id"),
-              greatest(col("color"), coalesce(col("nc"), col("color")))
-                .as("color"))
-          val ptr = step1.select(col("id").as("pid"), col("color").as("pc"))
-          val next = step1.join(ptr, step1("color") === ptr("pid"),
-              "left_outer")
-            .select(step1("id"),
-              greatest(step1("color"), coalesce(col("pc"), step1("color")))
-                .as("color"))
-            .transform(graft.graph.PathFinder.ckpt)
-          changed = !next
-            .join(color.select(col("id"), col("color").as("prev")), Seq("id"))
-            .filter(col("color") > col("prev")).isEmpty
-          color = next
-        }
-        // 3. CONTAIN: backward growth from each root within its color
-        var members = color.filter(col("color") === col("id"))
-          .select(col("id"), col("id").as("root")).transform(graft.graph.PathFinder.ckpt)
-        var growing = true
-        while (growing) {
-          val grow = e
-            .join(members.select(col("id").as("dst"), col("root")),
-              Seq("dst"))
-            .select(col("src").as("id"), col("root"))
-            .join(color, Seq("id"))
-            .filter(col("color") === col("root"))
-            .select(col("id"), col("root"))
-            .join(members, Seq("id"), "left_anti")
-            .distinct()
-          if (grow.isEmpty) growing = false
-          else members = members.unionAll(grow).transform(graft.graph.PathFinder.ckpt)
-        }
-        assigned = assigned.unionAll(members).transform(graft.graph.PathFinder.ckpt)
-        remaining = remaining
-          .join(members.select(col("id")), Seq("id"), "left_anti")
-          .transform(graft.graph.PathFinder.ckpt)
-        e = restrict(e, remaining).transform(graft.graph.PathFinder.ckpt)
-        done = remaining.isEmpty
-      }
+      e0.unpersist()
+      // canonicalize: the root is the SCC's max; report the min member
+      val canon = assigned.groupBy("root").agg(min("id").as("component"))
+      assigned.join(canon, Seq("root"))
+        .select(col("id"), col("component"))
+        .join(vertices.select(col("id").cast("long").as("id")).distinct(),
+          Seq("id"), "left_semi")
     }
-    e0.unpersist()
-    // canonicalize: the root is the SCC's max; report the min member
-    val canon = assigned.groupBy("root").agg(min("id").as("component"))
-    assigned.join(canon, Seq("root"))
-      .select(col("id"), col("component"))
-      .join(vertices.select(col("id").cast("long").as("id")).distinct(),
-        Seq("id"), "left_semi")
   }
 
   /** Deduplicated undirected neighbor relation (both directions, self
@@ -365,26 +367,25 @@ object Algorithms {
     * @return (id, triangles: long) — 0 for triangle-free vertices
     */
   def triangleCounts(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    localTriangles(edges) match {
-      case Some(tri) =>
-        val sp = vertices.sparkSession
-        import sp.implicits._
-        val triDf = tri.map { case (id, _, t) => (id, t) }.toSeq
-          .toDF("id", "tris")
-        return vertices.select(col("id")).distinct()
-          .join(triDf, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
-      case None => ()
+    val sp = vertices.sparkSession
+    import sp.implicits._
+    localTriangles(edges).map { tri =>
+      val triDf = tri.map { case (id, _, t) => (id, t) }.toSeq
+        .toDF("id", "tris")
+      vertices.select(col("id")).distinct()
+        .join(triDf, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
+    }.getOrElse {
+      val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      vertices.select(col("id")).distinct()
+        .join(cornerTriangles(nbr, deg), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
     }
-    val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    vertices.select(col("id")).distinct()
-      .join(cornerTriangles(nbr, deg), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
   }
 
   /** Small-graph strategy for the triangle family: collect the edge list
-    * under the standard size gate (limit-probe, not a full count) and run
+    * under the standard size gate ([[PathFinder.collectUnder]]) and run
     * the parallel in-memory edge-iterator kernel
     * ([[LocalKernels.triangles]]); intersections beat the wedge-join
     * shuffle by ~10× until the oriented edge set stops fitting driver
@@ -403,36 +404,35 @@ object Algorithms {
     */
   def localClusteringCoefficient(vertices: DataFrame,
       edges: DataFrame): DataFrame = {
-    localTriangles(edges) match {
-      case Some(tri) =>
-        val sp = vertices.sparkSession
-        import sp.implicits._
-        val triDf = tri.toSeq.toDF("id", "deg", "tris")
-        return vertices.select(col("id")).distinct()
-          .join(triDf, Seq("id"), "left_outer")
-          .select(col("id"),
-            when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
-              .otherwise((col("tris") * 2).cast("double") /
-                (col("deg") * (col("deg") - 1)).cast("double"))
-              .as("lcc"))
-      case None => ()
+    val sp = vertices.sparkSession
+    import sp.implicits._
+    localTriangles(edges).map { tri =>
+      val triDf = tri.toSeq.toDF("id", "deg", "tris")
+      vertices.select(col("id")).distinct()
+        .join(triDf, Seq("id"), "left_outer")
+        .select(col("id"),
+          when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
+            .otherwise((col("tris") * 2).cast("double") /
+              (col("deg") * (col("deg") - 1)).cast("double"))
+            .as("lcc"))
+    }.getOrElse {
+      val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the reference counts directed neighbor→neighbor links on the
+      // doubled CSR, i.e. links = 2 · triangles(v)
+      val tri = cornerTriangles(nbr, deg)
+        .select(col("id"), (col("tris") * 2).as("links"))
+      val out = vertices.select(col("id")).distinct()
+        .join(deg, Seq("id"), "left_outer")
+        .join(tri, Seq("id"), "left_outer")
+        .select(col("id"),
+          when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
+            .otherwise(coalesce(col("links"), lit(0L)).cast("double") /
+              (col("deg") * (col("deg") - 1)).cast("double"))
+            .as("lcc"))
+      out
     }
-    val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the reference counts directed neighbor→neighbor links on the
-    // doubled CSR, i.e. links = 2 · triangles(v)
-    val tri = cornerTriangles(nbr, deg)
-      .select(col("id"), (col("tris") * 2).as("links"))
-    val out = vertices.select(col("id")).distinct()
-      .join(deg, Seq("id"), "left_outer")
-      .join(tri, Seq("id"), "left_outer")
-      .select(col("id"),
-        when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
-          .otherwise(coalesce(col("links"), lit(0L)).cast("double") /
-            (col("deg") * (col("deg") - 1)).cast("double"))
-          .as("lcc"))
-    out
   }
 
   /** Harmonic and closeness centrality from BFS distances (beyond the
@@ -492,55 +492,52 @@ object Algorithms {
       iters: Int = 30): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    val preArr = PathFinder.localEdgePairs(edges)
-    if (preArr.isDefined) {
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        val seedArr = seeds.select(col("id").cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSet
-        return LocalKernels.personalizedPageRank(ids, preArr.get, seedArr,
-          damping, iters).toSeq.toDF("id", "ppr")
-      }
-    }
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(e.select(col("src").as("id")))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-    val sd = seeds.select(col("id").cast("long").as("id")).distinct()
-      .join(domain, Seq("id"), "left_semi")
-    val nS = sd.count()
-    require(nS > 0, "personalized PageRank requires at least one seed " +
-      "vertex present in the graph")
-    val outDeg = e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-    val vd = domain.join(outDeg, Seq("id"), "left_outer")
-      .join(sd.select(col("id"), lit(1.0 / nS).as("__s")), Seq("id"),
-        "left_outer")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        coalesce(col("__s"), lit(0.0)).as("__s"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vd.count()
-    var ranks = vd.withColumn("rank", col("__s"))
-      .transform(PathFinder.ckpt)
-    for (_ <- 1 to iters) {
-      val contrib = ranks.filter(col("outdeg") > 0)
-        .join(e, col("id") === e("src"))
-        .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("__c"))
-        .groupBy("id").agg(sum("__c").as("__contrib"))
-      val dangling = ranks.filter(col("outdeg") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-      ranks = vd.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), col("outdeg"), col("__s"),
-          (lit(1.0 - damping) * col("__s") + lit(damping) *
-            (coalesce(col("__contrib"), lit(0.0)) +
-              lit(dangling) * col("__s"))).as("rank"))
+    localGraph(vertices, edges) { (ids, earr) =>
+      PathFinder.localVertexIds(seeds).map(seedArr =>
+        LocalKernels.personalizedPageRank(ids, earr, seedArr.toSet,
+          damping, iters).toSeq.toDF("id", "ppr"))
+    }.flatten.getOrElse {
+      val e = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(e.select(col("src").as("id")))
+        .union(e.select(col("dst").as("id")))
+        .distinct()
+      val sd = seeds.select(col("id").cast("long").as("id")).distinct()
+        .join(domain, Seq("id"), "left_semi")
+      val nS = sd.count()
+      require(nS > 0, "personalized PageRank requires at least one seed " +
+        "vertex present in the graph")
+      val outDeg = e.groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("outdeg"))
+      val vd = domain.join(outDeg, Seq("id"), "left_outer")
+        .join(sd.select(col("id"), lit(1.0 / nS).as("__s")), Seq("id"),
+          "left_outer")
+        .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+          coalesce(col("__s"), lit(0.0)).as("__s"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      vd.count()
+      var ranks = vd.withColumn("rank", col("__s"))
         .transform(PathFinder.ckpt)
+      for (_ <- 1 to iters) {
+        val contrib = ranks.filter(col("outdeg") > 0)
+          .join(e, col("id") === e("src"))
+          .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("__c"))
+          .groupBy("id").agg(sum("__c").as("__contrib"))
+        val dangling = ranks.filter(col("outdeg") === 0)
+          .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
+        ranks = vd.join(contrib, Seq("id"), "left_outer")
+          .select(col("id"), col("outdeg"), col("__s"),
+            (lit(1.0 - damping) * col("__s") + lit(damping) *
+              (coalesce(col("__contrib"), lit(0.0)) +
+                lit(dangling) * col("__s"))).as("rank"))
+          .transform(PathFinder.ckpt)
+      }
+      vd.unpersist()
+      e.unpersist()
+      ranks.select(col("id"), col("rank").as("ppr"))
     }
-    vd.unpersist()
-    e.unpersist()
-    ranks.select(col("id"), col("rank").as("ppr"))
   }
 
   /** WEIGHTED PageRank (beyond the reference's algorithm set):
@@ -565,47 +562,47 @@ object Algorithms {
         col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("w").isNotNull && col("w") > 0)
-    // two-tier fused gate+collect: under the gate the probe rows ARE
-    // the kernel input (one job; the count-then-collect form evaluated
-    // clean twice, and an uncapped fused probe hauled gate-sized rows
-    // per call on over-gate views)
-    PathFinder.probeRowsUnderGateMemo(clean).foreach { eProbe =>
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        val earr = eProbe
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        return LocalKernels.weightedPageRank(ids, earr, damping, iters)
-          .toSeq.toDF("id", "rank")
-      }
+    // under the gate the collected rows ARE the kernel input
+    val local = for {
+      ec <- PathFinder.collectUnder(clean, PathFinder.localMaxRows(sp))
+      ids <- PathFinder.localVertexIds(vertices)
+    } yield {
+      val (s, d, w) = (ec.longs(0), ec.longs(1), ec.doubles(2))
+      LocalKernels.weightedPageRank(ids,
+        Array.tabulate(ec.length)(i => (s(i), d(i), w(i))), damping, iters)
+        .toSeq.toDF("id", "rank")
     }
-    val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(e.select(col("src").as("id")))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-    val wOut = e.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
-    val vd = PathFinder.ckpt(domain
-      .join(wOut, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("wout"), lit(0.0)).as("wout")))
-    val n = vd.count().toDouble
-    var ranks = vd.withColumn("rank", lit(1.0 / n))
-      .transform(PathFinder.ckpt)
-    for (_ <- 1 to iters) {
-      val contrib = ranks.filter(col("wout") > 0)
-        .join(e, col("id") === e("src"))
-        .select(e("dst").as("id"),
-          (col("rank") * col("w") / col("wout")).as("__c"))
-        .groupBy("id").agg(sum("__c").as("__contrib"))
-      val dangling = ranks.filter(col("wout") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-      ranks = vd.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), col("wout"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__contrib"), lit(0.0)) + lit(dangling / n)))
-            .as("rank"))
+    local.getOrElse {
+      val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(e.select(col("src").as("id")))
+        .union(e.select(col("dst").as("id")))
+        .distinct()
+      val wOut = e.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
+      val vd = PathFinder.ckpt(domain
+        .join(wOut, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("wout"), lit(0.0)).as("wout")))
+      val n = vd.count().toDouble
+      var ranks = vd.withColumn("rank", lit(1.0 / n))
         .transform(PathFinder.ckpt)
+      for (_ <- 1 to iters) {
+        val contrib = ranks.filter(col("wout") > 0)
+          .join(e, col("id") === e("src"))
+          .select(e("dst").as("id"),
+            (col("rank") * col("w") / col("wout")).as("__c"))
+          .groupBy("id").agg(sum("__c").as("__contrib"))
+        val dangling = ranks.filter(col("wout") === 0)
+          .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
+        ranks = vd.join(contrib, Seq("id"), "left_outer")
+          .select(col("id"), col("wout"),
+            (lit((1.0 - damping) / n) + lit(damping) *
+              (coalesce(col("__contrib"), lit(0.0)) + lit(dangling / n)))
+              .as("rank"))
+          .transform(PathFinder.ckpt)
+      }
+      e.unpersist()
+      ranks.select(col("id"), col("rank"))
     }
-    e.unpersist()
-    ranks.select(col("id"), col("rank"))
   }
 
   /** Bipartite co-occurrence projection (beyond the reference's
@@ -668,7 +665,7 @@ object Algorithms {
     // (NOTES item 54) — which makes the distributed floor ~Σd(d−1)/2
     // packed longs through one full shuffle plus the DISTINCT shuffle
     // that feeds it. When the RAW membership stream fits the driver
-    // (fused limit-probe + collect, the standard gate idiom), a parallel
+    // (one stats scan, then the packed collect), a parallel
     // in-memory kernel absorbs distinct + degree cap + pair counting
     // into two driver sorts with ZERO exchanges — the strategy DuckDB's
     // in-memory aggregate wins with at the 10× point. Gates: at most 16M
@@ -681,106 +678,111 @@ object Algorithms {
     val maxPairs = sp2.conf
       .get("spark.graft.copurchase.localMaxPairs", "120000000").toLong
     val maxRows = 16000000L
+    // set by the stats scan: whether both id spaces pack into 31 bits
     var packableDist: Option[Boolean] = None
-    if (maxPairs > 0) {
-      // decide with ONE exchange-free scan (count + id ranges as partial
-      // aggs) — a limit-probe would route the whole join through
-      // CollectLimitExec's incremental single-task job ladder. The
-      // membership pipeline is cached for JUST this attempt so the
-      // decide pass and the packed collect share one evaluation; on
-      // fall-through it unpersists before the distributed plan builds,
-      // leaving that branch's storage footprint untouched.
-      val m0c = m0.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val st = m0c.agg(count(lit(1)).as("n"), min("u").as("ulo"),
-          max("u").as("uhi"), min("v").as("vlo"), max("v").as("vhi"))
-          .first()
-        if (st.getLong(0) == 0L)
-          return Seq.empty[(Long, Long, Long)].toDF("id_a", "id_b", "weight")
-        val packable = st.getLong(1) >= 0L && st.getLong(2) < (1L << 31) &&
-          st.getLong(3) >= 0L && st.getLong(4) < (1L << 31)
-        packableDist = Some(packable)
-        if (st.getLong(0) <= maxRows && packable) {
-          val packed = m0c
-            .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("__pk"))
-            .as[Long].collect()
-          LocalKernels.copurchaseCounts(packed, minWeight, maxKeyDegree,
-            maxPairs).foreach { res =>
-            return res.toSeq.toDF("id_a", "id_b", "weight")
-          }
-        }
-      } finally m0c.unpersist(false)
-    }
-    // distributed KERNEL branch (scaladoc above): two bare packed-long
-    // exchanges + streaming per-partition kernels when both id spaces
-    // pack into 31 bits. Partition counts stay AQE/conf-derived
-    // (repartition without an explicit N), never a local constant.
-    val streamable = packableDist.getOrElse {
-      val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
-        min("v").as("vlo"), max("v").as("vhi")).first()
-      !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
-        st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
-    }
-    if (streamable) {
-      val capDeg = maxKeyDegree
-      val minW = minWeight
-      // pk ≥ 0 (both halves are 31-bit), so arithmetic shiftright on
-      // the partitioning expression is the v value
-      val byV = m0
-        .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("pk"))
-        .repartition(shiftright(col("pk"), 32))
-        .sortWithinPartitions("pk").as[Long]
-      val pairs = byV.mapPartitions(it =>
-        Algorithms.copurchasePairsStream(it, capDeg))
-      return pairs.repartition(col("value"))
-        .sortWithinPartitions("value")
-        .mapPartitions(it => Algorithms.packedRunCounts(it, minW))
-        .toDF("id_a", "id_b", "weight")
-    }
-    val m = m0.distinct()
-    // with an unbounded cap the hot-key frame is provably empty — skip
-    // it, or the anti-join's broadcast side re-evaluates the whole
-    // join+distinct pipeline just to find nothing
-    val kept = graft.OpCaches.track(
-      if (maxKeyDegree == Long.MaxValue) m.select(col("u").as("id"), col("v"))
+    val local: Option[DataFrame] =
+      if (maxPairs <= 0) None
       else {
-        val hot = m.groupBy("v").agg(count(lit(1)).as("__d"))
-          .filter(col("__d") > maxKeyDegree).select("v")
-        // tracked cache: the dedup + hot-key pipeline feeds both blocked
-        // self-join legs; the lazy result can't release it, so the
-        // harness does via [[graft.OpCaches.releaseAll]].
-        m.join(broadcast(hot), Seq("v"), "left_anti")
-          .select(col("u").as("id"), col("v"))
-      })
-    val idr = kept.agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
-      .first()
-    val packable = !idr.isNullAt(0) && idr.getLong(0) >= 0L &&
-      idr.getLong(1) < (1L << 31)
-    val joined = graft.ops.Dedup.blockedBucketJoin(kept, Seq("v"), blockSize)
-    // Pair-count aggregation, exchange-shaped for an output-sized pair
-    // stream: most generated pairs are UNIQUE, so a plain groupBy's
-    // map-side partial aggregation builds multi-million-entry hash
-    // tables that shrink ~nothing before the exchange — pure overhead
-    // ahead of a full-volume shuffle. Repartition FIRST on the pair key
-    // and aggregate once after the exchange; when both ids fit in 31
-    // bits (probed on the cached frame) the pair packs into ONE long, so
-    // the exchange carries bare 8-byte keys and the aggregation hashes
-    // primitives. Measured at the 10× point: 13.3 s (SMJ + 2-col
-    // groupBy) → ~6-8 s.
-    val counted =
-      if (packable)
-        joined.select(shiftleft(col("x.id"), 32)
-            .bitwiseOR(col("y.id")).as("__pk"))
-          .repartition(col("__pk"))
-          .groupBy("__pk").agg(count(lit(1)).as("weight"))
-          .select(shiftright(col("__pk"), 32).as("id_a"),
-            col("__pk").bitwiseAND(lit(0xffffffffL)).as("id_b"),
-            col("weight"))
-      else
-        joined.select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-          .repartition(col("id_a"), col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("weight"))
-    counted.filter(col("weight") >= minWeight)
+        // decide with ONE exchange-free scan (count + id ranges as partial
+        // aggs) — a limit-probe would route the whole join through
+        // CollectLimitExec's incremental single-task job ladder. The
+        // membership pipeline is cached for JUST this attempt so the
+        // decide pass and the packed collect share one evaluation; on
+        // fall-through it unpersists before the distributed plan builds,
+        // leaving that branch's storage footprint untouched.
+        val m0c = m0.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val st = m0c.agg(count(lit(1)).as("n"), min("u").as("ulo"),
+            max("u").as("uhi"), min("v").as("vlo"), max("v").as("vhi"))
+            .first()
+          if (st.getLong(0) == 0L)
+            Some(Seq.empty[(Long, Long, Long)].toDF("id_a", "id_b", "weight"))
+          else {
+            val packable = st.getLong(1) >= 0L && st.getLong(2) < (1L << 31) &&
+              st.getLong(3) >= 0L && st.getLong(4) < (1L << 31)
+            packableDist = Some(packable)
+            Option.when(st.getLong(0) <= maxRows && packable)(m0c
+                .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("__pk"))
+                .as[Long].collect())
+              .flatMap(LocalKernels.copurchaseCounts(_, minWeight,
+                maxKeyDegree, maxPairs))
+              .map(_.toSeq.toDF("id_a", "id_b", "weight"))
+          }
+        } finally m0c.unpersist(false)
+      }
+    local.getOrElse {
+      // distributed KERNEL branch (scaladoc above): two bare packed-long
+      // exchanges + streaming per-partition kernels when both id spaces
+      // pack into 31 bits. Partition counts stay AQE/conf-derived
+      // (repartition without an explicit N), never a local constant.
+      val streamable = packableDist.getOrElse {
+        val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
+          min("v").as("vlo"), max("v").as("vhi")).first()
+        !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
+          st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
+      }
+      if (streamable) {
+        val capDeg = maxKeyDegree
+        val minW = minWeight
+        // pk ≥ 0 (both halves are 31-bit), so arithmetic shiftright on
+        // the partitioning expression is the v value
+        val byV = m0
+          .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("pk"))
+          .repartition(shiftright(col("pk"), 32))
+          .sortWithinPartitions("pk").as[Long]
+        val pairs = byV.mapPartitions(it =>
+          Algorithms.copurchasePairsStream(it, capDeg))
+        pairs.repartition(col("value"))
+          .sortWithinPartitions("value")
+          .mapPartitions(it => Algorithms.packedRunCounts(it, minW))
+          .toDF("id_a", "id_b", "weight")
+      } else {
+        val m = m0.distinct()
+        // with an unbounded cap the hot-key frame is provably empty — skip
+        // it, or the anti-join's broadcast side re-evaluates the whole
+        // join+distinct pipeline just to find nothing
+        val kept = graft.OpCaches.track(
+          if (maxKeyDegree == Long.MaxValue) m.select(col("u").as("id"), col("v"))
+          else {
+            val hot = m.groupBy("v").agg(count(lit(1)).as("__d"))
+              .filter(col("__d") > maxKeyDegree).select("v")
+            // tracked cache: the dedup + hot-key pipeline feeds both blocked
+            // self-join legs; the lazy result can't release it, so the
+            // harness does via [[graft.OpCaches.releaseAll]].
+            m.join(broadcast(hot), Seq("v"), "left_anti")
+              .select(col("u").as("id"), col("v"))
+          })
+        val idr = kept.agg(min(col("id")).as("lo"), max(col("id")).as("hi"))
+          .first()
+        val packable = !idr.isNullAt(0) && idr.getLong(0) >= 0L &&
+          idr.getLong(1) < (1L << 31)
+        val joined = graft.ops.Dedup.blockedBucketJoin(kept, Seq("v"), blockSize)
+        // Pair-count aggregation, exchange-shaped for an output-sized pair
+        // stream: most generated pairs are UNIQUE, so a plain groupBy's
+        // map-side partial aggregation builds multi-million-entry hash
+        // tables that shrink ~nothing before the exchange — pure overhead
+        // ahead of a full-volume shuffle. Repartition FIRST on the pair key
+        // and aggregate once after the exchange; when both ids fit in 31
+        // bits (probed on the cached frame) the pair packs into ONE long, so
+        // the exchange carries bare 8-byte keys and the aggregation hashes
+        // primitives. Measured at the 10× point: 13.3 s (SMJ + 2-col
+        // groupBy) → ~6-8 s.
+        val counted =
+          if (packable)
+            joined.select(shiftleft(col("x.id"), 32)
+                .bitwiseOR(col("y.id")).as("__pk"))
+              .repartition(col("__pk"))
+              .groupBy("__pk").agg(count(lit(1)).as("weight"))
+              .select(shiftright(col("__pk"), 32).as("id_a"),
+                col("__pk").bitwiseAND(lit(0xffffffffL)).as("id_b"),
+                col("weight"))
+          else
+            joined.select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+              .repartition(col("id_a"), col("id_b"))
+              .groupBy("id_a", "id_b").agg(count(lit(1)).as("weight"))
+        counted.filter(col("weight") >= minWeight)
+      }
+    }
   }
 
   /** Streaming pair emission over a v-sorted packed `(v<<32 | u)`
@@ -918,52 +920,53 @@ object Algorithms {
     // graph at every sf — pure stage floor, not compute)
     val sp = edges.sparkSession
     import sp.implicits._
-    PathFinder.localEdgePairs(edges).foreach { earr =>
-      return LocalKernels.linkPredictionScores(earr, maxDegree).toSeq
+    PathFinder.localEdgePairs(edges).map { earr =>
+      LocalKernels.linkPredictionScores(earr, maxDegree).toSeq
         .toDF("id_a", "id_b", "common_neighbors", "jaccard",
           "adamic_adar", "is_edge")
+    }.getOrElse {
+      // ONE definition of "undirected simple neighbors" shared with the
+      // triangle/LCC family; a tracked cache because four consumers read
+      // it (degrees, both wedge sides, the is_edge flag) and the lazy
+      // result cannot release it — the harness does, via
+      // [[graft.OpCaches.releaseAll]] (Verify/Bench call it per query).
+      val nbr0 = graft.OpCaches.track(undirectedNbr(edges
+          .select(col("src").cast("long").as("src"),
+            col("dst").cast("long").as("dst"))))
+      val nbr = nbr0.select(col("src").as("v"), col("dst").as("n"))
+      val deg = nbr.groupBy(col("v")).agg(count(lit(1)).as("deg"))
+      val wedgeIn = nbr
+        .join(deg.filter(col("deg") <= maxDegree)
+          .select(col("v").as("n"), col("deg").as("cdeg")), Seq("n"))
+        .select(col("v").as("id"), col("n"), col("cdeg"))
+      // repartition-first: the wedge stream is output-sized (mostly unique
+      // pairs — the bipartiteProjection argument), so exchange the narrow
+      // (id_a, id_b, cdeg) rows and aggregate once after, instead of a
+      // no-shrink map-side partial aggregation ahead of the same shuffle
+      val pairs = graft.ops.Dedup.blockedBucketJoin(wedgeIn, Seq("n"),
+          blockSize)
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+          col("x.cdeg").as("__cdeg"))
+        .repartition(col("id_a"), col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(count(lit(1)).as("common_neighbors"),
+          sum(lit(1.0) / log(col("__cdeg").cast("double"))).as("__aa"))
+      val out = pairs
+        .join(deg.select(col("v").as("id_a"), col("deg").as("__da")),
+          Seq("id_a"))
+        .join(deg.select(col("v").as("id_b"), col("deg").as("__db")),
+          Seq("id_b"))
+        .join(nbr0.filter(col("src") < col("dst"))
+          .select(col("src").as("id_a"), col("dst").as("id_b"),
+            lit(true).as("__e")), Seq("id_a", "id_b"), "left_outer")
+        .select(col("id_a"), col("id_b"), col("common_neighbors"),
+          round(col("common_neighbors").cast("double") /
+            (col("__da") + col("__db") - col("common_neighbors"))
+              .cast("double"), 6).as("jaccard"),
+          round(col("__aa"), 6).as("adamic_adar"),
+          coalesce(col("__e"), lit(false)).as("is_edge"))
+      out
     }
-    // ONE definition of "undirected simple neighbors" shared with the
-    // triangle/LCC family; a tracked cache because four consumers read
-    // it (degrees, both wedge sides, the is_edge flag) and the lazy
-    // result cannot release it — the harness does, via
-    // [[graft.OpCaches.releaseAll]] (Verify/Bench call it per query).
-    val nbr0 = graft.OpCaches.track(undirectedNbr(edges
-        .select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))))
-    val nbr = nbr0.select(col("src").as("v"), col("dst").as("n"))
-    val deg = nbr.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val wedgeIn = nbr
-      .join(deg.filter(col("deg") <= maxDegree)
-        .select(col("v").as("n"), col("deg").as("cdeg")), Seq("n"))
-      .select(col("v").as("id"), col("n"), col("cdeg"))
-    // repartition-first: the wedge stream is output-sized (mostly unique
-    // pairs — the bipartiteProjection argument), so exchange the narrow
-    // (id_a, id_b, cdeg) rows and aggregate once after, instead of a
-    // no-shrink map-side partial aggregation ahead of the same shuffle
-    val pairs = graft.ops.Dedup.blockedBucketJoin(wedgeIn, Seq("n"),
-        blockSize)
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        col("x.cdeg").as("__cdeg"))
-      .repartition(col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("common_neighbors"),
-        sum(lit(1.0) / log(col("__cdeg").cast("double"))).as("__aa"))
-    val out = pairs
-      .join(deg.select(col("v").as("id_a"), col("deg").as("__da")),
-        Seq("id_a"))
-      .join(deg.select(col("v").as("id_b"), col("deg").as("__db")),
-        Seq("id_b"))
-      .join(nbr0.filter(col("src") < col("dst"))
-        .select(col("src").as("id_a"), col("dst").as("id_b"),
-          lit(true).as("__e")), Seq("id_a", "id_b"), "left_outer")
-      .select(col("id_a"), col("id_b"), col("common_neighbors"),
-        round(col("common_neighbors").cast("double") /
-          (col("__da") + col("__db") - col("common_neighbors"))
-            .cast("double"), 6).as("jaccard"),
-        round(col("__aa"), 6).as("adamic_adar"),
-        coalesce(col("__e"), lit(false)).as("is_edge"))
-    out
   }
 
   /** k-TRUSS (beyond the reference's algorithm set): the maximal
@@ -987,36 +990,37 @@ object Algorithms {
     require(k >= 3, s"k must be >= 3 (got $k)")
     val sp = edges.sparkSession
     import sp.implicits._
-    PathFinder.localEdgePairs(edges).foreach { earr =>
-      return LocalKernels.kTruss(earr, k).toSeq.toDF("src", "dst")
+    PathFinder.localEdgePairs(edges).map { earr =>
+      LocalKernels.kTruss(earr, k).toSeq.toDF("src", "dst")
+    }.getOrElse {
+      val need = k - 2
+      var cur = edges.select(col("src").cast("long").as("a"),
+          col("dst").cast("long").as("b"))
+        .filter(col("a").isNotNull && col("b").isNotNull &&
+          col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"))
+        .distinct()
+        .transform(PathFinder.ckpt)
+      var changed = true
+      while (changed) {
+        val und = cur.select(col("a").as("u"), col("b").as("v"))
+          .union(cur.select(col("b").as("u"), col("a").as("v")))
+        val sup = cur.as("e")
+          .join(und.as("x"), col("x.u") === col("e.a"))
+          .join(und.as("y"), col("y.u") === col("e.b") &&
+            col("y.v") === col("x.v"))
+          .groupBy(col("e.a").as("a"), col("e.b").as("b"))
+          .agg(count(lit(1)).as("sup"))
+        val next = PathFinder.ckpt(
+          sup.filter(col("sup") >= need).select("a", "b"))
+        // limit-probe the drop instead of counting both sides fully
+        changed = !cur.join(next, Seq("a", "b"), "left_anti")
+          .limit(1).isEmpty
+        cur = next
+      }
+      cur.select(col("a").as("src"), col("b").as("dst"))
     }
-    val need = k - 2
-    var cur = edges.select(col("src").cast("long").as("a"),
-        col("dst").cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .transform(PathFinder.ckpt)
-    var changed = true
-    while (changed) {
-      val und = cur.select(col("a").as("u"), col("b").as("v"))
-        .union(cur.select(col("b").as("u"), col("a").as("v")))
-      val sup = cur.as("e")
-        .join(und.as("x"), col("x.u") === col("e.a"))
-        .join(und.as("y"), col("y.u") === col("e.b") &&
-          col("y.v") === col("x.v"))
-        .groupBy(col("e.a").as("a"), col("e.b").as("b"))
-        .agg(count(lit(1)).as("sup"))
-      val next = PathFinder.ckpt(
-        sup.filter(col("sup") >= need).select("a", "b"))
-      // limit-probe the drop instead of counting both sides fully
-      changed = !cur.join(next, Seq("a", "b"), "left_anti")
-        .limit(1).isEmpty
-      cur = next
-    }
-    cur.select(col("a").as("src"), col("b").as("dst"))
   }
 
   /** Earliest-arrival TEMPORAL reachability (beyond the reference's
@@ -1066,53 +1070,53 @@ object Algorithms {
         col("dst").cast("long").as("dst"), col("ts").cast("long").as("ts"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("ts").isNotNull)
-    // two-tier fused gate + collect (one limited job, same bound the
-    // local kernel accepts): under-gate the probe rows ARE the kernel
-    // input — the count-then-collect form evaluated the temporal view
-    // twice, an uncapped fused probe hauled gate-sized rows over-gate
-    PathFinder.probeRowsUnderGateMemo(clean).foreach { eProbe =>
-      PathFinder.probeVertexIds(seeds).foreach { sArr =>
-        val earr = eProbe.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val start = startTsOpt.getOrElse(
-          if (earr.isEmpty) 0L else earr.iterator.map(_._3).min)
-        return LocalKernels.earliestArrival(earr, sArr, start, maxHops)
-          .toSeq.toDF("src", "dst", "arrival")
+    // under the gate the collected rows ARE the kernel input
+    val local = for {
+      ec <- PathFinder.collectUnder(clean, PathFinder.localMaxRows(sp))
+      sArr <- PathFinder.localVertexIds(seeds)
+    } yield {
+      val (s, d, ts) = (ec.longs(0), ec.longs(1), ec.longs(2))
+      val start = startTsOpt.getOrElse(if (ts.isEmpty) 0L else ts.min)
+      LocalKernels.earliestArrival(
+        Array.tabulate(ec.length)(i => (s(i), d(i), ts(i))), sArr, start,
+        maxHops).toSeq.toDF("src", "dst", "arrival")
+    }
+    local.getOrElse {
+      val startTs = startTsOpt.getOrElse {
+        val minRow = clean.agg(min("ts")).head()
+        if (minRow.isNullAt(0)) 0L else minRow.getLong(0)
       }
-    }
-    val startTs = startTsOpt.getOrElse {
-      val minRow = clean.agg(min("ts")).head()
-      if (minRow.isNullAt(0)) 0L else minRow.getLong(0)
-    }
-    val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
-    var arr = seeds.select(col("id").cast("long").as("s")).distinct()
-      .select(col("s"), col("s").as("v"), lit(startTs).as("arr"))
-      .transform(PathFinder.ckpt)
-    var frontier = arr
-    var hop = 0
-    var done = frontier.isEmpty
-    while (hop < maxHops && !done) {
-      val relax = frontier.join(e,
-          col("v") === e("src") && e("ts") >= col("arr"))
-        .select(col("s"), e("dst").as("v"), e("ts").as("arr2"))
-        .groupBy("s", "v").agg(min("arr2").as("arr2"))
-      val improved = relax
-        .join(arr.withColumnRenamed("arr", "__old"), Seq("s", "v"),
-          "left_outer")
-        .filter(col("__old").isNull || col("arr2") < col("__old"))
-        .select(col("s"), col("v"), col("arr2").as("arr"))
+      val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
+      var arr = seeds.select(col("id").cast("long").as("s")).distinct()
+        .select(col("s"), col("s").as("v"), lit(startTs).as("arr"))
         .transform(PathFinder.ckpt)
-      if (improved.isEmpty) done = true
-      else {
-        arr = PathFinder.ckpt(arr.union(improved)
-          .groupBy("s", "v").agg(min("arr").as("arr")))
-        frontier = improved
+      var frontier = arr
+      var hop = 0
+      var done = frontier.isEmpty
+      while (hop < maxHops && !done) {
+        val relax = frontier.join(e,
+            col("v") === e("src") && e("ts") >= col("arr"))
+          .select(col("s"), e("dst").as("v"), e("ts").as("arr2"))
+          .groupBy("s", "v").agg(min("arr2").as("arr2"))
+        val improved = relax
+          .join(arr.withColumnRenamed("arr", "__old"), Seq("s", "v"),
+            "left_outer")
+          .filter(col("__old").isNull || col("arr2") < col("__old"))
+          .select(col("s"), col("v"), col("arr2").as("arr"))
+          .transform(PathFinder.ckpt)
+        if (improved.isEmpty) done = true
+        else {
+          arr = PathFinder.ckpt(arr.union(improved)
+            .groupBy("s", "v").agg(min("arr").as("arr")))
+          frontier = improved
+        }
+        hop += 1
       }
-      hop += 1
+      e.unpersist()
+      arr.filter(col("v") =!= col("s"))
+        .select(col("s").as("src"), col("v").as("dst"),
+          col("arr").as("arrival"))
     }
-    e.unpersist()
-    arr.filter(col("v") =!= col("s"))
-      .select(col("s").as("src"), col("v").as("dst"),
-        col("arr").as("arrival"))
   }
 
   /** Betweenness centrality (beyond the reference's algorithm set): the
@@ -1136,78 +1140,74 @@ object Algorithms {
       sources: Option[DataFrame] = None): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    val preArr = PathFinder.localEdgePairs(edges)
-    val srcDf = sources.getOrElse(vertices)
-      .select(col("id").cast("long").as("id")).distinct()
-    if (preArr.isDefined) {
-      // fused: the source probe IS the source collect (same gate)
-      PathFinder.probeVertexIds(srcDf).foreach { sArr =>
-        val ids = vertices.select(col("id").cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        return LocalKernels.betweenness(ids, preArr.get, sArr)
-          .toSeq.toDF("id", "betweenness")
-      }
-    }
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // ckpt'd: the final result joins domain AFTER e.unpersist() — an
-    // un-materialized domain would re-run the edge cleaning pipeline
-    val domain = PathFinder.ckpt(
-      vertices.select(col("id").cast("long").as("id"))
-        .union(e.select(col("src").as("id")))
-        .union(e.select(col("dst").as("id")))
-        .distinct())
-    val srcs = srcDf.join(domain, Seq("id"), "left_semi")
-    // forward: batched BFS carrying sigma (shortest-path counts)
-    var frontier = srcs
-      .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))
-      .transform(PathFinder.ckpt)
-    var acc = frontier.withColumn("dist", lit(0)).transform(PathFinder.ckpt)
-    var maxLev = 0
-    var done = frontier.isEmpty
-    while (!done) {
-      val nxt = frontier.join(e, col("v") === e("src"))
-        .select(col("s"), e("dst").as("v"), col("sigma"))
-        .groupBy("s", "v").agg(sum("sigma").as("sigma"))
-        .join(acc.select("s", "v"), Seq("s", "v"), "left_anti")
+    localGraph(vertices, edges) { (ids, earr) =>
+      sources.fold(Option(ids))(PathFinder.localVertexIds).map(sArr =>
+        LocalKernels.betweenness(ids, earr, sArr)
+          .toSeq.toDF("id", "betweenness"))
+    }.flatten.getOrElse {
+      val srcDf = sources.getOrElse(vertices)
+        .select(col("id").cast("long").as("id")).distinct()
+      val e = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull &&
+          col("src") =!= col("dst"))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // ckpt'd: the final result joins domain AFTER e.unpersist() — an
+      // un-materialized domain would re-run the edge cleaning pipeline
+      val domain = PathFinder.ckpt(
+        vertices.select(col("id").cast("long").as("id"))
+          .union(e.select(col("src").as("id")))
+          .union(e.select(col("dst").as("id")))
+          .distinct())
+      val srcs = srcDf.join(domain, Seq("id"), "left_semi")
+      // forward: batched BFS carrying sigma (shortest-path counts)
+      var frontier = srcs
+        .select(col("id").as("s"), col("id").as("v"), lit(1.0).as("sigma"))
         .transform(PathFinder.ckpt)
-      if (nxt.isEmpty) done = true
-      else {
-        maxLev += 1
-        acc = PathFinder.ckpt(acc.union(nxt.withColumn("dist", lit(maxLev))))
-        frontier = nxt
+      var acc = frontier.withColumn("dist", lit(0)).transform(PathFinder.ckpt)
+      var maxLev = 0
+      var done = frontier.isEmpty
+      while (!done) {
+        val nxt = frontier.join(e, col("v") === e("src"))
+          .select(col("s"), e("dst").as("v"), col("sigma"))
+          .groupBy("s", "v").agg(sum("sigma").as("sigma"))
+          .join(acc.select("s", "v"), Seq("s", "v"), "left_anti")
+          .transform(PathFinder.ckpt)
+        if (nxt.isEmpty) done = true
+        else {
+          maxLev += 1
+          acc = PathFinder.ckpt(acc.union(nxt.withColumn("dist", lit(maxLev))))
+          frontier = nxt
+        }
       }
+      // backward: dependency sweep level by level (δ of level l needs only
+      // level l+1 — the Brandes DAG edges are exactly dist(w) = dist(v)+1)
+      var withDelta = acc.filter(col("dist") === maxLev)
+        .withColumn("delta", lit(0.0))
+        .transform(PathFinder.ckpt)
+      for (l <- (maxLev - 1) to 0 by -1) {
+        val cur = acc.filter(col("dist") === l)
+        val nextLev = withDelta.filter(col("dist") === l + 1)
+          .select(col("s").as("ws"), col("v").as("w"),
+            col("sigma").as("wsigma"), col("delta").as("wdelta"))
+        val contrib = cur.join(e, col("v") === e("src"))
+          .join(nextLev, col("s") === col("ws") && e("dst") === col("w"))
+          .select(col("s"), col("v"),
+            (col("sigma") / col("wsigma") * (lit(1.0) + col("wdelta"))).as("c"))
+          .groupBy("s", "v").agg(sum("c").as("delta"))
+        val curD = cur.join(contrib, Seq("s", "v"), "left_outer")
+          .select(col("s"), col("v"), col("sigma"), col("dist"),
+            coalesce(col("delta"), lit(0.0)).as("delta"))
+        withDelta = PathFinder.ckpt(withDelta.union(curD))
+      }
+      val out = withDelta.filter(col("v") =!= col("s"))
+        .groupBy(col("v").as("id")).agg(sum("delta").as("b"))
+      val res = domain.join(out, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("b"), lit(0.0)).as("betweenness"))
+      e.unpersist()
+      res
     }
-    // backward: dependency sweep level by level (δ of level l needs only
-    // level l+1 — the Brandes DAG edges are exactly dist(w) = dist(v)+1)
-    var withDelta = acc.filter(col("dist") === maxLev)
-      .withColumn("delta", lit(0.0))
-      .transform(PathFinder.ckpt)
-    for (l <- (maxLev - 1) to 0 by -1) {
-      val cur = acc.filter(col("dist") === l)
-      val nextLev = withDelta.filter(col("dist") === l + 1)
-        .select(col("s").as("ws"), col("v").as("w"),
-          col("sigma").as("wsigma"), col("delta").as("wdelta"))
-      val contrib = cur.join(e, col("v") === e("src"))
-        .join(nextLev, col("s") === col("ws") && e("dst") === col("w"))
-        .select(col("s"), col("v"),
-          (col("sigma") / col("wsigma") * (lit(1.0) + col("wdelta"))).as("c"))
-        .groupBy("s", "v").agg(sum("c").as("delta"))
-      val curD = cur.join(contrib, Seq("s", "v"), "left_outer")
-        .select(col("s"), col("v"), col("sigma"), col("dist"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
-      withDelta = PathFinder.ckpt(withDelta.union(curD))
-    }
-    val out = withDelta.filter(col("v") =!= col("s"))
-      .groupBy(col("v").as("id")).agg(sum("delta").as("b"))
-    val res = domain.join(out, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("b"), lit(0.0)).as("betweenness"))
-    e.unpersist()
-    res
   }
 
   /** Synchronous label-propagation communities (beyond the reference's
@@ -1231,40 +1231,38 @@ object Algorithms {
     require(rounds >= 0, s"rounds must be >= 0 (got $rounds)")
     val sp = vertices.sparkSession
     import sp.implicits._
-    val preArr = PathFinder.localEdgePairs(edges)
-    if (preArr.isDefined) {
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        return LocalKernels.labelPropagation(ids, preArr.get, rounds)
-          .toSeq.toDF("id", "community")
-      }
-    }
-    val und = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val nbr = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(nbr.select(col("src").as("id")))
-      .distinct()
-    var lab = domain.withColumn("lab", col("id"))
-      .transform(PathFinder.ckpt)
-    for (_ <- 1 to rounds) {
-      val msgs = nbr.join(lab, nbr("src") === lab("id"))
-        .select(nbr("dst").as("id"), col("lab"))
-      val pick = msgs.groupBy("id", "lab").agg(count(lit(1)).as("c"))
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("__m"))
-        .select(col("id"), col("__m.lab").as("__new"))
-      lab = lab.join(pick, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
+    localGraph(vertices, edges) { (ids, earr) =>
+      LocalKernels.labelPropagation(ids, earr, rounds)
+        .toSeq.toDF("id", "community")
+    }.getOrElse {
+      val und = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct()
+      val nbr = und.select(col("a").as("src"), col("b").as("dst"))
+        .union(und.select(col("b").as("src"), col("a").as("dst")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(nbr.select(col("src").as("id")))
+        .distinct()
+      var lab = domain.withColumn("lab", col("id"))
         .transform(PathFinder.ckpt)
+      for (_ <- 1 to rounds) {
+        val msgs = nbr.join(lab, nbr("src") === lab("id"))
+          .select(nbr("dst").as("id"), col("lab"))
+        val pick = msgs.groupBy("id", "lab").agg(count(lit(1)).as("c"))
+          .groupBy("id")
+          .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("__m"))
+          .select(col("id"), col("__m.lab").as("__new"))
+        lab = lab.join(pick, Seq("id"), "left_outer")
+          .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
+          .transform(PathFinder.ckpt)
+      }
+      nbr.unpersist()
+      lab.select(col("id"), col("lab").as("community"))
     }
-    nbr.unpersist()
-    lab.select(col("id"), col("lab").as("community"))
   }
 
   /** Weighted synchronous label propagation (beyond the reference's
@@ -1301,41 +1299,42 @@ object Algorithms {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("w"))
       .groupBy("a", "b").agg(sum("w").as("w"))
-    // two-tier fused gate+collect on und — the frame the kernel actually
-    // consumes (the old gate counted CLEAN and then collected und: two
-    // more full evaluations; gating |und| ≤ the edge gate is more
-    // permissive than |clean| but equally bounded, and both strategies
-    // agree by the kernel-consistency contract)
-    PathFinder.probeRowsUnderGateMemo(und).foreach { undProbe =>
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        val uarr = undProbe
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        return LocalKernels.weightedLabelPropagation(ids, uarr, rounds)
-          .toSeq.toDF("id", "community")
-      }
+    // gate und — the frame the kernel actually consumes: gating
+    // |und| ≤ the edge gate is more permissive than |clean| but equally
+    // bounded, and both strategies agree by the kernel-consistency contract
+    val local = for {
+      uc <- PathFinder.collectUnder(und, PathFinder.localMaxRows(sp))
+      ids <- PathFinder.localVertexIds(vertices)
+    } yield {
+      val (a, b, w) = (uc.longs(0), uc.longs(1), uc.doubles(2))
+      LocalKernels.weightedLabelPropagation(ids,
+        Array.tabulate(uc.length)(i => (a(i), b(i), w(i))), rounds)
+        .toSeq.toDF("id", "community")
     }
-    val nbr = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(nbr.select(col("src").as("id")))
-      .distinct()
-    var lab = domain.withColumn("lab", col("id"))
-      .transform(PathFinder.ckpt)
-    for (_ <- 1 to rounds) {
-      val msgs = nbr.join(lab, nbr("src") === lab("id"))
-        .select(nbr("dst").as("id"), col("lab"), nbr("w"))
-      val pick = msgs.groupBy("id", "lab")
-        .agg(round(sum("w"), 9).as("wv"))
-        .groupBy("id")
-        .agg(min(struct((-col("wv")).as("nw"), col("lab"))).as("__m"))
-        .select(col("id"), col("__m.lab").as("__new"))
-      lab = lab.join(pick, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
+    local.getOrElse {
+      val nbr = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
+        .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(nbr.select(col("src").as("id")))
+        .distinct()
+      var lab = domain.withColumn("lab", col("id"))
         .transform(PathFinder.ckpt)
+      for (_ <- 1 to rounds) {
+        val msgs = nbr.join(lab, nbr("src") === lab("id"))
+          .select(nbr("dst").as("id"), col("lab"), nbr("w"))
+        val pick = msgs.groupBy("id", "lab")
+          .agg(round(sum("w"), 9).as("wv"))
+          .groupBy("id")
+          .agg(min(struct((-col("wv")).as("nw"), col("lab"))).as("__m"))
+          .select(col("id"), col("__m.lab").as("__new"))
+        lab = lab.join(pick, Seq("id"), "left_outer")
+          .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
+          .transform(PathFinder.ckpt)
+      }
+      nbr.unpersist()
+      lab.select(col("id"), col("lab").as("community"))
     }
-    nbr.unpersist()
-    lab.select(col("id"), col("lab").as("community"))
   }
 
   /** Newman–Girvan modularity of a community assignment (beyond the
@@ -1417,34 +1416,35 @@ object Algorithms {
     require(steps >= 0, s"steps must be >= 0")
     val sp = starts.sparkSession
     import sp.implicits._
-    PathFinder.localEdgePairs(edges).foreach { earr =>
-      val sArr = starts.select(col("id").cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      return LocalKernels.deterministicWalks(earr, sArr, walksPerStart, steps)
-        .toSeq.toDF("start", "r", "cur", "path")
-    }
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var w = starts.select(col("id").cast("long").as("start")).distinct()
-      .crossJoin(sp.range(walksPerStart).select(col("id").cast("int").as("r")))
-      .select(col("start"), col("r"), col("start").as("cur"),
-        array(col("start")).as("path"))
-      .transform(PathFinder.ckpt)
-    for (t <- 1 to steps) {
-      w = w.join(e, col("cur") === e("src"), "left_outer")
-        .withColumn("__h", md5(concat_ws(":",
-          col("start"), col("r"), lit(t), e("dst"))))
-        .groupBy("start", "r", "cur", "path")
-        .agg(min(struct(col("__h"), col("dst"))).as("__m"))
-        .select(col("start"), col("r"),
-          coalesce(col("__m.dst"), col("cur")).as("cur"),
-          when(col("__m.dst").isNull, col("path"))
-            .otherwise(concat(col("path"), array(col("__m.dst")))).as("path"))
+    val local = for {
+      earr <- PathFinder.localEdgePairs(edges)
+      sArr <- PathFinder.localVertexIds(starts)
+    } yield LocalKernels.deterministicWalks(earr, sArr, walksPerStart, steps)
+      .toSeq.toDF("start", "r", "cur", "path")
+    local.getOrElse {
+      val e = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var w = starts.select(col("id").cast("long").as("start")).distinct()
+        .crossJoin(sp.range(walksPerStart).select(col("id").cast("int").as("r")))
+        .select(col("start"), col("r"), col("start").as("cur"),
+          array(col("start")).as("path"))
         .transform(PathFinder.ckpt)
+      for (t <- 1 to steps) {
+        w = w.join(e, col("cur") === e("src"), "left_outer")
+          .withColumn("__h", md5(concat_ws(":",
+            col("start"), col("r"), lit(t), e("dst"))))
+          .groupBy("start", "r", "cur", "path")
+          .agg(min(struct(col("__h"), col("dst"))).as("__m"))
+          .select(col("start"), col("r"),
+            coalesce(col("__m.dst"), col("cur")).as("cur"),
+            when(col("__m.dst").isNull, col("path"))
+              .otherwise(concat(col("path"), array(col("__m.dst")))).as("path"))
+          .transform(PathFinder.ckpt)
+      }
+      e.unpersist()
+      w
     }
-    e.unpersist()
-    w
   }
 
   /** Fixed-k CORE membership (beyond the reference's algorithm set):
@@ -1468,58 +1468,55 @@ object Algorithms {
     require(k >= 1, s"k must be positive (got $k)")
     val sp = vertices.sparkSession
     import sp.implicits._
-    val preArr = PathFinder.localEdgePairs(edges)
-    if (preArr.isDefined) {
-      PathFinder.probeVertexIds(vertices).foreach { ids =>
-        return LocalKernels.kCore(ids, preArr.get, k)
-          .toSeq.toDF("id", "in_core")
-      }
-    }
-    // undirected simple view (canonical pair per edge, then both
-    // orientations for degree counting)
-    val pairs = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val und = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // checkpoint the domain itself: the final membership join reads it
-    // AFTER und.unpersist(), and an un-truncated lineage would re-derive
-    // the whole canonical-pair distinct from the raw edge scan
-    val domain = vertices.select(col("id").cast("long").as("id"))
-      .union(und.select(col("src").as("id")))
-      .distinct()
-      .transform(PathFinder.ckpt)
-    var rem = domain
-    var remCount = rem.count()
-    var e = und
-    var changed = remCount > 0
-    while (changed) {
-      val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-      val keep = rem.join(deg, Seq("id"), "left_outer")
-        .filter(coalesce(col("d"), lit(0L)) >= k)
-        .select(col("id"))
+    localGraph(vertices, edges) { (ids, earr) =>
+      LocalKernels.kCore(ids, earr, k).toSeq.toDF("id", "in_core")
+    }.getOrElse {
+      // undirected simple view (canonical pair per edge, then both
+      // orientations for degree counting)
+      val pairs = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct()
+      val und = pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // checkpoint the domain itself: the final membership join reads it
+      // AFTER und.unpersist(), and an un-truncated lineage would re-derive
+      // the whole canonical-pair distinct from the raw edge scan
+      val domain = vertices.select(col("id").cast("long").as("id"))
+        .union(und.select(col("src").as("id")))
+        .distinct()
         .transform(PathFinder.ckpt)
-      val n = keep.count()
-      if (n == remCount) changed = false
-      else {
-        rem = keep
-        remCount = n
-        e = e.join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
+      var rem = domain
+      var remCount = rem.count()
+      var e = und
+      var changed = remCount > 0
+      while (changed) {
+        val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+        val keep = rem.join(deg, Seq("id"), "left_outer")
+          .filter(coalesce(col("d"), lit(0L)) >= k)
+          .select(col("id"))
           .transform(PathFinder.ckpt)
-        changed = remCount > 0
+        val n = keep.count()
+        if (n == remCount) changed = false
+        else {
+          rem = keep
+          remCount = n
+          e = e.join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst"))
+            .transform(PathFinder.ckpt)
+          changed = remCount > 0
+        }
       }
+      und.unpersist()
+      domain
+        .join(rem.select(col("id"), lit(true).as("__in")), Seq("id"),
+          "left_outer")
+        .select(col("id"), coalesce(col("__in"), lit(false)).as("in_core"))
     }
-    und.unpersist()
-    domain
-      .join(rem.select(col("id"), lit(true).as("__in")), Seq("id"),
-        "left_outer")
-      .select(col("id"), coalesce(col("__in"), lit(false)).as("in_core"))
   }
 
   // ---- table-function sugar over a registered property graph (reference

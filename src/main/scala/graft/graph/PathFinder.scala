@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.GraphAnalysisException
-import graft.pgq.{PathMode, PathPattern, SearchPrefix}
+import graft.pgq.PathMode
 
 /** Distributed path-finding kernels.
   *
@@ -55,13 +55,6 @@ object PathFinder {
     * embedded under an outer join (the compiler always does). */
   private[graft] def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.CleanCheckpoint.cleanLocalCheckpoint(df)
-
-  /** Collected edge arrays by slot ("raw", "eid", "denseLocal"): the
-    * analogue of the reference's per-session CSR reuse (a csr id, once
-    * built, serves every subsequent query until delete_csr). Bounded to
-    * 3 arrays ≤ the local gate each so the worst case stays a couple
-    * hundred MB on a driver sized for local kernels. */
-  private[graft] val edgeMemo = new PlanMemo[Array[(Long, Long, Long)]](3)
 
   /** Canonical plan identity, the [[PlanMemo]] proof: semanticHash's own
     * preimage, so equal strings ⇔ Spark considers the plans
@@ -168,158 +161,86 @@ object PathFinder {
     if (ok && total <= Long.MaxValue) total.toLong else -1L
   }
 
-  /** Size-gate verdicts by gate value: the limit-probe executes the
-    * (usually uncached) edge-view plan, so on the distributed branch —
-    * where no edge-array memo entry ever forms — every query over the
-    * same view re-paid the probe scan. The gate is the slot because
-    * sessions lower [[LocalMaxRowsKey]] to force branches. */
-  private val gateMemo = new PlanMemo[Boolean](8)
+  /** Rows of a collected frame, column-major: one primitive array per
+    * column (`Array[Long]` or `Array[Double]`), the layout of the
+    * reference's CSR arrays — 8 bytes a cell where a boxed tuple or a
+    * `Row` per row cost 100+. Shared through [[collectMemo]]: callers
+    * never mutate the arrays. */
+  private[graft] final class Columns(val length: Int, cols: Array[AnyRef]) {
+    def width: Int = cols.length
+    def longs(j: Int): Array[Long] = cols(j).asInstanceOf[Array[Long]]
+    def doubles(j: Int): Array[Double] = cols(j).asInstanceOf[Array[Double]]
+    def bytes: Long = 8L * length * width
 
-  /** Fused size gate + collect: ONE `limit(gate+1)` job answers the gate
-    * AND, when under it, IS the memoized edge collect. The previous
-    * count-probe evaluated the full edge plan just to learn the verdict,
-    * and the under-gate collect then evaluated it AGAIN — 2× the scan on
-    * every under-gate first touch (parse-heavy views like the
-    * user-interaction graph paid ~0.3-0.5 s twice). An over-gate probe
-    * hauls ≤ gate+1 narrow rows to the driver once per view per session
-    * (the same bound the local kernels already accept for their collect;
-    * with the gate forced to 0 — the forced-distributed posture — the
-    * probe is `limit(1)`). Verdicts land in [[gateMemo]], under-gate
-    * arrays in [[edgeMemo]]'s usual slot so [[collectEdges]] hits memo. */
-  /** Row cap for the FUSED tier of the probe+collect strategy gates: a
-    * probe may speculatively haul at most this many narrow rows to the
-    * driver. Views bigger than the cap fall back to the legacy
-    * count-then-collect shape — without the cap, an OVER-GATE view
-    * (sf4's 4M-edge user graph) shipped gate+1 rows to the driver per
-    * probe just to learn "distributed", where the count probe ships one
-    * long. With the gate at 0 both tiers are `limit(1)`. */
-  private[graft] val fusedProbeCap = 262144L
-
-  /** Two-tier fused probe for ANY kernel-input frame: ONE limited
-    * collect when the frame is small (Some(rows) IS the complete frame
-    * — the common local-twin case), legacy count-then-collect between
-    * the fuse cap and the gate, None over the gate with no gate-sized
-    * driver haul. */
-  private def probeRowsUnderGate(df: DataFrame, gate: Long)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    val cap = math.min(fusedProbeCap, gate)
-    val head = df.limit(cap.toInt + 1).collect()
-    if (head.length <= cap) Some(head)
-    else if (cap >= gate) None // cap == gate: over-gate proven
-    else {
-      // mid-tier (cap < rows ≤ gate): the collect is LIMIT-bounded too,
-      // so a nondeterministic frame or a data change between the count
-      // and the collect can never haul more than gate+1 rows to the
-      // driver — the same hard bound tier 1 has
-      val full = df.limit(gate.toInt + 1).collect()
-      if (full.length <= gate) Some(full) else None
+    /** The first two (long) columns zipped — an edge frame's (src, dst). */
+    def pairs: Array[(Long, Long)] = {
+      val (s, d) = (longs(0), longs(1))
+      Array.tabulate(length)(i => (s(i), d(i)))
     }
-  }
 
-  /** Row-probe memo for the direct [[probeRowsUnderGate]] callers
-    * (weighted PR / wLPA / earliest arrival edge frames,
-    * [[probeVertexIds]]): without it, a frame that passes its own gate
-    * while the OTHER side's gate then fails re-hauls up to cap+1 rows to
-    * the driver on EVERY call. Tier-1 positives (≤ fusedProbeCap rows)
-    * and all negative verdicts are memoized; mid-tier positives
-    * (cap < rows ≤ gate) are returned uncached — they are too heavy to
-    * pin (up to 2M Row objects) and that tier keeps its pre-existing
-    * per-call cost. Callers never mutate the shared array (they `.map`
-    * it). */
-  private val rowProbeMemo =
-    new PlanMemo[Option[Array[org.apache.spark.sql.Row]]](4)
-
-  private[graft] def probeRowsUnderGateMemo(df: DataFrame)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    val id = PlanMemo.id(df)
-    val gate = localMaxRows(df.sparkSession)
-    rowProbeMemo.get(id, gate).getOrElse {
-      val res = probeRowsUnderGate(df, gate)
-      if (res.forall(_.length <= fusedProbeCap))
-        rowProbeMemo.put(id, gate, res)
-      else res
-    }
-  }
-
-  private def probeEdgesFused(e: DataFrame, withEid: Boolean)
-      : Option[Array[(Long, Long, Long)]] = {
-    val id = PlanMemo.id(e)
-    val slot = if (withEid) "eid" else "raw"
-    val gate = localMaxRows(e.sparkSession)
-    // an array memoized under a higher gate must not answer a lower one
-    edgeMemo.get(id, slot).filter(_.length <= gate).orElse {
-      // only a negative verdict is read back: a positive one whose array
-      // was evicted must re-collect anyway
-      if (gateMemo.get(id, gate).contains(false)) None
-      else {
-        val probe = probeRowsUnderGate(
-          if (withEid)
-            e.select(col("src").cast("long"), col("dst").cast("long"),
-              col("eid").cast("long"))
-          else e.select(col("src").cast("long"), col("dst").cast("long")),
-          gate)
-        gateMemo.put(id, gate, probe.isDefined)
-        probe.map { rows =>
-          edgeMemo.put(id, slot,
-            if (withEid)
-              rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            else rows.map(r => (r.getLong(0), r.getLong(1), 0L)))
-        }
+    /** The rows sorted by every column, first to last. */
+    def sortedRows: Columns = {
+      val keys: Array[(Int, Int) => Int] = cols.map {
+        case a: Array[Long] =>
+          (x: Int, y: Int) => java.lang.Long.compare(a(x), a(y))
+        case a: Array[Double] =>
+          (x: Int, y: Int) => java.lang.Double.compare(a(x), a(y))
       }
+      val order = Array.range(0, length).sortWith { (x, y) =>
+        var r, j = 0
+        while (r == 0 && j < keys.length) { r = keys(j)(x, y); j += 1 }
+        r < 0
+      }
+      new Columns(length, cols.map {
+        case a: Array[Long] => order.map(a(_))
+        case a: Array[Double] => order.map(a(_))
+      })
     }
   }
 
-  private def collectEdges(edges: org.apache.spark.sql.DataFrame,
-      withEid: Boolean): Array[(Long, Long, Long)] =
-    edgeMemo.getOrBuild(PlanMemo.id(edges), if (withEid) "eid" else "raw") {
-      if (withEid)
-        edges.select(col("src").cast("long"), col("dst").cast("long"),
-          col("eid").cast("long")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      else
-        edges.select(col("src").cast("long"), col("dst").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), 0L))
-    }
-
-  /** Memoized (src, dst) collect sharing the kernel memo's "raw" slot —
-    * call only under a size gate. */
-  private[graph] def collectEdgePairs(edges: org.apache.spark.sql.DataFrame)
-      : Array[(Long, Long)] =
-    collectEdges(edges, withEid = false).map(t => (t._1, t._2))
-
-  /** THE shared gate+collect for the driver-local kernel family
-    * ([[Algorithms]]): one definition so the strategies can't diverge.
-    * Null endpoints are dropped BEFORE the probe/collect — the
-    * distributed branches drop them implicitly (equi-join semantics)
-    * while a local collect would crash on Row.getLong(null) — and the
-    * size gate answers from the kernel memo when possible (no job),
-    * else the memoized limit-probe. Keying on the CLEANED plan also
-    * lets the algorithm family share memo slots with the path kernels,
-    * which always collect through [[dropNullEndpoints]].
+  /** [[collectUnder]]'s verdicts keyed by (projected plan, cap) — None
+    * over the cap, the complete rows under it — plus, in slot "dense",
+    * the driver-side dense-eid order of a collected edge view
+    * ([[denseLocal]]).
     *
-    * @return Some(pairs) ⇒ run the local kernel on the array;
-    *         None ⇒ take the distributed branch */
-  private[graft] def localEdgePairs(edges: DataFrame)
-      : Option[Array[(Long, Long)]] =
-    probeEdgesFused(dropNullEndpoints(edges), withEid = false)
-      .map(_.map(t => (t._1, t._2)))
+    * Bound: 32 entries and 512 MiB of column bytes (8 B a cell; a None
+    * weighs nothing). At the default 2M gate the widest entry,
+    * cheapestRoutes' (src, dst, w, eid), is 4 × 8 B × 2M = 64 MB, so the
+    * worst case pins 8 of them: 512 MiB ≈ 537 MB. The four memos this one
+    * replaced could pin 3 boxed-tuple edge arrays of 2M edges (a 4 B
+    * array slot, a 24 B Tuple3 and three 24 B boxed Longs: 100 B an edge,
+    * 600 MB) plus 4 `Row` arrays of 262144 rows (a 4 B slot, a 24 B row,
+    * a 32 B value array and three 24 B boxes: 132 B a row, 138 MB) —
+    * ≈ 738 MB. */
+  private[graft] val collectMemo = new PlanMemo[Option[Columns]](32,
+    weigh = _.fold(0L)(_.bytes), maxWeight = 512L << 20)
 
-  private def collectSeeds(seeds: org.apache.spark.sql.DataFrame): Array[Long] =
-    seeds.select(col("id").cast("long")).collect().map(_.getLong(0))
-
-  /** Fused vertex-side gate + collect for the algorithm wrappers (the
-    * [[probeSeeds]] pattern at the EDGE gate): Some(distinct ids) when
-    * the distinct-id count is under [[LocalMaxRowsKey]], None otherwise —
-    * ONE limited job instead of a count probe plus a second full
-    * evaluation of the (often derived: events→distinct users) vertex
-    * frame. Gating on the DISTINCT count is more permissive than the
-    * raw-row gate it replaces but equally bounded: the collect never
-    * hauls more than gate+1 ids, and both strategies compute the same
-    * result by the kernel-consistency contract. */
-  private[graft] def probeVertexIds(vertices: DataFrame)
-      : Option[Array[Long]] =
-    probeRowsUnderGateMemo(vertices.select(col("id").cast("long")).distinct())
-      .map(_.map(_.getLong(0)))
+  /** THE strategy gate: Some(every row of `df`) iff `df` has at most
+    * `cap` rows, else None (→ the distributed branch). One
+    * `limit(cap + 1)` collect job per (plan, cap) and session answers the
+    * verdict AND, under the cap, IS the local kernel's input: never a
+    * full count (at 100 TB a pass over the input just to pick a strategy
+    * would itself be a major job), and never more than cap + 1 rows on
+    * the driver, even for a nondeterministic frame. Columns must be long
+    * or double — callers cast the projection their local kernel consumes.
+    * `cap` is clamped to [0, Int.MaxValue − 1]. */
+  private[graft] def collectUnder(df: DataFrame, cap: Long)
+      : Option[Columns] = {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val types = df.schema.fields.map(_.dataType)
+    require(types.forall(t => t == LongType || t == DoubleType),
+      s"collectUnder needs long or double columns: ${df.schema.simpleString}")
+    val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
+    collectMemo.getOrBuild(PlanMemo.id(df), c) {
+      val rows = df.limit(c.toInt + 1).collect()
+      val n = rows.length
+      if (n > c) None
+      else Some(new Columns(n, types.zipWithIndex.map {
+        case (DoubleType, j) => Array.tabulate(n)(rows(_).getDouble(j))
+        case (_, j) => Array.tabulate(n)(rows(_).getLong(j))
+      }))
+    }
+  }
 
   /** Null endpoints can never join (SQL semantics already drop them in
     * every fixed-hop pattern); the kernels drop them at ingestion so both
@@ -328,90 +249,83 @@ object PathFinder {
   private def dropNullEndpoints(e: DataFrame): DataFrame =
     e.where(col("src").isNotNull && col("dst").isNotNull)
 
-  /** THE strategy gate every kernel shares — one definition so the probe
-    * semantics can't drift between operators. Sizes are LIMIT-probes,
-    * never full counts (at 100 TB a complete pass over the edge table
-    * just to pick a strategy would itself be a major job). When edges and
-    * seeds both fit under the local gates, the driver-local kernel runs
-    * on collected arrays (memoized in [[edgeMemo]] — no persist needed,
-    * the collect is one pass); otherwise the distributed branch runs,
-    * fetching its edge frame from the memo-owned [[sessionEdgeIndex]]. */
-  private def localOrElse(e: DataFrame, seeds: DataFrame)(
-      local: Array[Long] => DataFrame)(
-      distributed: => DataFrame): DataFrame = {
-    // fused: the gate probe doubles as the (src, dst) collect the local
-    // closures read back through [[collectEdges]]'s memo — weighted
-    // closures that collect wider shapes still pay their own collect,
-    // which is the same two evaluations they always paid, never more
-    val eSmall = probeEdgesFused(e, withEid = false).isDefined
-    // probe + collect fused: one limited collect instead of a count probe
-    // followed by a second full evaluation of the seed plan (seeds are
-    // often a filtered scan, not a cached view — two passes doubled it)
-    val seedProbe = if (eSmall) probeSeeds(seeds) else None
-    seedProbe match {
-      case Some(seedArr) => local(seedArr)
-      case None => distributed
-    }
-  }
+  /** The cleaned (src, dst) long view of an edge frame: ONE plan for the
+    * [[Algorithms]] family, BFS and the unweighted path kernels, so they
+    * share one [[collectMemo]] entry per edge frame. */
+  private def edgePairs(edges: DataFrame): DataFrame =
+    dropNullEndpoints(edges).select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"))
 
-  /** Seed probes by gate value: the probe is a real driver job per call,
-    * and seed frames are often compiled subplans that repeat verbatim
-    * across a query's quantifier splits AND across repeated queries —
-    * q93's warm compile paid ~0.5 s of identical seed probes per call.
-    * Kernels never mutate the shared array (`.distinct.sorted` copies). */
-  private val seedMemo = new PlanMemo[Option[Array[Long]]](8)
+  /** Some(cleaned edge pairs) under [[LocalMaxRowsKey]], else None. */
+  private[graft] def localEdgePairs(edges: DataFrame)
+      : Option[Array[(Long, Long)]] =
+    collectUnder(edgePairs(edges), localMaxRows(edges.sparkSession))
+      .map(_.pairs)
 
-  /** One `limit(localMaxSeeds+1)` collect: Some(ids) when under the gate,
-    * None (→ distributed) otherwise. */
-  private def probeSeeds(seeds: DataFrame): Option[Array[Long]] = {
-    val gate = localMaxSeeds
-    seedMemo.getOrBuild(PlanMemo.id(seeds), gate) {
-      val arr = seeds.select(col("id").cast("long"))
-        .limit(gate.toInt + 1).collect().map(_.getLong(0))
-      if (arr.length <= gate) Some(arr) else None
-    }
-  }
+  /** Some(distinct long ids of `vertices`) when at most `cap` (default
+    * [[LocalMaxRowsKey]]), else None. Gating the DISTINCT ids is more
+    * permissive than a raw-row gate but equally bounded: the collect
+    * never hauls more than cap + 1 ids. */
+  private[graft] def localVertexIds(vertices: DataFrame): Option[Array[Long]] =
+    localVertexIds(vertices, localMaxRows(vertices.sparkSession))
 
-  /** Gate + edge-IDENTITY provisioning for the path kernels: the local
-    * branch collects the raw edge pairs and, when the plan carries no
-    * declared eid column, assigns the dense (src,dst)-ranked ids ON THE
-    * DRIVER — running [[Snapshot.denseEdgeIds]]'s distributed range-sort
-    * + zipWithIndex just to collect the result back was pure overhead
-    * when the array ends up driver-local anyway (it cost q55 a full sort
-    * + persist + collect of the user graph per query). Identical id
-    * assignment: rank by (src, dst), parallel edges distinct consecutive
-    * ids, ties interchangeable. The distributed branch attaches
-    * denseEdgeIds and persists, exactly as before. */
-  private def withEids(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame)(
-      local: (Array[(Long, Long, Long)], Array[Long]) => DataFrame)(
-      distributed: DataFrame => DataFrame): DataFrame = {
-    val clean = dropNullEndpoints(edges)
-    val hasEid = clean.columns.contains("eid")
-    val eSmall = probeEdgesFused(clean, withEid = hasEid).isDefined
-    val seedProbe = if (eSmall) probeSeeds(seeds) else None
-    if (seedProbe.isDefined) {
-      val arr = if (hasEid) collectEdges(clean, withEid = true)
-        else edgeMemo.getOrBuild(PlanMemo.id(clean), "denseLocal") {
-          denseEidsLocal(collectEdges(clean, withEid = false))
-        }
-      local(arr, seedProbe.get)
+  private[graft] def localVertexIds(vertices: DataFrame, cap: Long)
+      : Option[Array[Long]] =
+    collectUnder(vertices.select(col("id").cast("long")).distinct(), cap)
+      .map(_.longs(0))
+
+  /** The gate of the seeded path kernels: Some((edge columns, seed ids))
+    * when `edges` fits [[LocalMaxRowsKey]] and then `seeds` fits
+    * [[localMaxSeeds]] — the driver-local kernel ([[LocalKernels]]) runs
+    * on exactly these; None takes the distributed branch, which fetches
+    * its edge frame from the memo-owned [[sessionEdgeIndex]]. */
+  private def localInputs(edges: DataFrame, seeds: DataFrame)
+      : Option[(Columns, Array[Long])] =
+    for {
+      e <- collectUnder(edges, localMaxRows(edges.sparkSession))
+      s <- collectUnder(seeds.select(col("id").cast("long")), localMaxSeeds)
+    } yield (e, s.longs(0))
+
+  /** The path kernels' (src, dst[, eid]) long view: the declared `eid`
+    * column when the edge frame has one, else just [[edgePairs]] with
+    * dense (src, dst)-ranked ids attached per branch ([[eidArray]],
+    * [[eidIndex]]) — multigraph parallel edges keep DISTINCT ids,
+    * mirroring the reference's physical edge rowids. */
+  private def eidView(edges: DataFrame): DataFrame =
+    if (!edges.columns.contains("eid")) edgePairs(edges)
+    else dropNullEndpoints(edges).select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("eid").cast("long").as("eid"))
+
+  /** Driver-side twin of [[Snapshot.denseEdgeIds]] over a collected edge
+    * view: its rows sorted by every column, the row index being the eid —
+    * the same assignment as the distributed range-sort (only identical
+    * rows tie, and those are interchangeable) without a sort job whose
+    * result would only be collected back. Memoized next to the collect. */
+  private def denseLocal(view: DataFrame, c: Columns): Columns =
+    collectMemo.getOrBuild(PlanMemo.id(view), "dense")(Some(c.sortedRows)).get
+
+  /** Local (src, dst, eid) edges of an [[eidView]]'s collected columns. */
+  private def eidArray(view: DataFrame, c: Columns): Array[(Long, Long, Long)] =
+    if (c.width == 3) {
+      val (s, d, e) = (c.longs(0), c.longs(1), c.longs(2))
+      Array.tabulate(c.length)(i => (s(i), d(i), e(i)))
     } else {
-      // memo-owned: the distributed branch receives a frame whose cache
-      // lifecycle belongs to distEidMemo — callers must not unpersist or
-      // OpCaches-track it (see sessionEdgeIndex)
-      distributed(sessionEdgeIndex(spark, clean, "eid") {
-        val e0 = if (hasEid) clean
-          else Snapshot.denseEdgeIds(spark,
-            clean.select(col("src"), col("dst")), Seq("src", "dst"))
-        e0.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"),
-          col("eid").cast("long").as("eid"))
-      })
+      val sorted = denseLocal(view, c)
+      val (s, d) = (sorted.longs(0), sorted.longs(1))
+      Array.tabulate(c.length)(i => (s(i), d(i), i.toLong))
     }
-  }
 
-  /** Distributed twin of [[edgeMemo]]: persisted edge-index frames by
+  /** Distributed twin of [[eidArray]]: the memo-owned session edge index
+    * over an [[eidView]], dense ids attached by a range-sort when none
+    * are declared. Callers must not unpersist or OpCaches-track it (see
+    * [[sessionEdgeIndex]]). */
+  private def eidIndex(spark: SparkSession, view: DataFrame): DataFrame =
+    sessionEdgeIndex(spark, view, "eid") {
+      if (view.columns.contains("eid")) view
+      else Snapshot.denseEdgeIds(spark, view, Seq("src", "dst"))
+    }
+
+  /** Distributed twin of [[collectMemo]]: persisted edge-index frames by
     * variant. The dense-eid range-sort + zipWithIndex over the full edge
     * set is the expensive, input-identical prefix of every distributed
     * path query (it cost q55 a full 4M-row sort + persist PER CALL at
@@ -456,25 +370,6 @@ object PathFinder {
         .sortWithinPartitions("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-  /** Driver-side twin of [[Snapshot.denseEdgeIds]] for already-collected
-    * pairs: stable (src, dst) sort, index = id. */
-  private def denseEidsLocal(
-      arr: Array[(Long, Long, Long)]): Array[(Long, Long, Long)] = {
-    val sorted = arr.sortBy(t => (t._1, t._2))
-    Array.tabulate(sorted.length)(i =>
-      (sorted(i)._1, sorted(i)._2, i.toLong))
-  }
-
-  /** Every mode/prefix the reference raises NotImplemented for
-    * (`PGQCheckPathModeSupport` match.cpp:80-108; ALL SHORTEST /
-    * SHORTEST k match.cpp:709-790) is implemented here — mode-valid
-    * enumeration, all-minimal-parent BFS, pruned k-shortest — exceeding
-    * reference parity; nothing is guarded any more. Kept as the single
-    * seam for future prefix guards (pattern-shape restrictions live in
-    * the compiler, which knows the element structure). */
-  def checkSupported(p: PathPattern): Unit = ()
-
   /** Multi-source BFS shortest *lengths* — semantics of reference
     * `iterativelength` (0 when src=dst, absent row = unreachable,
     * iterativelength.cpp:12-143).
@@ -498,18 +393,24 @@ object PathFinder {
     * optimization for IC13-shaped queries. */
   def bfsDistances(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxDepth: Option[Long], targets: Option[DataFrame]): DataFrame = {
-    val clean = dropNullEndpoints(edges.select(col("src"), col("dst")))
-    localOrElse(clean, seeds) { seedArr =>
+    val local = for {
+      (pairs, seedArr) <- localInputs(edgePairs(edges), seeds)
+      // target ids are vertex ids: gated like them
+      targetIds <- targets.fold(Option(Option.empty[Set[Long]]))(t =>
+        collectUnder(t.select(col(t.columns.head).cast("long")),
+          localMaxRows(t.sparkSession)).map(c => Some(c.longs(0).toSet)))
+    } yield {
       import spark.implicits._
+      val (s, d) = (pairs.longs(0), pairs.longs(1))
       LocalKernels.bfsDistances(
-        collectEdges(clean, withEid = false), seedArr,
-        maxDepth.getOrElse(Long.MaxValue),
-        targets.map(t => collectSeeds(t.select(col(t.columns.head)
-          .as("id"))).toSet))
+        Array.tabulate(pairs.length)(i => (s(i), d(i), 0L)), seedArr,
+        maxDepth.getOrElse(Long.MaxValue), targetIds)
         .toSeq.toDF("src", "dst", "dist")
-    } {
+    }
+    local.getOrElse {
     // memo-owned distributed CSR (see sessionEdgeIndex) — never
     // unpersisted here
+    val clean = dropNullEndpoints(edges.select(col("src"), col("dst")))
     val e = sessionEdgeIndex(spark, clean, "pair")(clean)
     targets match {
       case Some(t) =>
@@ -672,14 +573,17 @@ object PathFinder {
     *              edge rowids (shortest_path.cpp:212-217)
     */
   def shortestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      lower: Long, upper: Option[Long]): DataFrame =
-    withEids(spark, edges, seeds) { (earr, seedArr) =>
+      lower: Long, upper: Option[Long]): DataFrame = {
+    val view = eidView(edges)
+    localInputs(view, seeds).map { case (e, seedArr) =>
       import spark.implicits._
       LocalKernels.shortestPaths(
-        earr, seedArr, lower, upper.getOrElse(Long.MaxValue))
+        eidArray(view, e), seedArr, lower, upper.getOrElse(Long.MaxValue))
         .toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "dist", "path")
-    } (e => distributedShortestPaths(spark, e, seeds, lower, upper))
+    }.getOrElse(distributedShortestPaths(spark, eidIndex(spark, view), seeds,
+      lower, upper))
+  }
 
   private def distributedShortestPaths(spark: SparkSession, e: DataFrame,
       seeds: DataFrame, lower: Long, upper: Option[Long]): DataFrame = {
@@ -810,7 +714,9 @@ object PathFinder {
     if (mode == PathMode.Walk && upper.isEmpty)
       throw GraphAnalysisException(
         "WALK enumeration needs a finite upper bound")
-    withEids(spark, edges, seeds) { (earr, seedArr) =>
+    val view = eidView(edges)
+    localInputs(view, seeds).map { case (ec, seedArr) =>
+      val earr = eidArray(view, ec)
       // the per-vertex top-k prune is only sound for WALK (see
       // LocalKernels.kShortestWalks); mode-constrained sets are finite
       val res = (mode, pruneK) match {
@@ -822,7 +728,8 @@ object PathFinder {
       import spark.implicits._
       res.toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "dist", "path")
-    } { e =>
+    }.getOrElse {
+    val e = eidIndex(spark, view)
     val limit = upper.getOrElse(Long.MaxValue)
     // SMALL FINITE BOUNDS fuse all levels into one declarative plan:
     // lazy persisted levels instead of per-level localCheckpoint, no
@@ -943,13 +850,15 @@ object PathFinder {
     */
   def allShortestPaths(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, lower: Long, upper: Option[Long]): DataFrame = {
-    withEids(spark, edges, seeds) { (earr, seedArr) =>
+    val view = eidView(edges)
+    localInputs(view, seeds).map { case (ec, seedArr) =>
       import spark.implicits._
       LocalKernels.allShortestPaths(
-        earr, seedArr, lower, upper.getOrElse(Long.MaxValue))
+        eidArray(view, ec), seedArr, lower, upper.getOrElse(Long.MaxValue))
         .toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "dist", "path")
-    } { e =>
+    }.getOrElse {
+    val e = eidIndex(spark, view)
     val limit = upper.getOrElse(Long.MaxValue)
     val seedRows = seeds.select(col("id").cast("long").as("src"))
       .distinct().transform(graft.graph.PathFinder.ckpt)
@@ -1059,14 +968,15 @@ object PathFinder {
     val clean = dropNullEndpoints(
       edges.select(col("src"), col("dst"), col("w")))
       .filter(col("w").isNotNull)
-    localOrElse(clean, seeds) { seedArr =>
-      val earr = clean.select(col("src").cast("long"),
-        col("dst").cast("long"), col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val view = clean.select(col("src").cast("long"), col("dst").cast("long"),
+      col("w").cast("double"))
+    localInputs(view, seeds).map { case (ec, seedArr) =>
+      val (s, d, w) = (ec.longs(0), ec.longs(1), ec.doubles(2))
       import spark.implicits._
-      LocalKernels.cheapestPaths(earr, seedArr).toSeq
+      LocalKernels.cheapestPaths(
+        Array.tabulate(ec.length)(i => (s(i), d(i), w(i))), seedArr).toSeq
         .toDF("src", "dst", "cost")
-    } {
+    }.getOrElse {
     // memo-owned distributed CSR (see sessionEdgeIndex)
     val e = sessionEdgeIndex(spark, clean, "wpair")(clean)
     var dist = seeds.select(col("id").as("src"), col("id").as("dst"),
@@ -1120,28 +1030,30 @@ object PathFinder {
   def cheapestRoutes(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame): DataFrame = {
     // see cheapestPaths: null weights dropped so both strategies agree
-    val clean = dropNullEndpoints(edges).filter(col("w").isNotNull)
-    // the dense-eid synthesis is shared by both branches so the id
-    // assignment (and thus the (cost, hops, pv, pe) tie-break) cannot
-    // drift between the local collect and the distributed relaxation
-    def buildE: DataFrame = {
-      val e0 = if (clean.columns.contains("eid")) clean
-        else Snapshot.denseEdgeIds(spark,
-          clean.select(col("src"), col("dst"), col("w")), Seq("src", "dst"))
-      e0.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("double").as("w"),
-        col("eid").cast("long").as("eid"))
-    }
-    localOrElse(clean, seeds) { seedArr =>
-      val earr = buildE.select("src", "dst", "eid", "w").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    val hasEid = edges.columns.contains("eid")
+    val view = dropNullEndpoints(edges).filter(col("w").isNotNull)
+      .select(Seq(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), col("w").cast("double").as("w")) ++
+        (if (hasEid) Seq(col("eid").cast("long").as("eid")) else Nil): _*)
+    // without declared ids both branches rank edges by (src, dst, w), so
+    // the id assignment (and thus the (cost, hops, pv, pe) tie-break)
+    // cannot drift between the local kernel and the distributed relaxation
+    localInputs(view, seeds).map { case (ec, seedArr) =>
+      val c = if (hasEid) ec else denseLocal(view, ec)
+      val (s, d, w) = (c.longs(0), c.longs(1), c.doubles(2))
+      val eid: Int => Long =
+        if (hasEid) { val a = c.longs(3); a(_) } else _.toLong
+      val earr = Array.tabulate(c.length)(i => (s(i), d(i), eid(i), w(i)))
       import spark.implicits._
       LocalKernels.cheapestRoutes(earr, seedArr).toSeq
         .map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "cost", "path")
-    } {
+    }.getOrElse {
     // memo-owned distributed CSR (see sessionEdgeIndex)
-    val e = sessionEdgeIndex(spark, clean, "weid")(buildE)
+    val e = sessionEdgeIndex(spark, view, "weid") {
+      if (hasEid) view
+      else Snapshot.denseEdgeIds(spark, view, Seq("src", "dst", "w"))
+    }
     // ---- distributed relaxation: narrow rows only ----
     var dist = seeds.select(col("id").cast("long").as("src")).distinct()
       .select(col("src"), col("src").as("dst"),

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Bounded, session-keyed memo of values derived from a query plan: the
   * analogue of the reference's per-session CSR, built once and reused
-  * until `delete_csr`. Every plan-keyed cache in graft (collected edge
-  * arrays, gate and seed probes, the distributed edge index, the MATCH
+  * until `delete_csr`. Every plan-keyed cache in graft (the strategy
+  * gate's collected columns, the distributed edge index, the MATCH
   * compiler's id maps and uniqueness verdicts) is one of these.
   *
   * Index: (session id, analyzed-plan `semanticHash`, slot). The session
@@ -21,26 +21,25 @@ import org.apache.spark.sql.DataFrame
   * file overwrite a miss even though the re-read canonicalizes
   * identically.
   *
-  * Bound: an LRU of `capacity` entries under the instance lock.
+  * Bound: an LRU of `capacity` entries under the instance lock, and
+  * optionally of `maxWeight` total `weigh` (the bytes a value pins): the
+  * least recently used entries go until both hold, so a value heavier
+  * than `maxWeight` on its own is released right after it is stored.
   * `release` runs exactly once on every value the memo lets go of:
-  * capacity eviction, displacement by an entry with a different proof,
-  * the losing value of a concurrent build, and [[clear]]. Memos of
+  * eviction, displacement by an entry with a different proof, the
+  * losing value of a concurrent build, and [[clear]]. Memos of
   * persisted frames unpersist there; a released frame merely recomputes.
   *
   * Conditional caching stays at the call site as a [[get]]/[[put]]
   * pair; [[getOrBuild]] is the common unconditional case. */
 private[graft] final class PlanMemo[V](capacity: Int,
-    release: V => Unit = (_: V) => ()) {
+    release: V => Unit = (_: V) => (),
+    weigh: V => Long = (_: V) => 0L, maxWeight: Long = Long.MaxValue) {
 
   private val lru =
     new java.util.LinkedHashMap[(String, Int, Any), (String, V)](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int, Any), (String, V)])
-          : Boolean =
-        this.size() > capacity && { release(e.getValue._2); true }
-    }
-  private var hitCount, missCount, buildCount = 0L
+      16, 0.75f, true)
+  private var hitCount, missCount, buildCount, weightSum = 0L
 
   PlanMemo.all.add(this)
 
@@ -61,8 +60,17 @@ private[graft] final class PlanMemo[V](capacity: Int,
       val e = lru.get(k)
       if (e != null && e._1 == proof) { release(v); e._2 }
       else {
-        if (e != null) release(e._2)
+        if (e != null) { weightSum -= weigh(e._2); release(e._2) }
         lru.put(k, (proof, v))
+        weightSum += weigh(v)
+        val eldest = lru.values.iterator
+        while ((lru.size > capacity || weightSum > maxWeight) &&
+            eldest.hasNext) {
+          val old = eldest.next()._2
+          eldest.remove()
+          weightSum -= weigh(old)
+          release(old)
+        }
         v
       }
     }
@@ -74,6 +82,7 @@ private[graft] final class PlanMemo[V](capacity: Int,
   def clear(): Unit = synchronized {
     lru.values.forEach(e => release(e._2))
     lru.clear()
+    weightSum = 0L
   }
 
   def size: Int = synchronized(lru.size)

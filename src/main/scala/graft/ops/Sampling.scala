@@ -239,75 +239,67 @@ object Sampling {
       "probs must be in (0, 1]")
     val spark = df.sparkSession
     import spark.implicits._
-    // THE standard size gate (PathFinder strategy-gate discipline): a
-    // fused limit-probe + collect — one early-terminating job — answers
-    // whether the column fits a driver sort. Under the gate the whole
-    // range-exchange + cache + two-pass machinery is pure stage floor
-    // (~1 s of jobs for a 0.02 s local sort at sf0.1); over it the
-    // probe is a bounded prefix scan, trivial next to the exchange.
-    // The shared local gate (`spark.graft.local.maxRows`) = 0 forces
-    // distributed (plan-guard specs); output is rank-identical by the
-    // parity spec.
-    val localMax = graft.graph.PathFinder.localMaxRows(spark)
-    if (localMax > 0) {
-      val probed = df.filter(col(valueCol).isNotNull)
-        .select(col(valueCol).cast("double").as("__v"))
-        .limit(localMax.toInt + 1).collect()
-      if (probed.length <= localMax) {
-        val sorted = probed.map(_.getDouble(0)).sorted
-        val n = sorted.length.toLong
-        return if (n == 0L)
-          Seq.empty[(Double, Double, Long)].toDF("prob", "value", "n_total")
-        else probs.sorted
-          .map(p => (p, sorted((math.ceil(p * n).toLong.max(1L) - 1).toInt),
-            n))
-          .toDF("prob", "value", "n_total")
-      }
-      // over the gate: fall through — the prefix collect is discarded
-    }
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    // globally sorted: range-partitioned across `parts`, sorted within
-    // each; __pid is stable across the two passes below via the cache
-    val sorted = df.filter(col(valueCol).isNotNull)
+    // THE strategy gate (PathFinder.collectUnder): one early-terminating
+    // limit job answers whether the column fits a driver sort, and under
+    // the gate IS the sort's input. There the whole range-exchange +
+    // cache + two-pass machinery is pure stage floor (~1 s of jobs for a
+    // 0.02 s local sort at sf0.1); over it the probe is a bounded prefix
+    // scan, trivial next to the exchange. `spark.graft.local.maxRows` = 0
+    // forces distributed (plan-guard specs); output is rank-identical by
+    // the parity spec.
+    val values = df.filter(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("__v"))
-      .repartitionByRange(parts, col("__v"))
-      .sortWithinPartitions("__v")
-      .select(col("__v"), spark_partition_id().as("__pid"))
-    val cached = graft.OpCaches.track(sorted)
-    // pass 1: one count row per partition (bounded collect: `parts` rows)
-    val counts = cached.groupBy("__pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = counts.map(_._2).sum
-    if (n == 0L) {
-      Seq.empty[(Double, Double, Long)].toDF("prob", "value", "n_total")
-    } else {
-      val offsets = counts.map(_._2).scanLeft(0L)(_ + _).init
-      // each target rank lands in exactly one partition; translate to
-      // that partition's local 1-based position
-      val localTargets: Map[Int, Seq[(Long, Double)]] = probs
-        .map(p => math.ceil(p * n).toLong.max(1L) -> p)
-        .flatMap { case (rank, p) =>
-          counts.zip(offsets).collectFirst {
-            case ((pid, c), off) if rank > off && rank <= off + c =>
-              pid -> (rank - off, p)
+    graft.graph.PathFinder.collectUnder(values,
+        graft.graph.PathFinder.localMaxRows(spark)).map { c =>
+      val sorted = c.doubles(0).sorted
+      val n = sorted.length.toLong
+      (if (n == 0L) Seq.empty[(Double, Double, Long)]
+       else probs.sorted.map(p =>
+         (p, sorted((math.ceil(p * n).toLong.max(1L) - 1).toInt), n)))
+        .toDF("prob", "value", "n_total")
+    }.getOrElse {
+      val parts = if (numPartitions > 0) numPartitions
+        else spark.sparkContext.defaultParallelism
+      // globally sorted: range-partitioned across `parts`, sorted within
+      // each; __pid is stable across the two passes below via the cache
+      val sorted = values.repartitionByRange(parts, col("__v"))
+        .sortWithinPartitions("__v")
+        .select(col("__v"), spark_partition_id().as("__pid"))
+      val cached = graft.OpCaches.track(sorted)
+      // pass 1: one count row per partition (bounded collect: `parts` rows)
+      val counts = cached.groupBy("__pid").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+      val n = counts.map(_._2).sum
+      if (n == 0L) {
+        Seq.empty[(Double, Double, Long)].toDF("prob", "value", "n_total")
+      } else {
+        val offsets = counts.map(_._2).scanLeft(0L)(_ + _).init
+        // each target rank lands in exactly one partition; translate to
+        // that partition's local 1-based position
+        val localTargets: Map[Int, Seq[(Long, Double)]] = probs
+          .map(p => math.ceil(p * n).toLong.max(1L) -> p)
+          .flatMap { case (rank, p) =>
+            counts.zip(offsets).collectFirst {
+              case ((pid, c), off) if rank > off && rank <= off + c =>
+                pid -> (rank - off, p)
+            }
           }
-        }
-        .groupBy(_._1).map { case (pid, v) => pid -> v.map(_._2) }
-      val bTargets = spark.sparkContext.broadcast(localTargets)
-      // pass 2: narrow scan of the cached sorted frame; each partition
-      // walks a local counter and emits only its target positions
-      cached.as[(Double, Int)].mapPartitions { it =>
-        var local = 0L
-        it.flatMap { case (v, pid) =>
-          local += 1
-          val here = local
-          bTargets.value.getOrElse(pid, Nil)
-            .collect { case (idx, p) if idx == here => (p, v) }
-        }
-      }.toDF("prob", "value")
-        .withColumn("n_total", lit(n))
-        .orderBy("prob")
+          .groupBy(_._1).map { case (pid, v) => pid -> v.map(_._2) }
+        val bTargets = spark.sparkContext.broadcast(localTargets)
+        // pass 2: narrow scan of the cached sorted frame; each partition
+        // walks a local counter and emits only its target positions
+        cached.as[(Double, Int)].mapPartitions { it =>
+          var local = 0L
+          it.flatMap { case (v, pid) =>
+            local += 1
+            val here = local
+            bTargets.value.getOrElse(pid, Nil)
+              .collect { case (idx, p) if idx == here => (p, v) }
+          }
+        }.toDF("prob", "value")
+          .withColumn("n_total", lit(n))
+          .orderBy("prob")
+      }
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.slt
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -169,7 +170,7 @@ object SltRunner {
           else try { session.execute(s).foreach(_.collect()); acc }
           catch {
             case SkipStatement(reason) => RecordResult(r, "skip", reason)
-            case e: Throwable =>
+            case NonFatal(e) =>
               RecordResult(r, "fail", s"threw: ${trimMsg(e)}")
           }
         }
@@ -180,7 +181,7 @@ object SltRunner {
           RecordResult(r, "fail", "expected an error, statement succeeded")
         } catch {
           case SkipStatement(reason) => RecordResult(r, "skip", reason)
-          case e: Throwable =>
+          case NonFatal(e) =>
             if (expected.isEmpty || messageMatches(expected, e))
               RecordResult(r, "pass")
             else RecordResult(r, "msg-mismatch",
@@ -217,7 +218,7 @@ object SltRunner {
           }
         } catch {
           case SkipStatement(reason) => RecordResult(r, "skip", reason)
-          case e: Throwable => RecordResult(r, "fail", s"threw: ${trimMsg(e)}")
+          case NonFatal(e) => RecordResult(r, "fail", s"threw: ${trimMsg(e)}")
         }
     }
     FileResult(path, None, out)

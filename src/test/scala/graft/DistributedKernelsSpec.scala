@@ -303,30 +303,39 @@ class DistributedKernelsSpec extends AnyFunSuite {
       ("Tavneet", 3L)))
   }
 
-  test("GraphX Pregel BFS agrees with the DataFrame/local kernels") {
+  private def bfsRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .sorted
+
+  test("BFS: default kernel == brute force == forced-distributed") {
     val s = init()
     import s.implicits._
-    val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (3L, 0L), (1L, 2L),
-      (1L, 3L), (2L, 3L), (4L, 3L)).toDF("src", "dst")
-    val seeds = Seq(0L, 1L, 2L, 3L, 4L).toDF("id")
-    val viaGraphX = graph.GraphXKernels.bfsDistances(s, edges, seeds, Some(3L))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaDF = graph.PathFinder.bfsDistances(s, edges, seeds, Some(3L))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaGraphX == viaDF)
+    val edgeSeq = Seq((0L, 1L), (0L, 2L), (0L, 3L), (3L, 0L), (1L, 2L),
+      (1L, 3L), (2L, 3L), (4L, 3L))
+    val seedSeq = Seq(0L, 1L, 2L, 3L, 4L)
+    def run() = bfsRows(PathFinder.bfsDistances(s, edgeSeq.toDF("src", "dst"),
+      seedSeq.toDF("id"), Some(3L)))
+    val want = bruteBfs(edgeSeq, seedSeq, 3L)
+    assert(run() == want)
+    assert(withDistributed(run()) == want)
   }
 
-  test("GraphX BFS on the user graph matches the default kernel") {
+  test("user-graph BFS: default kernel == brute force == forced-distributed") {
     val s = init()
+    import org.apache.spark.sql.functions.col
     val edges = TradeGraph.userEdges(s, "/root/testdata/sf0.001")
     val seeds = TradeGraph.events(s, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.col("user_id").as("id"))
-      .filter(org.apache.spark.sql.functions.col("id") < 20).distinct()
-    val viaGraphX = graph.GraphXKernels.bfsDistances(s, edges, seeds, Some(2L))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaDefault = graph.PathFinder.bfsDistances(s, edges, seeds, Some(2L))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaGraphX == viaDefault)
+      .select(col("user_id").as("id"))
+      .filter(col("id") < 20).distinct()
+    def run() = bfsRows(PathFinder.bfsDistances(s, edges, seeds, Some(2L)))
+    val want = bruteBfs(
+      edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq,
+      seeds.select(col("id").cast("long")).collect().map(_.getLong(0)).toSeq,
+      2L)
+    assert(want.nonEmpty)
+    assert(run() == want)
+    assert(withDistributed(run()) == want)
   }
 
   test("distributed cheapest paths (Bellman-Ford)") {

@@ -4,13 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Algorithms, PathFinder, PlanMemo}
 
-/** Round-14 optimization invariants: the fused edge gate+collect
-  * (one limited job answers the gate AND is the memoized collect) and
-  * the min-derived earliest-arrival start.
+/** Invariants of the strategy gate (`PathFinder.collectUnder`: one
+  * memoized `limit(gate+1)` collect answers the gate AND is the local
+  * kernel's input) and of the min-derived earliest-arrival start.
   *
   * The equivalence claims these tests pin:
   *  - localEdgePairs returns the COMPLETE cleaned edge multiset when
-  *    under the gate (the limit(gate+1) probe truncates only over-gate
+  *    under the gate (the limit(gate+1) collect truncates only over-gate
   *    inputs, which return None), and None when over;
   *  - earliestArrivalFromMin == earliestArrival(minTs) even when the
   *    global min ts rides a null-endpoint row (any start ≤ min usable
@@ -19,10 +19,7 @@ import graft.graph.{Algorithms, PathFinder, PlanMemo}
   *  - an empty temporal graph yields an empty result, not an NPE.
   */
 class FusedProbeSpec extends AnyFunSuite {
-
-  private def withGate[T](s: org.apache.spark.sql.SparkSession, rows: Long)(
-      body: => T): T =
-    Fixture.withConf(s)("spark.graft.local.maxRows" -> rows.toString)(body)
+  import Fixture.withGate
 
   test("localEdgePairs under gate returns the complete cleaned multiset") {
     val s = Fixture.init()
@@ -68,8 +65,9 @@ class FusedProbeSpec extends AnyFunSuite {
   test("mid-tier probe (cap < rows <= gate) still returns the complete frame") {
     val s = Fixture.init()
     import org.apache.spark.sql.functions._
-    // 300k rows: above the 262144 fuse cap, below the 2M gate — the
-    // legacy count-then-collect tier must return ALL rows, not a prefix
+    // 300k rows: above the 262144-row cap of the former two-tier probe,
+    // below the 2M gate — the one limit(gate+1) collect must return ALL
+    // rows, not a prefix
     val n = 300000L
     val edges = s.range(n).select(col("id").as("src"), (col("id") + 1).as("dst"))
     val got = PathFinder.localEdgePairs(edges)

@@ -327,8 +327,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // the explicit refresh hook drops every probe memo — the escape
     // hatch for sources the snapshot token cannot see (an external
     // system mutating data behind an unchanged listing)
-    assert(PathFinder.edgeMemo.size > 0,
-      "the WCC runs above should have populated a probe memo")
+    assert(PathFinder.collectMemo.size > 0,
+      "the WCC runs above should have populated the collect memo")
     PlanMemo.clearAll()
     assert(PlanMemo.entries == 0,
       "clearProbeMemos must drop every seed/gate/edge memo entry")

@@ -24,19 +24,7 @@ class SessionGateSpec extends AnyFunSuite {
       (4L, 5L), (5L, 3L), (1L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
     val seeds = Seq(0L, 4L)
     val maxDepth = 3L
-    // brute force: per-seed BFS, (seed, vertex, hops) for every vertex
-    // within maxDepth, the seed itself at 0
-    val want = seeds.flatMap { src =>
-      var dist = Map(src -> 0L)
-      var frontier = Set(src)
-      for (d <- 1L to maxDepth) {
-        frontier = edges.collect {
-          case (a, b) if frontier(a) && !dist.contains(b) => b
-        }.toSet
-        dist ++= frontier.map(_ -> d)
-      }
-      dist.map { case (v, d) => (src, v, d) }
-    }.sorted
+    val want = Fixture.bruteBfs(edges, seeds, maxDepth)
     def run(s: SparkSession): Seq[(Long, Long, Long)] = {
       import s.implicits._
       PathFinder.bfsDistances(s, edges.toDF("src", "dst"), seeds.toDF("id"),

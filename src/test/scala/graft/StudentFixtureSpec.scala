@@ -63,6 +63,28 @@ object Fixture {
 
   /** Forces every size-gated kernel of `s` onto its distributed branch. */
   val ForceDist: (String, String) = "spark.graft.local.maxRows" -> "0"
+
+  /** Runs `body` with the local-vs-distributed gate of `s` at `rows`. */
+  def withGate[T](s: SparkSession, rows: Long)(body: => T): T =
+    withConf(s)("spark.graft.local.maxRows" -> rows.toString)(body)
+
+  /** Brute-force multi-source BFS, sorted: (seed, vertex, hops) for every
+    * vertex within `maxDepth` hops of a seed, the seed itself at 0. */
+  def bruteBfs(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxDepth: Long): Seq[(Long, Long, Long)] =
+    seeds.distinct.flatMap { src =>
+      var dist = Map(src -> 0L)
+      var frontier = Set(src)
+      var d = 0L
+      while (frontier.nonEmpty && d < maxDepth) {
+        d += 1
+        frontier = edges.collect {
+          case (a, b) if frontier(a) && !dist.contains(b) => b
+        }.toSet
+        dist ++= frontier.map(_ -> d)
+      }
+      dist.map { case (v, hops) => (src, v, hops) }
+    }.sorted
 }
 
 class StudentFixtureSpec extends AnyFunSuite {
