@@ -67,8 +67,9 @@ final case class Graft(spark: SparkSession, resolver: TableResolver) {
     var unnamedCount = 0
     var m = pat.matcher(sb)
     while (m.find(searchFrom)) {
-      if (insideStringLiteral(sb, m.start())) {
-        // mention inside a SQL string literal — not a graph table
+      if (insideLiteralOrComment(sb, m.start())) {
+        // mention inside a SQL string literal or comment — not a graph
+        // table
         searchFrom = m.end()
       } else {
         val open = m.end() - 1 // both pattern alternatives end with '('
@@ -296,25 +297,36 @@ final case class Graft(spark: SparkSession, resolver: TableResolver) {
     }
   }
 
-  /** True when `pos` falls inside a single- or double-quoted SQL literal.
-    * Tracks quote state with backslash escapes (an apostrophe inside a
-    * double-quoted string must not flip single-quote state, and vice
-    * versa). */
-  private def insideStringLiteral(s: CharSequence, pos: Int): Boolean = {
-    var state = 0 // 0 = outside, 1 = in single-quoted, 2 = in double-quoted
-    var i = 0
+  /** True when `pos` falls inside a single- or double-quoted SQL literal,
+    * a `--` line comment or a (nestable) bracketed comment. Tracks quote
+    * state with backslash escapes (an apostrophe inside a double-quoted
+    * string must not flip single-quote state, and vice versa); comment
+    * openers inside a literal open nothing. */
+  private def insideLiteralOrComment(s: CharSequence, pos: Int): Boolean = {
+    // 0 = code, 1 = single-quoted, 2 = double-quoted, 3 = line comment,
+    // 4 = bracketed comment (`depth` deep)
+    var (state, depth, i) = (0, 0, 0)
+    def at(j: Int, t: String): Boolean =
+      j + 1 < s.length && s.charAt(j) == t(0) && s.charAt(j + 1) == t(1)
     while (i < pos) {
       val c = s.charAt(i)
       state match {
         case 0 =>
           if (c == '\'') state = 1
           else if (c == '"') state = 2
-        case 1 =>
+          else if (at(i, "--")) { state = 3; i += 1 }
+          else if (at(i, "/*")) { state = 4; depth = 1; i += 1 }
+        case 1 | 2 =>
           if (c == '\\') i += 1
-          else if (c == '\'') state = 0
-        case 2 =>
-          if (c == '\\') i += 1
-          else if (c == '"') state = 0
+          else if (c == (if (state == 1) '\'' else '"')) state = 0
+        case 3 =>
+          if (c == '\n') state = 0
+        case _ =>
+          if (at(i, "/*")) { depth += 1; i += 1 }
+          else if (at(i, "*/")) {
+            depth -= 1; i += 1
+            if (depth == 0) state = 0
+          }
       }
       i += 1
     }

@@ -39,37 +39,26 @@ object GraphTableCompiler {
   private[graft] val idMapMemo =
     new PlanMemo[DataFrame](16, df => { df.unpersist(false); () })
 
-  /** COLLECTED (`__from` → `__to`) bijection maps for the size-gated
-    * local translation path, by gate value — Some(map) under the gate,
-    * None (= use the distributed join pipeline) over it. Entries are
-    * plain driver maps bounded by the gate. */
-  private val localMapMemo = new PlanMemo[Option[Map[Long, Long]]](16)
-
   /** Row cap of the local translation path's collected maps. */
   private val localMapMaxRows = 65536L
 
-  /** Size-gated driver collect of a two-long-column bijection frame:
-    * Some(map) when the pair set fits [[localMapMaxRows]], else None. A
-    * fused limit-probe + collect, memoized for the session — repeated
-    * compiles (and the quantifier splits within one compile) pay ZERO
-    * jobs after the first. */
-  private def localPairMap(spark: SparkSession, m: DataFrame)
-      : Option[Map[Long, Long]] = {
-    val gate = localMapMaxRows
-    localMapMemo.getOrBuild(PlanMemo.id(m), gate) {
-      val rows = m.limit(gate.toInt + 1).collect()
-      // Bijection contract, asserted at collect time: a null key/value
-      // would unbox to 0L (a spurious 0 -> x mapping the join branch's
-      // null-never-matches semantics would not emit), and a duplicate
-      // __from would silently collapse to one entry where the join branch
-      // emits both matches. Either defect → fall back to the join path.
-      if (rows.length <= gate && rows.forall(r =>
-          !r.isNullAt(0) && !r.isNullAt(1))) {
-        val built = rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        if (built.size == rows.length) Some(built) else None
-      } else None
+  /** A (`__from` → `__to`) bijection frame as a driver map when it fits
+    * [[localMapMaxRows]], through the strategy gate
+    * ([[PathFinder.collectUnder]]: one memoized collect, so repeated
+    * compiles and the quantifier splits within one compile pay zero jobs
+    * after the first); None → the join pipeline. The collected view is
+    * what the join branch emits: a null `__from` never matches, a null
+    * `__to` translates an id to itself (`coalesce(__to, el)`). A
+    * duplicate `__from` would collapse to one entry where the join
+    * emits both matches, so it falls back to the join too. */
+  private def localPairMap(m: DataFrame): Option[Map[Long, Long]] =
+    PathFinder.collectUnder(m.where(col("__from").isNotNull)
+        .select(col("__from").cast("long"),
+          coalesce(col("__to"), col("__from")).cast("long")),
+      localMapMaxRows).flatMap { c =>
+      val built = c.longs(0).zip(c.longs(1)).toMap
+      if (built.size == c.length) Some(built) else None
     }
-  }
 
   private def sessionIdMap(base: DataFrame, tag: String)(
       build: => DataFrame): DataFrame =
@@ -662,7 +651,7 @@ object GraphTableCompiler {
     }
 
     def translateIdArray(df: DataFrame, c: String, m: DataFrame): DataFrame =
-      localPairMap(spark, m) match {
+      localPairMap(m) match {
         case Some(lm) => translateLocal(df, c, lm, vertexSlotsOnly = false)
         case None => translateIdArrayJoin(df, c, m)
       }
@@ -691,7 +680,7 @@ object GraphTableCompiler {
       * `__from` value). */
     def translateVertexSlots(df: DataFrame, c: String,
         m: DataFrame): DataFrame =
-      localPairMap(spark, m) match {
+      localPairMap(m) match {
         case Some(lm) => translateLocal(df, c, lm, vertexSlotsOnly = true)
         case None => translateVertexSlotsJoin(df, c, m)
       }

@@ -21,18 +21,18 @@ import graft.model.{PropertyGraph, TableResolver}
 object Algorithms {
 
   /** The local branch of the (vertices, edges) kernels: `kernel` over the
-    * distinct vertex ids and the cleaned edge pairs when both fit their
-    * gate (vertices: `vertexCap`, default the session gate), None (→ the
-    * distributed branch) otherwise. Edges are gated first: every kernel
-    * needs them, and a memoized verdict answers without a job. */
+    * CSR of the cleaned edge pairs and the distinct vertex ids when both
+    * fit their gate (vertices: `vertexCap`, default the session gate),
+    * None (→ the distributed branch) otherwise. Edges are gated first:
+    * every kernel needs them, and a memoized verdict answers without a
+    * job. */
   private def localGraph[A](vertices: DataFrame, edges: DataFrame,
-      vertexCap: Option[Long] = None)(
-      kernel: (Array[Long], Array[(Long, Long)]) => A): Option[A] =
+      vertexCap: Option[Long] = None)(kernel: Csr => A): Option[A] =
     for {
-      earr <- PathFinder.localEdgePairs(edges)
+      e <- PathFinder.localEdgePairs(edges)
       ids <- vertexCap.fold(PathFinder.localVertexIds(vertices))(
         PathFinder.localVertexIds(vertices, _))
-    } yield kernel(ids, earr)
+    } yield kernel(Csr(e, ids))
 
   /** PageRank with the reference's constants (damping 0.85, ε = 1e-6,
     * dangling-mass redistribution — `pagerank.cpp:30-82`).
@@ -62,15 +62,18 @@ object Algorithms {
     // small graphs: run the exact same iteration on driver arrays (the
     // reference's in-memory-kernel strategy, size-gated — see LocalKernels;
     // the vertex cap is 16× the path kernels' 4096-seed cap)
-    localGraph(vertices, edges, vertexCap = Some(65536L)) { (ids, earr) =>
-      LocalKernels.pageRank(ids, earr, damping, tol, maxIter, fixedIter,
+    localGraph(vertices, edges, vertexCap = Some(65536L)) { g =>
+      LocalKernels.pageRank(g, damping, tol, maxIter, fixedIter,
         phantomNodes).toSeq.toDF("id", "pagerank")
     }.getOrElse {
       val v = vertices.select(col("id")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       val nReal = v.count()
       val n = nReal.toDouble + phantomNodes
+      // null endpoints never join, and never count toward a degree: the
+      // local branch's cleaned pairs drop them the same way
       val e = edges.select(col("src"), col("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val outDeg = e.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("outdeg"))
@@ -139,8 +142,8 @@ object Algorithms {
     val sp = vertices.sparkSession
     import sp.implicits._
     // small-graph strategy: union-find on driver arrays
-    localGraph(vertices, edges) { (ids, earr) =>
-      LocalKernels.wcc(ids, earr).toSeq.toDF("id", "component")
+    localGraph(vertices, edges) { g =>
+      LocalKernels.wcc(g).toSeq.toDF("id", "component")
     }.getOrElse {
       val und = edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -215,8 +218,8 @@ object Algorithms {
       edges: DataFrame): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    localGraph(vertices, edges) { (ids, earr) =>
-      LocalKernels.scc(ids, earr).toSeq.toDF("id", "component")
+    localGraph(vertices, edges) { g =>
+      LocalKernels.scc(g).toSeq.toDF("id", "component")
     }.getOrElse {
       // self-loops never change SCC membership; dedup once up front
       val e0 = edges.select(col("src").cast("long").as("src"),
@@ -393,7 +396,8 @@ object Algorithms {
     * the same two-strategy contract as WCC/SCC/PageRank. */
   private def localTriangles(edges: DataFrame)
       : Option[Array[(Long, Long, Long)]] =
-    PathFinder.localEdgePairs(edges).map(LocalKernels.triangles)
+    PathFinder.localEdgePairs(edges).map(e =>
+      LocalKernels.triangles(Csr(e)))
 
   /** Local clustering coefficient — reference semantics
     * (`local_clustering_coefficient.cpp:11-72`): over the *deduplicated
@@ -492,9 +496,9 @@ object Algorithms {
       iters: Int = 30): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    localGraph(vertices, edges) { (ids, earr) =>
+    localGraph(vertices, edges) { g =>
       PathFinder.localVertexIds(seeds).map(seedArr =>
-        LocalKernels.personalizedPageRank(ids, earr, seedArr.toSet,
+        LocalKernels.personalizedPageRank(g, seedArr.toSet,
           damping, iters).toSeq.toDF("id", "ppr"))
     }.flatten.getOrElse {
       val e = edges.select(col("src").cast("long").as("src"),
@@ -566,12 +570,8 @@ object Algorithms {
     val local = for {
       ec <- PathFinder.collectUnder(clean, PathFinder.localMaxRows(sp))
       ids <- PathFinder.localVertexIds(vertices)
-    } yield {
-      val (s, d, w) = (ec.longs(0), ec.longs(1), ec.doubles(2))
-      LocalKernels.weightedPageRank(ids,
-        Array.tabulate(ec.length)(i => (s(i), d(i), w(i))), damping, iters)
-        .toSeq.toDF("id", "rank")
-    }
+    } yield LocalKernels.weightedPageRank(Csr(ec, ids), damping, iters)
+      .toSeq.toDF("id", "rank")
     local.getOrElse {
       val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
       val domain = vertices.select(col("id").cast("long").as("id"))
@@ -920,8 +920,8 @@ object Algorithms {
     // graph at every sf — pure stage floor, not compute)
     val sp = edges.sparkSession
     import sp.implicits._
-    PathFinder.localEdgePairs(edges).map { earr =>
-      LocalKernels.linkPredictionScores(earr, maxDegree).toSeq
+    PathFinder.localEdgePairs(edges).map { e =>
+      LocalKernels.linkPredictionScores(Csr(e), maxDegree).toSeq
         .toDF("id_a", "id_b", "common_neighbors", "jaccard",
           "adamic_adar", "is_edge")
     }.getOrElse {
@@ -990,8 +990,8 @@ object Algorithms {
     require(k >= 3, s"k must be >= 3 (got $k)")
     val sp = edges.sparkSession
     import sp.implicits._
-    PathFinder.localEdgePairs(edges).map { earr =>
-      LocalKernels.kTruss(earr, k).toSeq.toDF("src", "dst")
+    PathFinder.localEdgePairs(edges).map { e =>
+      LocalKernels.kTruss(Csr(e), k).toSeq.toDF("src", "dst")
     }.getOrElse {
       val need = k - 2
       var cur = edges.select(col("src").cast("long").as("a"),
@@ -1075,11 +1075,10 @@ object Algorithms {
       ec <- PathFinder.collectUnder(clean, PathFinder.localMaxRows(sp))
       sArr <- PathFinder.localVertexIds(seeds)
     } yield {
-      val (s, d, ts) = (ec.longs(0), ec.longs(1), ec.longs(2))
+      val ts = ec.longs(2)
       val start = startTsOpt.getOrElse(if (ts.isEmpty) 0L else ts.min)
-      LocalKernels.earliestArrival(
-        Array.tabulate(ec.length)(i => (s(i), d(i), ts(i))), sArr, start,
-        maxHops).toSeq.toDF("src", "dst", "arrival")
+      LocalKernels.earliestArrival(Csr(ec, sArr), sArr, start, maxHops)
+        .toSeq.toDF("src", "dst", "arrival")
     }
     local.getOrElse {
       val startTs = startTsOpt.getOrElse {
@@ -1140,9 +1139,9 @@ object Algorithms {
       sources: Option[DataFrame] = None): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    localGraph(vertices, edges) { (ids, earr) =>
-      sources.fold(Option(ids))(PathFinder.localVertexIds).map(sArr =>
-        LocalKernels.betweenness(ids, earr, sArr)
+    localGraph(vertices, edges) { g =>
+      sources.fold(Option(g.extra.map(g.ids(_))))(PathFinder.localVertexIds)
+        .map(sArr => LocalKernels.betweenness(g, sArr)
           .toSeq.toDF("id", "betweenness"))
     }.flatten.getOrElse {
       val srcDf = sources.getOrElse(vertices)
@@ -1231,8 +1230,8 @@ object Algorithms {
     require(rounds >= 0, s"rounds must be >= 0 (got $rounds)")
     val sp = vertices.sparkSession
     import sp.implicits._
-    localGraph(vertices, edges) { (ids, earr) =>
-      LocalKernels.labelPropagation(ids, earr, rounds)
+    localGraph(vertices, edges) { g =>
+      LocalKernels.labelPropagation(g, rounds)
         .toSeq.toDF("id", "community")
     }.getOrElse {
       val und = edges.select(col("src").cast("long").as("src"),
@@ -1306,9 +1305,11 @@ object Algorithms {
       uc <- PathFinder.collectUnder(und, PathFinder.localMaxRows(sp))
       ids <- PathFinder.localVertexIds(vertices)
     } yield {
+      // both orientations of every unordered pair
       val (a, b, w) = (uc.longs(0), uc.longs(1), uc.doubles(2))
-      LocalKernels.weightedLabelPropagation(ids,
-        Array.tabulate(uc.length)(i => (a(i), b(i), w(i))), rounds)
+      val both = new PathFinder.Columns(2 * uc.length,
+        Array(a ++ b, b ++ a, w ++ w))
+      LocalKernels.weightedLabelPropagation(Csr(both, ids), rounds)
         .toSeq.toDF("id", "community")
     }
     local.getOrElse {
@@ -1417,9 +1418,10 @@ object Algorithms {
     val sp = starts.sparkSession
     import sp.implicits._
     val local = for {
-      earr <- PathFinder.localEdgePairs(edges)
+      e <- PathFinder.localEdgePairs(edges)
       sArr <- PathFinder.localVertexIds(starts)
-    } yield LocalKernels.deterministicWalks(earr, sArr, walksPerStart, steps)
+    } yield LocalKernels.deterministicWalks(Csr(e, sArr), sArr, walksPerStart,
+      steps)
       .toSeq.toDF("start", "r", "cur", "path")
     local.getOrElse {
       val e = edges.select(col("src").cast("long").as("src"),
@@ -1468,8 +1470,8 @@ object Algorithms {
     require(k >= 1, s"k must be positive (got $k)")
     val sp = vertices.sparkSession
     import sp.implicits._
-    localGraph(vertices, edges) { (ids, earr) =>
-      LocalKernels.kCore(ids, earr, k).toSeq.toDF("id", "in_core")
+    localGraph(vertices, edges) { g =>
+      LocalKernels.kCore(g, k).toSeq.toDF("id", "in_core")
     }.getOrElse {
       // undirected simple view (canonical pair per edge, then both
       // orientations for degree counting)

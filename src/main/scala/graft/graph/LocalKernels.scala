@@ -4,100 +4,113 @@ import scala.collection.mutable
 
 import graft.pgq.PathMode
 
-/** Driver-local graph kernels for *small* graphs.
+/** Driver-local graph kernels for *small* graphs, every one over the
+  * [[Csr]] built from a strategy gate's columns.
   *
   * The reference always runs its kernels over an in-memory CSR snapshot
-  * (`compressed_sparse_row.hpp:25-47`) — that is exactly the right call
-  * when the graph fits in one node's memory, and exactly wrong at 100 TB.
-  * We therefore pick the strategy by statistics: graphs under the
-  * size gates (see [[PathFinder.localMaxRows]]) run on these array kernels
-  * (micro/small graphs cost milliseconds instead of one Spark job per BFS
-  * level), larger graphs take the distributed DataFrame loops. Both paths
-  * implement identical semantics; the gate only changes performance.
+  * (`compressed_sparse_row.hpp:25-47`) — exactly the right call when the
+  * graph fits in one node's memory, and exactly wrong at 100 TB. graft
+  * picks the strategy by size: inputs under the gate
+  * ([[PathFinder.collectUnder]]) run here, on dense `Int` vertices and
+  * primitive per-vertex arrays (milliseconds instead of one Spark job per
+  * BFS level); larger inputs take the distributed DataFrame loops. Both
+  * branches implement identical semantics, down to the tie-breaks on
+  * original ids and eids (dense indices order like the ids they number);
+  * the gate only changes performance.
+  *
+  * Seeded kernels expect their seeds among the CSR's vertices (callers
+  * pass them as its extra ids). They allocate per-vertex arrays once per
+  * call and reset only what a seed reached, so per-seed work stays
+  * proportional to the reached set.
   */
 private[graph] object LocalKernels {
-
-  type Adj = mutable.LongMap[mutable.ArrayBuffer[(Long, Long)]] // v -> (dst, eid)
-
-  def adjacency(edges: Array[(Long, Long, Long)]): Adj = {
-    val adj: Adj = mutable.LongMap.empty
-    edges.foreach { case (s, d, eid) =>
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((d, eid))
-    }
-    adj
-  }
 
   /** Multi-source BFS shortest lengths — mirrors
     * [[PathFinder.bfsDistances]]. When `targets` is set, only rows ending
     * in a target are emitted and each per-seed search stops as soon as
     * every target is settled. */
-  def bfsDistances(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      maxDepth: Long,
+  def bfsDistances(g: Csr, seeds: Array[Long], maxDepth: Long,
       targets: Option[Set[Long]] = None): Array[(Long, Long, Long)] = {
-    val adj = adjacency(edges)
     val out = mutable.ArrayBuffer[(Long, Long, Long)]()
+    val dist = Array.fill(g.n)(-1)
+    val queue = new Array[Int](g.n)
     seeds.distinct.foreach { s =>
-      val dist = mutable.LongMap[Long](s -> 0L)
-      var remaining = targets.map(_ diff Set(s))
-      var frontier = List(s)
-      var d = 0L
-      while (frontier.nonEmpty && d < maxDepth &&
-          !remaining.exists(_.isEmpty)) {
-        d += 1
-        val next = mutable.ArrayBuffer[Long]()
-        frontier.foreach { u =>
-          adj.getOrElse(u, Nil).foreach { case (v, _) =>
-            if (!dist.contains(v)) {
-              dist(v) = d; next += v
-              remaining = remaining.map(_ - v)
-            }
+      // targets not yet settled; -1 = no targets, never stop early
+      var remaining = targets.fold(-1)(t => (t - s).size)
+      queue(0) = g.index(s); dist(queue(0)) = 0
+      var (head, tail) = (0, 1)
+      while (head < tail && remaining != 0) {
+        val u = queue(head); head += 1
+        if (dist(u) < maxDepth) for (p <- g.off(u) until g.off(u + 1)) {
+          val v = g.nbr(p)
+          if (dist(v) < 0) {
+            dist(v) = dist(u) + 1; queue(tail) = v; tail += 1
+            if (targets.exists(_.contains(g.ids(v)))) remaining -= 1
           }
         }
-        frontier = next.toList
       }
-      dist.foreach { case (v, dd) =>
-        if (targets.forall(_.contains(v))) out += ((s, v, dd))
+      for (v <- queue.take(tail)) {
+        if (targets.forall(_.contains(g.ids(v))))
+          out += ((s, g.ids(v), dist(v).toLong))
+        dist(v) = -1
       }
     }
     out.toArray
   }
 
   /** BFS with lexicographically-minimal interleaved `[v,e,v,…]` paths —
-    * mirrors [[PathFinder.shortestPaths]] (same tie-break: at each level
-    * the candidate path arrays are compared lexicographically). */
-  def shortestPaths(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      lower: Long, upper: Long): Array[(Long, Long, Long, Array[Long])] = {
-    val adj = adjacency(edges)
+    * mirrors [[PathFinder.shortestPaths]] (same tie-break). Each level is
+    * kept in path order: a vertex's first discovery, scanning the previous
+    * level in path order and each vertex's slots (least eid first among
+    * parallel edges), is its minimal path, and a parent's new children
+    * rank by (eid, id). `g` is the (src, dst[, eid]) view. */
+  def shortestPaths(g: Csr, seeds: Array[Long], lower: Long, upper: Long)
+      : Array[(Long, Long, Long, Array[Long])] = {
+    val eid = g.eids(2)
     val out = mutable.ArrayBuffer[(Long, Long, Long, Array[Long])]()
-    val ord = Ordering.Implicits.seqOrdering[Seq, Long]
+    val dist = Array.fill(g.n)(-1)
+    val via = new Array[Int](g.n) // the slot a vertex was reached by
+    val pv = new Array[Int](g.n)
+    val order = new Array[Int](g.n) // reached vertices, level by level
     seeds.distinct.foreach { s =>
-      val best = mutable.LongMap[Array[Long]](s -> Array(s))
-      var frontier = List(s)
-      var d = 0L
-      while (frontier.nonEmpty && d < upper) {
-        d += 1
-        val cand = mutable.LongMap[Array[Long]]()
-        frontier.foreach { u =>
-          val base = best(u)
-          adj.getOrElse(u, Nil).foreach { case (v, eid) =>
-            if (!best.contains(v)) {
-              val p = base :+ eid :+ v
-              cand.get(v) match {
-                case Some(q) if ord.lteq(q.toSeq, p.toSeq) => ()
-                case _ => cand(v) = p
-              }
-            }
+      order(0) = g.index(s); dist(order(0)) = 0
+      var (lo, hi) = (0, 1)
+      while (lo < hi && dist(order(lo)) < upper) {
+        var tail = hi
+        for (u <- order.slice(lo, hi)) {
+          val from = tail
+          for (p <- g.off(u) until g.off(u + 1) if dist(g.nbr(p)) < 0) {
+            val v = g.nbr(p)
+            dist(v) = dist(u) + 1; via(v) = p; pv(v) = u
+            order(tail) = v; tail += 1
           }
+          order.slice(from, tail).sortBy(v => (eid(via(v)), v))
+            .copyToArray(order, from)
         }
-        frontier = cand.keys.toList
-        cand.foreach { case (v, p) => best(v) = p }
+        lo = hi; hi = tail
       }
-      best.foreach { case (v, p) =>
-        val dist = (p.length - 1L) / 2
-        if (dist >= lower) out += ((s, v, dist, p))
+      for (v <- order.take(hi)) {
+        if (dist(v) >= lower)
+          out += ((s, g.ids(v), dist(v).toLong,
+            backtrack(g, eid, s, v, dist(v), pv, via)))
+        dist(v) = -1
       }
     }
     out.toArray
+  }
+
+  /** The `[s, e, …, v]` path of `hops` edges into `v`, following each
+    * vertex's parent `pv` and the slot `via` it was reached by. */
+  private def backtrack(g: Csr, eid: Array[Long], s: Long, v: Int,
+      hops: Int, pv: Array[Int], via: Array[Int]): Array[Long] = {
+    val path = new Array[Long](2 * hops + 1)
+    var (cur, k) = (v, path.length - 1)
+    while (k > 0) {
+      path(k) = g.ids(cur); path(k - 1) = eid(via(cur))
+      cur = pv(cur); k -= 2
+    }
+    path(0) = s
+    path
   }
 
   /** Enumerate ALL mode-valid paths (one result per path — multiplicity
@@ -108,34 +121,36 @@ private[graph] object LocalKernels {
     * continuation would make the start an interior repeat). WALK requires
     * a finite `upper` (the caller guards; on a cyclic graph the walk set
     * is infinite). Explicit stack, not recursion — ACYCLIC depth is
-    * bounded by |V| and TRAIL by |E|, far past any safe JVM stack. */
-  def enumeratePaths(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      lower: Long, upper: Long, mode: PathMode)
-      : Array[(Long, Long, Long, Array[Long])] = {
+    * bounded by |V| and TRAIL by |E|, far past any safe JVM stack. `g` is
+    * the (src, dst[, eid]) view. */
+  def enumeratePaths(g: Csr, seeds: Array[Long], lower: Long, upper: Long,
+      mode: PathMode): Array[(Long, Long, Long, Array[Long])] = {
     require(mode != PathMode.Walk || upper != Long.MaxValue,
       "WALK enumeration needs a finite upper bound")
-    val adj = adjacency(edges)
+    val eid = g.eids(2)
     val out = mutable.ArrayBuffer[(Long, Long, Long, Array[Long])]()
-    final case class Frame(v: Long, path: Vector[Long], visV: Set[Long],
+    final case class Frame(v: Int, path: Vector[Long], visV: Set[Int],
         visE: Set[Long], closed: Boolean)
     seeds.distinct.foreach { s =>
+      val si = g.index(s)
       val stack = mutable.Stack(
-        Frame(s, Vector(s), Set(s), Set.empty, closed = false))
+        Frame(si, Vector(s), Set(si), Set.empty, closed = false))
       while (stack.nonEmpty) {
         val f = stack.pop()
         val d = (f.path.length - 1L) / 2
-        if (d >= lower) out += ((s, f.v, d, f.path.toArray))
+        if (d >= lower) out += ((s, g.ids(f.v), d, f.path.toArray))
         if (d < upper && !f.closed) {
-          adj.getOrElse(f.v, Nil).foreach { case (w, eid) =>
-            val closes = mode == PathMode.Simple && w == s
+          for (p <- g.off(f.v) until g.off(f.v + 1)) {
+            val w = g.nbr(p)
+            val closes = mode == PathMode.Simple && w == si
             val ok = mode match {
               case PathMode.Walk    => true
-              case PathMode.Trail   => !f.visE(eid)
+              case PathMode.Trail   => !f.visE(eid(p))
               case PathMode.Acyclic => !f.visV(w)
               case PathMode.Simple  => !f.visV(w) || closes
             }
-            if (ok) stack.push(Frame(w, f.path :+ eid :+ w,
-              f.visV + w, f.visE + eid, closed = closes))
+            if (ok) stack.push(Frame(w, f.path :+ eid(p) :+ g.ids(w),
+              f.visV + w, f.visE + eid(p), closed = closes))
           }
         }
       }
@@ -150,31 +165,30 @@ private[graph] object LocalKernels {
     * extensions beat P's extensions, so P can never reach a final top-k.
     * (NOT valid under TRAIL/ACYCLIC/SIMPLE — a lex-worse partial path may
     * have a visited set that allows extensions the better ones lack — so
-    * mode-constrained k-shortest enumerates unpruned instead.) */
-  def kShortestWalks(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      lower: Long, upper: Long, k: Int)
-      : Array[(Long, Long, Long, Array[Long])] = {
-    val adj = adjacency(edges)
-    val ord = Ordering.Implicits.seqOrdering[Seq, Long]
+    * mode-constrained k-shortest enumerates unpruned instead.) `g` is the
+    * (src, dst[, eid]) view. */
+  def kShortestWalks(g: Csr, seeds: Array[Long], lower: Long, upper: Long,
+      k: Int): Array[(Long, Long, Long, Array[Long])] = {
+    val eid = g.eids(2)
+    val byEnd = Ordering.Tuple2(Ordering.Int,
+      Ordering.Implicits.seqOrdering[Vector, Long])
     val out = mutable.ArrayBuffer[(Long, Long, Long, Array[Long])]()
     seeds.distinct.foreach { s =>
-      var frontier: Map[Long, Seq[Vector[Long]]] = Map(s -> Seq(Vector(s)))
+      var frontier = Array((g.index(s), Vector(s)))
       if (lower <= 0L) out += ((s, s, 0L, Array(s)))
       var d = 0L
       while (frontier.nonEmpty && d < upper) {
         d += 1
-        val cand = mutable.LongMap[mutable.ArrayBuffer[Vector[Long]]]()
-        frontier.foreach { case (v, paths) =>
-          adj.getOrElse(v, Nil).foreach { case (w, eid) =>
-            val bucket = cand.getOrElseUpdate(w, mutable.ArrayBuffer.empty)
-            paths.foreach(p => bucket += (p :+ eid :+ w))
-          }
-        }
-        frontier = cand.map { case (w, ps) =>
-          w -> ps.map(_.toSeq).sorted(ord).take(k).map(_.toVector).toSeq
-        }.toMap
-        if (d >= lower) frontier.foreach { case (w, ps) =>
-          ps.foreach(p => out += ((s, w, d, p.toArray)))
+        val cand = (for ((v, path) <- frontier;
+            p <- g.off(v) until g.off(v + 1))
+          yield (g.nbr(p), path :+ eid(p) :+ g.ids(g.nbr(p)))).sorted(byEnd)
+        // the k least walks into each vertex: a walk is among them iff
+        // the walk k places before it ends elsewhere
+        frontier = cand.indices.collect {
+          case i if i < k || cand(i - k)._1 != cand(i)._1 => cand(i)
+        }.toArray
+        if (d >= lower) frontier.foreach { case (w, path) =>
+          out += ((s, g.ids(w), d, path.toArray))
         }
       }
     }
@@ -183,244 +197,196 @@ private[graph] object LocalKernels {
 
   /** ALL SHORTEST — every shortest `[v,e,…,v]` path per reached (src, dst)
     * pair (one row per path), mirrors [[PathFinder.allShortestPaths]].
-    * BFS records ALL minimal parents per vertex; enumeration multiplies
-    * the parent combinations out backwards. */
-  def allShortestPaths(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      lower: Long, upper: Long): Array[(Long, Long, Long, Array[Long])] = {
-    val adj = adjacency(edges)
+    * BFS records ALL minimal parents per vertex, as a linked list of
+    * (parent, eid) entries; enumeration multiplies the parent
+    * combinations out backwards. `g` is the (src, dst[, eid]) view. */
+  def allShortestPaths(g: Csr, seeds: Array[Long], lower: Long,
+      upper: Long): Array[(Long, Long, Long, Array[Long])] = {
+    val eid = g.eids(2)
     val out = mutable.ArrayBuffer[(Long, Long, Long, Array[Long])]()
+    val dist = Array.fill(g.n)(-1)
+    val head = Array.fill(g.n)(-1) // a vertex's latest parent entry
+    val order = new Array[Int](g.n)
     seeds.distinct.foreach { s =>
-      val dist = mutable.LongMap[Long](s -> 0L)
-      // v -> all (parentV, eid) reaching v on some shortest path
-      val parents = mutable.LongMap[mutable.ArrayBuffer[(Long, Long)]]()
-      var frontier = List(s)
-      var d = 0L
-      while (frontier.nonEmpty && d < upper) {
-        d += 1
-        val level = mutable.LongMap[mutable.ArrayBuffer[(Long, Long)]]()
-        frontier.foreach { u =>
-          adj.getOrElse(u, Nil).foreach { case (v, eid) =>
-            if (!dist.contains(v))
-              level.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += ((u, eid))
+      val (pv, pe, next) = (mutable.ArrayBuilder.make[Int],
+        mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Int])
+      order(0) = g.index(s); dist(order(0)) = 0
+      var (lo, hi) = (0, 1)
+      while (lo < hi && dist(order(lo)) < upper) {
+        val d = dist(order(lo)) + 1
+        var tail = hi
+        for (u <- order.slice(lo, hi); p <- g.off(u) until g.off(u + 1)) {
+          val v = g.nbr(p)
+          // a duplicate physical edge row (same src, dst AND eid — its
+          // slot follows the original's) is one parent alternative,
+          // matching the distributed twin's distinct()
+          val dup = p > g.off(u) && g.nbr(p - 1) == v && eid(p - 1) == eid(p)
+          if ((dist(v) < 0 || dist(v) == d) && !dup) {
+            if (dist(v) < 0) { dist(v) = d; order(tail) = v; tail += 1 }
+            pv += u; pe += eid(p); next += head(v); head(v) = pv.length - 1
           }
         }
-        // .distinct: duplicate physical edge rows (same src, dst AND eid)
-        // are one parent alternative, matching the distributed twin's
-        // distinct() — path multiplicity must not depend on the strategy
-        level.foreach { case (v, ps) => dist(v) = d; parents(v) = ps.distinct }
-        frontier = level.keys.toList
+        lo = hi; hi = tail
       }
-      // iterative backtrack (no recursion — chains can be |V| deep):
-      // partial = (terminal v, dist, current backtrack vertex, suffix)
-      var partial = dist.toList.collect { case (v, dd) if dd >= lower =>
-        (v, dd, v, Vector(v))
-      }
-      while (partial.nonEmpty) {
-        val (doneP, openP) = partial.partition(p => p._4.length == 2 * p._2 + 1)
-        doneP.foreach { case (v, dd, _, suf) => out += ((s, v, dd, suf.toArray)) }
-        partial = openP.flatMap { case (v, dd, cur, suf) =>
-          parents(cur).toSeq.map { case (pv, eid) =>
-            (v, dd, pv, pv +: eid +: suf)
+      val (pvs, pes, nexts) = (pv.result(), pe.result(), next.result())
+      for (v <- order.take(hi)) {
+        if (dist(v) >= lower) {
+          // iterative backtrack (no recursion — chains can be |V| deep)
+          val stack = mutable.Stack((v, Vector(g.ids(v))))
+          while (stack.nonEmpty) {
+            val (cur, suf) = stack.pop()
+            if (suf.length == 2 * dist(v) + 1)
+              out += ((s, g.ids(v), dist(v).toLong, suf.toArray))
+            else {
+              var e = head(cur)
+              while (e >= 0) {
+                stack.push((pvs(e), g.ids(pvs(e)) +: pes(e) +: suf))
+                e = nexts(e)
+              }
+            }
           }
         }
       }
+      for (v <- order.take(hi)) { dist(v) = -1; head(v) = -1 }
     }
     out.toArray
   }
 
-  /** Bellman-Ford — mirrors [[PathFinder.cheapestPaths]]. */
-  def cheapestPaths(edges: Array[(Long, Long, Double)], seeds: Array[Long])
-      : Array[(Long, Long, Double)] = {
-    val out = mutable.ArrayBuffer[(Long, Long, Double)]()
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Double)]]
-    edges.foreach { case (s, d, w) =>
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((d, w))
-    }
+  /** Bellman-Ford with parent pointers + backtrack — cheapest ROUTES, whose
+    * costs are also [[PathFinder.cheapestPaths]]' local answer (the
+    * reference stops at lengths, `cheapest_path_length.cpp:12-163` —
+    * reconstruction exceeds parity). Tie-break: lexicographic-min
+    * (cost, hops, parentV, parentE), the same order
+    * [[PathFinder.cheapestRoutes]]'s distributed min-struct aggregation
+    * uses, so both strategies return identical routes. The hops component
+    * makes the tie-break well-founded on zero-weight cycles (a parent
+    * always has strictly smaller (cost, hops)).
+    *
+    * @param g the (src, dst, w[, eid]) view
+    * @return (seed, dst, cost, [v,e,…,v])
+    */
+  def cheapestRoutes(g: Csr, seeds: Array[Long])
+      : Array[(Long, Long, Double, Array[Long])] = {
+    val (w, eid) = (g.doubles(2), g.eids(3))
+    val out = mutable.ArrayBuffer[(Long, Long, Double, Array[Long])]()
+    // per reached vertex: (cost, hops, parent vertex, parent slot)
+    val cost = new Array[Double](g.n)
+    val hops = new Array[Int](g.n)
+    val pv = new Array[Int](g.n)
+    val pp = new Array[Int](g.n)
+    val seen = new Array[Boolean](g.n)
+    val reached = new Array[Int](g.n)
+    val maxRounds = (0 until g.n).count(g.degree(_) > 0) + seeds.length + 2
     seeds.distinct.foreach { s =>
-      val dist = mutable.LongMap[Double](s -> 0.0)
+      val si = g.index(s)
+      reached(0) = si; seen(si) = true; cost(si) = 0.0; hops(si) = 0
+      var nReached = 1
       var changed = true
-      // Bellman-Ford needs ≤ V-1 rounds on cycle-free-negative graphs; the
-      // cap guards against negative cycles hanging the driver
-      val maxRounds = adj.size + seeds.length + 2
       var round = 0
       while (changed && round < maxRounds) {
         round += 1
         changed = false
-        dist.toArray.foreach { case (u, du) =>
-          adj.getOrElse(u, Nil).foreach { case (v, w) =>
-            val nd = du + w
-            if (!dist.contains(v) || nd < dist(v)) { dist(v) = nd; changed = true }
+        val from = reached.take(nReached)
+        val (cu, hu) = (from.map(cost(_)), from.map(hops(_)))
+        for (i <- from.indices; p <- g.off(from(i)) until g.off(from(i) + 1)) {
+          val (u, v, c) = (from(i), g.nbr(p), cu(i) + w(p))
+          val lt = !seen(v) || c < cost(v) || (c == cost(v) &&
+            (hu(i) + 1 < hops(v) || (hu(i) + 1 == hops(v) &&
+              (u < pv(v) || (u == pv(v) && eid(p) < eid(pp(v)))))))
+          if (lt) {
+            if (!seen(v)) { seen(v) = true; reached(nReached) = v; nReached += 1 }
+            cost(v) = c; hops(v) = hu(i) + 1; pv(v) = u; pp(v) = p
+            changed = true
           }
         }
       }
       if (changed)
         throw graft.model.GraphAnalysisException(
           "cheapest-path did not converge (negative cycle detected)")
-      dist.foreach { case (v, c) => out += ((s, v, c)) }
-    }
-    out.toArray
-  }
-
-  /** Bellman-Ford with parent pointers + backtrack — cheapest ROUTES, the
-    * path-carrying twin of [[cheapestPaths]] (the reference stops at
-    * lengths, `cheapest_path_length.cpp:12-163` — reconstruction exceeds
-    * parity). Tie-break: lexicographic-min (cost, hops, parentV, parentE),
-    * the same order [[PathFinder.cheapestRoutes]]'s distributed min-struct
-    * aggregation uses, so both strategies return identical routes. The
-    * hops component makes the tie-break well-founded on zero-weight cycles
-    * (a parent always has strictly smaller (cost, hops)).
-    *
-    * @param edges (src, dst, eid, w)
-    * @return (seed, dst, cost, [v,e,…,v])
-    */
-  def cheapestRoutes(edges: Array[(Long, Long, Long, Double)],
-      seeds: Array[Long]): Array[(Long, Long, Double, Array[Long])] = {
-    val out = mutable.ArrayBuffer[(Long, Long, Double, Array[Long])]()
-    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long, Double)]]
-    edges.foreach { case (s, d, eid, w) =>
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += ((d, eid, w))
-    }
-    seeds.distinct.foreach { s =>
-      // v -> (cost, hops, parentV, parentE)
-      val best = mutable.LongMap[(Double, Long, Long, Long)](
-        s -> ((0.0, 0L, -1L, -1L)))
-      var changed = true
-      val maxRounds = adj.size + seeds.length + 2
-      var round = 0
-      while (changed && round < maxRounds) {
-        round += 1
-        changed = false
-        best.toArray.foreach { case (u, (cu, hu, _, _)) =>
-          adj.getOrElse(u, Nil).foreach { case (v, eid, w) =>
-            val cand = (cu + w, hu + 1L, u, eid)
-            val cur = best.get(v)
-            val lt = cur.isEmpty || {
-              val c = cur.get
-              cand._1 < c._1 || (cand._1 == c._1 && (cand._2 < c._2 ||
-                (cand._2 == c._2 && (cand._3 < c._3 ||
-                  (cand._3 == c._3 && cand._4 < c._4)))))
-            }
-            if (lt) { best(v) = cand; changed = true }
-          }
-        }
-      }
-      if (changed)
-        throw graft.model.GraphAnalysisException(
-          "cheapest-route did not converge (negative cycle detected)")
-      best.foreach { case (v, (c, h, _, _)) =>
-        val path = mutable.ArrayBuffer[Long]()
-        var cur = v
-        var left = h
-        while (left > 0) {
-          val (_, _, pv, pe) = best(cur)
-          path.prepend(cur); path.prepend(pe)
-          cur = pv; left -= 1
-        }
-        path.prepend(s)
-        out += ((s, v, c, path.toArray))
+      for (v <- reached.take(nReached)) {
+        out += ((s, g.ids(v), cost(v),
+          backtrack(g, eid, s, v, hops(v), pv, pp)))
+        seen(v) = false
       }
     }
     out.toArray
   }
 
   /** PageRank — mirrors [[Algorithms.pageRank]] incl. the phantom-node
-    * reference quirk and dangling redistribution. */
-  def pageRank(vertexIds: Array[Long], edges: Array[(Long, Long)],
-      damping: Double, tol: Double, maxIter: Int, fixedIter: Option[Int],
-      phantomNodes: Int): Array[(Long, Double)] = {
-    val ids = vertexIds.distinct
-    val idx = ids.zipWithIndex.toMap
-    val nReal = ids.length
-    val n = nReal + phantomNodes.toDouble
-    val outDeg = new Array[Long](nReal)
-    edges.foreach { case (s, _) => idx.get(s).foreach(outDeg(_) += 1) }
-    var rank = Array.fill(nReal)(1.0 / n)
+    * reference quirk and dangling redistribution. The domain is the
+    * vertex ids alone (`g.extra`): a vertex's out-degree counts all its
+    * edges, but rank flows only along edges between vertices. */
+  def pageRank(g: Csr, damping: Double, tol: Double, maxIter: Int,
+      fixedIter: Option[Int], phantomNodes: Int): Array[(Long, Double)] = {
+    val verts = g.extra
+    val n = verts.length + phantomNodes.toDouble
+    var rank = Array.fill(g.n)(1.0 / n)
     var phantomRank = 1.0 / n
     var iter = 0
     var delta = Double.MaxValue
     val iters = fixedIter.getOrElse(maxIter)
     while (iter < iters && (fixedIter.isDefined || delta > tol)) {
       iter += 1
-      var dangling = phantomNodes * phantomRank
-      var i = 0
-      while (i < nReal) { if (outDeg(i) == 0) dangling += rank(i); i += 1 }
+      val dangling = phantomNodes * phantomRank +
+        verts.filter(g.degree(_) == 0).map(rank(_)).sum
       val corr = dangling / n
-      val inflow = new Array[Double](nReal)
-      edges.foreach { case (s, d) =>
-        (idx.get(s), idx.get(d)) match {
-          case (Some(si), Some(di)) if outDeg(si) > 0 =>
-            inflow(di) += rank(si) / outDeg(si)
-          case _ => ()
-        }
-      }
-      val next = Array.tabulate(nReal)(j =>
-        (1.0 - damping) / n + damping * (inflow(j) + corr))
+      val inflow = new Array[Double](g.n)
+      for (u <- verts; p <- g.off(u) until g.off(u + 1) if g.isExtra(g.nbr(p)))
+        inflow(g.nbr(p)) += rank(u) / g.degree(u)
+      val next = inflow.map(x => (1.0 - damping) / n + damping * (x + corr))
       val phantomNext = (1.0 - damping) / n + damping * corr
-      delta = math.abs(phantomNext - phantomRank)
-      var j = 0
-      while (j < nReal) {
-        delta = math.max(delta, math.abs(next(j) - rank(j))); j += 1
-      }
+      delta = verts.foldLeft(math.abs(phantomNext - phantomRank))((m, j) =>
+        math.max(m, math.abs(next(j) - rank(j))))
       rank = next
       phantomRank = phantomNext
     }
-    ids.zip(rank)
+    verts.map(v => (g.ids(v), rank(v)))
   }
 
   /** Iterative Tarjan SCC with min-member component ids — mirrors
     * [[Algorithms.stronglyConnectedComponents]]. Explicit DFS stack (no
     * recursion — a 10⁵-vertex path must not blow the JVM stack); the
     * domain is vertexIds ∪ edge endpoints, matching the distributed
-    * propagation domain, with output restricted to vertexIds. */
-  def scc(vertexIds: Array[Long], edges: Array[(Long, Long)])
-      : Array[(Long, Long)] = {
-    val adj = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    edges.foreach { case (s, d) =>
-      verts += s; verts += d
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
+    * propagation domain, with output restricted to the vertex ids
+    * (`g.extra`). */
+  def scc(g: Csr): Array[(Long, Long)] = {
+    val index = Array.fill(g.n)(-1)
+    val low = new Array[Int](g.n)
+    val onStack = new Array[Boolean](g.n)
+    val stack = new Array[Int](g.n)
+    val comp = new Array[Int](g.n) // v -> min member of its SCC
+    // DFS frames: vertex and its next slot
+    val (dfsV, dfsP) = (new Array[Int](g.n), new Array[Int](g.n))
+    var (counter, sp) = (0, 0)
+    def visit(v: Int, top: Int): Unit = {
+      dfsV(top) = v; dfsP(top) = g.off(v)
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
     }
-    val index = mutable.LongMap[Int]()
-    val low = mutable.LongMap[Int]()
-    val onStack = mutable.LongMap[Boolean]()
-    val stack = mutable.ArrayBuffer[Long]()
-    var counter = 0
-    val comp = mutable.LongMap[Long]() // v -> min member of its SCC
-    val empty = mutable.ArrayBuffer.empty[Long]
-    verts.foreach { v0 =>
-      if (!index.contains(v0)) {
-        val dfs = mutable.ArrayBuffer[(Long, Int)]((v0, 0))
-        while (dfs.nonEmpty) {
-          val (v, ci) = dfs.last
-          if (ci == 0) {
-            index(v) = counter; low(v) = counter; counter += 1
-            stack += v; onStack(v) = true
+    for (v0 <- 0 until g.n if index(v0) < 0) {
+      var top = 0
+      visit(v0, top)
+      while (top >= 0) {
+        val (v, p) = (dfsV(top), dfsP(top))
+        if (p < g.off(v + 1)) {
+          dfsP(top) = p + 1
+          val w = g.nbr(p)
+          if (index(w) < 0) { top += 1; visit(w, top) }
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          if (low(v) == index(v)) {
+            val from = stack.lastIndexOf(v, sp - 1)
+            val members = stack.slice(from, sp)
+            val least = members.min
+            members.foreach { x => onStack(x) = false; comp(x) = least }
+            sp = from
           }
-          val ns = adj.getOrElse(v, empty)
-          if (ci < ns.length) {
-            dfs(dfs.length - 1) = (v, ci + 1)
-            val w = ns(ci)
-            if (!index.contains(w)) dfs += ((w, 0))
-            else if (onStack.getOrElse(w, false))
-              low(v) = math.min(low(v), index(w))
-          } else {
-            if (low(v) == index(v)) {
-              val members = mutable.ArrayBuffer[Long]()
-              var w = 0L
-              while ({ w = stack.remove(stack.length - 1)
-                       onStack(w) = false; members += w; w != v }) ()
-              val m = members.min
-              members.foreach(x => comp(x) = m)
-            }
-            dfs.remove(dfs.length - 1)
-            if (dfs.nonEmpty)
-              low(dfs.last._1) = math.min(low(dfs.last._1), low(v))
-          }
+          top -= 1
+          if (top >= 0) low(dfsV(top)) = math.min(low(dfsV(top)), low(v))
         }
       }
     }
-    vertexIds.map(v => (v, comp(v)))
+    g.extra.map(v => (g.ids(v), g.ids(comp(v))))
   }
 
   /** Per-corner triangle counts over the deduplicated undirected relation
@@ -433,44 +399,21 @@ private[graph] object LocalKernels {
     *
     * @return (id, deg, tris) for every vertex with ≥1 undirected neighbor
     */
-  def triangles(edges: Array[(Long, Long)]): Array[(Long, Long, Long)] = {
-    // canonical undirected pair set (self-loops never count as links)
-    val und = mutable.HashSet[(Long, Long)]()
-    edges.foreach { case (s, d) =>
-      if (s != d) und += ((math.min(s, d), math.max(s, d)))
-    }
-    val ids = {
-      val s = mutable.LongMap[Unit]()
-      und.foreach { case (a, b) => s(a) = (); s(b) = () }
-      s.keys.toArray
-    }
-    val idx = mutable.LongMap[Int]()
-    ids.zipWithIndex.foreach { case (v, i) => idx(v) = i }
-    val n = ids.length
-    val deg = new Array[Int](n)
-    und.foreach { case (a, b) => deg(idx(a)) += 1; deg(idx(b)) += 1 }
+  def triangles(g: Csr): Array[(Long, Long, Long)] = {
+    val und = g.simple(symmetric = true)
+    val n = und.n
     // orientation rank: (deg, id) — identical to the DataFrame filter
     def ranksBelow(i: Int, j: Int): Boolean =
-      deg(i) < deg(j) || (deg(i) == deg(j) && ids(i) < ids(j))
-    val outDeg = new Array[Int](n)
-    und.foreach { case (a, b) =>
-      val (i, j) = (idx(a), idx(b))
-      if (ranksBelow(i, j)) outDeg(i) += 1 else outDeg(j) += 1
-    }
+      und.degree(i) < und.degree(j) ||
+        (und.degree(i) == und.degree(j) && i < j)
     val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + outDeg(i); i += 1 }
+    for (i <- 0 until n)
+      off(i + 1) = off(i) +
+        (und.off(i) until und.off(i + 1)).count(p => ranksBelow(i, und.nbr(p)))
     val adj = new Array[Int](off(n))
-    val fill = java.util.Arrays.copyOf(off, n)
-    und.foreach { case (a, b) =>
-      val (ia, ib) = (idx(a), idx(b))
-      val (lo, hi) = if (ranksBelow(ia, ib)) (ia, ib) else (ib, ia)
-      adj(fill(lo)) = hi; fill(lo) += 1
-    }
-    i = 0
-    while (i < n) {
-      java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1
-    }
+    for (i <- 0 until n)
+      (und.off(i) until und.off(i + 1)).map(und.nbr(_))
+        .filter(ranksBelow(i, _)).sorted.copyToArray(adj, off(i))
     val tris = new java.util.concurrent.atomic.AtomicLongArray(n)
     java.util.stream.IntStream.range(0, n).parallel().forEach { u =>
       var p = off(u)
@@ -491,189 +434,127 @@ private[graph] object LocalKernels {
         p += 1
       }
     }
-    Array.tabulate(n)(k => (ids(k), deg(k).toLong, tris.get(k)))
+    Array.tabulate(n)(k => (und.ids(k), und.degree(k).toLong, tris.get(k)))
   }
 
   /** Union-find WCC with min-member component ids — mirrors
-    * [[Algorithms.weaklyConnectedComponents]]. */
-  def wcc(vertexIds: Array[Long], edges: Array[(Long, Long)])
-      : Array[(Long, Long)] = {
-    val parent = mutable.LongMap[Long]()
-    def find(x: Long): Long = {
+    * [[Algorithms.weaklyConnectedComponents]]. Roots always link under the
+    * smaller index, so a root IS its component's minimum over ALL members
+    * incl. pass-through endpoints absent from the vertex ids (matches the
+    * distributed propagation domain); output is the vertex ids. */
+  def wcc(g: Csr): Array[(Long, Long)] = {
+    val parent = Array.range(0, g.n)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-      }
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    def union(a: Long, b: Long): Unit = {
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(ra) = rb
+    for (u <- 0 until g.n; p <- g.off(u) until g.off(u + 1)) {
+      val (a, b) = (find(u), find(g.nbr(p)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    vertexIds.foreach(v => parent.getOrElseUpdate(v, v))
-    edges.foreach { case (s, d) =>
-      parent.getOrElseUpdate(s, s)
-      parent.getOrElseUpdate(d, d)
-      union(s, d)
-    }
-    // component id = min over ALL members incl. pass-through endpoints
-    // absent from vertexIds (matches the distributed propagation domain)
-    val minOf = mutable.LongMap[Long]()
-    parent.keys.toArray.foreach { v =>
-      val r = find(v)
-      minOf(r) = math.min(minOf.getOrElse(r, Long.MaxValue), v)
-    }
-    vertexIds.map(v => (v, minOf(find(v))))
+    g.extra.map(v => (g.ids(v), g.ids(find(v))))
   }
 
   /** Personalized PageRank with restart to a SEED set (textbook PPR:
     * teleport and dangling mass return to the seeds, uniformly), fixed
     * iteration count for SQL-replayability. Domain = vertexIds ∪ edge
     * endpoints. */
-  def personalizedPageRank(vertexIds: Array[Long],
-      edges: Array[(Long, Long)], seedSet: Set[Long], damping: Double,
+  def personalizedPageRank(g: Csr, seedSet: Set[Long], damping: Double,
       iters: Int): Array[(Long, Double)] = {
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    edges.foreach { case (s, d) => verts += s; verts += d }
-    val ids = verts.toArray
-    val idx = mutable.LongMap[Int]()
-    ids.zipWithIndex.foreach { case (v, i) => idx(v) = i }
-    val n = ids.length
-    val outDeg = new Array[Int](n)
-    edges.foreach { case (s, _) => outDeg(idx(s)) += 1 }
-    val sVec = new Array[Double](n)
-    val nS = ids.count(seedSet.contains)
+    val nS = g.ids.count(seedSet.contains)
     require(nS > 0, "personalized PageRank requires at least one seed " +
       "vertex present in the graph")
-    ids.zipWithIndex.foreach { case (v, i) =>
-      if (seedSet.contains(v)) sVec(i) = 1.0 / nS
-    }
+    val sVec = g.ids.map(v => if (seedSet.contains(v)) 1.0 / nS else 0.0)
     var r = sVec.clone()
-    var it = 0
-    while (it < iters) {
-      val contrib = new Array[Double](n)
-      edges.foreach { case (s, d) =>
-        contrib(idx(d)) += r(idx(s)) / outDeg(idx(s))
-      }
-      var dangling = 0.0
-      var i = 0
-      while (i < n) { if (outDeg(i) == 0) dangling += r(i); i += 1 }
-      val nr = new Array[Double](n)
-      i = 0
-      while (i < n) {
-        nr(i) = (1.0 - damping) * sVec(i) +
-          damping * (contrib(i) + dangling * sVec(i))
-        i += 1
-      }
-      r = nr
-      it += 1
+    for (_ <- 0 until iters) {
+      val contrib = new Array[Double](g.n)
+      for (u <- 0 until g.n; p <- g.off(u) until g.off(u + 1))
+        contrib(g.nbr(p)) += r(u) / g.degree(u)
+      val dangling = (0 until g.n).filter(g.degree(_) == 0).map(r(_)).sum
+      r = Array.tabulate(g.n)(i => (1.0 - damping) * sVec(i) +
+        damping * (contrib(i) + dangling * sVec(i)))
     }
-    ids.zip(r)
+    g.ids.zip(r)
   }
 
   /** Fixed-k core membership by textbook peeling: repeatedly delete
     * vertices whose UNDIRECTED simple degree is below k (queue-driven,
-    * O(V + E)). Self-loops never count. Domain = vertexIds ∪ edge
-    * endpoints (the [[scc]] convention). */
-  def kCore(vertexIds: Array[Long], edges: Array[(Long, Long)],
-      k: Int): Array[(Long, Boolean)] = {
-    val und = mutable.HashSet[(Long, Long)]()
-    edges.foreach { case (s, d) =>
-      if (s != d) und += ((math.min(s, d), math.max(s, d)))
-    }
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    und.foreach { case (a, b) => verts += a; verts += b }
-    val adj = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-    und.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
-      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
-    }
-    val deg = mutable.LongMap[Int]()
-    verts.foreach(v => deg(v) = adj.get(v).map(_.length).getOrElse(0))
-    val removed = mutable.LongMap[Boolean]()
-    val queue = mutable.ArrayDeque[Long]()
-    verts.foreach(v => if (deg(v) < k) { queue += v; removed(v) = true })
+    * O(V + E)). Self-loops never count. Domain = vertexIds ∪ endpoints of
+    * the undirected simple edges. */
+  def kCore(g: Csr, k: Int): Array[(Long, Boolean)] = {
+    val und = g.simple(symmetric = true)
+    val deg = Array.tabulate(und.n)(und.degree)
+    val removed = deg.map(_ < k)
+    val queue = mutable.ArrayDeque.from(deg.indices.filter(removed(_)))
     while (queue.nonEmpty) {
       val v = queue.removeHead()
-      adj.get(v).foreach(_.foreach { n =>
-        if (!removed.getOrElse(n, false)) {
-          deg(n) -= 1
-          if (deg(n) < k) { removed(n) = true; queue += n }
-        }
-      })
+      for (p <- und.off(v) until und.off(v + 1); x = und.nbr(p) if !removed(x)) {
+        deg(x) -= 1
+        if (deg(x) < k) { removed(x) = true; queue += x }
+      }
     }
-    verts.toArray.map(v => (v, !removed.getOrElse(v, false)))
+    und.ids.zip(removed.map(!_))
   }
 
   /** Weighted PageRank — the
     * [[graft.graph.Algorithms.weightedPageRank]] twin: contributions
     * split proportionally to edge weight (rank·w/W_out), dangling mass
     * (no out-edges / zero out-weight) redistributed uniformly; textbook
-    * normalization, fixed iterations. Edges with null/≤0 weight are
-    * dropped by the caller. */
-  def weightedPageRank(vertexIds: Array[Long],
-      edges: Array[(Long, Long, Double)], damping: Double,
-      iters: Int): Array[(Long, Double)] = {
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    edges.foreach { case (s, d, _) => verts += s; verts += d }
-    val ids = verts.toArray
-    val idx = mutable.LongMap[Int]()
-    ids.zipWithIndex.foreach { case (v, i) => idx(v) = i }
-    val n = ids.length
-    val wOut = new Array[Double](n)
-    edges.foreach { case (s, _, w) => wOut(idx(s)) += w }
+    * normalization, fixed iterations. `g` is the (src, dst, w) view;
+    * edges with null/≤0 weight are dropped by the caller. Domain =
+    * vertexIds ∪ edge endpoints. */
+  def weightedPageRank(g: Csr, damping: Double, iters: Int)
+      : Array[(Long, Double)] = {
+    val w = g.doubles(2)
+    val n = g.n
+    val wOut = Array.tabulate(n)(u => (g.off(u) until g.off(u + 1)).map(w(_)).sum)
     var r = Array.fill(n)(1.0 / n)
-    var it = 0
-    while (it < iters) {
+    for (_ <- 0 until iters) {
       val contrib = new Array[Double](n)
-      edges.foreach { case (s, d, w) =>
-        contrib(idx(d)) += r(idx(s)) * w / wOut(idx(s))
-      }
-      var dangling = 0.0
-      var i = 0
-      while (i < n) { if (wOut(i) == 0.0) dangling += r(i); i += 1 }
-      val nr = new Array[Double](n)
-      i = 0
-      while (i < n) {
-        nr(i) = (1.0 - damping) / n + damping * (contrib(i) + dangling / n)
-        i += 1
-      }
-      r = nr
-      it += 1
+      for (u <- 0 until n; p <- g.off(u) until g.off(u + 1))
+        contrib(g.nbr(p)) += r(u) * w(p) / wOut(u)
+      val dangling = (0 until n).filter(wOut(_) == 0.0).map(r(_)).sum
+      r = contrib.map(c => (1.0 - damping) / n + damping * (c + dangling / n))
     }
-    ids.zip(r)
+    g.ids.zip(r)
   }
 
   /** k-truss — the [[graft.graph.Algorithms.kTruss]] twin: the maximal
     * subgraph of the undirected simple graph in which every EDGE closes
     * ≥ k−2 triangles (with both other sides also in the subgraph).
     * Textbook peel: recompute per-edge support, drop under-supported
-    * edges, repeat to fixpoint. */
-  def kTruss(edges: Array[(Long, Long)], k: Int): Array[(Long, Long)] = {
-    var cur = mutable.LinkedHashSet[(Long, Long)]()
-    edges.foreach { case (s, d) =>
-      if (s != d) cur += ((math.min(s, d), math.max(s, d)))
-    }
-    val need = k - 2
-    var changed = true
-    while (changed && cur.nonEmpty) {
-      val adj = mutable.LongMap[mutable.HashSet[Long]]()
-      cur.foreach { case (a, b) =>
-        adj.getOrElseUpdate(a, mutable.HashSet.empty) += b
-        adj.getOrElseUpdate(b, mutable.HashSet.empty) += a
+    * edges, repeat to fixpoint.
+    *
+    * @return surviving edges, normalized (src < dst)
+    */
+  def kTruss(g: Csr, k: Int): Array[(Long, Long)] = {
+    val und = g.simple(symmetric = true)
+    val alive = Array.fill(und.m)(true) // per slot; both directions agree
+    def slot(a: Int, b: Int): Int =
+      java.util.Arrays.binarySearch(und.nbr, und.off(a), und.off(a + 1), b)
+    // common alive neighbours of a and b: intersect the ascending slots
+    def support(a: Int, b: Int): Int = {
+      var (x, y, c) = (und.off(a), und.off(b), 0)
+      while (x < und.off(a + 1) && y < und.off(b + 1)) {
+        if (und.nbr(x) < und.nbr(y)) x += 1
+        else if (und.nbr(x) > und.nbr(y)) y += 1
+        else { if (alive(x) && alive(y)) c += 1; x += 1; y += 1 }
       }
-      val keep = cur.filter { case (a, b) =>
-        adj(a).count(adj(b).contains) >= need
-      }
-      changed = keep.size != cur.size
-      cur = mutable.LinkedHashSet(keep.toSeq: _*)
+      c
     }
-    cur.toArray
+    def edges = for (a <- 0 until und.n; p <- und.off(a) until und.off(a + 1)
+      if alive(p) && und.nbr(p) > a) yield (a, und.nbr(p))
+    var drop = edges.filter { case (a, b) => support(a, b) < k - 2 }
+    while (drop.nonEmpty) {
+      drop.foreach { case (a, b) =>
+        alive(slot(a, b)) = false; alive(slot(b, a)) = false
+      }
+      drop = edges.filter { case (a, b) => support(a, b) < k - 2 }
+    }
+    edges.map { case (a, b) => (und.ids(a), und.ids(b)) }.toArray
   }
 
   /** Earliest-arrival temporal reachability — the
@@ -682,81 +563,86 @@ private[graph] object LocalKernels {
     * and traversing it sets the arrival at `b` to `t`; earliest arrival
     * minimizes over temporal paths of ≤ maxHops edges. Frontier-only
     * relaxation is sound because an earlier arrival admits a superset
-    * of the later one's continuations. */
-  def earliestArrival(edges: Array[(Long, Long, Long)], seeds: Array[Long],
-      startTs: Long, maxHops: Int): Array[(Long, Long, Long)] = {
-    val bySrc = edges.groupBy(_._1)
-    val best = mutable.HashMap[(Long, Long), Long]()
-    val ss = seeds.distinct.sorted
-    ss.foreach(s => best((s, s)) = startTs)
-    var frontier: Iterable[(Long, Long, Long)] = ss.map(s => (s, s, startTs))
-    var hop = 0
-    while (hop < maxHops && frontier.nonEmpty) {
-      val next = mutable.HashMap[(Long, Long), Long]()
-      frontier.foreach { case (s, v, arr) =>
-        bySrc.getOrElse(v, Array.empty).foreach { case (_, d, t) =>
-          if (t >= arr) {
-            val k = (s, d)
-            if (next.get(k).forall(t < _)) next(k) = t
-          }
+    * of the later one's continuations. `g` is the (src, dst, ts) view.
+    *
+    * @return (seed, v, arrival) for every reached v ≠ seed
+    */
+  def earliestArrival(g: Csr, seeds: Array[Long], startTs: Long,
+      maxHops: Int): Array[(Long, Long, Long)] = {
+    val ts = g.longs(2)
+    val out = mutable.ArrayBuffer[(Long, Long, Long)]()
+    val best = new Array[Long](g.n)
+    val seen = new Array[Boolean](g.n)
+    val reached = new Array[Int](g.n)
+    // this hop's candidate arrivals
+    val next = new Array[Long](g.n)
+    val touched = new Array[Boolean](g.n)
+    seeds.distinct.sorted.foreach { s =>
+      val si = g.index(s)
+      reached(0) = si; seen(si) = true; best(si) = startTs
+      var nReached = 1
+      var frontier = Array(si)
+      var hop = 0
+      while (hop < maxHops && frontier.nonEmpty) {
+        val cand = mutable.ArrayBuilder.make[Int]
+        for (v <- frontier; p <- g.off(v) until g.off(v + 1)
+            if ts(p) >= best(v)) {
+          val d = g.nbr(p)
+          if (!touched(d)) { touched(d) = true; next(d) = ts(p); cand += d }
+          else if (ts(p) < next(d)) next(d) = ts(p)
         }
+        val hit = cand.result()
+        hit.foreach(touched(_) = false)
+        frontier = hit.filter(d => !seen(d) || next(d) < best(d))
+        for (d <- frontier) {
+          if (!seen(d)) { seen(d) = true; reached(nReached) = d; nReached += 1 }
+          best(d) = next(d)
+        }
+        hop += 1
       }
-      val improved = next.filter { case (k, t) => best.get(k).forall(t < _) }
-      improved.foreach { case (k, t) => best(k) = t }
-      frontier = improved.map { case ((s, v), t) => (s, v, t) }
-      hop += 1
+      for (v <- reached.take(nReached)) {
+        if (v != si) out += ((s, g.ids(v), best(v)))
+        seen(v) = false
+      }
     }
-    best.iterator.collect { case ((s, v), t) if s != v => (s, v, t) }.toArray
+    out.toArray
   }
 
   /** Exact directed Brandes betweenness — the
     * [[graft.graph.Algorithms.betweennessCentrality]] twin. Unweighted
-    * shortest paths over the simple digraph (parallel edges collapsed);
-    * per source: BFS with path counts, then the dependency sweep in
-    * reverse BFS order. B(v) sums δ_s(v) over the given sources
+    * shortest paths over the simple digraph (parallel edges collapsed,
+    * self-loops dropped); per source: BFS with path counts, then the
+    * dependency sweep in reverse BFS order, each vertex summing over its
+    * successors one level down. B(v) sums δ_s(v) over the given sources
     * (all-sources = exact betweenness; a sample = the standard
-    * estimator's partial sums, unscaled). */
-  def betweenness(vertexIds: Array[Long], edges: Array[(Long, Long)],
-      sources: Array[Long]): Array[(Long, Double)] = {
-    val simple = mutable.LinkedHashSet[(Long, Long)]()
-    edges.foreach { case (s, d) => if (s != d) simple += ((s, d)) }
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    simple.foreach { case (a, b) => verts += a; verts += b }
-    val adj = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-    simple.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
-    }
-    val b = mutable.LongMap[Double]().withDefaultValue(0.0)
-    sources.distinct.foreach { s =>
-      if (verts.contains(s)) {
-        val dist = mutable.LongMap[Int]()
-        val sigma = mutable.LongMap[Double]().withDefaultValue(0.0)
-        val preds = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-        val order = mutable.ArrayBuffer[Long]()
-        dist(s) = 0; sigma(s) = 1.0
-        val queue = mutable.ArrayDeque[Long](s)
-        while (queue.nonEmpty) {
-          val v = queue.removeHead()
-          order += v
-          adj.get(v).foreach(_.foreach { w =>
-            if (!dist.contains(w)) { dist(w) = dist(v) + 1; queue += w }
-            if (dist(w) == dist(v) + 1) {
-              sigma(w) += sigma(v)
-              preds.getOrElseUpdate(w, mutable.ArrayBuffer.empty) += v
-            }
-          })
-        }
-        val delta = mutable.LongMap[Double]().withDefaultValue(0.0)
-        order.reverseIterator.foreach { w =>
-          preds.get(w).foreach(_.foreach { v =>
-            delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
-          })
-          if (w != s) b(w) += delta(w)
+    * estimator's partial sums, unscaled). Domain = vertexIds ∪ endpoints
+    * of the simple edges. */
+  def betweenness(g: Csr, sources: Array[Long]): Array[(Long, Double)] = {
+    val sg = g.simple(symmetric = false)
+    val b = new Array[Double](sg.n)
+    val dist = Array.fill(sg.n)(-1)
+    val sigma = new Array[Double](sg.n)
+    val delta = new Array[Double](sg.n)
+    val order = new Array[Int](sg.n)
+    for (s <- sources.distinct.map(sg.index) if s >= 0) {
+      dist(s) = 0; sigma(s) = 1.0; order(0) = s
+      var (head, tail) = (0, 1)
+      while (head < tail) {
+        val v = order(head); head += 1
+        for (p <- sg.off(v) until sg.off(v + 1); w = sg.nbr(p)) {
+          if (dist(w) < 0) { dist(w) = dist(v) + 1; order(tail) = w; tail += 1 }
+          if (dist(w) == dist(v) + 1) sigma(w) += sigma(v)
         }
       }
+      for (v <- order.take(tail).reverseIterator) {
+        for (p <- sg.off(v) until sg.off(v + 1); w = sg.nbr(p)
+            if dist(w) == dist(v) + 1)
+          delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
+        if (v != s) b(v) += delta(v)
+      }
+      for (v <- order.take(tail)) { dist(v) = -1; sigma(v) = 0.0; delta(v) = 0.0 }
     }
-    verts.toArray.map(v => (v, b(v)))
+    sg.ids.zip(b)
   }
 
   /** Synchronous label propagation — the
@@ -764,85 +650,43 @@ private[graph] object LocalKernels {
     * neighborhoods (self-loops dropped, parallel edges collapsed); each
     * round every vertex adopts the most frequent neighbor label, ties to
     * the smallest label; isolated vertices keep their own. Fixed round
-    * count, no convergence test — deterministic by construction. */
-  def labelPropagation(vertexIds: Array[Long], edges: Array[(Long, Long)],
-      rounds: Int): Array[(Long, Long)] = {
-    val und = mutable.HashSet[(Long, Long)]()
-    edges.foreach { case (s, d) =>
-      if (s != d) und += ((math.min(s, d), math.max(s, d)))
-    }
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    und.foreach { case (a, b) => verts += a; verts += b }
-    val adj = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-    und.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
-      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
-    }
-    var lab = mutable.LongMap[Long]()
-    verts.foreach(v => lab(v) = v)
-    var round = 0
-    while (round < rounds) {
-      val next = mutable.LongMap[Long]()
-      verts.foreach { v =>
-        adj.get(v) match {
-          case Some(nbrs) if nbrs.nonEmpty =>
-            val counts = mutable.LongMap[Int]()
-            nbrs.foreach(n => counts(lab(n)) = counts.getOrElse(lab(n), 0) + 1)
-            // max count, then min label
-            next(v) = counts.toSeq.map { case (l, c) => (-c, l) }.min._2
-          case _ => next(v) = lab(v)
-        }
-      }
-      lab = next
-      round += 1
-    }
-    verts.toArray.map(v => (v, lab(v)))
-  }
+    * count, no convergence test — deterministic by construction. Domain
+    * = vertexIds ∪ endpoints of the undirected simple edges. */
+  def labelPropagation(g: Csr, rounds: Int): Array[(Long, Long)] =
+    propagate(g.simple(symmetric = true), _ => 1.0, identity, rounds)
 
   /** Weighted label propagation — the
-    * [[graft.graph.Algorithms.weightedLabelPropagation]] twin. `und`
-    * carries one row per UNORDERED pair with the already-combined
-    * weight (the caller sums parallel edges); votes are weight sums per
-    * label, rounded to 9 decimals before ranking exactly like the
-    * distributed `round(sum(w), 9)` (Spark round = HALF_UP), ties to
-    * the smallest label. */
-  def weightedLabelPropagation(vertexIds: Array[Long],
-      und: Array[(Long, Long, Double)],
-      rounds: Int): Array[(Long, Long)] = {
-    val verts = mutable.LinkedHashSet[Long]()
-    vertexIds.foreach(verts += _)
-    und.foreach { case (a, b, _) => verts += a; verts += b }
-    val adj = mutable.LongMap[mutable.ArrayBuffer[(Long, Double)]]()
-    und.foreach { case (a, b, w) =>
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += ((b, w))
-      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += ((a, w))
-    }
-    def r9(x: Double): Double =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-    var lab = mutable.LongMap[Long]()
-    verts.foreach(v => lab(v) = v)
-    var round = 0
-    while (round < rounds) {
-      val next = mutable.LongMap[Long]()
-      verts.foreach { v =>
-        adj.get(v) match {
-          case Some(nbrs) if nbrs.nonEmpty =>
-            val votes = mutable.LongMap[Double]()
-            nbrs.foreach { case (n, w) =>
-              votes(lab(n)) = votes.getOrElse(lab(n), 0.0) + w
-            }
-            // max rounded weight, then min label
-            next(v) = votes.toSeq
-              .map { case (l, wv) => (-r9(wv), l) }.min._2
-          case _ => next(v) = lab(v)
-        }
+    * [[graft.graph.Algorithms.weightedLabelPropagation]] twin. `g` is the
+    * symmetric (a, b, w) view: both orientations of every unordered pair,
+    * carrying the already-combined weight (the caller sums parallel
+    * edges). Votes are weight sums per label, rounded to 9 decimals
+    * before ranking exactly like the distributed `round(sum(w), 9)`
+    * (Spark round = HALF_UP), ties to the smallest label. */
+  def weightedLabelPropagation(g: Csr, rounds: Int): Array[(Long, Long)] = {
+    val w = g.doubles(2)
+    propagate(g, w(_), x => java.math.BigDecimal.valueOf(x)
+      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue(), rounds)
+  }
+
+  /** `rounds` synchronous rounds in which every vertex with neighbours
+    * adopts the label of maximal `score(Σ weight)` over its slots, ties
+    * to the smallest label. Labels are dense indices, so the smallest
+    * label is the smallest id. */
+  private def propagate(g: Csr, weight: Int => Double,
+      score: Double => Double, rounds: Int): Array[(Long, Long)] = {
+    var lab = Array.range(0, g.n)
+    val votes = new Array[Double](g.n)
+    for (_ <- 0 until rounds) {
+      lab = Array.tabulate(g.n) { v =>
+        val labels = (g.off(v) until g.off(v + 1)).map { p =>
+          votes(lab(g.nbr(p))) += weight(p); lab(g.nbr(p))
+        }.distinct
+        val pick = labels.minByOption(l => (-score(votes(l)), l))
+        labels.foreach(votes(_) = 0.0)
+        pick.getOrElse(lab(v))
       }
-      lab = next
-      round += 1
     }
-    verts.toArray.map(v => (v, lab(v)))
+    g.ids.zip(lab.map(g.ids(_)))
   }
 
   /** Deterministic hash-driven walks — the
@@ -851,36 +695,26 @@ private[graph] object LocalKernels {
     * "start:r:t:d" (ties break on d, matching the distributed
     * min-struct); a vertex with no out-neighbors halts the walk in
     * place. */
-  def deterministicWalks(edges: Array[(Long, Long)], starts: Array[Long],
-      walksPerStart: Int, steps: Int): Array[(Long, Int, Long, Array[Long])] = {
-    val adjM = mutable.LongMap[mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (s, d) =>
-      adjM.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-    }
+  def deterministicWalks(g: Csr, starts: Array[Long], walksPerStart: Int,
+      steps: Int): Array[(Long, Int, Long, Array[Long])] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def hex(s: String): String = {
       md.reset()
       md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map(b => f"${b & 0xff}%02x").mkString
     }
-    val out = mutable.ArrayBuffer[(Long, Int, Long, Array[Long])]()
-    for (s0 <- starts.distinct.sorted; r <- 0 until walksPerStart) {
-      var cur = s0
+    for (s0 <- starts.distinct.sorted; r <- 0 until walksPerStart) yield {
+      var cur = g.index(s0)
       val path = mutable.ArrayBuffer[Long](s0)
-      var halted = false
       var t = 1
-      while (t <= steps && !halted) {
-        adjM.get(cur) match {
-          case Some(nbrs) if nbrs.nonEmpty =>
-            cur = nbrs.iterator.map(d => (hex(s"$s0:$r:$t:$d"), d)).min._2
-            path += cur
-          case _ => halted = true
-        }
+      while (t <= steps && g.degree(cur) > 0) {
+        cur = (g.off(cur) until g.off(cur + 1)).map(g.nbr(_))
+          .minBy(d => (hex(s"$s0:$r:$t:${g.ids(d)}"), d))
+        path += g.ids(cur)
         t += 1
       }
-      out += ((s0, r, cur, path.toArray))
+      (s0, r, g.ids(cur), path.toArray)
     }
-    out.toArray
   }
 
   /** Link-prediction features — the
@@ -891,6 +725,32 @@ private[graph] object LocalKernels {
     * a < b per shared center; Jaccard denominators keep FULL degrees;
     * doubles rounded to 6 decimals with the distributed `round(x, 6)`
     * rule (BigDecimal HALF_UP). */
+  def linkPredictionScores(g: Csr, maxDegree: Long)
+      : Array[(Long, Long, Long, Double, Double, Boolean)] = {
+    val und = g.simple(symmetric = true)
+    def r6(x: Double): Double =
+      java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    // packed pair a << 32 | b -> (common-neighbor count, Σ 1/ln deg(center))
+    val acc = mutable.LongMap[(Long, Double)]()
+    for (c <- 0 until und.n; d = und.degree(c) if d >= 2 && d <= maxDegree) {
+      val inv = 1.0 / math.log(d.toDouble)
+      for (x <- und.off(c) until und.off(c + 1);
+          y <- x + 1 until und.off(c + 1)) {
+        val k = (und.nbr(x).toLong << 32) | und.nbr(y)
+        val (cn, aa) = acc.getOrElse(k, (0L, 0.0))
+        acc(k) = (cn + 1L, aa + inv)
+      }
+    }
+    acc.iterator.map { case (k, (cn, aa)) =>
+      val (a, b) = ((k >>> 32).toInt, k.toInt)
+      (und.ids(a), und.ids(b), cn,
+        r6(cn.toDouble / (und.degree(a) + und.degree(b) - cn).toDouble),
+        r6(aa),
+        java.util.Arrays.binarySearch(und.nbr, und.off(a), und.off(a + 1), b) >= 0)
+    }.toArray
+  }
+
   /** Parallel co-purchase (bipartite-projection) pair counting over a
     * PACKED raw membership array — `v << 32 | u`, both ids in [0, 2^31),
     * the same 31-bit packability contract the distributed branch probes.
@@ -980,47 +840,5 @@ private[graph] object LocalKernels {
       i = j
     }
     Some(out.toArray)
-  }
-
-  def linkPredictionScores(edges: Array[(Long, Long)], maxDegree: Long)
-      : Array[(Long, Long, Long, Double, Double, Boolean)] = {
-    val adj = mutable.LongMap[mutable.SortedSet[Long]]()
-    edges.foreach { case (a, b) =>
-      if (a != b) {
-        adj.getOrElseUpdate(a, mutable.SortedSet.empty[Long]) += b
-        adj.getOrElseUpdate(b, mutable.SortedSet.empty[Long]) += a
-      }
-    }
-    def r6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    // pair -> (common-neighbor count, Σ 1/ln deg(center))
-    val acc = mutable.HashMap[(Long, Long), (Long, Double)]()
-    adj.foreach { case (c, nbrs) =>
-      val d = nbrs.size
-      if (d >= 2 && d <= maxDegree) {
-        val inv = 1.0 / math.log(d.toDouble)
-        val arr = nbrs.toArray // ascending — SortedSet
-        var i = 0
-        while (i < arr.length) {
-          var j = i + 1
-          while (j < arr.length) {
-            val k = (arr(i), arr(j))
-            val prev = acc.getOrElse(k, (0L, 0.0))
-            acc(k) = (prev._1 + 1L, prev._2 + inv)
-            j += 1
-          }
-          i += 1
-        }
-      }
-    }
-    acc.iterator.map { case ((a, b), (cn, aa)) =>
-      val da = adj(a).size.toLong
-      val db = adj(b).size.toLong
-      (a, b, cn,
-        r6(cn.toDouble / (da + db - cn).toDouble),
-        r6(aa),
-        adj(a).contains(b))
-    }.toArray
   }
 }

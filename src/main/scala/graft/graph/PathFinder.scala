@@ -164,55 +164,31 @@ object PathFinder {
   /** Rows of a collected frame, column-major: one primitive array per
     * column (`Array[Long]` or `Array[Double]`), the layout of the
     * reference's CSR arrays — 8 bytes a cell where a boxed tuple or a
-    * `Row` per row cost 100+. Shared through [[collectMemo]]: callers
-    * never mutate the arrays. */
-  private[graft] final class Columns(val length: Int, cols: Array[AnyRef]) {
+    * `Row` per row cost 100+. An edge view's columns become a [[Csr]].
+    * Shared through [[collectMemo]]: callers never mutate the arrays. */
+  private[graft] final class Columns(val length: Int,
+      private[graph] val cols: Array[AnyRef]) {
     def width: Int = cols.length
     def longs(j: Int): Array[Long] = cols(j).asInstanceOf[Array[Long]]
     def doubles(j: Int): Array[Double] = cols(j).asInstanceOf[Array[Double]]
     def bytes: Long = 8L * length * width
-
-    /** The first two (long) columns zipped — an edge frame's (src, dst). */
-    def pairs: Array[(Long, Long)] = {
-      val (s, d) = (longs(0), longs(1))
-      Array.tabulate(length)(i => (s(i), d(i)))
-    }
-
-    /** The rows sorted by every column, first to last. */
-    def sortedRows: Columns = {
-      val keys: Array[(Int, Int) => Int] = cols.map {
-        case a: Array[Long] =>
-          (x: Int, y: Int) => java.lang.Long.compare(a(x), a(y))
-        case a: Array[Double] =>
-          (x: Int, y: Int) => java.lang.Double.compare(a(x), a(y))
-      }
-      val order = Array.range(0, length).sortWith { (x, y) =>
-        var r, j = 0
-        while (r == 0 && j < keys.length) { r = keys(j)(x, y); j += 1 }
-        r < 0
-      }
-      new Columns(length, cols.map {
-        case a: Array[Long] => order.map(a(_))
-        case a: Array[Double] => order.map(a(_))
-      })
-    }
   }
 
   /** [[collectUnder]]'s verdicts keyed by (projected plan, cap) — None
-    * over the cap, the complete rows under it — plus, in slot "dense",
-    * the driver-side dense-eid order of a collected edge view
-    * ([[denseLocal]]).
+    * over the cap, the complete rows under it.
     *
-    * Bound: 32 entries and 512 MiB of column bytes (8 B a cell; a None
+    * Bound: 48 entries and 512 MiB of column bytes (8 B a cell; a None
     * weighs nothing). At the default 2M gate the widest entry,
     * cheapestRoutes' (src, dst, w, eid), is 4 × 8 B × 2M = 64 MB, so the
-    * worst case pins 8 of them: 512 MiB ≈ 537 MB. The four memos this one
-    * replaced could pin 3 boxed-tuple edge arrays of 2M edges (a 4 B
-    * array slot, a 24 B Tuple3 and three 24 B boxed Longs: 100 B an edge,
-    * 600 MB) plus 4 `Row` arrays of 262144 rows (a 4 B slot, a 24 B row,
-    * a 32 B value array and three 24 B boxes: 132 B a row, 138 MB) —
-    * ≈ 738 MB. */
-  private[graft] val collectMemo = new PlanMemo[Option[Columns]](32,
+    * worst case pins 8 of them: 512 MiB ≈ 537 MB. The MATCH compiler's
+    * bijection maps are entries too, at most 65536 × 2 × 8 B = 1 MB
+    * each; 16 of the 48 entries stand for the 16 its own map memo held.
+    * The four memos the gate replaced could pin 3 boxed-tuple edge
+    * arrays of 2M edges (a 4 B array slot, a 24 B Tuple3 and three 24 B
+    * boxed Longs: 100 B an edge, 600 MB) plus 4 `Row` arrays of 262144
+    * rows (a 4 B slot, a 24 B row, a 32 B value array and three 24 B
+    * boxes: 132 B a row, 138 MB) — ≈ 738 MB. */
+  private[graft] val collectMemo = new PlanMemo[Option[Columns]](48,
     weigh = _.fold(0L)(_.bytes), maxWeight = 512L << 20)
 
   /** THE strategy gate: Some(every row of `df`) iff `df` has at most
@@ -256,11 +232,10 @@ object PathFinder {
     dropNullEndpoints(edges).select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
 
-  /** Some(cleaned edge pairs) under [[LocalMaxRowsKey]], else None. */
-  private[graft] def localEdgePairs(edges: DataFrame)
-      : Option[Array[(Long, Long)]] =
+  /** Some(cleaned (src, dst) columns) under [[LocalMaxRowsKey]], else
+    * None. */
+  private[graft] def localEdgePairs(edges: DataFrame): Option[Columns] =
     collectUnder(edgePairs(edges), localMaxRows(edges.sparkSession))
-      .map(_.pairs)
 
   /** Some(distinct long ids of `vertices`) when at most `cap` (default
     * [[LocalMaxRowsKey]]), else None. Gating the DISTINCT ids is more
@@ -274,51 +249,33 @@ object PathFinder {
     collectUnder(vertices.select(col("id").cast("long")).distinct(), cap)
       .map(_.longs(0))
 
-  /** The gate of the seeded path kernels: Some((edge columns, seed ids))
-    * when `edges` fits [[LocalMaxRowsKey]] and then `seeds` fits
+  /** The gate of the seeded path kernels: Some((CSR, seed ids)) when
+    * `edges` fits [[LocalMaxRowsKey]] and then `seeds` fits
     * [[localMaxSeeds]] — the driver-local kernel ([[LocalKernels]]) runs
-    * on exactly these; None takes the distributed branch, which fetches
-    * its edge frame from the memo-owned [[sessionEdgeIndex]]. */
+    * on the CSR of exactly these columns, seeds among its vertices; None
+    * takes the distributed branch, which fetches its edge frame from the
+    * memo-owned [[sessionEdgeIndex]]. */
   private def localInputs(edges: DataFrame, seeds: DataFrame)
-      : Option[(Columns, Array[Long])] =
+      : Option[(Csr, Array[Long])] =
     for {
       e <- collectUnder(edges, localMaxRows(edges.sparkSession))
       s <- collectUnder(seeds.select(col("id").cast("long")), localMaxSeeds)
-    } yield (e, s.longs(0))
+    } yield (Csr(e, s.longs(0)), s.longs(0))
 
   /** The path kernels' (src, dst[, eid]) long view: the declared `eid`
-    * column when the edge frame has one, else just [[edgePairs]] with
-    * dense (src, dst)-ranked ids attached per branch ([[eidArray]],
-    * [[eidIndex]]) — multigraph parallel edges keep DISTINCT ids,
-    * mirroring the reference's physical edge rowids. */
+    * column when the edge frame has one, else just [[edgePairs]], whose
+    * edges are numbered in (src, dst) order on both branches — a CSR slot
+    * index locally, [[eidIndex]]'s range-sort distributed — so
+    * multigraph parallel edges keep DISTINCT ids, mirroring the
+    * reference's physical edge rowids. */
   private def eidView(edges: DataFrame): DataFrame =
     if (!edges.columns.contains("eid")) edgePairs(edges)
     else dropNullEndpoints(edges).select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("eid").cast("long").as("eid"))
 
-  /** Driver-side twin of [[Snapshot.denseEdgeIds]] over a collected edge
-    * view: its rows sorted by every column, the row index being the eid —
-    * the same assignment as the distributed range-sort (only identical
-    * rows tie, and those are interchangeable) without a sort job whose
-    * result would only be collected back. Memoized next to the collect. */
-  private def denseLocal(view: DataFrame, c: Columns): Columns =
-    collectMemo.getOrBuild(PlanMemo.id(view), "dense")(Some(c.sortedRows)).get
-
-  /** Local (src, dst, eid) edges of an [[eidView]]'s collected columns. */
-  private def eidArray(view: DataFrame, c: Columns): Array[(Long, Long, Long)] =
-    if (c.width == 3) {
-      val (s, d, e) = (c.longs(0), c.longs(1), c.longs(2))
-      Array.tabulate(c.length)(i => (s(i), d(i), e(i)))
-    } else {
-      val sorted = denseLocal(view, c)
-      val (s, d) = (sorted.longs(0), sorted.longs(1))
-      Array.tabulate(c.length)(i => (s(i), d(i), i.toLong))
-    }
-
-  /** Distributed twin of [[eidArray]]: the memo-owned session edge index
-    * over an [[eidView]], dense ids attached by a range-sort when none
-    * are declared. Callers must not unpersist or OpCaches-track it (see
-    * [[sessionEdgeIndex]]). */
+  /** The memo-owned session edge index over an [[eidView]], dense ids
+    * attached by a range-sort when none are declared. Callers must not
+    * unpersist or OpCaches-track it (see [[sessionEdgeIndex]]). */
   private def eidIndex(spark: SparkSession, view: DataFrame): DataFrame =
     sessionEdgeIndex(spark, view, "eid") {
       if (view.columns.contains("eid")) view
@@ -394,16 +351,14 @@ object PathFinder {
   def bfsDistances(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxDepth: Option[Long], targets: Option[DataFrame]): DataFrame = {
     val local = for {
-      (pairs, seedArr) <- localInputs(edgePairs(edges), seeds)
+      (g, seedArr) <- localInputs(edgePairs(edges), seeds)
       // target ids are vertex ids: gated like them
       targetIds <- targets.fold(Option(Option.empty[Set[Long]]))(t =>
         collectUnder(t.select(col(t.columns.head).cast("long")),
           localMaxRows(t.sparkSession)).map(c => Some(c.longs(0).toSet)))
     } yield {
       import spark.implicits._
-      val (s, d) = (pairs.longs(0), pairs.longs(1))
-      LocalKernels.bfsDistances(
-        Array.tabulate(pairs.length)(i => (s(i), d(i), 0L)), seedArr,
+      LocalKernels.bfsDistances(g, seedArr,
         maxDepth.getOrElse(Long.MaxValue), targetIds)
         .toSeq.toDF("src", "dst", "dist")
     }
@@ -575,10 +530,10 @@ object PathFinder {
   def shortestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       lower: Long, upper: Option[Long]): DataFrame = {
     val view = eidView(edges)
-    localInputs(view, seeds).map { case (e, seedArr) =>
+    localInputs(view, seeds).map { case (g, seedArr) =>
       import spark.implicits._
       LocalKernels.shortestPaths(
-        eidArray(view, e), seedArr, lower, upper.getOrElse(Long.MaxValue))
+        g, seedArr, lower, upper.getOrElse(Long.MaxValue))
         .toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "dist", "path")
     }.getOrElse(distributedShortestPaths(spark, eidIndex(spark, view), seeds,
@@ -715,15 +670,14 @@ object PathFinder {
       throw GraphAnalysisException(
         "WALK enumeration needs a finite upper bound")
     val view = eidView(edges)
-    localInputs(view, seeds).map { case (ec, seedArr) =>
-      val earr = eidArray(view, ec)
+    localInputs(view, seeds).map { case (g, seedArr) =>
       // the per-vertex top-k prune is only sound for WALK (see
       // LocalKernels.kShortestWalks); mode-constrained sets are finite
       val res = (mode, pruneK) match {
         case (PathMode.Walk, Some(kk)) => LocalKernels.kShortestWalks(
-          earr, seedArr, lower, upper.getOrElse(Long.MaxValue), kk)
+          g, seedArr, lower, upper.getOrElse(Long.MaxValue), kk)
         case _ => LocalKernels.enumeratePaths(
-          earr, seedArr, lower, upper.getOrElse(Long.MaxValue), mode)
+          g, seedArr, lower, upper.getOrElse(Long.MaxValue), mode)
       }
       import spark.implicits._
       res.toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
@@ -851,10 +805,10 @@ object PathFinder {
   def allShortestPaths(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, lower: Long, upper: Option[Long]): DataFrame = {
     val view = eidView(edges)
-    localInputs(view, seeds).map { case (ec, seedArr) =>
+    localInputs(view, seeds).map { case (g, seedArr) =>
       import spark.implicits._
       LocalKernels.allShortestPaths(
-        eidArray(view, ec), seedArr, lower, upper.getOrElse(Long.MaxValue))
+        g, seedArr, lower, upper.getOrElse(Long.MaxValue))
         .toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "dist", "path")
     }.getOrElse {
@@ -970,12 +924,10 @@ object PathFinder {
       .filter(col("w").isNotNull)
     val view = clean.select(col("src").cast("long"), col("dst").cast("long"),
       col("w").cast("double"))
-    localInputs(view, seeds).map { case (ec, seedArr) =>
-      val (s, d, w) = (ec.longs(0), ec.longs(1), ec.doubles(2))
+    localInputs(view, seeds).map { case (g, seedArr) =>
       import spark.implicits._
-      LocalKernels.cheapestPaths(
-        Array.tabulate(ec.length)(i => (s(i), d(i), w(i))), seedArr).toSeq
-        .toDF("src", "dst", "cost")
+      LocalKernels.cheapestRoutes(g, seedArr).toSeq
+        .map(r => (r._1, r._2, r._3)).toDF("src", "dst", "cost")
     }.getOrElse {
     // memo-owned distributed CSR (see sessionEdgeIndex)
     val e = sessionEdgeIndex(spark, clean, "wpair")(clean)
@@ -1035,17 +987,13 @@ object PathFinder {
       .select(Seq(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("double").as("w")) ++
         (if (hasEid) Seq(col("eid").cast("long").as("eid")) else Nil): _*)
-    // without declared ids both branches rank edges by (src, dst, w), so
-    // the id assignment (and thus the (cost, hops, pv, pe) tie-break)
-    // cannot drift between the local kernel and the distributed relaxation
-    localInputs(view, seeds).map { case (ec, seedArr) =>
-      val c = if (hasEid) ec else denseLocal(view, ec)
-      val (s, d, w) = (c.longs(0), c.longs(1), c.doubles(2))
-      val eid: Int => Long =
-        if (hasEid) { val a = c.longs(3); a(_) } else _.toLong
-      val earr = Array.tabulate(c.length)(i => (s(i), d(i), eid(i), w(i)))
+    // without declared ids both branches rank edges by (src, dst, w) — a
+    // CSR slot index locally — so the id assignment (and thus the
+    // (cost, hops, pv, pe) tie-break) cannot drift between the local
+    // kernel and the distributed relaxation
+    localInputs(view, seeds).map { case (g, seedArr) =>
       import spark.implicits._
-      LocalKernels.cheapestRoutes(earr, seedArr).toSeq
+      LocalKernels.cheapestRoutes(g, seedArr).toSeq
         .map(t => (t._1, t._2, t._3, t._4.toSeq))
         .toDF("src", "dst", "cost", "path")
     }.getOrElse {

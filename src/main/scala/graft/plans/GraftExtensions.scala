@@ -45,23 +45,20 @@ class GraftParser(session: SparkSession, delegate: ParserInterface)
     t.contains("graph_table") || t.contains("graph table")
   }
 
-  /** Rewrite failures fall back to the plain parser — a query merely
-    * *mentioning* graph_table (e.g. inside a string literal) must not
-    * break (the reference's override behaves the same way: PGQ parse
-    * failure → normal statement path). */
-  private def tryRewrite(sqlText: String): String =
-    try Graft(session, TableResolver.catalog).rewriteGraphTables(sqlText)
-    catch { case _: Exception => sqlText }
+  /** Compiles the GRAPH_TABLE spans. A mention inside a string literal
+    * or a comment is not a span and passes through untouched; a PGQ
+    * error in a real span (unknown graph or label, bad pattern) is
+    * raised as graft's own error, not hidden behind the plain parser's
+    * syntax error. */
+  private def rewrite(sqlText: String): String =
+    if (!isPgq(sqlText)) sqlText
+    else Graft(session, TableResolver.catalog).rewriteGraphTables(sqlText)
 
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    if (!isPgq(sqlText)) return delegate.parsePlan(sqlText)
-    delegate.parsePlan(tryRewrite(sqlText))
-  }
+  override def parsePlan(sqlText: String): LogicalPlan =
+    delegate.parsePlan(rewrite(sqlText))
 
-  override def parseQuery(sqlText: String): LogicalPlan = {
-    if (!isPgq(sqlText)) return delegate.parseQuery(sqlText)
-    delegate.parseQuery(tryRewrite(sqlText))
-  }
+  override def parseQuery(sqlText: String): LogicalPlan =
+    delegate.parseQuery(rewrite(sqlText))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

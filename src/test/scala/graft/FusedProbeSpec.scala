@@ -30,7 +30,8 @@ class FusedProbeSpec extends AnyFunSuite {
     ).toDF("src", "dst")
     val got = PathFinder.localEdgePairs(edges)
     assert(got.isDefined)
-    assert(got.get.sorted.toSeq == Seq((1L, 2L), (1L, 2L), (2L, 3L)))
+    assert(got.get.longs(0).zip(got.get.longs(1)).sorted.toSeq ==
+      Seq((1L, 2L), (1L, 2L), (2L, 3L)))
   }
 
   test("localEdgePairs over gate returns None; restored gate collects") {

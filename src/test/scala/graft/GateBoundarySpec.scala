@@ -7,12 +7,18 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Algorithms, PathFinder}
+import graft.pgq.PathMode
 
 /** Property checks at the local/distributed gate boundary: random small
-  * edge multisets (duplicates and null endpoints included) with n cleaned
-  * rows, gated at g ∈ {0, n−1, n, n+1}. The strategy gate must hand a
-  * local kernel the COMPLETE cleaned multiset exactly when n ≤ g, and the
-  * kernels must give the brute-force answer on both sides of g = n. */
+  * edge multisets (self-loops, parallel edges and null endpoints
+  * included) with n cleaned rows, gated at g ∈ {0, n−1, n, n+1}. The
+  * strategy gate must hand a local kernel the COMPLETE cleaned multiset
+  * exactly when n ≤ g; BFS and WCC must give the brute-force answer on
+  * both sides of g = n; and the path kernels (with and without declared
+  * eids), cheapestRoutes, PageRank and LCC must return the same rows at
+  * g = n − 1 (distributed) and g = n (local), path arrays included —
+  * which pins the local CSR's slot order to the distributed dense-eid
+  * and min-struct tie-breaks. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -40,6 +46,10 @@ class GateBoundarySpec extends AnyFunSuite {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
+  /** The (src, dst) columns of a collect, zipped and sorted. */
+  private def pairs(c: PathFinder.Columns): Seq[(Long, Long)] =
+    c.longs(0).zip(c.longs(1)).toSeq.sorted
+
   private def frame(g: Graph): DataFrame = {
     val s = init()
     import s.implicits._
@@ -53,17 +63,15 @@ class GateBoundarySpec extends AnyFunSuite {
         .select(col("src").cast("long"), col("dst").cast("long"))
       Seq(0L, g.n - 1L, g.n.toLong, g.n + 1L).forall { cap =>
         val want = if (g.n <= cap) Some(g.cleaned.sorted) else None
-        PathFinder.collectUnder(cleaned, cap).map(_.pairs.toSeq.sorted) ==
-          want &&
+        PathFinder.collectUnder(cleaned, cap).map(pairs) == want &&
           withGate(spark, cap)(PathFinder.localEdgePairs(edges))
-            .map(_.toSeq.sorted) == want
+            .map(pairs) == want
       }
     })
   }
 
   test("BFS and WCC at g = n - 1 (distributed) and g = n (local) equal " +
       "brute force") {
-    val seedSets = Gen.nonEmptyListOf(Gen.choose(0L, 5L)).map(_.take(3))
     check(6)(Prop.forAll(graphs, seedSets, Gen.choose(1L, 4L)) {
       (g, seeds, depth) =>
         val s = init()
@@ -85,6 +93,84 @@ class GateBoundarySpec extends AnyFunSuite {
         }
     })
   }
+
+  private val seedSets = Gen.nonEmptyListOf(Gen.choose(0L, 5L)).map(_.take(3))
+
+  test("path kernels at g = n - 1 (distributed) and g = n (local) agree, " +
+      "with and without declared eids") {
+    check(4)(Prop.forAll(graphs, seedSets) { (g, seeds) =>
+      val s = init()
+      import s.implicits._
+      val sd = seeds.toDF("id")
+      Seq(frame(g), attributed(g).drop("w")).forall { edges =>
+        agree(g.n) {
+          Seq(PathFinder.shortestPaths(s, edges, sd, 0L, None),
+            PathFinder.allShortestPaths(s, edges, sd, 0L, None),
+            PathFinder.kShortestPaths(s, edges, sd, 1L, Some(3L),
+              PathMode.Walk, 2),
+            PathFinder.enumerateModePaths(s, edges, sd, 1L, Some(3L),
+              PathMode.Trail))
+        }
+      }
+    })
+  }
+
+  test("cheapestRoutes over parallel edges of different weight, fixed-" +
+      "iteration PageRank and LCC at g = n - 1 and g = n agree") {
+    check(4)(Prop.forAll(graphs, seedSets) { (g, seeds) =>
+      val s = init()
+      import s.implicits._
+      val (sd, vs) = (seeds.toDF("id"), vertices.toDF("id"))
+      // every edge twice: its later, parallel copy is the cheaper one
+      val twice = g.copy(cleaned = g.cleaned ++ g.cleaned)
+      agree(twice.n) {
+        Seq(PathFinder.cheapestRoutes(s, attributed(twice).drop("eid"), sd),
+          PathFinder.cheapestRoutes(s, attributed(twice), sd))
+      } && {
+        // with a null-dst row: a null endpoint never counts toward a degree
+        val edges = frame(g.copy(nulls = 3))
+        agree(g.n) {
+          Seq(Algorithms.pageRank(vs, edges, fixedIter = Some(10)),
+            Algorithms.localClusteringCoefficient(vs, edges))
+        }
+      }
+    })
+  }
+
+  /** [[frame]] plus per-row `w` and `eid` columns that both fall along
+    * the rows, so of two parallel edges the later one has the smaller eid
+    * and is the cheaper one. */
+  private def attributed(g: Graph): DataFrame = {
+    val s = init()
+    import s.implicits._
+    g.rows.zipWithIndex.map { case ((a, b), i) =>
+      (a, b, (g.rows.length - i).toDouble, 1000L - i)
+    }.toDF("src", "dst", "w", "eid")
+  }
+
+  /** Every frame of `run`, built and collected at g = n − 1 (distributed)
+    * and at g = n (local): equal rows, path arrays included, doubles
+    * within 1e-9. */
+  private def agree(n: Int)(run: => Seq[DataFrame]): Boolean = {
+    val Seq(dist, local) = Seq(n - 1L, n.toLong).map(gate =>
+      withGate(spark, gate)(run.map(rows)))
+    dist.zip(local).forall { case (d, l) =>
+      d.length == l.length && d.zip(l).forall { case (x, y) =>
+        x.zip(y).forall {
+          case (a: Double, b: Double) => math.abs(a - b) <= 1e-9
+          case (a, b) => a == b
+        }
+      }
+    }
+  }
+
+  /** A frame's rows as value lists, arrays as lists, sorted by their
+    * non-double values. */
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case v => v
+    }).sortBy(_.filterNot(_.isInstanceOf[Double]).mkString(","))
 
   /** Component of every vertex (minimum member id) over the undirected
     * closure of `edges`. */

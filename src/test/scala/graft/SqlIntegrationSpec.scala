@@ -329,7 +329,10 @@ class SqlIntegrationSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
   }
 
-  test("SparkSessionExtensions parser override: literal spark.sql GRAPH_TABLE") {
+  /** Runs `body` in a session built with the graft parser extension,
+    * over a two-student graph `extpg`; restores the shared session. */
+  private def withExtensionSession(
+      body: org.apache.spark.sql.SparkSession => Unit): Unit = {
     val base = Fixture.init() // ensure the shared context exists
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
@@ -347,6 +350,15 @@ class SqlIntegrationSpec extends AnyFunSuite {
         VERTEX TABLES (student LABEL Person)
         EDGE TABLES (know SOURCE KEY (src) REFERENCES student (id)
           DESTINATION KEY (dst) REFERENCES student (id) LABEL Knows)""")
+      body(s)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(base)
+      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("SparkSessionExtensions parser override: literal spark.sql GRAPH_TABLE") {
+    withExtensionSession { s =>
       val rows = s.sql(
         """SELECT a_name, b_name FROM GRAPH_TABLE (extpg
              MATCH (a:Person)-[k:Knows]->(b:Person)
@@ -355,9 +367,21 @@ class SqlIntegrationSpec extends AnyFunSuite {
       assert(rows.toSeq == Seq(("Daniel", "Tavneet")))
       // plain SQL still parses through the delegate untouched
       assert(s.sql("SELECT 1 AS one").collect().head.getInt(0) == 1)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("parser override raises PGQ errors; graph_table( in a literal or " +
+      "comment still parses") {
+    withExtensionSession { s =>
+      val e = intercept[GraphAnalysisException] {
+        s.sql("""SELECT * FROM GRAPH_TABLE (extpg
+          MATCH (a:Persn) COLUMNS (a.name AS n)) t""")
+      }
+      assert(e.msg.contains("'Persn' is not registered"), e.msg)
+      def one(sql: String): Any = s.sql(sql).collect().head.get(0)
+      assert(one("SELECT 'graph_table(' AS x") == "graph_table(")
+      assert(one("SELECT 1 AS x -- graph_table(\n") == 1)
+      assert(one("SELECT /* graph_table( /* nested */ */ 2 AS x") == 2)
     }
   }
 
