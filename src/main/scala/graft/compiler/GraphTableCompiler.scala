@@ -71,10 +71,10 @@ object GraphTableCompiler {
 
   /** One enumerated quantified segment of the current pattern, for the
     * mixed-pattern mode filters: the in-plan interleaved path column plus
-    * the identity spaces its values live in. */
-  private final case class ModeSeg(pathCol: String, et: EdgeTable,
-      vtTable: String, refKeys: Seq[String], keyNumeric: Boolean,
-      homo: Boolean, headAlias: String, tailAlias: String)
+    * the hop whose identity spaces its values live in (the `a` end's:
+    * kernel segments run in one key space). */
+  private final case class ModeSeg(pathCol: String, hop: Hop,
+      headAlias: String, tailAlias: String)
 
   /** Per-segment record for the PER-SEGMENT translation route (a named
     * path whose segments span more than one vertex-key space). Carries
@@ -89,14 +89,199 @@ object GraphTableCompiler {
     * vertex-slot bijection translation when its space is not the
     * table's canonical one). */
   private sealed trait SegRec
-  private final case class FixedRec(strArr: org.apache.spark.sql.Column,
-      aAlias: String, aTable: String, aKeys: Seq[String], aNum: Boolean,
-      eid: org.apache.spark.sql.Column,
-      bAlias: String, bTable: String, bKeys: Seq[String], bNum: Boolean)
-      extends SegRec
-  private final case class QuantRec(colName: String, table: String,
-      keys: Seq[String], numeric: Boolean,
-      ids: Option[(org.apache.spark.sql.DataFrame, Int)]) extends SegRec
+  private final case class FixedRec(strArr: Column, aAlias: String, a: End,
+      eid: Column, bAlias: String, b: End) extends SegRec
+  private final case class QuantRec(colName: String, end: End,
+      ids: Option[(DataFrame, Int)]) extends SegRec
+
+  /** Byte, short, int and long columns: the types that cast to a long id
+    * losslessly. */
+  private def integral(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+  }
+
+  /** Case-insensitive schema lookup — declared keys may differ in case
+    * from the physical column (`REFERENCES School (id)` vs column `Id`,
+    * shortest_path.test:37; Spark SQL resolution is case-insensitive, so
+    * Scala-side schema access must be too). */
+  private def fieldType(df: DataFrame, name: String)
+      : org.apache.spark.sql.types.DataType =
+    df.schema.find(_.name.equalsIgnoreCase(name))
+      .getOrElse(df.schema(name)).dataType
+
+  private def keysEq(aAlias: String, aCols: Seq[String], bAlias: String,
+      bCols: Seq[String]): Column =
+    aCols.zip(bCols).map { case (ac, bc) =>
+      col(s"$aAlias.$ac") === col(s"$bAlias.$bc")
+    }.reduce(_ && _)
+
+  /** Key tuple as a comparable struct with normalized field names (so
+    * vertex-side and edge-side structs are type-equal for joins). */
+  private def keyStruct(cols: Seq[String], qual: Option[String]): Column =
+    struct(cols.zipWithIndex.map { case (c, i) =>
+      qual.map(q => col(s"$q.$c")).getOrElse(col(c)).as(s"_k$i")
+    }: _*)
+
+  /** '|'-joined declared-key surrogate of an already-joined vertex
+    * alias — the same text [[surrogatizeArrayCol]] produces from the
+    * dense-rowid mapping, built directly from the alias columns. */
+  private def aliasSurr(alias: String, keys: Seq[String]): Column =
+    concat_ws("|", keys.map(k => col(s"$alias.$k").cast("string")): _*)
+
+  /** Sub-label inheritance filter (reference match.cpp:278-296):
+    * (discriminator & 2^idx) = 2^idx. Shared by vertex and edge tables
+    * — the reference stores the discriminator fields on the common
+    * table struct (property_graph_table.hpp:40-54). `qualifier` scopes
+    * the column for already-aliased plans (re-labeled bindings). */
+  private def subLabelFilter(df: DataFrame, subLabels: Seq[String],
+      discriminator: Option[String], label: Option[String],
+      tableName: String, qualifier: Option[String] = None): DataFrame =
+    label match {
+      case Some(l) if subLabels.exists(_.equalsIgnoreCase(l)) =>
+        val idx = subLabels.indexWhere(_.equalsIgnoreCase(l))
+        val mask = 1L << idx
+        val disc = discriminator.getOrElse(throw GraphAnalysisException(
+          s"Label '$l' needs a discriminator column on '$tableName'"))
+        val c = qualifier.map(q => col(s"$q.$disc")).getOrElse(col(disc))
+        df.filter((c.bitwiseAND(lit(mask))) === lit(mask))
+      case _ => df
+    }
+
+  /** DuckDB's `rowid` pseudo-column: tables registered through a
+    * rowid-aware resolver (the sqllogictest session, or any user
+    * resolver that appends one) carry a hidden `__rowid` column in
+    * insertion order; expose it as `rowid` when the table has no real
+    * column of that name (DuckDB's shadowing rule). Stars never expand
+    * either spelling — see starCols. */
+  private def withRowid(df: DataFrame): DataFrame =
+    if (df.columns.contains("__rowid") &&
+        !df.columns.exists(_.equalsIgnoreCase("rowid")))
+      df.withColumn("rowid", col("__rowid"))
+    else df
+
+  /** Edge sub-label inheritance filter — same bitmask semantics as
+    * vertices (reference match.cpp:278-296; edge tables share the
+    * discriminator fields, property_graph_table.hpp:40-54). */
+  private def edgeSubFilter(df: DataFrame, et: EdgeTable,
+      label: Option[String]): DataFrame =
+    subLabelFilter(df, et.subLabels, et.discriminator, label, et.tableName)
+
+  /** Undirected edge view: original UNION ALL swapped src/dst
+    * (reference `EdgeTypeAny` match.cpp:365-392). Requires both
+    * endpoints in one key space — swapping src/dst values is meaningless
+    * across different vertex tables/keys. */
+  private def undirectedView(df: DataFrame, h: Hop): DataFrame = {
+    val et = h.et
+    if (!h.homogeneous)
+      throw GraphAnalysisException(
+        s"Undirected edge '${et.label}' requires source and destination " +
+          "to reference the same vertex table and keys")
+    val swap = (et.srcKeys.zip(et.dstKeys) ++ et.dstKeys.zip(et.srcKeys)).toMap
+    val swapped = df.select(df.columns.map { c =>
+      swap.get(c).map(o => col(o).as(c)).getOrElse(col(c))
+    }.toIndexedSeq: _*)
+    df.unionByName(swapped)
+  }
+
+  /** Translates an `array<long>` interleaved path column to stable
+    * string surrogates: even (vertex) slots become the '|'-joined
+    * declared key tuple looked up in the dense-rowid map `ids`
+    * (`__raw` struct ↔ `__rowid`), odd (edge) slots the edge id as
+    * text. Distributed — distinct arrays posexploded, joined, and
+    * re-collected in slot order; the join-back on array equality is a
+    * many-to-one attach, so row multiplicity is preserved. */
+  private def surrogatizeArrayCol(df: DataFrame, c: String, ids: DataFrame,
+      nKeys: Int): DataFrame = {
+    val surr = concat_ws("|", (0 until nKeys).map(i =>
+      col("__raw").getField(s"_k$i").cast("string")): _*)
+    val pos = df.select(col(c).as("__parr")).distinct()
+      .select(col("__parr"),
+        posexplode(col("__parr")).as(Seq("__pos", "__el")))
+    val tr = pos
+      .join(ids.select(col("__rowid").as("__el"), col("__raw")),
+        Seq("__el"), "left")
+      .withColumn("__s", when(col("__pos") % 2 === 1,
+        col("__el").cast("string")).otherwise(surr))
+    val arr = tr.groupBy("__parr")
+      .agg(transform(
+        array_sort(collect_list(struct(col("__pos"), col("__s")))),
+        x => x.getField("__s")).as("__sparr"))
+    df.join(arr, df(c) === arr("__parr"))
+      .drop(c).drop("__parr")
+      .withColumnRenamed("__sparr", c)
+  }
+
+  /** Translates the slots of an `array<long>` id column through a
+    * (`__from` → `__to`) bijection frame `m` — every slot, or with
+    * `vertexSlotsOnly` just the VERTEX (even) slots of an interleaved
+    * `[v, e, v, …]` path array, so an edge id never accidentally matches
+    * a vertex `__from`. Null arrays become empty arrays; ids missing
+    * from the map keep their value (cannot happen for table rows —
+    * defensive only). A map under the local gate rides
+    * [[translateLocal]], a larger one [[translateArrayJoin]]. */
+  private def translateIds(df: DataFrame, c: String, m: DataFrame,
+      vertexSlotsOnly: Boolean): DataFrame =
+    localPairMap(m) match {
+      case Some(lm) => translateLocal(df, c, lm, vertexSlotsOnly)
+      case None => translateArrayJoin(df, c, m, vertexSlotsOnly)
+    }
+
+  /** Local-map projection form of [[translateIds]]: the whole translate
+    * collapses to one codegen'd transform over an O(1) hash-probe
+    * expression — zero joins, zero exchanges, no per-split job fan-out
+    * (the join pipeline cost q93 ~2 s of driver plan-building plus
+    * several tiny shuffle stages PER quantifier split on a 25-row
+    * graph). The map rides the expression as an opaque
+    * [[graft.functions.LongLongMap]] reference, NOT a MapType literal:
+    * `element_at` on a map literal is a linear scan per slot (65k
+    * comparisons worst-case at the default gate) and the literal itself
+    * made plan canonicalization O(map). */
+  private[graft] def translateLocal(df: DataFrame, c: String,
+      m: Map[Long, Long], vertexSlotsOnly: Boolean): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val table = new graft.functions.LongLongMap(m)
+    def look(x: Column): Column = Bridge.column(
+      graft.functions.LongMapLookupOrSelf(Bridge.expression(x), table))
+    val trans =
+      if (vertexSlotsOnly)
+        transform(col(c), (x, i) =>
+          when(i % 2 === 0, look(x)).otherwise(x))
+      else
+        transform(col(c), x => look(x))
+    df.withColumn(c,
+      coalesce(trans, typedLit(Array.empty[Long])).cast("array<bigint>"))
+  }
+
+  /** Join form of [[translateIds]] — distinct arrays posexploded, joined
+    * against the map, re-collected in slot order (the
+    * [[surrogatizeArrayCol]] shape). Empty arrays survive (left
+    * join-back + coalesce). */
+  private[graft] def translateArrayJoin(df: DataFrame, c: String,
+      m: DataFrame, vertexSlotsOnly: Boolean): DataFrame = {
+    val pos = df.select(col(c).as("__parr")).distinct()
+      .select(col("__parr"),
+        posexplode_outer(col("__parr")).as(Seq("__pos", "__el")))
+    val hit = coalesce(col("__to"), col("__el"))
+    val tr = pos.join(m.select(col("__from").as("__el"), col("__to")),
+        Seq("__el"), "left")
+      .withColumn("__t",
+        if (vertexSlotsOnly)
+          when(col("__pos") % 2 === 0, hit).otherwise(col("__el"))
+        else hit)
+      .groupBy("__parr")
+      .agg(expr("transform(array_sort(" +
+        "filter(collect_list(struct(__pos, __t))," +
+        " x -> x.__pos IS NOT NULL)), x -> x.__t)").as("__tarr"))
+    df.join(tr, df(c) === tr("__parr"), "left")
+      .drop(c).drop("__parr")
+      .withColumn(c, coalesce(col("__tarr"),
+        expr("CAST(array() AS array<bigint>)")))
+      .drop("__tarr")
+  }
 
   def compile(
       spark: SparkSession,
@@ -274,37 +459,6 @@ object GraphTableCompiler {
         }
       })
 
-    /** Sub-label inheritance filter (reference match.cpp:278-296):
-      * (discriminator & 2^idx) = 2^idx. Shared by vertex and edge tables
-      * — the reference stores the discriminator fields on the common
-      * table struct (property_graph_table.hpp:40-54). `qualifier` scopes
-      * the column for already-aliased plans (re-labeled bindings). */
-    def subLabelFilter(df: DataFrame, subLabels: Seq[String],
-        discriminator: Option[String], label: Option[String],
-        tableName: String, qualifier: Option[String] = None): DataFrame =
-      label match {
-        case Some(l) if subLabels.exists(_.equalsIgnoreCase(l)) =>
-          val idx = subLabels.indexWhere(_.equalsIgnoreCase(l))
-          val mask = 1L << idx
-          val disc = discriminator.getOrElse(throw GraphAnalysisException(
-            s"Label '$l' needs a discriminator column on '$tableName'"))
-          val c = qualifier.map(q => col(s"$q.$disc")).getOrElse(col(disc))
-          df.filter((c.bitwiseAND(lit(mask))) === lit(mask))
-        case _ => df
-      }
-
-    /** DuckDB's `rowid` pseudo-column: tables registered through a
-      * rowid-aware resolver (the sqllogictest session, or any user
-      * resolver that appends one) carry a hidden `__rowid` column in
-      * insertion order; expose it as `rowid` when the table has no real
-      * column of that name (DuckDB's shadowing rule). Stars never expand
-      * either spelling — see starCols. */
-    def withRowid(df: DataFrame): DataFrame =
-      if (df.columns.contains("__rowid") &&
-          !df.columns.exists(_.equalsIgnoreCase("rowid")))
-        df.withColumn("rowid", col("__rowid"))
-      else df
-
     def vertexDF(v: VertexTable, label: Option[String]): DataFrame =
       subLabelFilter(withRowid(resolver(spark, v.tableName)), v.subLabels,
         v.discriminator, label, v.tableName)
@@ -406,44 +560,22 @@ object GraphTableCompiler {
       }
     }
 
-    /** Label-less edges resolve to the graph's only edge table when
-      * unambiguous (mirrors the vertex-side hint resolution). */
-    def resolveEdge(eName: String, label: Option[String]): EdgeTable =
-      label match {
-        case Some(l) => pg.edgeLabel(l)
-        case None if pg.edgeTables.length == 1 => pg.edgeTables.head
-        case None => throw GraphAnalysisException(
-          s"Edge '$eName' needs a label (multiple edge tables registered)")
+    /** A hop's physical edge id as a long, qualified by `alias` when
+      * given: the declared edgeIdCol — which must be integral, casting a
+      * string id would silently null every eid — or the synthetic dense
+      * `__geid` ([[withDenseEid]]). */
+    def eidCol(et: EdgeTable, alias: Option[String]): Column = {
+      val q = alias.fold("")(_ + ".")
+      et.edgeIdCol match {
+        case Some(c) =>
+          val t = fieldType(resolver(spark, et.tableName), c)
+          if (!integral(t)) throw GraphAnalysisException(
+            s"edgeIdCol '$c' of '${et.tableName}' must be an integral " +
+              s"column (found $t)")
+          col(s"$q$c").cast("long")
+        case None => col(s"${q}__geid")
       }
-
-    /** Edge sub-label inheritance filter — same bitmask semantics as
-      * vertices (reference match.cpp:278-296; edge tables share the
-      * discriminator fields, property_graph_table.hpp:40-54). */
-    def edgeSubFilter(df: DataFrame, et: EdgeTable,
-        label: Option[String]): DataFrame =
-      subLabelFilter(df, et.subLabels, et.discriminator, label, et.tableName)
-
-    /** Declared edge-id columns must be integral — casting a string id to
-      * long would silently null every eid in the path arrays. */
-    /** Case-insensitive schema lookup — declared keys may differ in case
-      * from the physical column (`REFERENCES School (id)` vs column `Id`,
-      * shortest_path.test:37; Spark SQL resolution is case-insensitive, so
-      * Scala-side schema access must be too). */
-    def fieldType(df: DataFrame, name: String)
-        : org.apache.spark.sql.types.DataType =
-      df.schema.find(_.name.equalsIgnoreCase(name))
-        .getOrElse(df.schema(name)).dataType
-
-    def requireIntegralEdgeId(et: EdgeTable, c: String): Unit =
-      fieldType(resolver(spark, et.tableName), c) match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => ()
-        case other => throw GraphAnalysisException(
-          s"edgeIdCol '$c' of '${et.tableName}' must be an integral " +
-            s"column (found $other)")
-      }
+    }
 
     def requireUniqueKeys(vt: VertexTable, keys: Seq[String]): Unit =
       if (hasDuplicateKeys(vt, keys)) throw GraphAnalysisException(
@@ -469,70 +601,11 @@ object GraphTableCompiler {
     }
 
     def numericKey(vt: VertexTable, key: String): Boolean =
-      fieldType(resolver(spark, vt.tableName), key) match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-
-    def keysEq(aAlias: String, aCols: Seq[String], bAlias: String,
-        bCols: Seq[String]): Column =
-      aCols.zip(bCols).map { case (ac, bc) =>
-        col(s"$aAlias.$ac") === col(s"$bAlias.$bc")
-      }.reduce(_ && _)
-
-    /** Undirected edge view: original UNION ALL swapped src/dst
-      * (reference `EdgeTypeAny` match.cpp:365-392). Requires both
-      * endpoints in one key space — swapping src/dst values is meaningless
-      * across different vertex tables/keys. */
-    def undirectedView(df: DataFrame, et: EdgeTable): DataFrame = {
-      val sVt = pg.vertexLabel(et.srcLabel)
-      val dVt = pg.vertexLabel(et.dstLabel)
-      if (sVt.tableName != dVt.tableName || et.srcRefKeys != et.dstRefKeys)
-        throw GraphAnalysisException(
-          s"Undirected edge '${et.label}' requires source and destination " +
-            "to reference the same vertex table and keys")
-      val swap = (et.srcKeys.zip(et.dstKeys) ++ et.dstKeys.zip(et.srcKeys)).toMap
-      val swapped = df.select(df.columns.map { c =>
-        swap.get(c).map(o => col(o).as(c)).getOrElse(col(c))
-      }.toIndexedSeq: _*)
-      df.unionByName(swapped)
-    }
+      integral(fieldType(resolver(spark, vt.tableName), key))
 
     // enumerated segments of the pattern being processed (cleared per
     // pattern; filled by bindPathEdge on the enumeration route)
     val currentModeSegs = scala.collection.mutable.ArrayBuffer[ModeSeg]()
-
-    /** Translates an `array<long>` interleaved path column to stable
-      * string surrogates: even (vertex) slots become the '|'-joined
-      * declared key tuple looked up in the dense-rowid map `ids`
-      * (`__raw` struct ↔ `__rowid`), odd (edge) slots the edge id as
-      * text. Distributed — distinct arrays posexploded, joined, and
-      * re-collected in slot order; the join-back on array equality is a
-      * many-to-one attach, so row multiplicity is preserved. */
-    def surrogatizeArrayCol(df: DataFrame, c: String, ids: DataFrame,
-        nKeys: Int): DataFrame = {
-      val surr = concat_ws("|", (0 until nKeys).map(i =>
-        col("__raw").getField(s"_k$i").cast("string")): _*)
-      val pos = df.select(col(c).as("__parr")).distinct()
-        .select(col("__parr"),
-          posexplode(col("__parr")).as(Seq("__pos", "__el")))
-      val tr = pos
-        .join(ids.select(col("__rowid").as("__el"), col("__raw")),
-          Seq("__el"), "left")
-        .withColumn("__s", when(col("__pos") % 2 === 1,
-          col("__el").cast("string")).otherwise(surr))
-      val arr = tr.groupBy("__parr")
-        .agg(transform(
-          array_sort(collect_list(struct(col("__pos"), col("__s")))),
-          x => x.getField("__s")).as("__sparr"))
-      df.join(arr, df(c) === arr("__parr"))
-        .drop(c).drop("__parr")
-        .withColumnRenamed("__sparr", c)
-    }
-
 
     // set by bindPathEdge's composite-key branch when an ENUMERATION
     // pattern exposes element_id/vertices/edges: the per-segment arrays
@@ -541,13 +614,6 @@ object GraphTableCompiler {
     // after the filters run). (ids, #key cols, vertex table, ref keys).
     var pendingPathSurrogate: Option[(DataFrame, Int, String, Seq[String])] =
       None
-
-    /** Key tuple as a comparable struct with normalized field names (so
-      * vertex-side and edge-side structs are type-equal for joins). */
-    def keyStruct(cols: Seq[String], qual: Option[String]): Column =
-      struct(cols.zipWithIndex.map { case (c, i) =>
-        qual.map(q => col(s"$q.$c")).getOrElse(col(c)).as(s"_k$i")
-      }: _*)
 
     // Dense rowids over the DISTINCT key tuples of one vertex table
     // (distributed sort + zipWithIndex — the Snapshot strategy; struct
@@ -615,96 +681,6 @@ object GraphTableCompiler {
         toKeys, toNumeric, "__to").select("__from", "__to")
     }
 
-    /** Translates every slot of an `array<long>` id column through a
-      * (`__from` → `__to`) map — distinct arrays posexploded, joined,
-      * re-collected in slot order (the [[surrogatizeArrayCol]] shape).
-      * Empty arrays survive (left join-back + coalesce); ids missing
-      * from the map keep their value (cannot happen for table rows —
-      * defensive only). */
-    /** Local-map projection form of the array translations: when the
-      * bijection fits the local gate ([[localPairMap]]) the whole
-      * translate collapses to one codegen'd transform over an O(1)
-      * hash-probe expression — zero joins, zero exchanges, no per-split
-      * job fan-out (the join pipeline cost q93 ~2 s of driver
-      * plan-building plus several tiny shuffle stages PER quantifier
-      * split on a 25-row graph). The map rides the expression as an
-      * opaque [[graft.functions.LongLongMap]] reference, NOT a MapType
-      * literal: `element_at` on a map literal is a linear scan per slot
-      * (65k comparisons worst-case at the default gate) and the literal
-      * itself made plan canonicalization O(map). Null arrays become
-      * empty arrays, ids missing from the map keep their value — the
-      * join pipeline's exact semantics. */
-    def translateLocal(df: DataFrame, c: String, m: Map[Long, Long],
-        vertexSlotsOnly: Boolean): DataFrame = {
-      import org.apache.spark.sql.graftbridge.Bridge
-      val table = new graft.functions.LongLongMap(m)
-      def look(x: Column): Column = Bridge.column(
-        graft.functions.LongMapLookupOrSelf(Bridge.expression(x), table))
-      val trans =
-        if (vertexSlotsOnly)
-          transform(col(c), (x, i) =>
-            when(i % 2 === 0, look(x)).otherwise(x))
-        else
-          transform(col(c), x => look(x))
-      df.withColumn(c,
-        coalesce(trans, typedLit(Array.empty[Long])).cast("array<bigint>"))
-    }
-
-    def translateIdArray(df: DataFrame, c: String, m: DataFrame): DataFrame =
-      localPairMap(m) match {
-        case Some(lm) => translateLocal(df, c, lm, vertexSlotsOnly = false)
-        case None => translateIdArrayJoin(df, c, m)
-      }
-
-    def translateIdArrayJoin(df: DataFrame, c: String, m: DataFrame)
-        : DataFrame = {
-      val pos = df.select(col(c).as("__parr")).distinct()
-        .select(col("__parr"),
-          posexplode_outer(col("__parr")).as(Seq("__pos", "__el")))
-      val tr = pos.join(m.select(col("__from").as("__el"), col("__to")),
-          Seq("__el"), "left")
-        .groupBy("__parr")
-        .agg(expr("transform(array_sort(" +
-          "filter(collect_list(struct(__pos, coalesce(__to, __el) AS __t))," +
-          " x -> x.__pos IS NOT NULL)), x -> x.__t)").as("__tarr"))
-      df.join(tr, df(c) === tr("__parr"), "left")
-        .drop(c).drop("__parr")
-        .withColumn(c, coalesce(col("__tarr"),
-          expr("CAST(array() AS array<bigint>)")))
-        .drop("__tarr")
-    }
-
-    /** [[translateIdArray]] restricted to VERTEX (even) slots of an
-      * interleaved `[v, e, v, …]` path array — edge ids pass through
-      * untouched (an edge id must never accidentally match a vertex
-      * `__from` value). */
-    def translateVertexSlots(df: DataFrame, c: String,
-        m: DataFrame): DataFrame =
-      localPairMap(m) match {
-        case Some(lm) => translateLocal(df, c, lm, vertexSlotsOnly = true)
-        case None => translateVertexSlotsJoin(df, c, m)
-      }
-
-    def translateVertexSlotsJoin(df: DataFrame, c: String,
-        m: DataFrame): DataFrame = {
-      val pos = df.select(col(c).as("__parr")).distinct()
-        .select(col("__parr"),
-          posexplode_outer(col("__parr")).as(Seq("__pos", "__el")))
-      val tr = pos.join(m.select(col("__from").as("__el"), col("__to")),
-          Seq("__el"), "left")
-        .withColumn("__t", when(col("__pos") % 2 === 0,
-          coalesce(col("__to"), col("__el"))).otherwise(col("__el")))
-        .groupBy("__parr")
-        .agg(expr("transform(array_sort(" +
-          "filter(collect_list(struct(__pos, __t))," +
-          " x -> x.__pos IS NOT NULL)), x -> x.__t)").as("__tarr"))
-      df.join(tr, df(c) === tr("__parr"), "left")
-        .drop(c).drop("__parr")
-        .withColumn(c, coalesce(col("__tarr"),
-          expr("CAST(array() AS array<bigint>)")))
-        .drop("__tarr")
-    }
-
     /** One pattern = one dense-id space for its combined path column:
       * first registration wins, later ones must match or refuse. */
     def registerPendingSurrogate(ids: DataFrame, nKeys: Int,
@@ -721,42 +697,10 @@ object GraphTableCompiler {
         case _ => () // same space — one translation covers all
       }
 
-    /** Does any COLUMNS/WHERE expression consume the path variable's
-      * element identities (and so force surrogate translation)? */
-    def pathExposed(p: PathPattern): Boolean = p.pathVar.exists { pv =>
-      val r = s"(?i)(element_id|vertices|edges)\\s*\\(\\s*$pv\\s*\\)".r
-      (spec.columns.map(_.expr) ++ spec.where.toSeq)
-        .exists(t => r.findFirstIn(t).isDefined)
-    }
-
-    // set per pattern by processPattern: the pattern contains a fixed
-    // hop whose path segment must ride dense rowids (composite or
-    // non-numeric vertex keys). Exposing quantified segments then defer
-    // their surrogate translation to the combined column even outside
-    // enumeration — fixed and quantified segments must concatenate in
-    // ONE type space.
-    var deferFixedSurrogates = false
-
-    // set per pattern by processPattern's pre-scan: the pattern's exposed
-    // named path spans MORE THAN ONE vertex-key space and at least one of
-    // them is composite/non-numeric. One combined translation (or one raw
-    // long array) cannot represent that, so each segment translates to
-    // string surrogates through its OWN space and the STRING arrays
-    // concatenate — the per-segment-translation route. Whole-path prefix
-    // ranking still runs on the long-typed combined array first (same
-    // deterministic (length, lex) tie-break as the single-space route;
-    // cross-space long comparisons are arbitrary but stable).
-    var perSegSurrogates = false
     // per-segment translation recipes, parallel to processPattern's
-    // segCols (filled by bindPathEdge / fixedSegment; consulted only when
-    // perSegSurrogates)
+    // segCols (filled by bindPathEdge / fixedSegment; consulted only on
+    // the route's perSeg route)
     val segXlates = scala.collection.mutable.ArrayBuffer[SegRec]()
-
-    /** '|'-joined declared-key surrogate of an already-joined vertex
-      * alias — the same text [[surrogatizeArrayCol]] produces from the
-      * dense-rowid mapping, built directly from the alias columns. */
-    def aliasSurr(alias: String, keys: Seq[String]): Column =
-      concat_ws("|", keys.map(k => col(s"$alias.$k").cast("string")): _*)
 
     // identity space of every segment feeding the current pattern's
     // combined path array: (vertex table, ref keys, numericRaw). Raw
@@ -767,10 +711,10 @@ object GraphTableCompiler {
     // silently corrupt foreign slots.
     val segSpaces =
       scala.collection.mutable.Set[(String, Seq[String], Boolean)]()
-    def checkOneTranslatedSpace(p: PathPattern): Unit =
+    def checkOneTranslatedSpace(r: Route): Unit =
       // the per-segment route translates each segment through its own
       // space — mixing is its whole point, nothing to refuse
-      if (pathExposed(p) && !perSegSurrogates) pendingPathSurrogate match {
+      if (r.exposed && !r.perSeg) pendingPathSurrogate match {
         case Some((_, _, tbl, keys)) =>
           // COMBINED translation runs every slot through one mapping —
           // any segment outside that space would be silently corrupted
@@ -796,35 +740,31 @@ object GraphTableCompiler {
                 "directly instead)")
       }
 
-    // set per pattern by processPattern: a non-WALK path MODE combined
-    // with a search PREFIX over a MIXED pattern compiles as ENUMERATION
-    // (bindPathEdge routes every quantified segment through the
-    // mode-valid path kernels) and the prefix is applied afterwards as a
-    // WHOLE-PATH ranking over the endpoint partition — see
-    // applyWholePathPrefix
-    var enumPrefix = false
-
-    def fixedEid(a: String, et: EdgeTable): Column = et.edgeIdCol match {
-      case Some(c) => requireIntegralEdgeId(et, c); col(s"$a.$c").cast("long")
-      case None => col(s"$a.__geid")
-    }
-
-    /** Cross-element distinctness filters for a MIXED pattern under a
-      * non-WALK mode, prefix-less enumeration only (each plan row is one
-      * concrete full path, so filtering rows IS whole-path mode
-      * semantics). Decomposition: intra-segment validity comes from the
-      * kernels (SIMPLE segments run ACYCLIC — an interior segment must
-      * not close a cycle; the whole path's closing exemption lives in
-      * the alias pair below); segment endpoints are ordinary vertex
-      * aliases, so alias↔alias pairs cover endpoint↔endpoint, and
+    /** Pairwise distinctness filters realizing TRAIL / ACYCLIC / SIMPLE
+      * across a pattern's elements: TRAIL = every pair of edge elements
+      * over the same table must bind different physical edges (declared
+      * edge-id or synthetic `__geid`); ACYCLIC = every pair of vertex
+      * elements over the same table must bind different rows; SIMPLE =
+      * ACYCLIC except the first/last pair, which may close a cycle.
+      * Elements over different tables are distinct by construction. A
+      * repeated binding variable collapses to `NOT (x = x)` = false —
+      * exactly the semantics (a `(a)…(a)` cycle is never acyclic).
+      *
+      * An all-fixed pattern has no `segs`. A MIXED pattern adds its
+      * enumerated quantified segments (each plan row is one concrete
+      * full path, so filtering rows IS whole-path mode semantics).
+      * Decomposition: intra-segment validity comes from the kernels
+      * (SIMPLE segments run ACYCLIC — an interior segment must not close
+      * a cycle; the whole path's closing exemption lives in the alias
+      * pair below); segment endpoints are ordinary vertex aliases, so
+      * alias↔alias pairs cover endpoint↔endpoint, and
       * alias↔segment-INTERIOR plus interior↔interior overlap checks
       * cover the rest. Edge identities compare only within one edge
-      * table (dense ids are per-table ranks); vertex identities need one
-      * single-column NUMERIC key space (segment arrays carry long key
-      * values). A zero-length segment merges its endpoints — one vertex
-      * occurrence, not a repeat — so its own (head, tail) pair is
-      * exempted while the segment is empty. */
-    def applyMixedModeFilters(p: PathPattern, vPos: Seq[String],
+      * table (dense ids are per-table ranks). A zero-length segment
+      * merges its endpoints — one vertex occurrence, not a repeat — so
+      * its own (head, tail) pair is exempted while the segment is
+      * empty. */
+    def applyModeFilters(p: PathPattern, vPos: Seq[String],
         ePos: Seq[(String, EdgeTable)], segs: Seq[ModeSeg]): Unit = {
       def segEdges(s: ModeSeg): Column =
         expr(s"filter(${s.pathCol}, (x, i) -> i % 2 == 1)")
@@ -840,16 +780,16 @@ object GraphTableCompiler {
             i <- ePos.indices; j <- (i + 1) until ePos.length
             if ePos(i)._2.tableName == ePos(j)._2.tableName
           } plan = plan.filter(
-            fixedEid(ePos(i)._1, ePos(i)._2) =!=
-              fixedEid(ePos(j)._1, ePos(j)._2))
+            eidCol(ePos(i)._2, Some(ePos(i)._1)) =!=
+              eidCol(ePos(j)._2, Some(ePos(j)._1)))
           for {
             s <- segs; (fa, fet) <- ePos
-            if fet.tableName == s.et.tableName
+            if fet.tableName == s.hop.et.tableName
           } plan = plan.filter(
-            !array_contains(segEdges(s), fixedEid(fa, fet)))
+            !array_contains(segEdges(s), eidCol(fet, Some(fa))))
           for {
             i <- segs.indices; j <- (i + 1) until segs.length
-            if segs(i).et.tableName == segs(j).et.tableName
+            if segs(i).hop.et.tableName == segs(j).hop.et.tableName
           } plan = plan.filter(
             !arrays_overlap(segEdges(segs(i)), segEdges(segs(j))))
         case PathMode.Acyclic | PathMode.Simple =>
@@ -860,7 +800,7 @@ object GraphTableCompiler {
           // space — refuse loudly (numeric too: an undirected bipartite
           // segment's interior would interleave two tables' raw ids and
           // alias-vs-interior checks would compare across tables).
-          segs.find(s => !s.homo).foreach { _ =>
+          segs.find(s => !s.hop.homogeneous).foreach { _ =>
             throw GraphAnalysisException(
               s"Path mode ${p.mode} over a mixed pattern requires every " +
                 "quantified segment to bind one vertex key space on both " +
@@ -896,18 +836,19 @@ object GraphTableCompiler {
             }
           }
           for {
-            s <- segs; v <- vPos
-            if vertexBindingAt(v).table == s.vtTable
+            s <- segs; e = s.hop.a; v <- vPos
+            if vertexBindingAt(v).table == e.table
           } {
             val vId =
-              if (s.keyNumeric) col(s"$v.${s.refKeys.head}").cast("long")
-              else col(attachAliasRowid(v, s.refKeys,
-                rowidMapping(s.vtTable, s.refKeys)))
+              if (e.numeric) col(s"$v.${e.refKeys.head}").cast("long")
+              else col(attachAliasRowid(v, e.refKeys,
+                rowidMapping(e.table, e.refKeys)))
             plan = plan.filter(!array_contains(segInterior(s), vId))
           }
           for {
             i <- segs.indices; j <- (i + 1) until segs.length
-            if segs(i).vtTable == segs(j).vtTable
+            (ei, ej) = (segs(i).hop.a, segs(j).hop.a)
+            if ei.table == ej.table
           } {
             // interiors compare raw key values (numeric) or dense rowids
             // (composite). Same space: direct overlap. DIFFERENT key
@@ -915,69 +856,22 @@ object GraphTableCompiler {
             // interior into segment i's identity space through the
             // table-row bijection, then compare — identity is the shared
             // physical row, not the declaration.
-            if (segs(i).keyNumeric == segs(j).keyNumeric &&
-                segs(i).refKeys == segs(j).refKeys)
+            if (ei.numeric == ej.numeric && ei.refKeys == ej.refKeys)
               plan = plan.filter(
                 !arrays_overlap(segInterior(segs(i)), segInterior(segs(j))))
             else {
-              val m = spaceBijection(segs(i).vtTable,
-                segs(j).refKeys, segs(j).keyNumeric,
-                segs(i).refKeys, segs(i).keyNumeric)
+              val m = spaceBijection(ei.table,
+                ej.refKeys, ej.numeric, ei.refKeys, ei.numeric)
               val (ci, cj) = (freshName("intr"), freshName("intr"))
               plan = plan.withColumn(ci, segInterior(segs(i)))
                 .withColumn(cj, segInterior(segs(j)))
-              plan = translateIdArray(plan, cj, m)
+              plan = translateIds(plan, cj, m, vertexSlotsOnly = false)
               plan = plan.filter(!arrays_overlap(col(ci), col(cj)))
                 .drop(ci, cj)
             }
           }
         case PathMode.Walk => ()
       }
-    }
-
-    /** Pairwise distinctness filters realizing TRAIL / ACYCLIC / SIMPLE
-      * over an ALL-FIXED pattern (quantified segments enforce their mode
-      * inside the kernel instead): TRAIL = every pair of edge elements
-      * over the same table must bind different physical edges (declared
-      * edge-id or synthetic `__geid`); ACYCLIC = every pair of vertex
-      * elements over the same table must bind different rows; SIMPLE =
-      * ACYCLIC except the first/last pair, which may close a cycle.
-      * Elements over different tables are distinct by construction.
-      * A repeated binding variable collapses to `NOT (x = x)` = false —
-      * exactly the semantics (a `(a)…(a)` cycle is never acyclic). */
-    def applyFixedModeFilters(p: PathPattern, vPos: Seq[String],
-        ePos: Seq[(String, EdgeTable)]): Unit = p.mode match {
-      case PathMode.Trail =>
-        def eid(a: String, et: EdgeTable): Column = et.edgeIdCol match {
-          case Some(c) => requireIntegralEdgeId(et, c); col(s"$a.$c")
-          case None => col(s"$a.__geid")
-        }
-        for {
-          i <- ePos.indices; j <- (i + 1) until ePos.length
-          if ePos(i)._2.tableName == ePos(j)._2.tableName
-        } plan = plan.filter(
-          eid(ePos(i)._1, ePos(i)._2) =!= eid(ePos(j)._1, ePos(j)._2))
-      case PathMode.Acyclic | PathMode.Simple =>
-        for {
-          i <- vPos.indices; j <- (i + 1) until vPos.length
-          // SIMPLE: the endpoints may coincide (closed path)
-          if !(p.mode == PathMode.Simple && i == 0 && j == vPos.length - 1)
-        } {
-          val (bi, bj) = (vertexBindingAt(vPos(i)), vertexBindingAt(vPos(j)))
-          if (bi.table == bj.table) {
-            // different key DECLARATIONS over one table still identify
-            // the same rows: compare on one declaration's key set (both
-            // aliases carry the full row) — requiring that key set to be
-            // unique when the declarations differ (equality on a
-            // non-unique key would over-merge distinct rows)
-            if (bi.keyCols != bj.keyCols)
-              pg.vertexTables.find(_.tableName == bi.table)
-                .foreach(vt => requireUniqueKeys(vt, bi.keyCols))
-            plan = plan.filter(
-              !keysEq(vPos(i), bi.keyCols, vPos(j), bi.keyCols))
-          }
-        }
-      case PathMode.Walk => ()
     }
 
     /** Whole-path search-prefix semantics over a mixed-pattern
@@ -1040,52 +934,12 @@ object GraphTableCompiler {
       * segment's overlapping head vertex, mirroring the reference's
       * `list_concat`/`array_pop_front` assembly (match.cpp:573-616). */
     def processPattern(p0: PathPattern): Unit = {
-      // All-fixed multi-hop patterns under a search prefix that the
-      // pair-dedup kernel route cannot express — TRAIL (needs per-hop
-      // edge identities) and SHORTEST k (needs whole-path ranking) —
-      // are routed through the named-path machinery with a HIDDEN path
-      // variable: plain joins keep every hop's identity, the whole-path
-      // prefix ranking below applies the search semantics, and the
-      // synthetic column is simply never projected. This closes two of
-      // §8's loud-error restrictions (the error text used to tell the
-      // user to bind `p =` themselves).
-      val p: PathPattern = {
-        val allFixed = p0.elements.forall {
-          case e: EdgePattern => e.quantifier.isEmpty
-          case _ => true
-        }
-        val needsHidden = p0.pathVar.isEmpty && p0.prefix.isDefined &&
-          allFixed && p0.elements.length > 3 &&
-          (p0.mode == PathMode.Trail ||
-            p0.prefix.exists {
-              case SearchPrefix.ShortestK(_) => true
-              case _ => false
-            })
-        val p0a = if (needsHidden) p0.copy(pathVar = Some(freshName("hidden")))
-          else p0
-        // a named path over a quantified pattern with no prefix and WALK
-        // mode defaults to ANY SHORTEST — DuckDB's Kleene semantics is
-        // shortest-per-pair (iterativelength), and the reference binds the
-        // named path to that representative (`MATCH p = (a)-[k]->{1,3}(b)`
-        // returns one shortest path per reachable pair,
-        // complex_matching.test:327-340)
-        val hasQuantified = p0a.elements.exists {
-          case e: EdgePattern => e.quantifier.isDefined
-          case _ => false
-        }
-        if (p0a.pathVar.isDefined && p0a.prefix.isEmpty &&
-            p0a.mode == PathMode.Walk && hasQuantified)
-          p0a.copy(prefix = Some(SearchPrefix.AnyShortest))
-        else p0a
-      }
-      val quantifiedEdgeCount = p.elements.count {
-        case e: EdgePattern => e.quantifier.isDefined
-        case _ => false
-      }
-      val needPath = p.pathVar.isDefined &&
-        (p.prefix.isDefined || p.mode != PathMode.Walk ||
-          quantifiedEdgeCount == 0)
-      if (needPath && pathCols.contains(p.pathVar.get))
+      val r = Route.resolve(p0,
+        p0.elements.collect { case e: EdgePattern => e }
+          .map(Hop.resolve(pg, _, numericKey)),
+        spec, freshName("hidden"))
+      val p = r.p
+      if (r.needPath && pathCols.contains(p.pathVar.get))
         throw GraphAnalysisException(
           s"Path variable '${p.pathVar.get}' is bound twice")
       val elems = p.elements
@@ -1104,117 +958,22 @@ object GraphTableCompiler {
       // representatives cannot express "exists a mode-valid combination",
       // so the prefix becomes a whole-path ranking AFTER the mode
       // filters — applyWholePathPrefix).
-      val quantifiedEdges = quantifiedEdgeCount
-      // edge tables of fixed edges bound through a shortest-semantics
-      // kernel (search prefix without a named path, or SHORTEST k) —
-      // those bindings collapse parallel edges and expose no edge
-      // identity, so TRAIL is unenforceable iff a table repeats
-      val fixedKernelTables = scala.collection.mutable.ArrayBuffer.empty[String]
-      enumPrefix = p.mode != PathMode.Walk && p.prefix.isDefined &&
-        quantifiedEdges > 0 && elems.length != 3
       currentModeSegs.clear()
       pendingPathSurrogate = None
       segSpaces.clear()
       segXlates.clear()
-      // SHORTEST k over a MIXED pattern applies PER QUANTIFIED SEGMENT:
-      // each segment contributes its k smallest subpaths given the
-      // endpoint bindings — the same per-subpath composition the
-      // reference's CheckNamedSubpath concatenation defines for ANY
-      // SHORTEST (match.cpp:709-790) — while fixed hops keep ordinary
-      // join multiplicity. Over a single fixed edge (no quantifier) the
-      // kernel still ranks parallel edges (below).
-      val kShortest = p.prefix.collect {
-        case SearchPrefix.ShortestK(kk) => kk
-      }
-      // an ALL-FIXED multi-hop pattern under SHORTEST k has no kernel
-      // anywhere to rank paths (fixed hops keep join multiplicity, the
-      // per-segment composition above), so the k bound would silently
-      // never apply — refuse loudly. A single fixed edge ranks its
-      // parallel edges through the {1,1} kernel (below); mixed patterns
-      // rank inside their quantified segments.
-      // SHORTEST k over a multi-hop all-fixed pattern rides the
-      // named-path whole-path ranking (explicit or hidden variable —
-      // see the hidden-path rewrite above), so no refusal remains here.
-      // pre-scan: will any fixed hop take the fixedSegment route with a
-      // composite / non-numeric key space? Exposing quantified segments
-      // must then defer their surrogate translation so fixed and
-      // quantified segments concatenate in one (dense-rowid) type space.
-      deferFixedSurrogates = (needPath || enumPrefix) && {
-        var i = 1
-        var found = false
-        while (i < elems.length && !found) {
-          val ep = elems(i).asInstanceOf[EdgePattern]
-          if (ep.quantifier.isEmpty &&
-              !(kShortest.isDefined && elems.length == 3)) {
-            val et = resolveEdge(ep.varName.getOrElse("(edge)"), ep.label)
-            val (aK, bK, aV, bV) = ep.direction match {
-              case EdgeDirection.Left =>
-                (et.dstRefKeys, et.srcRefKeys,
-                  pg.vertexLabel(et.dstLabel), pg.vertexLabel(et.srcLabel))
-              case _ =>
-                (et.srcRefKeys, et.dstRefKeys,
-                  pg.vertexLabel(et.srcLabel), pg.vertexLabel(et.dstLabel))
-            }
-            found = !(aK.length == 1 && numericKey(aV, aK.head)) ||
-              !(bK.length == 1 && numericKey(bV, bK.head))
-          }
-          i += 2
-        }
-        found
-      }
-      // pre-scan: does the pattern's exposed path span MORE THAN ONE
-      // vertex-key space, at least one of them composite/non-numeric?
-      // Then no single translation (nor a raw long array) can represent
-      // the combined column, and each segment translates through its own
-      // space — the per-segment-translation route (segXlates recipes).
-      perSegSurrogates = (needPath || enumPrefix) && pathExposed(p) && {
-        val spaces =
-          scala.collection.mutable.Set[(String, Seq[String], Boolean)]()
-        var i = 1
-        while (i < elems.length) {
-          val ep = elems(i).asInstanceOf[EdgePattern]
-          val et = resolveEdge(ep.varName.getOrElse("(edge)"), ep.label)
-          val (aK, bK, aV, bV) = ep.direction match {
-            case EdgeDirection.Left =>
-              (et.dstRefKeys, et.srcRefKeys,
-                pg.vertexLabel(et.dstLabel), pg.vertexLabel(et.srcLabel))
-            case _ =>
-              (et.srcRefKeys, et.dstRefKeys,
-                pg.vertexLabel(et.srcLabel), pg.vertexLabel(et.dstLabel))
-          }
-          spaces += ((aV.tableName, aK,
-            aK.length == 1 && numericKey(aV, aK.head)))
-          spaces += ((bV.tableName, bK,
-            bK.length == 1 && numericKey(bV, bK.head)))
-          i += 2
-        }
-        spaces.exists(!_._3) && spaces.map(s => (s._1, s._2)).size > 1
-      }
-      // per-position alias info for the fixed-pattern mode filters
+      // per-position alias info for the mode filters
       val modeVertexPos = scala.collection.mutable.ArrayBuffer[String]()
       val modeEdgePos =
         scala.collection.mutable.ArrayBuffer[(String, EdgeTable)]()
       // a label-less head vertex resolves from the first edge's endpoint
-      val headHint: Option[String] = elems.lift(1)
-        .collect { case e: EdgePattern => e }
-        .flatMap { e =>
-          e.label.map(l => pg.edgeLabel(l))
-            .orElse(if (pg.edgeTables.length == 1) Some(pg.edgeTables.head)
-              else None)
-            .map(et => e.direction match {
-              case EdgeDirection.Left => et.dstLabel
-              case _                  => et.srcLabel
-            })
-        }
       var prevV = bindVertex(elems.head.asInstanceOf[VertexPattern], None,
-        headHint)
+        r.hops.headOption.map(_.a.vt.label))
       modeVertexPos += prevV
 
       val segCols = scala.collection.mutable.ArrayBuffer[Column]()
-      var i = 1
-      while (i < elems.length) {
-        val ep = elems(i).asInstanceOf[EdgePattern]
-        val vp = elems(i + 1).asInstanceOf[VertexPattern]
+      r.hops.zipWithIndex.foreach { case (h, k) =>
+        val vp = elems(2 * k + 2).asInstanceOf[VertexPattern]
 
         // TRAIL over a bidirectional FIXED edge: the traversed edge is the
         // FORWARD orientation's row (its eid sits in modeEdgePos via the
@@ -1225,64 +984,29 @@ object GraphTableCompiler {
         // reverse rows remain parallel distinct edges (bb2c319 semantics):
         // 0-3-0 over a 2-cycle IS a trail (two distinct stored rows), while
         // 0-3-0-3 repeats the forward row and is not.
-        if (ep.quantifier.isDefined ||
-            (kShortest.isDefined && elems.length == 3)) {
-          // single-edge SHORTEST k routes even a fixed hop through the
-          // kernel ({1,1}) — the plain join would emit ALL parallel
-          // edges, not the top k. (In a mixed pattern a fixed hop keeps
-          // join multiplicity: per-segment SHORTEST k semantics.)
-          if (ep.quantifier.isEmpty)
-            fixedKernelTables +=
-              resolveEdge(ep.varName.getOrElse("(edge)"), ep.label).tableName
-          val (bAlias, pcol) = bindPathEdge(p, ep, vp, prevV)
+        if (r.viaKernel(h)) {
+          val (bAlias, pcol) = bindPathEdge(r, h, vp, prevV)
           pcol.foreach(c => segCols += col(c))
           prevV = bAlias
-        } else if (needPath || enumPrefix) {
+        } else if (r.segments) {
           // fixed hop inside a named path (or the enumPrefix route, whose
           // whole-path ranking needs every hop's segment even without a
           // path variable): ordinary join (multiplicity preserved, like
           // the reference's list_value over plain aliases) plus its
           // 3-element path segment
           val aAlias = prevV
-          val (bAlias, eAlias, et) =
-            bindFixedEdgeEx(ep, vp, prevV, withEid = true)
-          segCols += fixedSegment(p, ep, et, aAlias, eAlias, bAlias)
-          modeEdgePos += ((eAlias, et))
+          val (bAlias, eAlias) = bindFixedEdge(h, vp, prevV, withEid = true)
+          segCols += fixedSegment(r, h, aAlias, eAlias, bAlias)
+          modeEdgePos += ((eAlias, h.et))
           prevV = bAlias
-        } else if (p.prefix.isDefined) {
-          // prefix without a path variable: shortest semantics dedup pairs.
-          // A hop whose endpoints live in DIFFERENT key spaces (distinct
-          // vertex tables or key columns) must NOT ride the kernel — one
-          // shared id space would conflate e.g. Person 0 with School 0 and
-          // the visited set would drop the real pair (shortest_path.test:37
-          // `ANY SHORTEST (a:Person)-[s:StudyAt]->(b:School)`). The
-          // reference only plans path-finding for quantified patterns
-          // (match.cpp:673-707), so a heterogeneous fixed hop under a
-          // prefix is a plain join there too.
-          val et0 = resolveEdge(ep.varName.getOrElse("(edge)"), ep.label)
-          val sameSpace =
-            pg.vertexLabel(et0.srcLabel).tableName ==
-              pg.vertexLabel(et0.dstLabel).tableName &&
-            et0.srcRefKeys.map(_.toLowerCase) ==
-              et0.dstRefKeys.map(_.toLowerCase)
-          if (sameSpace) {
-            fixedKernelTables += et0.tableName
-            val (bAlias, _) = bindPathEdge(p, ep, vp, prevV)
-            prevV = bAlias
-          } else {
-            val (bAlias, eAlias, et) = bindFixedEdgeEx(ep, vp, prevV,
-              withEid = p.mode == PathMode.Trail)
-            modeEdgePos += ((eAlias, et))
-            prevV = bAlias
-          }
         } else {
-          val (bAlias, eAlias, et) = bindFixedEdgeEx(ep, vp, prevV,
-            withEid = p.mode == PathMode.Trail, allowFuse = true)
-          modeEdgePos += ((eAlias, et))
+          val (bAlias, eAlias) = bindFixedEdge(h, vp, prevV,
+            withEid = p.mode == PathMode.Trail,
+            allowFuse = p.prefix.isEmpty)
+          modeEdgePos += ((eAlias, h.et))
           prevV = bAlias
         }
         modeVertexPos += prevV
-        i += 2
       }
       // all-fixed: pairwise filters, but only when NO kernel saw the
       // pattern (a kernel enforces the mode itself, including the
@@ -1290,43 +1014,40 @@ object GraphTableCompiler {
       // wrongly kill). Mixed enumeration: cross-element filters over the
       // segment arrays (single-segment enumeration stays kernel-only).
       if (p.mode != PathMode.Walk) {
-        if (quantifiedEdges == 0) {
-          // TRAIL needs every edge's identity; shortest-semantics
-          // bindings expose none — refuse loudly rather than silently
-          // degrading to WALK. Vertex modes (ACYCLIC/SIMPLE) only compare
-          // vertex aliases, which every binding route preserves, so their
-          // filters apply under any prefix.
-          // only a REPEATED table makes TRAIL non-vacuous: hops on
-          // distinct edge tables can never bind the same physical edge
-          if (p.mode == PathMode.Trail &&
-              fixedKernelTables.groupBy(identity).exists(_._2.length >= 2))
-            throw GraphAnalysisException(
-              "TRAIL over an all-fixed pattern under a search prefix " +
-                "collapses edge identities — bind a named path variable " +
-                "(p = ANY SHORTEST …) or drop the prefix")
-          applyFixedModeFilters(p, modeVertexPos.toSeq, modeEdgePos.toSeq)
-        }
-        else if ((p.prefix.isEmpty || enumPrefix) && elems.length != 3)
-          applyMixedModeFilters(p, modeVertexPos.toSeq, modeEdgePos.toSeq,
+        // TRAIL needs every edge's identity; shortest-semantics bindings
+        // expose none — refuse loudly rather than silently degrading to
+        // WALK. Vertex modes (ACYCLIC/SIMPLE) only compare vertex
+        // aliases, which every binding route preserves, so their filters
+        // apply under any prefix. Only a REPEATED table makes TRAIL
+        // non-vacuous: hops on distinct edge tables can never bind the
+        // same physical edge.
+        if (r.quantified == 0 && p.mode == PathMode.Trail &&
+            r.hops.filter(r.viaKernel).groupBy(_.et.tableName)
+              .exists(_._2.length >= 2))
+          throw GraphAnalysisException(
+            "TRAIL over an all-fixed pattern under a search prefix " +
+              "collapses edge identities — bind a named path variable " +
+              "(p = ANY SHORTEST …) or drop the prefix")
+        if (r.quantified == 0 ||
+            ((p.prefix.isEmpty || r.enumPrefix) && r.hops.length != 1))
+          applyModeFilters(p, modeVertexPos.toSeq, modeEdgePos.toSeq,
             currentModeSegs.toSeq)
       }
 
-      if (needPath || enumPrefix) {
-        if (needPath && segCols.isEmpty)
+      if (r.segments) {
+        if (r.needPath && segCols.isEmpty)
           throw GraphAnalysisException(
             s"Named path '${p.pathVar.get}' must contain at least one edge")
         // a translated (dense-rowid) space cannot share the combined
         // array with any other space — refuse BEFORE the concat so the
         // user sees semantics, not a type error
-        checkOneTranslatedSpace(p)
+        checkOneTranslatedSpace(r)
         def popFrontConcat(acc: Column, seg: Column): Column =
           // drop the segment's head vertex (shared with the previous
           // segment's tail) — array_pop_front analogue
           concat(acc, slice(seg, lit(2), greatest(size(seg) - 1, lit(0))))
-        val needRank = enumPrefix ||
-          (needPath && p.prefix.isDefined && quantifiedEdges == 0)
         val combined =
-          if (perSegSurrogates && needRank) {
+          if (r.perSeg && r.needRank) {
             // ranking needs CANONICAL vertex identities: with segments in
             // different key spaces of one table, raw mixed-space longs
             // could collide (a dense rowid equals an unrelated raw key)
@@ -1342,15 +1063,14 @@ object GraphTableCompiler {
               s"segment records out of sync: ${segXlates.length} != " +
                 s"${segCols.length}")
             val spacesInOrder = segXlates.toSeq.flatMap {
-              case FixedRec(_, _, at, ak, an, _, _, bt, bk, bn) =>
-                Seq((at, ak, an), (bt, bk, bn))
-              case QuantRec(_, t, k, n, _) => Seq((t, k, n))
+              case FixedRec(_, _, a, _, _, b) => Seq(a, b)
+              case QuantRec(_, e, _) => Seq(e)
             }
             val canon: Map[String, (Seq[String], Boolean)] =
-              spacesInOrder.groupBy(_._1).map { case (t, ss) =>
-                val pick = ss.find(_._3).map(s => (s._2, true))
-                  .getOrElse((ss.head._2, false))
-                if (ss.map(s => (s._2, s._3)).distinct.length > 1)
+              spacesInOrder.groupBy(_.table).map { case (t, ss) =>
+                val pick = ss.find(_.numeric).map(e => (e.refKeys, true))
+                  .getOrElse((ss.head.refKeys, false))
+                if (ss.map(e => (e.refKeys, e.numeric)).distinct.length > 1)
                   pg.vertexTables.find(_.tableName == t)
                     .foreach(vt => requireUniqueKeys(vt, pick._1))
                 t -> pick
@@ -1362,16 +1082,17 @@ object GraphTableCompiler {
                 rowidMapping(table, ck)))
             }
             val rankSegs: Seq[Column] = segXlates.toSeq.map {
-              case FixedRec(_, aa, at, _, _, eid, ba, bt, _, _) =>
-                array(aliasCanonId(aa, at), eid, aliasCanonId(ba, bt))
-              case QuantRec(name, t, k, n, _) =>
-                val (ck, cn) = canon(t)
-                if (ck == k && cn == n) col(name)
+              case FixedRec(_, aa, a, eid, ba, b) =>
+                array(aliasCanonId(aa, a.table), eid,
+                  aliasCanonId(ba, b.table))
+              case QuantRec(name, e, _) =>
+                val (ck, cn) = canon(e.table)
+                if (ck == e.refKeys && cn == e.numeric) col(name)
                 else {
                   val tmp = freshName("rankseg")
                   plan = plan.withColumn(tmp, col(name))
-                  plan = translateVertexSlots(plan, tmp,
-                    spaceBijection(t, k, n, ck, cn))
+                  plan = translateIds(plan, tmp, spaceBijection(e.table,
+                    e.refKeys, e.numeric, ck, cn), vertexSlotsOnly = true)
                   col(tmp)
                 }
             }
@@ -1388,9 +1109,9 @@ object GraphTableCompiler {
         // and no kernel ranked anything, so ANY SHORTEST / SHORTEST k
         // must pick per endpoint pair here (reference pair semantics;
         // previously these rows kept raw join multiplicity)
-        if (needRank)
+        if (r.needRank)
           applyWholePathPrefix(p, pcol, modeVertexPos.toSeq)
-        if (perSegSurrogates) {
+        if (r.perSeg) {
           // per-segment-translation route (segments span several key
           // spaces): mode filters and ranking consumed the long-typed
           // arrays above; now each segment becomes its string-surrogate
@@ -1403,13 +1124,13 @@ object GraphTableCompiler {
             s"segment translation recipes out of sync: ${segXlates.length}" +
               s" != ${segCols.length}")
           val strSegs = segXlates.toSeq.map {
-            case FixedRec(strArr, _, _, _, _, _, _, _, _, _) => strArr
-            case QuantRec(name, _, _, true, _) =>
+            case FixedRec(strArr, _, _, _, _, _) => strArr
+            case QuantRec(name, e, _) if e.numeric =>
               transform(col(name), _.cast("string"))
-            case QuantRec(name, _, _, false, Some((ids, n))) =>
+            case QuantRec(name, _, Some((ids, n))) =>
               plan = surrogatizeArrayCol(plan, name, ids, n)
               col(name)
-            case QuantRec(name, _, _, false, None) =>
+            case QuantRec(name, _, None) =>
               throw new IllegalStateException(
                 s"composite segment '$name' lost its mapping")
           }
@@ -1433,7 +1154,7 @@ object GraphTableCompiler {
         // rowid-less resolvers keep declared keys.
         if (spark.conf.getOption("spark.graft.pathArrayRowids")
               .exists(_.equalsIgnoreCase("true")) &&
-            !perSegSurrogates && pendingPathSurrogate.isEmpty) {
+            !r.perSeg && pendingPathSurrogate.isEmpty) {
           val spaces = segSpaces.toSeq.distinct
           if (spaces.length == 1 && spaces.head._3) {
             val (tbl, keys, _) = spaces.head
@@ -1442,7 +1163,7 @@ object GraphTableCompiler {
               val bij = src.select(
                 col(keys.head).cast("long").as("__from"),
                 col("__rowid").cast("long").as("__to"))
-              plan = translateVertexSlots(plan, pcol, bij)
+              plan = translateIds(plan, pcol, bij, vertexSlotsOnly = true)
             }
           }
         }
@@ -1457,37 +1178,22 @@ object GraphTableCompiler {
       * [[withDenseEid]]) — the same id the quantified kernel uses, so mixed
       * fixed/quantified segments stay consistent and parallel edges stay
       * distinct. */
-    def fixedSegment(p: PathPattern, ep: EdgePattern, et: EdgeTable,
-        aAlias: String, eAlias: String, bAlias: String): Column = {
-      val (aKeys, bKeys, aVt, bVt) = ep.direction match {
-        case EdgeDirection.Left =>
-          (et.dstRefKeys, et.srcRefKeys,
-            pg.vertexLabel(et.dstLabel), pg.vertexLabel(et.srcLabel))
-        case _ =>
-          (et.srcRefKeys, et.dstRefKeys,
-            pg.vertexLabel(et.srcLabel), pg.vertexLabel(et.dstLabel))
-      }
-      val eid: Column = et.edgeIdCol match {
-        case Some(c) =>
-          requireIntegralEdgeId(et, c)
-          col(s"$eAlias.$c").cast("long")
-        case None => col(s"$eAlias.__geid")
-      }
-      val aNum = aKeys.length == 1 && numericKey(aVt, aKeys.head)
-      val bNum = bKeys.length == 1 && numericKey(bVt, bKeys.head)
+    def fixedSegment(r: Route, h: Hop, aAlias: String, eAlias: String,
+        bAlias: String): Column = {
+      val (a, b) = (h.a, h.b)
+      val eid = eidCol(h.et, Some(eAlias))
       // a fixed hop's string and canonical ranking forms need no mapping
       // join: the aliases already carry every column of their table
       // (only consulted on the per-segment-translation route)
       segXlates += FixedRec(
-        array(aliasSurr(aAlias, aKeys), eid.cast("string"),
-          aliasSurr(bAlias, bKeys)),
-        aAlias, aVt.tableName, aKeys, aNum, eid,
-        bAlias, bVt.tableName, bKeys, bNum)
-      if (aNum && bNum) {
-        segSpaces += ((aVt.tableName, aKeys, true))
-        segSpaces += ((bVt.tableName, bKeys, true))
-        array(col(s"$aAlias.${aKeys.head}").cast("long"), eid,
-          col(s"$bAlias.${bKeys.head}").cast("long"))
+        array(aliasSurr(aAlias, a.refKeys), eid.cast("string"),
+          aliasSurr(bAlias, b.refKeys)),
+        aAlias, a, eid, bAlias, b)
+      if (a.numeric && b.numeric) {
+        segSpaces += ((a.table, a.refKeys, true))
+        segSpaces += ((b.table, b.refKeys, true))
+        array(col(s"$aAlias.${a.refKeys.head}").cast("long"), eid,
+          col(s"$bAlias.${b.refKeys.head}").cast("long"))
       } else {
         // composite / non-numeric keys ride dense rowids — the same
         // memoized mapping the quantified kernels use. Each SIDE uses its
@@ -1498,39 +1204,31 @@ object GraphTableCompiler {
         // to the whole-path ranking (deterministic either way) — exposure
         // of a bridging hop always rides the per-segment route, where the
         // string form above is exact
-        def sideId(alias: String, keys: Seq[String], vt: VertexTable,
-            num: Boolean): Column =
-          if (num) {
-            segSpaces += ((vt.tableName, keys, true))
-            col(s"$alias.${keys.head}").cast("long")
+        def sideId(alias: String, e: End): Column =
+          if (e.numeric) {
+            segSpaces += ((e.table, e.refKeys, true))
+            col(s"$alias.${e.refKeys.head}").cast("long")
           } else {
-            val ids = rowidMapping(vt.tableName, keys)
-            segSpaces += ((vt.tableName, keys, false))
-            if (pathExposed(p) && !perSegSurrogates)
-              registerPendingSurrogate(ids, keys.length, vt.tableName, keys)
-            col(attachAliasRowid(alias, keys, ids))
+            val ids = rowidMapping(e.table, e.refKeys)
+            segSpaces += ((e.table, e.refKeys, false))
+            if (r.exposed && !r.perSeg)
+              registerPendingSurrogate(ids, e.refKeys.length, e.table,
+                e.refKeys)
+            col(attachAliasRowid(alias, e.refKeys, ids))
           }
-        array(sideId(aAlias, aKeys, aVt, aNum), eid,
-          sideId(bAlias, bKeys, bVt, bNum))
+        array(sideId(aAlias, a), eid, sideId(bAlias, b))
       }
     }
 
     /** Fixed-length edge hop: explicit equi-joins per direction
-      * (reference A2-A5, match.cpp:365-444). */
-    def bindFixedEdge(ep: EdgePattern, vp: VertexPattern,
-        aAlias: String): String =
-      bindFixedEdgeEx(ep, vp, aAlias)._1
-
-    /** As [[bindFixedEdge]], additionally returning the edge alias and
-      * resolved edge table (needed for named-path segment assembly).
-      * `withEid` attaches the synthetic dense edge id (`__geid`) when the
-      * table declares no edgeIdCol — named-path hops only. */
-    def bindFixedEdgeEx(ep: EdgePattern, vp: VertexPattern,
-        aAlias: String, withEid: Boolean = false,
-        allowFuse: Boolean = false)
-        : (String, String, EdgeTable) = {
+      * (reference A2-A5, match.cpp:365-444); returns the far vertex's and
+      * the edge's aliases. `withEid` attaches the synthetic dense edge id
+      * (`__geid`) when the table declares no edgeIdCol — named-path and
+      * TRAIL hops only. */
+    def bindFixedEdge(h: Hop, vp: VertexPattern, aAlias: String,
+        withEid: Boolean, allowFuse: Boolean = false): (String, String) = {
+      val (ep, et) = (h.ep, h.et)
       val eName = ep.varName.getOrElse(freshName("e"))
-      val et = resolveEdge(eName, ep.label)
       if (bindings.contains(eName))
         throw GraphAnalysisException(s"Edge variable '$eName' is bound twice")
       bindings(eName) = Binding(eName, isVertex = false, et.tableName)
@@ -1540,73 +1238,44 @@ object GraphTableCompiler {
         else resolver(spark, et.tableName))
       val baseDF = edgeSubFilter(table, et, ep.label)
       val eDF0 = ep.direction match {
-        case EdgeDirection.Undirected => undirectedView(baseDF, et)
+        case EdgeDirection.Undirected => undirectedView(baseDF, h)
         case _                        => baseDF
       }
       var eDF = eDF0.alias(eName)
       ep.where.foreach(w => eDF = eDF.filter(expr(w)))
 
-      // join edge to the already-bound vertex a
-      val (condA: Column, aRefKeys: Seq[String]) = ep.direction match {
-        case EdgeDirection.Left =>
-          (keysEq(eName, et.dstKeys, aAlias, et.dstRefKeys), et.dstRefKeys)
-        case _ => // Right / Undirected / Both: a is the source side
-          (keysEq(eName, et.srcKeys, aAlias, et.srcRefKeys), et.srcRefKeys)
-      }
-      // broadcast-side choice + footprint upkeep: the edge join cannot
-      // multiply plan rows iff every plan row is a distinct a-table row
-      // (chainUnique) and the a-table is unique on the joined ref keys
+      // join edge to the already-bound vertex a; broadcast-side choice +
+      // footprint upkeep: the edge join cannot multiply plan rows iff
+      // every plan row is a distinct a-table row (chainUnique) and the
+      // a-table is unique on the joined ref keys
       val eBytes = ep.direction match {
-        case EdgeDirection.Right | EdgeDirection.Left =>
-          tableFootprintBytes(et.tableName)
-        case _ => -1L // undirected/both views double/semi-join the table
+        case EdgeDirection.Undirected | EdgeDirection.Both =>
+          -1L // undirected/both views double/semi-join the table
+        case _ => tableFootprintBytes(et.tableName)
       }
-      sizedJoin(eDF, condA, eBytes)
+      sizedJoin(eDF, keysEq(eName, h.a.edgeKeys, aAlias, h.a.refKeys), eBytes)
       val chainUniqueHere = chainUniqueThunk // this hop's epoch
       advanceFootprint(eBytes, chainUniqueHere() && {
         val aTable = vertexBindingAt(aAlias).table
-        !hasDuplicateKeysTable(aTable, aRefKeys)
+        !hasDuplicateKeysTable(aTable, h.a.refKeys)
       })
 
-      // join vertex b with the edge's other side
-      val condB: String => Column = ep.direction match {
-        case EdgeDirection.Left =>
-          b => keysEq(eName, et.srcKeys, b, et.srcRefKeys)
-        case _ =>
-          b => keysEq(eName, et.dstKeys, b, et.dstRefKeys)
-      }
-      val bHint = ep.direction match {
-        case EdgeDirection.Left => et.srcLabel
-        case _                  => et.dstLabel
-      }
-      // identity-fusion candidate for the far vertex: the edge's b-side
-      // endpoint/reference keys (never for Undirected — its view swaps
-      // key columns, so the edge row is not the vertex row)
+      // join vertex b with the edge's other side. Identity-fusion
+      // candidate for the far vertex: the edge's b-side endpoint/reference
+      // keys (never for Undirected — its view swaps key columns, so the
+      // edge row is not the vertex row)
       val fuseInfo =
         if (allowFuse && ep.direction != EdgeDirection.Undirected)
-          Some((eName, et.tableName,
-            if (ep.direction == EdgeDirection.Left) et.srcKeys
-            else et.dstKeys,
-            if (ep.direction == EdgeDirection.Left) et.srcRefKeys
-            else et.dstRefKeys))
+          Some((eName, et.tableName, h.b.edgeKeys, h.b.refKeys))
         else None
-      val bRefKeys = ep.direction match {
-        case EdgeDirection.Left => et.srcRefKeys
-        case _                  => et.dstRefKeys
-      }
-      val bAlias = bindVertex(vp, Some(condB), Some(bHint), fuseInfo,
-        boundRefKeys = Some(bRefKeys))
+      val bAlias = bindVertex(vp,
+        Some(b => keysEq(eName, h.b.edgeKeys, b, h.b.refKeys)),
+        Some(h.b.vt.label), fuseInfo, boundRefKeys = Some(h.b.refKeys))
       // the NEXT hop's join key is b's: plan rows stay distinct b-table
       // rows only when this edge's far-endpoint columns are unique on
       // the edge table (no fan-in) — the probe defers until a later hop
       // actually consults the bound (a terminal hop never pays it)
-      chainUniqueLazy(() => {
-        val bEdgeKeys = ep.direction match {
-          case EdgeDirection.Left => et.srcKeys
-          case _                  => et.dstKeys
-        }
-        !hasDuplicateKeysTable(et.tableName, bEdgeKeys)
-      })
+      chainUniqueLazy(() => !hasDuplicateKeysTable(et.tableName, h.b.edgeKeys))
 
       // Bidirectional `<-[e]->`: additionally join a second copy of the edge
       // table in the reverse direction (reference `EdgeTypeLeftRight`
@@ -1625,16 +1294,16 @@ object GraphTableCompiler {
         setPlanFootprint(-1L) // parallel reverse edges can multiply rows
         setChainUnique(false)
       }
-      (bAlias, eName, et)
+      (bAlias, eName)
     }
 
     /** Variable-length / shortest-path hop: compute a (src, dst, dist[, path])
       * DataFrame with the BFS kernel and join it between a and b — the
       * Spark-plan mirror of reference `AddPathFinding` match.cpp:673-707 and
       * `CheckNamedSubpath`/shortest-path CTE :709-790. */
-    def bindPathEdge(p: PathPattern, ep: EdgePattern, vp: VertexPattern,
+    def bindPathEdge(r: Route, h: Hop, vp: VertexPattern,
         aAlias: String): (String, Option[String]) = {
-      val et = resolveEdge(ep.varName.getOrElse("(edge)"), ep.label)
+      val (p, ep, et, a, b) = (r.p, h.ep, h.et, h.a, h.b)
       val q = ep.quantifier.getOrElse(Quantifier(1, Some(1)))
       // reference guard (match.cpp:100-104, subpath_match.test): an
       // unbounded quantifier without a search prefix enumerates ALL
@@ -1646,21 +1315,9 @@ object GraphTableCompiler {
           "ALL unbounded with path mode WALK is not possible as this " +
             "could lead to infinite results. Consider specifying an " +
             "upper bound or path mode other than WALK")
-      val needPath = p.pathVar.isDefined &&
-        (p.prefix.isDefined || p.mode != PathMode.Walk)
-      // enumeration (non-WALK mode without a prefix, or the enumPrefix
-      // route where the prefix ranks whole paths afterwards): one row PER
-      // mode-valid path; ALL SHORTEST: one row per shortest path. Both
-      // need edge identity for the arrays / TRAIL checks.
-      val isEnum = p.mode != PathMode.Walk &&
-        (p.prefix.isEmpty || enumPrefix)
-      val isAllShortest = p.prefix.contains(SearchPrefix.AllShortest)
-      val kOpt = p.prefix.collect { case SearchPrefix.ShortestK(kk) => kk }
-      val needEid = needPath || isEnum || isAllShortest || kOpt.isDefined
 
-      // Traversal endpoints. For a Left edge `(a)<-[e]-(b)` the pattern's
-      // `a` sits on the edge's DESTINATION side (the traversal follows
-      // reversed edges), so the key roles swap — the synthetic dense edge
+      // Traversal endpoints: for a Left edge the traversal follows
+      // reversed edges ([[Hop.resolve]]) — the synthetic dense edge
       // id (`__geid`, [[withDenseEid]]) is attached to the row before any
       // direction handling, so it is orientation-independent and matches
       // what a fixed hop over the same physical edge emits.
@@ -1673,23 +1330,14 @@ object GraphTableCompiler {
       // doubling, exactly like bindFixedEdge, so the predicate sees both
       // orientations.
       val eName = ep.varName.getOrElse(freshName("e"))
-      val baseTable = if (needEid && et.edgeIdCol.isEmpty) withDenseEid(et)
+      val baseTable = if (r.needEid && et.edgeIdCol.isEmpty) withDenseEid(et)
         else resolver(spark, et.tableName)
       val edgesRaw = edgeSubFilter(baseTable, et, ep.label)
       def applyWhere(df: DataFrame): DataFrame =
         ep.where.foldLeft(df.alias(eName))((d, w) => d.filter(expr(w)))
-      val (aEdgeKeys, bEdgeKeys, aVt, aRefKeys, bVt, bRefKeys) =
-        ep.direction match {
-          case EdgeDirection.Left =>
-            (et.dstKeys, et.srcKeys, pg.vertexLabel(et.dstLabel),
-              et.dstRefKeys, pg.vertexLabel(et.srcLabel), et.srcRefKeys)
-          case _ =>
-            (et.srcKeys, et.dstKeys, pg.vertexLabel(et.srcLabel),
-              et.srcRefKeys, pg.vertexLabel(et.dstLabel), et.dstRefKeys)
-        }
       val edges = ep.direction match {
         case EdgeDirection.Undirected =>
-          applyWhere(undirectedView(edgesRaw, et))
+          applyWhere(undirectedView(edgesRaw, h))
         case EdgeDirection.Both =>
           // a bidirectional step exists iff BOTH orientations exist — the
           // quantified extension of fixed-hop `<-[e]->` (reference
@@ -1701,10 +1349,7 @@ object GraphTableCompiler {
           // fixed-hop form would multiply rows, the kernel keeps one —
           // documented divergence). Requires one key space, like
           // undirected.
-          val sVt2 = pg.vertexLabel(et.srcLabel)
-          val dVt2 = pg.vertexLabel(et.dstLabel)
-          if (sVt2.tableName != dVt2.tableName ||
-              et.srcRefKeys != et.dstRefKeys)
+          if (!h.homogeneous)
             throw GraphAnalysisException(
               s"Bidirectional edge '${et.label}' requires source and " +
                 "destination to reference the same vertex table and keys")
@@ -1738,28 +1383,22 @@ object GraphTableCompiler {
       // the reference gets both cases for free because its kernels run on
       // physical rowids and CSR construction maps PK/FK tuples to them
       // (compressed_sparse_row.cpp:194-204,238-250).
-      val keyIsNumeric = aRefKeys.length == 1 && bRefKeys.length == 1 &&
-        numericKey(aVt, aRefKeys.head) && numericKey(bVt, bRefKeys.head)
+      val keyIsNumeric = a.numeric && b.numeric
 
       // the reference's CSR build refuses duplicate vertex keys for
       // path-finding queries (csr_creation.cpp:121-125,
       // non-unique-vertices.test:36-75) — a kernel over a non-injective
       // key space silently collapses duplicates, so raise the same loud
       // error. Fixed-hop joins (no kernel) legitimately keep duplicates.
-      requireUniqueKeys(aVt, aRefKeys)
-      requireUniqueKeys(bVt, bRefKeys)
+      requireUniqueKeys(a.vt, a.refKeys)
+      requireUniqueKeys(b.vt, b.refKeys)
 
       // declared edge identity rides into the kernels so path arrays carry
       // real edge ids (reference rowid analogue); otherwise the synthetic
-      // dense id attached by withDenseEid. Declared ids must be numeric —
-      // casting a string id to long would silently null every eid.
-      val eidCols: Seq[Column] = et.edgeIdCol match {
-        case Some(c) =>
-          requireIntegralEdgeId(et, c)
-          Seq(col(c).cast("long").as("eid"))
-        case None if needEid => Seq(col("__geid").as("eid"))
-        case None => Nil
-      }
+      // dense id attached by withDenseEid
+      val eidCols: Seq[Column] =
+        if (et.edgeIdCol.isDefined || r.needEid) Seq(eidCol(et, None).as("eid"))
+        else Nil
       // surrogate translation for exposed path arrays over composite /
       // non-numeric keys (set in the rowid branch below): identity
       // elsewhere
@@ -1772,13 +1411,13 @@ object GraphTableCompiler {
       var joinedExtraBytes = 0L
       val (edgeList, seedList, fromRowid) =
         if (keyIsNumeric) {
-          (edges.select(Seq(col(aEdgeKeys.head).cast("long").as("src"),
-            col(bEdgeKeys.head).cast("long").as("dst")) ++ eidCols: _*),
-            plan.select(col(s"$aAlias.${aRefKeys.head}").cast("long")
+          (edges.select(Seq(col(a.edgeKeys.head).cast("long").as("src"),
+            col(b.edgeKeys.head).cast("long").as("dst")) ++ eidCols: _*),
+            plan.select(col(s"$aAlias.${a.refKeys.head}").cast("long")
               .as("id")).distinct(),
             identity[DataFrame] _)
         } else {
-          if (aVt.tableName != bVt.tableName || aRefKeys != bRefKeys)
+          if (!h.homogeneous)
             throw GraphAnalysisException(
               "variable-length paths over composite or non-numeric keys " +
                 "require source and destination vertices from the same " +
@@ -1794,15 +1433,15 @@ object GraphTableCompiler {
           // kernel; ENUMERATION segments must stay long-typed for the
           // cross-element mode filters, so their translation is deferred
           // to the concatenated path column (processPattern).
-          val exposing = needPath && pathExposed(p)
+          val exposing = r.needPath && r.exposed
           // shared dense-rowid space (memoized — fixed hops and mode
           // filters over the same (table, keys) use the SAME mapping)
-          val ids = rowidMapping(aVt.tableName, aRefKeys)
+          val ids = rowidMapping(a.table, a.refKeys)
           // edge-side key structs cast field-wise to the vertex key types
           // so the struct equality is exact (e.g. INT edge FK vs BIGINT
           // vertex PK)
-          val vKeyTypes = aRefKeys.map(k =>
-            fieldType(resolver(spark, aVt.tableName), k))
+          val vKeyTypes = a.refKeys.map(k =>
+            fieldType(resolver(spark, a.table), k))
           def edgeKeyStruct(cols: Seq[String]): Column =
             struct(cols.zipWithIndex.map { case (c, i) =>
               col(c).cast(vKeyTypes(i)).as(s"_k$i")
@@ -1811,36 +1450,36 @@ object GraphTableCompiler {
           // columns are literally named src/dst
           val e = edges
             .join(ids.select(col("__raw"), col("__rowid").as("__gsrc")),
-              edgeKeyStruct(aEdgeKeys) === col("__raw")).drop("__raw")
+              edgeKeyStruct(a.edgeKeys) === col("__raw")).drop("__raw")
             .join(ids.select(col("__raw"), col("__rowid").as("__gdst")),
-              edgeKeyStruct(bEdgeKeys) === col("__raw")).drop("__raw")
+              edgeKeyStruct(b.edgeKeys) === col("__raw")).drop("__raw")
             .select(Seq(col("__gsrc").as("src"),
               col("__gdst").as("dst")) ++ eidCols: _*)
           val sd = plan
-            .select(keyStruct(aRefKeys, Some(aAlias)).as("__raw")).distinct()
+            .select(keyStruct(a.refKeys, Some(aAlias)).as("__raw")).distinct()
             .join(ids, Seq("__raw"))
             .select(col("__rowid").as("id"))
-          if (exposing && perSegSurrogates) {
+          if (exposing && r.perSeg) {
             // per-segment-translation route: the segment stays long-typed
-            // through mode filters and ranking; its JoinStr recipe (above)
+            // through mode filters and ranking; its QuantRec recipe (below)
             // translates it through its OWN mapping at assembly
             ()
-          } else if (exposing && (isEnum || deferFixedSurrogates)) {
+          } else if (exposing && (r.enumerates || r.deferFixed)) {
             // defer: segment arrays feed long-typed mode filters first
             // (enumeration), or must concatenate with composite fixed-hop
             // segments that are long-typed dense rowids — either way the
             // COMBINED column translates once, after ranking/filters
-            registerPendingSurrogate(ids, aRefKeys.length,
-              aVt.tableName, aRefKeys)
+            registerPendingSurrogate(ids, a.refKeys.length, a.table,
+              a.refKeys)
           } else if (exposing) {
             surrogatize = df => surrogatizeArrayCol(df, "path", ids,
-              aRefKeys.length)
+              a.refKeys.length)
             joinedExtraBytes = -1L // translation shape unaccounted
           }
           // the two rowid attaches are unique-key joins: rows preserved,
           // bytes bounded by the mapping (≤ its table's footprint) each
           if (joinedExtraBytes >= 0L) {
-            val idsBound = tableFootprintBytes(aVt.tableName)
+            val idsBound = tableFootprintBytes(a.table)
             joinedExtraBytes =
               if (idsBound >= 0L) 2L * idsBound else -1L
           }
@@ -1857,29 +1496,26 @@ object GraphTableCompiler {
       // per-segment path column; processPattern concatenates the segments
       // and registers the combined array under the path variable
       val segColOpt: Option[String] =
-        if (needPath) Some(freshName(s"seg_${p.pathVar.get}_"))
+        if (r.needPath) Some(freshName(s"seg_${p.pathVar.get}_"))
         // enumeration always carries its path array: the mixed-pattern
         // mode filters consult it; the final COLUMNS projection drops it
-        else if (isEnum) Some(freshName("modeseg"))
+        else if (r.enumerates) Some(freshName("modeseg"))
         else None
       if (segColOpt.isDefined) {
         if (keyIsNumeric) {
-          segSpaces += ((aVt.tableName, aRefKeys, true))
-          segSpaces += ((bVt.tableName, bRefKeys, true))
+          segSpaces += ((a.table, a.refKeys, true))
+          segSpaces += ((b.table, b.refKeys, true))
           // per-segment-translation route: numeric segments become
           // strings by an element-wise cast (raw keys and edge ids both
           // surface as their decimal text, matching aliasSurr)
-          segXlates += QuantRec(segColOpt.get, aVt.tableName, aRefKeys,
-            numeric = true, ids = None)
+          segXlates += QuantRec(segColOpt.get, a, ids = None)
         } else {
-          segSpaces += ((aVt.tableName, aRefKeys, false))
+          segSpaces += ((a.table, a.refKeys, false))
           // composite/non-numeric segments translate through their OWN
           // dense-rowid mapping at assembly time (memoized — same object
           // the kernel join below uses)
-          segXlates += QuantRec(segColOpt.get, aVt.tableName, aRefKeys,
-            numeric = false,
-            ids = Some((rowidMapping(aVt.tableName, aRefKeys),
-              aRefKeys.length)))
+          segXlates += QuantRec(segColOpt.get, a,
+            ids = Some((rowidMapping(a.table, a.refKeys), a.refKeys.length)))
         }
       }
       // byte size of the raw kernel frame when it is a driver-local
@@ -1891,7 +1527,7 @@ object GraphTableCompiler {
         kf
       }
       val joined =
-        if (isEnum || isAllShortest || kOpt.isDefined) {
+        if (r.pathRows) {
           // one row PER PATH (multiplicity semantics). Under ANY SHORTEST
           // a non-WALK mode is free — every shortest walk is vertex-simple
           // (a repeated vertex would contain a removable cycle), hence
@@ -1905,12 +1541,12 @@ object GraphTableCompiler {
               PathMode.Acyclic
             else p.mode
           val paths = surrogatize(
-            if (isEnum)
+            if (r.enumerates)
               fromRowid(sizedKernel(PathFinder.enumerateModePaths(spark,
                 edgeList, seedList, q.lower, q.upper, segMode)))
-            else if (kOpt.isDefined)
-              fromRowid(sizedKernel(PathFinder.kShortestPaths(spark,
-                edgeList, seedList, q.lower, q.upper, p.mode, kOpt.get)))
+            else if (r.kShortest.isDefined)
+              fromRowid(sizedKernel(PathFinder.kShortestPaths(spark, edgeList,
+                seedList, q.lower, q.upper, p.mode, r.kShortest.get)))
             else
               fromRowid(sizedKernel(PathFinder.allShortestPaths(spark,
                 edgeList, seedList, q.lower, q.upper))))
@@ -1918,7 +1554,7 @@ object GraphTableCompiler {
             col("dst").as("__pdst"),
             col("dist").as(freshName("dist"))) ++
             segColOpt.map(c => col("path").as(c)).toSeq: _*)
-        } else if (needPath) {
+        } else if (r.needPath) {
           val paths = surrogatize(fromRowid(sizedKernel(
             PathFinder.shortestPaths(
               spark, edgeList, seedList, q.lower, q.upper))))
@@ -1936,12 +1572,12 @@ object GraphTableCompiler {
           val targetsOpt: Option[DataFrame] =
             if (keyIsNumeric && (vp.where.isDefined ||
                 vp.label.exists(l =>
-                  bVt.subLabels.exists(_.equalsIgnoreCase(l))))) {
+                  b.vt.subLabels.exists(_.equalsIgnoreCase(l))))) {
               try {
-                var tDF = vertexDF(bVt, vp.label)
+                var tDF = vertexDF(b.vt, vp.label)
                   .alias(vp.varName.getOrElse(freshName("t")))
                 vp.where.foreach(w => tDF = tDF.filter(expr(w)))
-                Some(tDF.select(col(bRefKeys.head).cast("long").as("id")))
+                Some(tDF.select(col(b.refKeys.head).cast("long").as("id")))
               } catch {
                 case _: org.apache.spark.sql.AnalysisException => None
               }
@@ -1956,8 +1592,8 @@ object GraphTableCompiler {
 
       val srcCond: Column =
         if (keyIsNumeric)
-          col(s"$aAlias.${aRefKeys.head}").cast("long") === col("__psrc")
-        else keyStruct(aRefKeys, Some(aAlias)) === col("__psrc")
+          col(s"$aAlias.${a.refKeys.head}").cast("long") === col("__psrc")
+        else keyStruct(a.refKeys, Some(aAlias)) === col("__psrc")
       // join-back broadcast hint: a LOCAL kernel's result frame (plus
       // its bounded rowid attaches) under the footprint gate is hinted
       // as the build side — without it Catalyst's product estimate
@@ -1973,15 +1609,14 @@ object GraphTableCompiler {
         else plan.join(joined, srcCond, "inner")
       setPlanFootprint(-1L) // kernel frame: rows may multiply downstream
       setChainUnique(false)
-      val bAlias = bindVertex(vp, Some(b =>
+      val bAlias = bindVertex(vp, Some(bv =>
         if (keyIsNumeric)
-          col(s"$b.${bRefKeys.head}").cast("long") === col("__pdst")
-        else keyStruct(bRefKeys, Some(b)) === col("__pdst")), Some(bVt.label))
+          col(s"$bv.${b.refKeys.head}").cast("long") === col("__pdst")
+        else keyStruct(b.refKeys, Some(bv)) === col("__pdst")),
+        Some(b.vt.label))
       plan = plan.drop("__psrc", "__pdst")
-      if (isEnum) currentModeSegs += ModeSeg(segColOpt.get, et,
-        aVt.tableName, aRefKeys, keyIsNumeric,
-        aVt.tableName == bVt.tableName && aRefKeys == bRefKeys,
-        aAlias, bAlias)
+      if (r.enumerates)
+        currentModeSegs += ModeSeg(segColOpt.get, h, aAlias, bAlias)
       (bAlias, segColOpt)
     }
 

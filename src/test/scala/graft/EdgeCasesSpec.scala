@@ -68,6 +68,28 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(x.toSeq == y.toSeq && x.nonEmpty)
   }
 
+  test("undirected hops over REFERENCES keys spelled in different case " +
+      "match the consistently spelled graph") {
+    // `REFERENCES Person (id)` on the source and `(ID)` on the destination
+    // name one key space: SQL identifiers are case-insensitive
+    val mixed = pg.copy(edgeTables = pg.edgeTables.map(e =>
+      if (e.label == "Knows") e.copy(dstRefKeys = Seq("ID")) else e))
+    def ids(g: PropertyGraph, q: Option[Quantifier]): Seq[(Long, Long)] =
+      GraphTableCompiler.compile(init(), MatchSpec("pg",
+        Seq(PathPattern(None, None, PathMode.Walk, Seq(
+          VertexPattern(Some("a"), Some("Person")),
+          EdgePattern(Some("k"), Some("Knows"), EdgeDirection.Undirected, q),
+          VertexPattern(Some("b"), Some("Person"))))),
+        columns = Seq(ColumnSpec("a.id", Some("aid")),
+          ColumnSpec("b.id", Some("bid")))), g, TableResolver.catalog)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    for (q <- Seq(None, Some(Quantifier(1, Some(2))))) {
+      val want = ids(pg, q)
+      assert(want.nonEmpty)
+      assert(ids(mixed, q) == want)
+    }
+  }
+
   test("registry scans list tables and columns — getpgschema.test") {
     val s = init()
     assert(Introspect.vertexTableNames(s, pg).collect()

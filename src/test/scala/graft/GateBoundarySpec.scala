@@ -18,7 +18,9 @@ import graft.pgq.PathMode
   * eids), cheapestRoutes, PageRank and LCC must return the same rows at
   * g = n − 1 (distributed) and g = n (local), path arrays included —
   * which pins the local CSR's slot order to the distributed dense-eid
-  * and min-struct tie-breaks. */
+  * and min-struct tie-breaks. The compiler's array id translation, whose
+  * join form runs only past the 65536-row local-map cap, must equal its
+  * local-map form on random arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -133,6 +135,49 @@ class GateBoundarySpec extends AnyFunSuite {
           Seq(Algorithms.pageRank(vs, edges, fixedIter = Some(10)),
             Algorithms.localClusteringCoefficient(vs, edges))
         }
+      }
+    })
+  }
+
+  /** A random (`__from` → `__to`) bijection over ids 0..20 and rows of
+    * `array<long>` id columns drawn from a small pool (so the join form
+    * sees repeated arrays): null and empty arrays, null elements, mapped
+    * ids in every slot (an odd, edge slot may equal some `__from`) and
+    * ids absent from the map. */
+  private val translations = for {
+    n <- Gen.choose(0, 8)
+    from <- Gen.pick(n, 0L to 20L)
+    to <- Gen.pick(n, 100L to 140L)
+    order <- Gen.long
+    bij = from.toSeq.zip(new scala.util.Random(order).shuffle(to.toSeq))
+    elem = Gen.frequency(1 -> Gen.const(None),
+      4 -> Gen.oneOf(from.toSeq ++ Seq(50L)).map(Some(_)),
+      2 -> Gen.choose(50L, 60L).map(Some(_)))
+    arr = Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
+      6 -> Gen.choose(1, 7).flatMap(Gen.listOfN(_, elem)).map(Some(_)))
+    pool <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, arr))
+    rows <- Gen.choose(1, 10).flatMap(Gen.listOfN(_, Gen.oneOf(pool)))
+  } yield (bij, rows)
+
+  test("array id translation: the join form equals the local-map form, " +
+      "for all slots and for vertex slots only") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.compiler.GraphTableCompiler.{translateArrayJoin,
+      translateLocal}
+    check(12)(Prop.forAll(translations) { case (bij, arrays) =>
+      val s = init()
+      import s.implicits._
+      val df = s.createDataFrame(
+        s.sparkContext.parallelize(arrays.zipWithIndex.map { case (a, i) =>
+          Row(i.toLong, a.map(_.map(_.map(Long.box).orNull)).orNull)
+        }),
+        StructType(Seq(StructField("row", LongType),
+          StructField("ids", ArrayType(LongType)))))
+      val m = bij.toDF("__from", "__to")
+      Seq(false, true).forall { vertexSlotsOnly =>
+        rows(translateArrayJoin(df, "ids", m, vertexSlotsOnly)) ==
+          rows(translateLocal(df, "ids", bij.toMap, vertexSlotsOnly))
       }
     })
   }
