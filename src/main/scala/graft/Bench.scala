@@ -73,22 +73,14 @@ object Bench {
     // the sf1 slope run — the nation-graph toys don't grow with sf)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // materialize the EXECUTED plan's rows, not df.count(): count()
-      // lets the optimizer prune every computed column from
-      // projection-only queries, which would time the scan skeleton
-      // instead of the operator
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case NonFatal(_) => false }
-        finally OpCaches.releaseAll() // operator caches die with the query
-      // a failed query must be visibly failed in the artifact, not a
-      // plausible-looking wall time
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
+    // materialize the EXECUTED plan's rows, not df.count(): count()
+    // lets the optimizer prune every computed column from
+    // projection-only queries, which would time the scan skeleton
+    // instead of the operator. A failed query must be visibly failed in
+    // the artifact, not a plausible-looking wall time.
+    val results = LocalSession.eachQuery(spark, sfDir, only)((_, df) =>
+        df.queryExecution.toRdd.count())
+      .map { case (name, secs) => name -> secs.getOrElse(-1.0) }.toVector
     // r14-verdict item 1: the driver parses the bench JSON from the
     // tail of stdout; at full Double precision the 120-query line ran
     // ~4.5 KB and was truncated out of the capture window every round

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** The `local[cpus]` session the driver mains (Bench, Verify, PlanDump)
@@ -34,4 +34,28 @@ private[graft] object LocalSession {
     })
     spark
   }
+
+  /** The query loop of Bench and Verify: every [[SparkEntry.queries]]
+    * entry named in `only` (all when None), in name order, built over
+    * `sfDir` and handed to `run` with its name. The operator caches
+    * ([[OpCaches]]) are released after each query, and a failing query
+    * is reported instead of ending the loop.
+    *
+    * @return per query, the seconds from building it to the end of
+    *         `run`, or what it threw; lazy, so each query runs as the
+    *         caller reaches it
+    */
+  def eachQuery(spark: SparkSession, sfDir: String,
+      only: Option[Set[String]])(run: (String, DataFrame) => Unit)
+      : Iterator[(String, Either[Throwable, Double])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).iterator
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        name -> (try {
+          run(name, fn(spark, sfDir))
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) => Left(e) }
+        finally OpCaches.releaseAll())
+      }
 }

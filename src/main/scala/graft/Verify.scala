@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -13,18 +12,13 @@ object Verify {
     // the distributed kernel branch (see LocalSession)
     val spark = LocalSession(4)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
+    LocalSession.eachQuery(spark, sfDir, only) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach {
+      case (name, Left(e)) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         if (sys.env.contains("SPARK_GRAFT_VERBOSE")) e.printStackTrace()
-      }
-      // release operator-internal caches (lshNearPairs signatures,
-      // link-prediction neighbor sets, …) now that the result is written
-      OpCaches.releaseAll()
+      case _ => ()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

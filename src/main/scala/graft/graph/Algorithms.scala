@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -59,73 +59,107 @@ object Algorithms {
       phantomNodes: Int = 2): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
+    val (iters, stop) = (fixedIter.getOrElse(maxIter),
+      Option.when(fixedIter.isEmpty)(tol))
     // small graphs: run the exact same iteration on driver arrays (the
     // reference's in-memory-kernel strategy, size-gated — see LocalKernels;
     // the vertex cap is 16× the path kernels' 4096-seed cap)
     localGraph(vertices, edges, vertexCap = Some(65536L)) { g =>
-      LocalKernels.pageRank(g, damping, tol, maxIter, fixedIter,
-        phantomNodes).toSeq.toDF("id", "pagerank")
+      val n = g.extra.length + phantomNodes.toDouble
+      LocalKernels.pageRank(g, g.extra, _ => 1.0, Array.fill(g.n)(1.0 / n),
+        damping, iters, stop, phantomNodes).toSeq.toDF("id", "pagerank")
     }.getOrElse {
       val v = vertices.select(col("id")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nReal = v.count()
-      val n = nReal.toDouble + phantomNodes
-      // null endpoints never join, and never count toward a degree: the
-      // local branch's cleaned pairs drop them the same way
-      val e = edges.select(col("src"), col("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
+      val n = v.count() + phantomNodes.toDouble
+      val e = rankEdges(edges, lit(1.0))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val outDeg = e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg"))
-      // vertex, outdeg (0 for dangling)
-      val vd = v.join(outDeg, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      vd.count()
-
-      var ranks = vd.select(col("id"), col("outdeg"),
-        lit(1.0 / n).as("rank")).transform(graft.graph.PathFinder.ckpt)
-      var phantomRank = 1.0 / n
-      var iter = 0
-      var delta = Double.MaxValue
-      val iters = fixedIter.getOrElse(maxIter)
-      // dangling mass of the initial uniform ranks: one startup count, then
-      // each iteration's fused stats action keeps it current
-      var danglingReal = vd.filter(col("outdeg") === 0).count() / n
-      while (iter < iters && (fixedIter.isDefined || delta > tol)) {
-        iter += 1
-        // dangling mass redistributed uniformly (reference pagerank.cpp:50-71)
-        val corr = (danglingReal + phantomNodes * phantomRank) / n
-        val contribs = ranks.filter(col("outdeg") > 0)
-          .join(e, ranks("id") === e("src"))
-          .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
-          .groupBy("id").agg(sum("c").as("inflow"))
-        val next = ranks.join(contribs, Seq("id"), "left_outer")
-          .select(col("id"), col("outdeg"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("inflow"), lit(0.0)) +
-                lit(corr))).as("rank"),
-            col("rank").as("prev"))
-          .transform(graft.graph.PathFinder.ckpt)
-        val phantomNext = (1.0 - damping) / n + damping * corr
-        // ONE fused action per iteration over the checkpointed result:
-        // next iteration's dangling mass + this iteration's convergence
-        // delta (previously two separate driver actions ⇒ two extra full
-        // passes over the rank table per iteration at scale)
-        val stats = next.agg(
-          coalesce(sum(when(col("outdeg") === 0, col("rank"))), lit(0.0))
-            .as("dang"),
-          max(abs(col("rank") - col("prev"))).as("delta")).first()
-        danglingReal = stats.getDouble(0)
-        if (fixedIter.isEmpty)
-          delta = math.max(stats.getDouble(1),
-            math.abs(phantomNext - phantomRank))
-        phantomRank = phantomNext
-        ranks = next.drop("prev")
-      }
-      v.unpersist(); e.unpersist(); vd.unpersist()
+      val ranks = powerIteration(v.withColumn("t", lit(1.0 / n)), e,
+        damping, iters, stop, phantomNodes)
+      v.unpersist(); e.unpersist()
       ranks.select(col("id"), col("rank").as("pagerank"))
     }
+  }
+
+  /** The (src, dst, w) edges of the three PageRanks: long endpoints,
+    * null ones dropped (they never join, and never count toward an
+    * out-weight — the local branch's cleaned pairs drop them the same
+    * way), and `w` as a double with null or non-positive weights dropped
+    * (the cheapest-path convention; `lit(1.0)` keeps every edge). */
+  private def rankEdges(edges: DataFrame, w: Column): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), w.cast("double").as("w"))
+      .filter(col("src").isNotNull && col("dst").isNotNull &&
+        col("w").isNotNull && col("w") > 0)
+
+  /** Vertex ids ∪ edge endpoints, as longs: the domain of the kernels
+    * whose edges may leave the vertex set. */
+  private def endpointDomain(vertices: DataFrame, e: DataFrame): DataFrame =
+    vertices.select(col("id").cast("long").as("id"))
+      .union(e.select(col("src").as("id")))
+      .union(e.select(col("dst").as("id")))
+      .distinct()
+
+  /** The power iteration of the three PageRanks — the distributed twin
+    * of [[LocalKernels.pageRank]], with its arithmetic and rules. Each
+    * iteration is one contribution join and (dst) shuffle, the checkpoint
+    * of the next ranks, and ONE fused stats action over it returning the
+    * next dangling mass and this iteration's convergence delta.
+    *
+    * @param domain (id, t): the ranked vertices and their teleport share,
+    *               which is also the initial rank
+    * @param e (src, dst, w) from [[rankEdges]]
+    * @param tol None runs exactly `iters` iterations
+    * @return (id, rank) over `domain`
+    */
+  private def powerIteration(domain: DataFrame, e: DataFrame,
+      damping: Double, iters: Int, tol: Option[Double],
+      phantomNodes: Int): DataFrame = {
+    val wOut = e.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
+    var ranks = domain.join(wOut, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("wout"), lit(0.0)).as("wout"),
+        col("t"), col("t").as("rank"))
+      .transform(PathFinder.ckpt)
+    val danglingMass =
+      coalesce(sum(when(col("wout") === 0, col("rank"))), lit(0.0))
+    // the initial dangling mass and the domain size in one startup
+    // action; each iteration's stats action then keeps the mass current
+    val start = ranks.agg(danglingMass, count(lit(1))).first()
+    var dangling = start.getDouble(0)
+    val phantomT = 1.0 / (start.getLong(1) + phantomNodes)
+    var phantomRank = phantomT
+    var (iter, delta) = (0, Double.MaxValue)
+    while (iter < iters && tol.forall(delta > _)) {
+      iter += 1
+      // dangling mass redistributed by teleport (reference pagerank.cpp:50-71)
+      val mass = dangling + phantomNodes * phantomRank
+      val inflow = ranks.filter(col("wout") > 0)
+        .join(e, ranks("id") === e("src"))
+        .select(e("dst").as("id"),
+          (col("rank") * e("w") / col("wout")).as("c"))
+        .groupBy("id").agg(sum("c").as("inflow"))
+      val next = ranks.join(inflow, Seq("id"), "left_outer")
+        .select(col("id"), col("wout"), col("t"),
+          (lit(1.0 - damping) * col("t") + lit(damping) *
+            (coalesce(col("inflow"), lit(0.0)) + lit(mass) * col("t")))
+            .as("rank"),
+          col("rank").as("prev"))
+        .transform(PathFinder.ckpt)
+      val phantomNext = (1.0 - damping) * phantomT + damping * mass * phantomT
+      // ONE fused action per iteration over the checkpointed result:
+      // next iteration's dangling mass + this iteration's convergence
+      // delta (two separate driver actions would be two extra full
+      // passes over the rank table per iteration at scale)
+      val stats = next.agg(danglingMass,
+        max(abs(col("rank") - col("prev")))).first()
+      dangling = stats.getDouble(0)
+      if (tol.isDefined)
+        delta = math.max(stats.getDouble(1),
+          math.abs(phantomNext - phantomRank))
+      phantomRank = phantomNext
+      ranks = next.drop("prev")
+    }
+    ranks.select(col("id"), col("rank"))
   }
 
   /** Weakly connected components. The reference uses sequential union-find
@@ -154,34 +188,50 @@ object Algorithms {
       val domain = vertices.select(col("id"))
         .union(und.select(col("src").as("id")))
         .distinct()
-      var comp = domain.withColumn("component", col("id")).transform(graft.graph.PathFinder.ckpt)
-      var changed = true
-      while (changed) {
-        // neighbor-min propagation (one hop)...
-        val nbrMin = comp.join(und, comp("id") === und("src"))
-          .select(und("dst").as("id"), col("component"))
-          .groupBy("id").agg(min("component").as("nbc"))
-        val step1 = comp.join(nbrMin, Seq("id"), "left_outer")
-          .select(col("id"),
-            least(col("component"), coalesce(col("nbc"), col("component")))
-              .as("component"))
-        // ...then pointer jumping (component := component's component):
-        // labels chase the min in O(log diameter) rounds instead of O(diameter)
-        val ptr = step1.select(col("id").as("pid"), col("component").as("pc"))
-        val next = step1.join(ptr, step1("component") === ptr("pid"),
-            "left_outer")
-          .select(step1("id"),
-            least(step1("component"), coalesce(col("pc"), step1("component")))
-              .as("component"))
-          .transform(graft.graph.PathFinder.ckpt)
-        val prev = comp.select(col("id"), col("component").as("prevc"))
-        changed = !next.join(prev, Seq("id"))
-          .filter(col("component") < col("prevc")).isEmpty
-        comp = next
-      }
+      val comp = labelFixpoint(domain, und, largest = false)
       und.unpersist()
-      comp.join(vertices.select(col("id")).distinct(), Seq("id"), "left_semi")
+      comp.select(col("id"), col("lab").as("component"))
+        .join(vertices.select(col("id")).distinct(), Seq("id"), "left_semi")
     }
+  }
+
+  /** WCC's min-id propagation and SCC's forward coloring: every vertex
+    * of `ids` starts as its own label and each round takes the least
+    * (`largest`: greatest) of its own and its in-neighbours' along `e`,
+    * then pointer-jumps to its label's label, so labels reach the
+    * extreme in O(log diameter) rounds instead of O(diameter). Labels
+    * move one way, so a round that changes none is the fixpoint.
+    *
+    * @return (id, lab)
+    */
+  private def labelFixpoint(ids: DataFrame, e: DataFrame,
+      largest: Boolean): DataFrame = {
+    val pick: (Column, Column) => Column =
+      if (largest) greatest(_, _) else least(_, _)
+    var lab = ids.select(col("id"), col("id").as("lab"))
+      .transform(PathFinder.ckpt)
+    var changed = true
+    while (changed) {
+      // neighbor propagation (one hop)...
+      val nbr = lab.join(e, lab("id") === e("src"))
+        .select(e("dst").as("id"), col("lab"))
+        .groupBy("id")
+        .agg((if (largest) max("lab") else min("lab")).as("nl"))
+      val step1 = lab.join(nbr, Seq("id"), "left_outer")
+        .select(col("id"), pick(col("lab"), coalesce(col("nl"), col("lab")))
+          .as("lab"))
+      // ...then pointer jumping (label := label's label)
+      val ptr = step1.select(col("id").as("pid"), col("lab").as("pl"))
+      val next = step1.join(ptr, step1("lab") === ptr("pid"), "left_outer")
+        .select(step1("id"),
+          pick(step1("lab"), coalesce(col("pl"), step1("lab"))).as("lab"))
+        .transform(PathFinder.ckpt)
+      changed = !next
+        .join(lab.select(col("id"), col("lab").as("prev")), Seq("id"))
+        .filter(col("lab") =!= col("prev")).isEmpty
+      lab = next
+    }
+    lab
   }
 
   /** Strongly connected components over the DIRECTED edge set (beyond
@@ -222,18 +272,9 @@ object Algorithms {
       LocalKernels.scc(g).toSeq.toDF("id", "component")
     }.getOrElse {
       // self-loops never change SCC membership; dedup once up front
-      val e0 = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
+      val e0 = loopFree(edges).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val domain = vertices.select(col("id").cast("long").as("id"))
-        .union(e0.select(col("src").as("id")))
-        .union(e0.select(col("dst").as("id")))
-        .distinct()
-      def restrict(ed: DataFrame, rem: DataFrame): DataFrame = ed
-        .join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
+      val domain = endpointDomain(vertices, e0)
       var remaining = domain.transform(graft.graph.PathFinder.ckpt)
       var e = e0.transform(graft.graph.PathFinder.ckpt)
       var assigned = Seq.empty[(Long, Long)].toDF("id", "root")
@@ -258,29 +299,8 @@ object Algorithms {
         if (remaining.isEmpty) done = true
         else {
           // 2. COLOR: forward max propagation + pointer jumping
-          var color = remaining.select(col("id"), col("id").as("color"))
-            .transform(graft.graph.PathFinder.ckpt)
-          var changed = true
-          while (changed) {
-            val nbrMax = color.join(e, color("id") === e("src"))
-              .select(e("dst").as("id"), col("color"))
-              .groupBy("id").agg(max("color").as("nc"))
-            val step1 = color.join(nbrMax, Seq("id"), "left_outer")
-              .select(col("id"),
-                greatest(col("color"), coalesce(col("nc"), col("color")))
-                  .as("color"))
-            val ptr = step1.select(col("id").as("pid"), col("color").as("pc"))
-            val next = step1.join(ptr, step1("color") === ptr("pid"),
-                "left_outer")
-              .select(step1("id"),
-                greatest(step1("color"), coalesce(col("pc"), step1("color")))
-                  .as("color"))
-              .transform(graft.graph.PathFinder.ckpt)
-            changed = !next
-              .join(color.select(col("id"), col("color").as("prev")), Seq("id"))
-              .filter(col("color") > col("prev")).isEmpty
-            color = next
-          }
+          val color = labelFixpoint(remaining, e, largest = true)
+            .withColumnRenamed("lab", "color")
           // 3. CONTAIN: backward growth from each root within its color
           var members = color.filter(col("color") === col("id"))
             .select(col("id"), col("id").as("root")).transform(graft.graph.PathFinder.ckpt)
@@ -316,6 +336,29 @@ object Algorithms {
     }
   }
 
+  /** The (src, dst) edges of `ed` with both endpoints among the ids of
+    * `rem` — the peel step of SCC's trim and k-core. */
+  private def restrict(ed: DataFrame, rem: DataFrame): DataFrame = ed
+    .join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
+    .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
+    .select(col("src"), col("dst"))
+
+  /** The (src, dst) edges as long without self-loops, and so without
+    * null endpoints (their inequality is null). */
+  private def loopFree(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** Every unordered pair of distinct endpoints once, as long (a < b):
+    * the undirected simple edges of label propagation, modularity,
+    * k-core and k-truss. */
+  private def simplePairs(edges: DataFrame): DataFrame =
+    loopFree(edges)
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
   /** Deduplicated undirected neighbor relation (both directions, self
     * loops dropped) — the domain LCC and triangle counting run over. */
   private def undirectedNbr(edges: DataFrame): DataFrame =
@@ -332,34 +375,44 @@ object Algorithms {
     * contributes almost no wedges (its edges are oriented INTO it),
     * unlike the naive nbr⋈nbr⋈nbr which is Θ(Σ d²).
     *
-    * @param nbr deduplicated undirected relation ([[undirectedNbr]])
-    * @param deg (id, deg) over `nbr`
-    * @return (id, tris: long) — per-corner triangle counts; vertices on
-    *         no triangle have no row
+    * The undirected relation, the degrees and the oriented edges are
+    * cached for the query through [[graft.OpCaches]] (the result is lazy
+    * over them), so the harness's per-query release drops them.
+    *
+    * @return (id, deg, tris) — per-corner triangle counts with the
+    *         corner's undirected degree; vertices on no triangle have no
+    *         row
     */
-  private def cornerTriangles(nbr: DataFrame, deg: DataFrame): DataFrame = {
+  private def cornerTriangles(edges: DataFrame): DataFrame = {
+    val nbr = graft.OpCaches.track(undirectedNbr(edges))
+    val deg = graft.OpCaches.track(
+      nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     val ranked = nbr
       .join(deg.select(col("id").as("src"), col("deg").as("sdeg")),
         Seq("src"))
       .join(deg.select(col("id").as("dst"), col("deg").as("ddeg")),
         Seq("dst"))
-    val oriented = ranked.filter(
+    val oriented = graft.OpCaches.track(ranked.filter(
         col("sdeg") < col("ddeg") ||
         (col("sdeg") === col("ddeg") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("ddeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("src"), col("sdeg"), col("dst"), col("ddeg")))
     // wedges (u; a, b) with rank(a) < rank(b), closed iff oriented a→b
     val tris = oriented.as("x").join(oriented.as("y"),
         col("x.src") === col("y.src") &&
         (col("x.ddeg") < col("y.ddeg") ||
           (col("x.ddeg") === col("y.ddeg") && col("x.dst") < col("y.dst"))))
-      .select(col("x.src").as("u"), col("x.dst").as("a"),
-        col("y.dst").as("b"))
+      .select(col("x.src").as("u"), col("x.sdeg").as("udeg"),
+        col("x.dst").as("a"), col("x.ddeg").as("adeg"),
+        col("y.dst").as("b"), col("y.ddeg").as("bdeg"))
       .join(oriented.as("z").select(col("src").as("a"), col("dst").as("b")),
         Seq("a", "b"), "left_semi")
     // each triangle found exactly once → credit all three corners
-    tris.select(explode(array(col("u"), col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("tris"))
+    tris.select(explode(array(
+        struct(col("u").as("id"), col("udeg").as("deg")),
+        struct(col("a").as("id"), col("adeg").as("deg")),
+        struct(col("b").as("id"), col("bdeg").as("deg")))).as("c"))
+      .groupBy(col("c.id").as("id"), col("c.deg").as("deg"))
+      .agg(count(lit(1)).as("tris"))
   }
 
   /** Per-vertex triangle participation counts (beyond the reference's
@@ -369,35 +422,25 @@ object Algorithms {
     *
     * @return (id, triangles: long) — 0 for triangle-free vertices
     */
-  def triangleCounts(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val sp = vertices.sparkSession
-    import sp.implicits._
-    localTriangles(edges).map { tri =>
-      val triDf = tri.map { case (id, _, t) => (id, t) }.toSeq
-        .toDF("id", "tris")
-      vertices.select(col("id")).distinct()
-        .join(triDf, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
-    }.getOrElse {
-      val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      vertices.select(col("id")).distinct()
-        .join(cornerTriangles(nbr, deg), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
-    }
-  }
+  def triangleCounts(vertices: DataFrame, edges: DataFrame): DataFrame =
+    vertices.select(col("id")).distinct()
+      .join(triangleTable(edges), Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("tris"), lit(0L)).as("triangles"))
 
-  /** Small-graph strategy for the triangle family: collect the edge list
-    * under the standard size gate ([[PathFinder.collectUnder]]) and run
-    * the parallel in-memory edge-iterator kernel
-    * ([[LocalKernels.triangles]]); intersections beat the wedge-join
-    * shuffle by ~10× until the oriented edge set stops fitting driver
-    * memory, at which point the degree-ordered wedge join takes over —
-    * the same two-strategy contract as WCC/SCC/PageRank. */
-  private def localTriangles(edges: DataFrame)
-      : Option[Array[(Long, Long, Long)]] =
+  /** (id, deg, tris) per vertex; a vertex without a row is on no
+    * triangle. Under the size gate the parallel in-memory edge-iterator
+    * kernel ([[LocalKernels.triangles]], a row for every vertex with ≥1
+    * undirected neighbor): intersections beat the wedge-join shuffle by
+    * ~10× until the oriented edge set stops fitting driver memory, at
+    * which point the degree-ordered wedge join ([[cornerTriangles]],
+    * rows only for corners of a triangle) takes over. */
+  private def triangleTable(edges: DataFrame): DataFrame = {
+    val sp = edges.sparkSession
+    import sp.implicits._
     PathFinder.localEdgePairs(edges).map(e =>
-      LocalKernels.triangles(Csr(e)))
+      LocalKernels.triangles(Csr(e)).toSeq.toDF("id", "deg", "tris")
+    ).getOrElse(cornerTriangles(edges))
+  }
 
   /** Local clustering coefficient — reference semantics
     * (`local_clustering_coefficient.cpp:11-72`): over the *deduplicated
@@ -407,37 +450,16 @@ object Algorithms {
     * @return (id, lcc: double)
     */
   def localClusteringCoefficient(vertices: DataFrame,
-      edges: DataFrame): DataFrame = {
-    val sp = vertices.sparkSession
-    import sp.implicits._
-    localTriangles(edges).map { tri =>
-      val triDf = tri.toSeq.toDF("id", "deg", "tris")
-      vertices.select(col("id")).distinct()
-        .join(triDf, Seq("id"), "left_outer")
-        .select(col("id"),
-          when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
-            .otherwise((col("tris") * 2).cast("double") /
-              (col("deg") * (col("deg") - 1)).cast("double"))
-            .as("lcc"))
-    }.getOrElse {
-      val nbr = undirectedNbr(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      val deg = nbr.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // the reference counts directed neighbor→neighbor links on the
-      // doubled CSR, i.e. links = 2 · triangles(v)
-      val tri = cornerTriangles(nbr, deg)
-        .select(col("id"), (col("tris") * 2).as("links"))
-      val out = vertices.select(col("id")).distinct()
-        .join(deg, Seq("id"), "left_outer")
-        .join(tri, Seq("id"), "left_outer")
-        .select(col("id"),
-          when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
-            .otherwise(coalesce(col("links"), lit(0L)).cast("double") /
-              (col("deg") * (col("deg") - 1)).cast("double"))
-            .as("lcc"))
-      out
-    }
-  }
+      edges: DataFrame): DataFrame =
+    // the reference counts directed neighbor→neighbor links on the
+    // doubled CSR, i.e. links = 2 · triangles(v)
+    vertices.select(col("id")).distinct()
+      .join(triangleTable(edges), Seq("id"), "left_outer")
+      .select(col("id"),
+        when(coalesce(col("deg"), lit(0L)) < 2, lit(0.0))
+          .otherwise((col("tris") * 2).cast("double") /
+            (col("deg") * (col("deg") - 1)).cast("double"))
+          .as("lcc"))
 
   /** Harmonic and closeness centrality from BFS distances (beyond the
     * reference's algorithm set): harmonic = Σ_{v reachable} 1/d(u, v)
@@ -484,10 +506,9 @@ object Algorithms {
     * recommendation and graph feature pipelines. Fixed iteration count
     * so an SQL replay is value-exact; textbook normalization (no
     * phantom-slot quirk — that is [[pageRank]]'s reference-parity
-    * concern). Small graphs run on driver arrays under the usual gates;
-    * at scale each iteration is one broadcast-joined degree lookup, one
-    * (dst) contribution shuffle and one fused stats action — the
-    * [[pageRank]] plan shape with a seed-membership vector.
+    * concern). Small graphs run on driver arrays under the usual gates.
+    * Both branches run [[pageRank]]'s power iteration with the seed
+    * vector as the teleport.
     *
     * @return (id, ppr) over vertices ∪ edge endpoints
     */
@@ -496,50 +517,31 @@ object Algorithms {
       iters: Int = 30): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
+    def present(nS: Long): Unit = require(nS > 0, "personalized PageRank " +
+      "requires at least one seed vertex present in the graph")
     localGraph(vertices, edges) { g =>
-      PathFinder.localVertexIds(seeds).map(seedArr =>
-        LocalKernels.personalizedPageRank(g, seedArr.toSet,
-          damping, iters).toSeq.toDF("id", "ppr"))
+      PathFinder.localVertexIds(seeds).map { seedArr =>
+        val seedSet = seedArr.toSet
+        val nS = g.ids.count(seedSet.contains)
+        present(nS)
+        LocalKernels.pageRank(g, Array.range(0, g.n), _ => 1.0,
+          g.ids.map(v => if (seedSet.contains(v)) 1.0 / nS else 0.0),
+          damping, iters, None, 0).toSeq.toDF("id", "ppr")
+      }
     }.flatten.getOrElse {
-      val e = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
+      val e = rankEdges(edges, lit(1.0))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val domain = vertices.select(col("id").cast("long").as("id"))
-        .union(e.select(col("src").as("id")))
-        .union(e.select(col("dst").as("id")))
-        .distinct()
+      val domain = endpointDomain(vertices, e)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       val sd = seeds.select(col("id").cast("long").as("id")).distinct()
         .join(domain, Seq("id"), "left_semi")
       val nS = sd.count()
-      require(nS > 0, "personalized PageRank requires at least one seed " +
-        "vertex present in the graph")
-      val outDeg = e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("outdeg"))
-      val vd = domain.join(outDeg, Seq("id"), "left_outer")
-        .join(sd.select(col("id"), lit(1.0 / nS).as("__s")), Seq("id"),
-          "left_outer")
-        .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-          coalesce(col("__s"), lit(0.0)).as("__s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      vd.count()
-      var ranks = vd.withColumn("rank", col("__s"))
-        .transform(PathFinder.ckpt)
-      for (_ <- 1 to iters) {
-        val contrib = ranks.filter(col("outdeg") > 0)
-          .join(e, col("id") === e("src"))
-          .select(e("dst").as("id"), (col("rank") / col("outdeg")).as("__c"))
-          .groupBy("id").agg(sum("__c").as("__contrib"))
-        val dangling = ranks.filter(col("outdeg") === 0)
-          .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-        ranks = vd.join(contrib, Seq("id"), "left_outer")
-          .select(col("id"), col("outdeg"), col("__s"),
-            (lit(1.0 - damping) * col("__s") + lit(damping) *
-              (coalesce(col("__contrib"), lit(0.0)) +
-                lit(dangling) * col("__s"))).as("rank"))
-          .transform(PathFinder.ckpt)
-      }
-      vd.unpersist()
-      e.unpersist()
+      present(nS)
+      val ranks = powerIteration(domain
+          .join(sd.withColumn("t", lit(1.0 / nS)), Seq("id"), "left_outer")
+          .select(col("id"), coalesce(col("t"), lit(0.0)).as("t")),
+        e, damping, iters, None, 0)
+      domain.unpersist(); e.unpersist()
       ranks.select(col("id"), col("rank").as("ppr"))
     }
   }
@@ -552,9 +554,8 @@ object Algorithms {
     * [[personalizedPageRank]]); edges with null or non-positive weight
     * are dropped at ingestion on BOTH strategies (the cheapest-path
     * convention); dangling mass (no out-edges or zero out-weight)
-    * redistributes uniformly. Same plan shape as [[pageRank]]: one
-    * weighted-degree lookup, one (dst) contribution shuffle and one
-    * scalar dangling action per iteration.
+    * redistributes uniformly. The same power iteration as [[pageRank]]
+    * on both branches, with the edge weight as the slot weight.
     *
     * @return (id, rank) over vertices ∪ edge endpoints
     */
@@ -562,46 +563,26 @@ object Algorithms {
       damping: Double = 0.85, iters: Int = 30): DataFrame = {
     val sp = vertices.sparkSession
     import sp.implicits._
-    val clean = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull && col("w") > 0)
+    val e = rankEdges(edges, col("w"))
     // under the gate the collected rows ARE the kernel input
     val local = for {
-      ec <- PathFinder.collectUnder(clean, PathFinder.localMaxRows(sp))
+      ec <- PathFinder.collectUnder(e, PathFinder.localMaxRows(sp))
       ids <- PathFinder.localVertexIds(vertices)
-    } yield LocalKernels.weightedPageRank(Csr(ec, ids), damping, iters)
-      .toSeq.toDF("id", "rank")
+    } yield {
+      val g = Csr(ec, ids)
+      LocalKernels.pageRank(g, Array.range(0, g.n), g.doubles(2)(_),
+        Array.fill(g.n)(1.0 / g.n), damping, iters, None, 0)
+        .toSeq.toDF("id", "rank")
+    }
     local.getOrElse {
-      val e = clean.persist(StorageLevel.MEMORY_AND_DISK)
-      val domain = vertices.select(col("id").cast("long").as("id"))
-        .union(e.select(col("src").as("id")))
-        .union(e.select(col("dst").as("id")))
-        .distinct()
-      val wOut = e.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
-      val vd = PathFinder.ckpt(domain
-        .join(wOut, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("wout"), lit(0.0)).as("wout")))
-      val n = vd.count().toDouble
-      var ranks = vd.withColumn("rank", lit(1.0 / n))
-        .transform(PathFinder.ckpt)
-      for (_ <- 1 to iters) {
-        val contrib = ranks.filter(col("wout") > 0)
-          .join(e, col("id") === e("src"))
-          .select(e("dst").as("id"),
-            (col("rank") * col("w") / col("wout")).as("__c"))
-          .groupBy("id").agg(sum("__c").as("__contrib"))
-        val dangling = ranks.filter(col("wout") === 0)
-          .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-        ranks = vd.join(contrib, Seq("id"), "left_outer")
-          .select(col("id"), col("wout"),
-            (lit((1.0 - damping) / n) + lit(damping) *
-              (coalesce(col("__contrib"), lit(0.0)) + lit(dangling / n)))
-              .as("rank"))
-          .transform(PathFinder.ckpt)
-      }
-      e.unpersist()
-      ranks.select(col("id"), col("rank"))
+      e.persist(StorageLevel.MEMORY_AND_DISK)
+      val domain = endpointDomain(vertices, e)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val n = domain.count().toDouble
+      val ranks = powerIteration(domain.withColumn("t", lit(1.0 / n)), e,
+        damping, iters, None, 0)
+      domain.unpersist(); e.unpersist()
+      ranks
     }
   }
 
@@ -994,14 +975,7 @@ object Algorithms {
       LocalKernels.kTruss(Csr(e), k).toSeq.toDF("src", "dst")
     }.getOrElse {
       val need = k - 2
-      var cur = edges.select(col("src").cast("long").as("a"),
-          col("dst").cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull &&
-          col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"))
-        .distinct()
-        .transform(PathFinder.ckpt)
+      var cur = simplePairs(edges).transform(PathFinder.ckpt)
       var changed = true
       while (changed) {
         val und = cur.select(col("a").as("u"), col("b").as("v"))
@@ -1146,19 +1120,11 @@ object Algorithms {
     }.flatten.getOrElse {
       val srcDf = sources.getOrElse(vertices)
         .select(col("id").cast("long").as("id")).distinct()
-      val e = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull &&
-          col("src") =!= col("dst"))
-        .distinct()
+      val e = loopFree(edges).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       // ckpt'd: the final result joins domain AFTER e.unpersist() — an
       // un-materialized domain would re-run the edge cleaning pipeline
-      val domain = PathFinder.ckpt(
-        vertices.select(col("id").cast("long").as("id"))
-          .union(e.select(col("src").as("id")))
-          .union(e.select(col("dst").as("id")))
-          .distinct())
+      val domain = PathFinder.ckpt(endpointDomain(vertices, e))
       val srcs = srcDf.join(domain, Seq("id"), "left_semi")
       // forward: batched BFS carrying sigma (shortest-path counts)
       var frontier = srcs
@@ -1218,10 +1184,9 @@ object Algorithms {
     * cluster holds its majority label against a single bridge edge,
     * where WCC would merge straight across).
     *
-    * At scale each round is one label-to-neighbor join plus two
-    * aggregations — per-(vertex, label) counts combine map-side, so a
-    * hub's fan-in never concentrates in one task. Small graphs run the
-    * driver kernel under the usual gates.
+    * At scale it runs the vote loop it shares with
+    * [[weightedLabelPropagation]]; small graphs run the driver kernel
+    * under the usual gates.
     *
     * @return (id, community) over vertices ∪ edge endpoints
     */
@@ -1234,33 +1199,10 @@ object Algorithms {
       LocalKernels.labelPropagation(g, rounds)
         .toSeq.toDF("id", "community")
     }.getOrElse {
-      val und = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-      val nbr = und.select(col("a").as("src"), col("b").as("dst"))
-        .union(und.select(col("b").as("src"), col("a").as("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val domain = vertices.select(col("id").cast("long").as("id"))
-        .union(nbr.select(col("src").as("id")))
-        .distinct()
-      var lab = domain.withColumn("lab", col("id"))
-        .transform(PathFinder.ckpt)
-      for (_ <- 1 to rounds) {
-        val msgs = nbr.join(lab, nbr("src") === lab("id"))
-          .select(nbr("dst").as("id"), col("lab"))
-        val pick = msgs.groupBy("id", "lab").agg(count(lit(1)).as("c"))
-          .groupBy("id")
-          .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("__m"))
-          .select(col("id"), col("__m.lab").as("__new"))
-        lab = lab.join(pick, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
-          .transform(PathFinder.ckpt)
-      }
-      nbr.unpersist()
-      lab.select(col("id"), col("lab").as("community"))
+      // its distinct undirected pairs, one vote each: round(Σ 1.0, 9)
+      // of integer counts ranks like the count
+      propagateLabels(vertices, simplePairs(edges).withColumn("w", lit(1.0)),
+        rounds)
     }
   }
 
@@ -1278,10 +1220,9 @@ object Algorithms {
     * the comparison exact on any engine), so an SQL replay is
     * value-exact.
     *
-    * At scale each round is one label-to-neighbor join plus two
-    * aggregations — per-(vertex, label) weight sums combine map-side,
-    * so a hub's fan-in never concentrates in one task. Small graphs run
-    * the driver kernel under the usual gates.
+    * At scale it runs the vote loop it shares with [[labelPropagation]]
+    * over the summed pairs; small graphs run the driver kernel under the
+    * usual gates.
     *
     * @return (id, community) over vertices ∪ edge endpoints
     */
@@ -1312,30 +1253,43 @@ object Algorithms {
       LocalKernels.weightedLabelPropagation(Csr(both, ids), rounds)
         .toSeq.toDF("id", "community")
     }
-    local.getOrElse {
-      val nbr = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val domain = vertices.select(col("id").cast("long").as("id"))
-        .union(nbr.select(col("src").as("id")))
-        .distinct()
-      var lab = domain.withColumn("lab", col("id"))
+    local.getOrElse(propagateLabels(vertices, und, rounds))
+  }
+
+  /** The distributed vote loop of both label propagations: `rounds`
+    * synchronous rounds over the undirected pairs `und` (a, b, w), in
+    * which every vertex adopts the label maximizing `round(Σ w, 9)` over
+    * its neighbours carrying it, ties to the smallest label; isolated
+    * vertices keep their own. Each round is one label-to-neighbor join
+    * plus two aggregations — per-(vertex, label) sums combine map-side,
+    * so a hub's fan-in never concentrates in one task.
+    *
+    * @return (id, community) over vertices ∪ pair endpoints
+    */
+  private def propagateLabels(vertices: DataFrame, und: DataFrame,
+      rounds: Int): DataFrame = {
+    val nbr = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
+      .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val domain = vertices.select(col("id").cast("long").as("id"))
+      .union(nbr.select(col("src").as("id")))
+      .distinct()
+    var lab = domain.withColumn("lab", col("id"))
+      .transform(PathFinder.ckpt)
+    for (_ <- 1 to rounds) {
+      val msgs = nbr.join(lab, nbr("src") === lab("id"))
+        .select(nbr("dst").as("id"), col("lab"), nbr("w"))
+      val pick = msgs.groupBy("id", "lab")
+        .agg(round(sum("w"), 9).as("wv"))
+        .groupBy("id")
+        .agg(min(struct((-col("wv")).as("nw"), col("lab"))).as("__m"))
+        .select(col("id"), col("__m.lab").as("__new"))
+      lab = lab.join(pick, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
         .transform(PathFinder.ckpt)
-      for (_ <- 1 to rounds) {
-        val msgs = nbr.join(lab, nbr("src") === lab("id"))
-          .select(nbr("dst").as("id"), col("lab"), nbr("w"))
-        val pick = msgs.groupBy("id", "lab")
-          .agg(round(sum("w"), 9).as("wv"))
-          .groupBy("id")
-          .agg(min(struct((-col("wv")).as("nw"), col("lab"))).as("__m"))
-          .select(col("id"), col("__m.lab").as("__new"))
-        lab = lab.join(pick, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("__new"), col("lab")).as("lab"))
-          .transform(PathFinder.ckpt)
-      }
-      nbr.unpersist()
-      lab.select(col("id"), col("lab").as("community"))
     }
+    nbr.unpersist()
+    lab.select(col("id"), col("lab").as("community"))
   }
 
   /** Newman–Girvan modularity of a community assignment (beyond the
@@ -1358,14 +1312,7 @@ object Algorithms {
     * @return (community, internal_edges, degree_sum, contribution)
     */
   def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val und = graft.OpCaches.track(
-      edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull &&
-          col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val und = graft.OpCaches.track(simplePairs(edges))
     val m = und.count().toDouble
     require(m > 0, "modularity needs at least one undirected simple edge")
     val degs = und.select(col("a").as("id"))
@@ -1475,12 +1422,7 @@ object Algorithms {
     }.getOrElse {
       // undirected simple view (canonical pair per edge, then both
       // orientations for degree counting)
-      val pairs = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
+      val pairs = simplePairs(edges)
       val und = pairs.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1506,10 +1448,7 @@ object Algorithms {
         else {
           rem = keep
           remCount = n
-          e = e.join(rem.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(rem.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst"))
-            .transform(PathFinder.ckpt)
+          e = restrict(e, rem).transform(PathFinder.ckpt)
           changed = remCount > 0
         }
       }

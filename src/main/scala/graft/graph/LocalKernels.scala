@@ -312,35 +312,45 @@ private[graph] object LocalKernels {
     out.toArray
   }
 
-  /** PageRank — mirrors [[Algorithms.pageRank]] incl. the phantom-node
-    * reference quirk and dangling redistribution. The domain is the
-    * vertex ids alone (`g.extra`): a vertex's out-degree counts all its
-    * edges, but rank flows only along edges between vertices. */
-  def pageRank(g: Csr, damping: Double, tol: Double, maxIter: Int,
-      fixedIter: Option[Int], phantomNodes: Int): Array[(Long, Double)] = {
-    val verts = g.extra
-    val n = verts.length + phantomNodes.toDouble
-    var rank = Array.fill(g.n)(1.0 / n)
-    var phantomRank = 1.0 / n
-    var iter = 0
-    var delta = Double.MaxValue
-    val iters = fixedIter.getOrElse(maxIter)
-    while (iter < iters && (fixedIter.isDefined || delta > tol)) {
+  /** The power iteration of the three PageRanks ([[Algorithms.pageRank]],
+    * [[Algorithms.personalizedPageRank]], [[Algorithms.weightedPageRank]]),
+    * whose distributed branches share one loop with this arithmetic. Rank
+    * starts at `teleport` (by dense index); each iteration sets it to
+    * `(1 − damping)·t(v) + damping·(inflow(v) + dangling·t(v))`. A vertex's
+    * rank splits over its slots by `weight` / out-weight, which sums EVERY
+    * slot (the reference's full out-degree), but only ranks inside
+    * `domain` are read, so inflow to other vertices is lost. Dangling is the rank of the domain's zero-out-weight
+    * vertices plus that of `phantomNodes` phantom slots (the reference
+    * quirk): dangling, no in-edges, teleport 1/(|domain| + phantomNodes).
+    * Stops after `iters` iterations, or once no rank moves more than `tol`.
+    *
+    * @return (id, rank) over `domain`
+    */
+  def pageRank(g: Csr, domain: Array[Int], weight: Int => Double,
+      teleport: Array[Double], damping: Double, iters: Int,
+      tol: Option[Double], phantomNodes: Int): Array[(Long, Double)] = {
+    val wOut = Array.tabulate(g.n)(u =>
+      (g.off(u) until g.off(u + 1)).map(weight).sum)
+    val phantomT = 1.0 / (domain.length + phantomNodes)
+    var (rank, phantomRank) = (teleport, phantomT)
+    var (iter, delta) = (0, Double.MaxValue)
+    while (iter < iters && tol.forall(delta > _)) {
       iter += 1
       val dangling = phantomNodes * phantomRank +
-        verts.filter(g.degree(_) == 0).map(rank(_)).sum
-      val corr = dangling / n
+        domain.filter(wOut(_) == 0.0).map(rank(_)).sum
       val inflow = new Array[Double](g.n)
-      for (u <- verts; p <- g.off(u) until g.off(u + 1) if g.isExtra(g.nbr(p)))
-        inflow(g.nbr(p)) += rank(u) / g.degree(u)
-      val next = inflow.map(x => (1.0 - damping) / n + damping * (x + corr))
-      val phantomNext = (1.0 - damping) / n + damping * corr
-      delta = verts.foldLeft(math.abs(phantomNext - phantomRank))((m, j) =>
-        math.max(m, math.abs(next(j) - rank(j))))
+      for (u <- domain; p <- g.off(u) until g.off(u + 1))
+        inflow(g.nbr(p)) += rank(u) * weight(p) / wOut(u)
+      val next = Array.tabulate(g.n)(v => (1.0 - damping) * teleport(v) +
+        damping * (inflow(v) + dangling * teleport(v)))
+      val phantomNext =
+        (1.0 - damping) * phantomT + damping * dangling * phantomT
+      delta = domain.foldLeft(math.abs(phantomNext - phantomRank))((m, v) =>
+        math.max(m, math.abs(next(v) - rank(v))))
       rank = next
       phantomRank = phantomNext
     }
-    verts.map(v => (g.ids(v), rank(v)))
+    domain.map(v => (g.ids(v), rank(v)))
   }
 
   /** Iterative Tarjan SCC with min-member component ids — mirrors
@@ -458,28 +468,6 @@ private[graph] object LocalKernels {
     g.extra.map(v => (g.ids(v), g.ids(find(v))))
   }
 
-  /** Personalized PageRank with restart to a SEED set (textbook PPR:
-    * teleport and dangling mass return to the seeds, uniformly), fixed
-    * iteration count for SQL-replayability. Domain = vertexIds ∪ edge
-    * endpoints. */
-  def personalizedPageRank(g: Csr, seedSet: Set[Long], damping: Double,
-      iters: Int): Array[(Long, Double)] = {
-    val nS = g.ids.count(seedSet.contains)
-    require(nS > 0, "personalized PageRank requires at least one seed " +
-      "vertex present in the graph")
-    val sVec = g.ids.map(v => if (seedSet.contains(v)) 1.0 / nS else 0.0)
-    var r = sVec.clone()
-    for (_ <- 0 until iters) {
-      val contrib = new Array[Double](g.n)
-      for (u <- 0 until g.n; p <- g.off(u) until g.off(u + 1))
-        contrib(g.nbr(p)) += r(u) / g.degree(u)
-      val dangling = (0 until g.n).filter(g.degree(_) == 0).map(r(_)).sum
-      r = Array.tabulate(g.n)(i => (1.0 - damping) * sVec(i) +
-        damping * (contrib(i) + dangling * sVec(i)))
-    }
-    g.ids.zip(r)
-  }
-
   /** Fixed-k core membership by textbook peeling: repeatedly delete
     * vertices whose UNDIRECTED simple degree is below k (queue-driven,
     * O(V + E)). Self-loops never count. Domain = vertexIds ∪ endpoints of
@@ -497,29 +485,6 @@ private[graph] object LocalKernels {
       }
     }
     und.ids.zip(removed.map(!_))
-  }
-
-  /** Weighted PageRank — the
-    * [[graft.graph.Algorithms.weightedPageRank]] twin: contributions
-    * split proportionally to edge weight (rank·w/W_out), dangling mass
-    * (no out-edges / zero out-weight) redistributed uniformly; textbook
-    * normalization, fixed iterations. `g` is the (src, dst, w) view;
-    * edges with null/≤0 weight are dropped by the caller. Domain =
-    * vertexIds ∪ edge endpoints. */
-  def weightedPageRank(g: Csr, damping: Double, iters: Int)
-      : Array[(Long, Double)] = {
-    val w = g.doubles(2)
-    val n = g.n
-    val wOut = Array.tabulate(n)(u => (g.off(u) until g.off(u + 1)).map(w(_)).sum)
-    var r = Array.fill(n)(1.0 / n)
-    for (_ <- 0 until iters) {
-      val contrib = new Array[Double](n)
-      for (u <- 0 until n; p <- g.off(u) until g.off(u + 1))
-        contrib(g.nbr(p)) += r(u) * w(p) / wOut(u)
-      val dangling = (0 until n).filter(wOut(_) == 0.0).map(r(_)).sum
-      r = contrib.map(c => (1.0 - damping) / n + damping * (c + dangling / n))
-    }
-    g.ids.zip(r)
   }
 
   /** k-truss — the [[graft.graph.Algorithms.kTruss]] twin: the maximal
@@ -651,7 +616,8 @@ private[graph] object LocalKernels {
     * round every vertex adopts the most frequent neighbor label, ties to
     * the smallest label; isolated vertices keep their own. Fixed round
     * count, no convergence test — deterministic by construction. Domain
-    * = vertexIds ∪ endpoints of the undirected simple edges. */
+    * = vertexIds ∪ endpoints of the undirected simple edges. Shares
+    * [[propagate]] with [[weightedLabelPropagation]]. */
   def labelPropagation(g: Csr, rounds: Int): Array[(Long, Long)] =
     propagate(g.simple(symmetric = true), _ => 1.0, identity, rounds)
 
@@ -670,7 +636,8 @@ private[graph] object LocalKernels {
 
   /** `rounds` synchronous rounds in which every vertex with neighbours
     * adopts the label of maximal `score(Σ weight)` over its slots, ties
-    * to the smallest label. Labels are dense indices, so the smallest
+    * to the smallest label — the twin of the vote loop both distributed
+    * label propagations share. Labels are dense indices, so the smallest
     * label is the smallest id. */
   private def propagate(g: Csr, weight: Int => Double,
       score: Double => Double, rounds: Int): Array[(Long, Long)] = {

@@ -849,31 +849,14 @@ object PathFinder {
       else {
         val parents = parentLevels.reduce(_ union _)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        // suffix starts [pv, pe, dst] at the terminal vertex and extends
-        // leftward through every parent alternative (cartesian per level —
-        // the path fan-out itself)
-        var active = parents.filter(col("k") >= lower)
+        // one suffix [pv, pe, dst] per parent alternative of a terminal
+        val paths = unwindRoutes(parents.filter(col("k") >= lower)
           .select(col("src"), col("v").as("dst"), col("k").as("dist"),
-            lit(1L).as("back"), col("pv").as("cur"),
-            array(col("pv"), col("pe"), col("v")).as("suf"))
-          .transform(graft.graph.PathFinder.ckpt)
-        while (!active.isEmpty) {
-          val (fin, open) = (active.filter(col("back") === col("dist")),
-            active.filter(col("back") < col("dist")))
-          done += fin.select(col("src"), col("dst"), col("dist"),
-            col("suf").as("path"))
-          active = open.alias("a")
-            .join(parents.alias("p"),
-              col("a.src") === col("p.src") && col("a.cur") === col("p.v"))
-            .select(col("a.src").as("src"), col("a.dst").as("dst"),
-              col("a.dist").as("dist"), (col("a.back") + 1L).as("back"),
-              col("p.pv").as("cur"),
-              concat(array(col("p.pv"), col("p.pe")), col("a.suf"))
-                .as("suf"))
-            .transform(graft.graph.PathFinder.ckpt)
-        }
-        done.toSeq
+            (col("k") - 1L).as("left"), col("pv").as("cur"),
+            array(col("pv"), col("pe"), col("v")).as("suf")),
+          parents, "v", "dist")
+        parents.unpersist()
+        paths
       }
     // e is memo-owned (distEidFrame) — no unpersist here
     (zero ++ reconstructed).reduceOption(_ union _)
@@ -1044,33 +1027,44 @@ object PathFinder {
     // ---- backtrack: extend suffixes leftward through the parent tree ----
     // dist is already localCheckpoint'd — block-manager-resident for the
     // repeated per-level joins; a persist on top would just leak
-    val parents = dist
-    val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    done += parents.filter(col("hops") === 0L)
-      .select(col("src"), col("dst"), col("cost"),
-        array(col("src")).as("path"))
-    var active = parents.filter(col("hops") > 0L)
+    val routes = unwindRoutes(dist.filter(col("hops") > 0L)
       .select(col("src"), col("dst"), col("cost"),
         (col("hops") - 1L).as("left"), col("pv").as("cur"),
-        array(col("pv"), col("pe"), col("dst")).as("suf"))
-      .transform(graft.graph.PathFinder.ckpt)
+        array(col("pv"), col("pe"), col("dst")).as("suf")),
+      dist, "dst", "cost")
+    // e is memo-owned (sessionEdgeIndex) — no unpersist here
+    (dist.filter(col("hops") === 0L).select(col("src"), col("dst"),
+      col("cost"), array(col("src")).as("path")) +: routes).reduce(_ union _)
+    }
+  }
+
+  /** The route unwind of [[allShortestPaths]] and [[cheapestRoutes]]:
+    * each row (src, dst, `carry`, left, cur, suf) of `start` holds a path
+    * suffix `suf` that begins at `cur` and still lacks `left` edges. A
+    * round joins the unfinished rows to every parent alternative of
+    * `cur` in `parents` (src, `at`, pv, pe) and prepends [pv, pe] — a
+    * cartesian per level where a vertex keeps several parents, which is
+    * the path fan-out itself — until no row lacks an edge.
+    *
+    * @return (src, dst, `carry`, path) frames, one per round
+    */
+  private def unwindRoutes(start: DataFrame, parents: DataFrame, at: String,
+      carry: String): Seq[DataFrame] = {
+    val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var active = start.transform(ckpt)
     while (!active.isEmpty) {
-      val (fin, open) =
-        (active.filter(col("left") === 0L), active.filter(col("left") > 0L))
-      done += fin.select(col("src"), col("dst"), col("cost"),
-        col("suf").as("path"))
-      active = open.alias("a")
+      done += active.filter(col("left") === 0L)
+        .select(col("src"), col("dst"), col(carry), col("suf").as("path"))
+      active = active.filter(col("left") > 0L).alias("a")
         .join(parents.alias("p"),
-          col("a.src") === col("p.src") && col("a.cur") === col("p.dst"))
+          col("a.src") === col("p.src") && col("a.cur") === col(s"p.$at"))
         .select(col("a.src").as("src"), col("a.dst").as("dst"),
-          col("a.cost").as("cost"), (col("a.left") - 1L).as("left"),
+          col(s"a.$carry").as(carry), (col("a.left") - 1L).as("left"),
           col("p.pv").as("cur"),
           concat(array(col("p.pv"), col("p.pe")), col("a.suf")).as("suf"))
-        .transform(graft.graph.PathFinder.ckpt)
+        .transform(ckpt)
     }
-    // e is memo-owned (sessionEdgeIndex) — no unpersist here
-    done.reduce(_ union _)
-    }
+    done.toSeq
   }
 
   /** Reachability — semantics of reference `reachability`

@@ -694,6 +694,28 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
     assert(graft.OpCaches.trackedCount == 0)
   }
 
+  test("OpCaches: distributed triangles and LCC release their caches") {
+    val s = Fixture.init()
+    import s.implicits._
+    graft.OpCaches.releaseAll()
+    // a triangle 0-1-2 with a pendant 3 and an isolated vertex 4
+    val es = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)).toDF("src", "dst")
+    val vs = (0L to 4L).toDF("id")
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val tris = withDist(Algorithms.triangleCounts(vs, es).collect())
+    // the undirected relation, the degrees and the oriented edges
+    assert(graft.OpCaches.trackedCount == 3)
+    val lcc = withDist(
+      Algorithms.localClusteringCoefficient(vs, es).collect())
+    assert(graft.OpCaches.trackedCount == 6)
+    graft.OpCaches.releaseAll()
+    assert(s.sparkContext.getPersistentRDDs.keySet == before)
+    assert(tris.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 0L, 4L -> 0L))
+    assert(lcc.map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(0L -> 1.0, 1L -> 1.0, 2L -> 1.0 / 3, 3L -> 0.0, 4L -> 0.0))
+  }
+
   test("link prediction: distributed wedge join and local kernel agree " +
       "exactly (rounded doubles included)") {
     val s = Fixture.init()

@@ -530,22 +530,27 @@ class DistributedKernelsSpec extends AnyFunSuite {
       s.conf.set("spark.sql.adaptive.enabled", "false")
       s.sparkContext.addSparkListener(listener)
       try {
-        val n5 = {
-          jobs.set(0)
-          Algorithms.pageRank(v, e, fixedIter = Some(5)).count()
-          Thread.sleep(1500); jobs.get()
+        val (seeds, we) = (Seq(0L, 7L).toDF("id"),
+          e.withColumn("w", org.apache.spark.sql.functions.lit(2.0)))
+        Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+          "pagerank" -> (k => Algorithms.pageRank(v, e, fixedIter = Some(k))),
+          "personalized pagerank" ->
+            (k => Algorithms.personalizedPageRank(v, e, seeds, iters = k)),
+          "weighted pagerank" -> (k => Algorithms.weightedPageRank(v, we,
+            iters = k))
+        ).foreach { case (name, run) =>
+          val Seq(n5, n10) = Seq(5, 10).map { k =>
+            jobs.set(0)
+            run(k).count()
+            Thread.sleep(1500); jobs.get()
+          }
+          // marginal jobs per iteration: localCheckpoint materialization +
+          // ONE fused stats action + the broadcast-exchange build the join
+          // submits asynchronously = 3; the unfused dangling+delta form ran 4
+          val perIter = (n10 - n5) / 5.0
+          assert(perIter <= 3.2,
+            s"$name marginal cost $perIter jobs/iteration (n5=$n5, n10=$n10)")
         }
-        val n10 = {
-          jobs.set(0)
-          Algorithms.pageRank(v, e, fixedIter = Some(10)).count()
-          Thread.sleep(1500); jobs.get()
-        }
-        // marginal jobs per iteration: localCheckpoint materialization +
-        // ONE fused stats action + the broadcast-exchange build the join
-        // submits asynchronously = 3; the unfused dangling+delta form ran 4
-        val perIter = (n10 - n5) / 5.0
-        assert(perIter <= 3.2,
-          s"pagerank marginal cost $perIter jobs/iteration (n5=$n5, n10=$n10)")
       } finally {
         s.sparkContext.removeSparkListener(listener)
         s.conf.set("spark.sql.adaptive.enabled", aqe)

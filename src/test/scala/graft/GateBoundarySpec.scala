@@ -15,12 +15,13 @@ import graft.pgq.PathMode
   * strategy gate must hand a local kernel the COMPLETE cleaned multiset
   * exactly when n ≤ g; BFS and WCC must give the brute-force answer on
   * both sides of g = n; and the path kernels (with and without declared
-  * eids), cheapestRoutes, PageRank and LCC must return the same rows at
-  * g = n − 1 (distributed) and g = n (local), path arrays included —
-  * which pins the local CSR's slot order to the distributed dense-eid
-  * and min-struct tie-breaks. The compiler's array id translation, whose
-  * join form runs only past the 65536-row local-map cap, must equal its
-  * local-map form on random arrays and bijections. */
+  * eids), cheapestRoutes, the three PageRanks, LCC and both label
+  * propagations must return the same rows at g = n − 1 (distributed) and
+  * g = n (local), n the rows of the frame each kernel gates, path arrays
+  * included — which pins the local CSR's slot order to the distributed
+  * dense-eid and min-struct tie-breaks. The compiler's array id
+  * translation, whose join form runs only past the 65536-row local-map
+  * cap, must equal its local-map form on random arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -130,10 +131,21 @@ class GateBoundarySpec extends AnyFunSuite {
           PathFinder.cheapestRoutes(s, attributed(twice), sd))
       } && {
         // with a null-dst row: a null endpoint never counts toward a degree
-        val edges = frame(g.copy(nulls = 3))
+        // and never joins a domain
+        val (edges, weighted) = (frame(g.copy(nulls = 3)),
+          attributed(g.copy(nulls = 3)))
+        // weighted LPA gates its summed undirected pairs, not the rows
+        val pairs = g.cleaned.collect {
+          case (a, b) if a != b => (a min b, a max b)
+        }.distinct
         agree(g.n) {
           Seq(Algorithms.pageRank(vs, edges, fixedIter = Some(10)),
-            Algorithms.localClusteringCoefficient(vs, edges))
+            Algorithms.localClusteringCoefficient(vs, edges),
+            Algorithms.personalizedPageRank(vs, edges, sd, iters = 10),
+            Algorithms.weightedPageRank(vs, weighted, iters = 10),
+            Algorithms.labelPropagation(vs, edges))
+        } && agree(pairs.length) {
+          Seq(Algorithms.weightedLabelPropagation(vs, weighted))
         }
       }
     })
