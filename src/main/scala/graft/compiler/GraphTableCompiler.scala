@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.model._
 import graft.pgq._
 import graft.graph.{PathFinder, PlanMemo}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Compiles a [[MatchSpec]] (the SQL/PGQ `GRAPH_TABLE(... MATCH ...)` body)
   * to a plain DataFrame — the Spark-native analogue of the reference's
@@ -68,6 +69,17 @@ object GraphTableCompiler {
 
   private final case class Binding(alias: String, isVertex: Boolean,
       table: String, keyCols: Seq[String] = Nil)
+
+  /** A driver-resident path endpoint: the unique, non-null values of
+    * its vertex table's single integral key `key` (of type `keyType`).
+    * Seeds and targets over it are Project/Filter over a local relation,
+    * which Spark folds at optimization, and its join-back is a membership
+    * test on the kernel's endpoint column. */
+  private final class Resident(val key: String,
+      val keyType: org.apache.spark.sql.types.DataType,
+      val keys: Array[Long]) {
+    lazy val set = new graft.functions.LongLongMap(keys, keys)
+  }
 
   /** One enumerated quantified segment of the current pattern, for the
     * mixed-pattern mode filters: the in-plan interleaved path column plus
@@ -242,7 +254,6 @@ object GraphTableCompiler {
     * made plan canonicalization O(map). */
   private[graft] def translateLocal(df: DataFrame, c: String,
       m: Map[Long, Long], vertexSlotsOnly: Boolean): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val table = new graft.functions.LongLongMap(m)
     def look(x: Column): Column = Bridge.column(
       graft.functions.LongMapLookupOrSelf(Bridge.expression(x), table))
@@ -472,7 +483,8 @@ object GraphTableCompiler {
         joinCond: Option[String => Column],
         hint: Option[String] = None,
         fuse: Option[(String, String, Seq[String], Seq[String])] = None,
-        boundRefKeys: Option[Seq[String]] = None)
+        boundRefKeys: Option[Seq[String]] = None,
+        resident: Option[Resident] = None)
         : String = {
       val name = vp.varName.getOrElse(freshName("v"))
       bindings.get(name) match {
@@ -531,7 +543,8 @@ object GraphTableCompiler {
             vp.where.foreach(w => plan = plan.filter(rexpr(w)))
             eAlias
           } else {
-            var df = vertexDF(vt, vp.label).alias(name)
+            var df = resident.fold(vertexDF(vt, vp.label))(residentFrame)
+              .alias(name)
             vp.where.foreach(w => df = df.filter(expr(w)))
             bindings(name) = Binding(name, isVertex = true, vt.tableName,
               vt.keyCols)
@@ -602,6 +615,84 @@ object GraphTableCompiler {
 
     def numericKey(vt: VertexTable, key: String): Boolean =
       integral(fieldType(resolver(spark, vt.tableName), key))
+
+    /** The [[Resident]] key set of a quantified path's endpoint `vp` at
+      * hop end `e` of route `r`, or None (→ today's join). Eligible: the
+      * vertex is bound exactly once, carries no sub-label, and has a
+      * single integral key that every hop of the route touching its table
+      * references; and no text that can read it — its element WHERE, the
+      * global WHERE, COLUMNS — reads any property but that key (a star, a
+      * whole-element reference or a bare column name of its table counts
+      * as reading all). Such a vertex adds nothing to a plan row but its
+      * key, which the kernel already carries. The key set is ONE
+      * strategy-gate collect of the base table ([[PathFinder.collectUnder]],
+      * memoized by base plan and snapshot token) at most
+      * min(65536, local gate) rows (a gate of 0 collects nothing); a
+      * null flag rides along so the uniqueness verdict read off it is the
+      * probe's (null keys group together). Over the cap or not unique →
+      * None. */
+    def residentFor(vp: VertexPattern, e: End, r: Route): Option[Resident] = {
+      import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+        UnresolvedStar}
+      val (vt, key) = (e.vt, e.refKeys.head)
+      def lower(ks: Seq[String]): Seq[String] = ks.map(_.toLowerCase)
+      lazy val cols =
+        resolver(spark, vt.tableName).columns.map(_.toLowerCase).toSet
+      def named(n: String): Boolean = vp.varName.exists(_.equalsIgnoreCase(n))
+      def readsKeyOnly(text: String): Boolean =
+        scala.util.Try(spark.sessionState.sqlParser.parseExpression(text))
+          .toOption.exists(!_.exists {
+            case ua: UnresolvedAttribute =>
+              val p = ua.nameParts
+              if (named(p.head)) !(p.length == 2 && p(1).equalsIgnoreCase(key))
+              else p.length == 1 && cols(p.head.toLowerCase)
+            case st: UnresolvedStar => st.target.forall(t => named(t.head))
+            case _ => false
+          })
+      val boundOnce = vp.varName.forall(n =>
+        spec.patterns.flatMap(_.elements).count {
+          case v: VertexPattern => v.varName.contains(n)
+          case ep: EdgePattern => ep.varName.contains(n)
+        } == 1)
+      val cap = math.min(localMapMaxRows, PathFinder.localMaxRows(spark))
+      val eligible = cap > 0 && e.numeric && boundOnce &&
+        vp.label.forall(l => !vt.subLabels.exists(_.equalsIgnoreCase(l)) &&
+          scala.util.Try(pg.vertexLabel(l).tableName).toOption
+            .contains(vt.tableName)) &&
+        lower(vt.keyCols) == lower(e.refKeys) &&
+        r.hops.flatMap(h => Seq(h.a, h.b)).forall(x =>
+          x.table != vt.tableName || lower(x.refKeys) == lower(e.refKeys)) &&
+        (vp.where.toSeq ++ spec.where ++ spec.columns.map(_.expr))
+          .forall(readsKeyOnly)
+      val k = col(s"`${key.replace("`", "``")}`")
+      if (!eligible) None
+      else PathFinder.collectUnder(resolver(spark, vt.tableName)
+          .select(coalesce(k.cast("long"), lit(0L)), k.isNull.cast("long")),
+        cap).flatMap { c =>
+          val (ks, isNull) = (c.longs(0), c.longs(1))
+          val keys = ks.indices.filter(isNull(_) == 0L).map(ks).toArray
+          val sorted = keys.sorted
+          val unique = ks.length - keys.length <= 1 &&
+            (1 until sorted.length).forall(i => sorted(i) != sorted(i - 1))
+          Option.when(unique)(new Resident(key,
+            fieldType(resolver(spark, vt.tableName), key), keys))
+        }
+    }
+
+    /** A resident key set as a one-column local frame named and typed
+      * like the key. */
+    def residentFrame(res: Resident): DataFrame = {
+      import spark.implicits._
+      res.keys.toSeq.toDF("k").select(col("k").cast(res.keyType).as(res.key))
+    }
+
+    /** `df` plus vertex `alias`'s key column, read off the kernel's long
+      * endpoint column `from` and qualified `alias`, so every `alias.key`
+      * reference resolves as against a joined vertex frame. */
+    def withResidentKey(df: DataFrame, alias: String, res: Resident,
+        from: String): DataFrame =
+      df.select(col("*"), Bridge.qualifiedAs(col(from).cast(res.keyType),
+        alias, res.key))
 
     // enumerated segments of the pattern being processed (cleared per
     // pattern; filled by bindPathEdge on the enumeration route)
@@ -966,9 +1057,15 @@ object GraphTableCompiler {
       val modeVertexPos = scala.collection.mutable.ArrayBuffer[String]()
       val modeEdgePos =
         scala.collection.mutable.ArrayBuffer[(String, EdgeTable)]()
-      // a label-less head vertex resolves from the first edge's endpoint
-      var prevV = bindVertex(elems.head.asInstanceOf[VertexPattern], None,
-        r.hops.headOption.map(_.a.vt.label))
+      // a label-less head vertex resolves from the first edge's endpoint;
+      // a resident head seeding the first pattern's kernel hop binds its
+      // key set, so its seeds need no job and its rows no join-back
+      val head = elems.head.asInstanceOf[VertexPattern]
+      val headRes = r.hops.headOption.filter(h => plan == null &&
+          r.viaKernel(h) && h.a.numeric && h.b.numeric)
+        .flatMap(h => residentFor(head, h.a, r))
+      var prevV = bindVertex(head, None, r.hops.headOption.map(_.a.vt.label),
+        resident = headRes)
       modeVertexPos += prevV
 
       val segCols = scala.collection.mutable.ArrayBuffer[Column]()
@@ -985,7 +1082,8 @@ object GraphTableCompiler {
         // 0-3-0 over a 2-cycle IS a trail (two distinct stored rows), while
         // 0-3-0-3 repeats the forward row and is not.
         if (r.viaKernel(h)) {
-          val (bAlias, pcol) = bindPathEdge(r, h, vp, prevV)
+          val (bAlias, pcol) = bindPathEdge(r, h, vp, prevV,
+            headRes.filter(_ => k == 0))
           pcol.foreach(c => segCols += col(c))
           prevV = bAlias
         } else if (r.segments) {
@@ -1302,7 +1400,8 @@ object GraphTableCompiler {
       * Spark-plan mirror of reference `AddPathFinding` match.cpp:673-707 and
       * `CheckNamedSubpath`/shortest-path CTE :709-790. */
     def bindPathEdge(r: Route, h: Hop, vp: VertexPattern,
-        aAlias: String): (String, Option[String]) = {
+        aAlias: String, aRes: Option[Resident])
+        : (String, Option[String]) = {
       val (p, ep, et, a, b) = (r.p, h.ep, h.et, h.a, h.b)
       val q = ep.quantifier.getOrElse(Quantifier(1, Some(1)))
       // reference guard (match.cpp:100-104, subpath_match.test): an
@@ -1384,14 +1483,21 @@ object GraphTableCompiler {
       // physical rowids and CSR construction maps PK/FK tuples to them
       // (compressed_sparse_row.cpp:194-204,238-250).
       val keyIsNumeric = a.numeric && b.numeric
+      val bRes = if (keyIsNumeric) residentFor(vp, b, r) else None
 
       // the reference's CSR build refuses duplicate vertex keys for
       // path-finding queries (csr_creation.cpp:121-125,
       // non-unique-vertices.test:36-75) — a kernel over a non-injective
       // key space silently collapses duplicates, so raise the same loud
       // error. Fixed-hop joins (no kernel) legitimately keep duplicates.
-      requireUniqueKeys(a.vt, a.refKeys)
-      requireUniqueKeys(b.vt, b.refKeys)
+      // A resident key set is unique by construction: its collect is the
+      // verdict for its key space.
+      val residentEnds = aRes.map(_ => a).toSeq ++ bRes.map(_ => b)
+      Seq(a, b).foreach { e =>
+        if (!residentEnds.exists(x => x.table == e.table &&
+            x.refKeys.map(_.toLowerCase) == e.refKeys.map(_.toLowerCase)))
+          requireUniqueKeys(e.vt, e.refKeys)
+      }
 
       // declared edge identity rides into the kernels so path arrays carry
       // real edge ids (reference rowid analogue); otherwise the synthetic
@@ -1411,10 +1517,12 @@ object GraphTableCompiler {
       var joinedExtraBytes = 0L
       val (edgeList, seedList, fromRowid) =
         if (keyIsNumeric) {
+          // a resident head's keys are unique: no distinct
+          val seeds = plan.select(col(s"$aAlias.${a.refKeys.head}")
+            .cast("long").as("id"))
           (edges.select(Seq(col(a.edgeKeys.head).cast("long").as("src"),
             col(b.edgeKeys.head).cast("long").as("dst")) ++ eidCols: _*),
-            plan.select(col(s"$aAlias.${a.refKeys.head}").cast("long")
-              .as("id")).distinct(),
+            if (aRes.isDefined) seeds else seeds.distinct(),
             identity[DataFrame] _)
         } else {
           if (!h.homogeneous)
@@ -1574,7 +1682,7 @@ object GraphTableCompiler {
                 vp.label.exists(l =>
                   b.vt.subLabels.exists(_.equalsIgnoreCase(l))))) {
               try {
-                var tDF = vertexDF(b.vt, vp.label)
+                var tDF = bRes.fold(vertexDF(b.vt, vp.label))(residentFrame)
                   .alias(vp.varName.getOrElse(freshName("t")))
                 vp.where.foreach(w => tDF = tDF.filter(expr(w)))
                 Some(tDF.select(col(b.refKeys.head).cast("long").as("id")))
@@ -1603,17 +1711,35 @@ object GraphTableCompiler {
       val joinedBytes =
         if (kernelFrameBytes >= 0L && joinedExtraBytes >= 0L)
           kernelFrameBytes + joinedExtraBytes else -1L
-      plan =
-        if (joinedBytes >= 0L && joinedBytes <= broadcastMax)
-          plan.join(broadcast(joined), srcCond, "inner")
-        else plan.join(joined, srcCond, "inner")
+      // a resident head's rows are exactly its seeds, which the kernel
+      // carries as __psrc: no join-back
+      plan = aRes match {
+        case Some(res) => withResidentKey(joined, aAlias, res, "__psrc")
+        case None =>
+          if (joinedBytes >= 0L && joinedBytes <= broadcastMax)
+            plan.join(broadcast(joined), srcCond, "inner")
+          else plan.join(joined, srcCond, "inner")
+      }
       setPlanFootprint(-1L) // kernel frame: rows may multiply downstream
       setChainUnique(false)
-      val bAlias = bindVertex(vp, Some(bv =>
-        if (keyIsNumeric)
-          col(s"$bv.${b.refKeys.head}").cast("long") === col("__pdst")
-        else keyStruct(b.refKeys, Some(bv)) === col("__pdst")),
-        Some(b.vt.label))
+      val bAlias = bRes match {
+        case Some(res) =>
+          // resident far end: the join-back with its unique keys is a
+          // membership test on __pdst
+          val name = vp.varName.getOrElse(freshName("v"))
+          bindings(name) = Binding(name, isVertex = true, b.table,
+            b.vt.keyCols)
+          plan = withResidentKey(plan.filter(Bridge.column(
+              graft.functions.LongMapContains(Bridge.expression(
+                col("__pdst")), res.set))), name, res, "__pdst")
+          vp.where.foreach(w => plan = plan.filter(expr(w)))
+          name
+        case None => bindVertex(vp, Some(bv =>
+          if (keyIsNumeric)
+            col(s"$bv.${b.refKeys.head}").cast("long") === col("__pdst")
+          else keyStruct(b.refKeys, Some(bv)) === col("__pdst")),
+          Some(b.vt.label))
+      }
       plan = plan.drop("__psrc", "__pdst")
       if (r.enumerates)
         currentModeSegs += ModeSeg(segColOpt.get, h, aAlias, bAlias)

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -16,12 +17,15 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * field). Arrays serialize compactly with the task closure — the same
   * shipping cost profile as the map literal it replaces.
   */
-final class LongLongMap(m: Map[Long, Long]) extends Serializable {
-  // size captured as a plain field so the boxed source Map is NOT
+final class LongLongMap(keys: Array[Long], values: Array[Long])
+    extends Serializable {
+  def this(m: Map[Long, Long]) = this(m.keys.toArray, m.values.toArray)
+
+  // size captured as a plain field so the source arrays are NOT
   // retained (a constructor param referenced only here would otherwise
   // become a field and ship with every task closure alongside the
   // open-addressed arrays, doubling the serialized weight)
-  val size: Int = m.size
+  val size: Int = keys.length
   private val cap: Int = {
     var c = 4
     while (c < size * 2) c <<= 1
@@ -38,12 +42,17 @@ final class LongLongMap(m: Map[Long, Long]) extends Serializable {
     (h ^ (h >>> 32)).toInt & mask
   }
 
-  for ((k, v) <- m) {
-    if (k == Long.MinValue) { hasMin = true; minVal = v }
-    else {
-      var i = slot(k)
-      while (ks(i) != Long.MinValue && ks(i) != k) i = (i + 1) & mask
-      ks(i) = k; vs(i) = v
+  locally {
+    var j = 0
+    while (j < size) {
+      val k = keys(j)
+      if (k == Long.MinValue) { hasMin = true; minVal = values(j) }
+      else {
+        var i = slot(k)
+        while (ks(i) != Long.MinValue && ks(i) != k) i = (i + 1) & mask
+        ks(i) = k; vs(i) = values(j)
+      }
+      j += 1
     }
   }
 
@@ -60,7 +69,21 @@ final class LongLongMap(m: Map[Long, Long]) extends Serializable {
     }
     k // unreachable: table load ≤ 50% guarantees an empty slot
   }
+
+  /** Whether `k` is a key of the map. */
+  def contains(k: Long): Boolean = {
+    if (k == Long.MinValue) return hasMin
+    var i = slot(k)
+    while (true) {
+      val kk = ks(i)
+      if (kk == k) return true
+      if (kk == Long.MinValue) return false
+      i = (i + 1) & mask
+    }
+    false // unreachable, as in getOrSelf
+  }
 }
+
 
 /** `coalesce(element_at(mapLiteral, x), x)` as one codegen'd O(1) hash
   * probe. Null input → null (the `element_at`+`coalesce` pipeline's
@@ -81,6 +104,29 @@ case class LongMapLookupOrSelf(child: Expression, table: LongLongMap)
     val ref = ctx.addReferenceObj("graftLongMap", table,
       classOf[LongLongMap].getName)
     nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.getOrSelf($x);")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): Expression = copy(child = newChild)
+}
+
+/** `x IN (keys of table)` as one codegen'd O(1) hash probe: the MATCH
+  * compiler's membership test for a driver-resident vertex key set.
+  * Null input → null, which a filter drops (an IN list's semantics for a
+  * null probe). Like [[LongMapLookupOrSelf]], the table rides the plan
+  * as an opaque reference, never as a literal list. */
+case class LongMapContains(child: Expression, table: LongLongMap)
+    extends UnaryExpression with Predicate {
+  override def prettyName: String = "long_map_contains"
+
+  override def nullSafeEval(x: Any): Any =
+    table.contains(x.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("graftLongMap", table,
+      classOf[LongLongMap].getName)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.contains($x);")
   }
 
   override protected def withNewChildInternal(

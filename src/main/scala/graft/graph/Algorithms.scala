@@ -69,7 +69,7 @@ object Algorithms {
       LocalKernels.pageRank(g, g.extra, _ => 1.0, Array.fill(g.n)(1.0 / n),
         damping, iters, stop, phantomNodes).toSeq.toDF("id", "pagerank")
     }.getOrElse {
-      val v = vertices.select(col("id")).distinct()
+      val v = PathFinder.dropNullIds(vertices).select(col("id")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       val n = v.count() + phantomNodes.toDouble
       val e = rankEdges(edges, lit(1.0))
@@ -95,7 +95,7 @@ object Algorithms {
   /** Vertex ids ∪ edge endpoints, as longs: the domain of the kernels
     * whose edges may leave the vertex set. */
   private def endpointDomain(vertices: DataFrame, e: DataFrame): DataFrame =
-    vertices.select(col("id").cast("long").as("id"))
+    PathFinder.dropNullIds(vertices).select(col("id").cast("long").as("id"))
       .union(e.select(col("src").as("id")))
       .union(e.select(col("dst").as("id")))
       .distinct()

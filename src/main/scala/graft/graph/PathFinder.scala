@@ -225,6 +225,15 @@ object PathFinder {
   private def dropNullEndpoints(e: DataFrame): DataFrame =
     e.where(col("src").isNotNull && col("dst").isNotNull)
 
+  /** Null seed, target and vertex ids (column `c`) name no vertex: every
+    * kernel drops them at ingestion, on both branches, like
+    * [[dropNullEndpoints]] — without this the local collect crashes with
+    * ROW_VALUE_IS_NULL while the distributed loops emit a null seed's
+    * dist-0 row or rank a null vertex. */
+  private[graft] def dropNullIds(ids: DataFrame, c: String = "id")
+      : DataFrame =
+    ids.where(col(c).isNotNull)
+
   /** The cleaned (src, dst) long view of an edge frame: ONE plan for the
     * [[Algorithms]] family, BFS and the unweighted path kernels, so they
     * share one [[collectMemo]] entry per edge frame. */
@@ -246,7 +255,8 @@ object PathFinder {
 
   private[graft] def localVertexIds(vertices: DataFrame, cap: Long)
       : Option[Array[Long]] =
-    collectUnder(vertices.select(col("id").cast("long")).distinct(), cap)
+    collectUnder(dropNullIds(vertices).select(col("id").cast("long"))
+      .distinct(), cap)
       .map(_.longs(0))
 
   /** The gate of the seeded path kernels: Some((CSR, seed ids)) when
@@ -259,7 +269,8 @@ object PathFinder {
       : Option[(Csr, Array[Long])] =
     for {
       e <- collectUnder(edges, localMaxRows(edges.sparkSession))
-      s <- collectUnder(seeds.select(col("id").cast("long")), localMaxSeeds)
+      s <- collectUnder(dropNullIds(seeds).select(col("id").cast("long")),
+        localMaxSeeds)
     } yield (Csr(e, s.longs(0)), s.longs(0))
 
   /** The path kernels' (src, dst[, eid]) long view: the declared `eid`
@@ -354,7 +365,8 @@ object PathFinder {
       (g, seedArr) <- localInputs(edgePairs(edges), seeds)
       // target ids are vertex ids: gated like them
       targetIds <- targets.fold(Option(Option.empty[Set[Long]]))(t =>
-        collectUnder(t.select(col(t.columns.head).cast("long")),
+        collectUnder(dropNullIds(t, t.columns.head)
+            .select(col(t.columns.head).cast("long")),
           localMaxRows(t.sparkSession)).map(c => Some(c.longs(0).toSet)))
     } yield {
       import spark.implicits._
@@ -369,7 +381,7 @@ object PathFinder {
     val e = sessionEdgeIndex(spark, clean, "pair")(clean)
     targets match {
       case Some(t) =>
-        bidirectionalDistances(spark, e, seeds,
+        bidirectionalDistances(spark, e, dropNullIds(seeds),
           t.select(col(t.columns.head).cast("long").as("id")),
           maxDepth.getOrElse(Long.MaxValue))
       case None =>
@@ -391,7 +403,7 @@ object PathFinder {
         def settle(df: DataFrame): DataFrame =
           if (fused) graft.OpCaches.track(df)
           else df.transform(graft.graph.PathFinder.ckpt)
-        val seedRows = settle(seeds.select(col("id").as("src"),
+        val seedRows = settle(dropNullIds(seeds).select(col("id").as("src"),
           col("id").as("dst"), lit(0L).as("dist")).distinct())
         var seen = seedRows
         var frontier = seedRows
@@ -556,7 +568,7 @@ object PathFinder {
     // equal-length arrays compare prefix-first, and a path determines its
     // endpoint, so parent ranks order parent paths strictly.
     val limit = upper.getOrElse(Long.MaxValue)
-    val seedRows = seeds.select(col("id").cast("long").as("src"))
+    val seedRows = dropNullIds(seeds).select(col("id").cast("long").as("src"))
       .distinct().transform(graft.graph.PathFinder.ckpt)
     var frontier = seedRows
       .select(col("src"), col("src").as("v"), lit(0L).as("rank"))
@@ -659,12 +671,16 @@ object PathFinder {
     * bounded-quantifier enumeration only.
     *
     * @param edges (src, dst, eid)
+    * @param topK Some(k): only the k least paths per (src, dst) under
+    *             (dist, lexicographic path) order — [[kShortestPaths]];
+    *             ranked on the driver by the local branch, by a window
+    *             on the distributed one
     * @return (src, dst, dist, path) — `path` interleaved `[v,e,…,v]`,
     *         one row per distinct mode-valid path with lower ≤ dist ≤ upper
     */
   def enumerateModePaths(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, lower: Long, upper: Option[Long],
-      mode: PathMode, pruneK: Option[Int] = None): DataFrame = {
+      mode: PathMode, topK: Option[Int] = None): DataFrame = {
     require(upper.forall(_ >= 0), "negative upper bound")
     if (mode == PathMode.Walk && upper.isEmpty)
       throw GraphAnalysisException(
@@ -673,14 +689,19 @@ object PathFinder {
     localInputs(view, seeds).map { case (g, seedArr) =>
       // the per-vertex top-k prune is only sound for WALK (see
       // LocalKernels.kShortestWalks); mode-constrained sets are finite
-      val res = (mode, pruneK) match {
+      val res = (mode, topK) match {
         case (PathMode.Walk, Some(kk)) => LocalKernels.kShortestWalks(
           g, seedArr, lower, upper.getOrElse(Long.MaxValue), kk)
         case _ => LocalKernels.enumeratePaths(
           g, seedArr, lower, upper.getOrElse(Long.MaxValue), mode)
       }
+      val pathOrder = Ordering.Tuple2(Ordering.Long,
+        Ordering.Implicits.seqOrdering[Seq, Long])
       import spark.implicits._
-      res.toSeq.map(t => (t._1, t._2, t._3, t._4.toSeq))
+      topK.fold(res.iterator)(k => res.groupBy(t => (t._1, t._2))
+          .valuesIterator.flatMap(_.sortBy(t => (t._3, t._4.toSeq))(pathOrder)
+            .take(k)))
+        .map(t => (t._1, t._2, t._3, t._4.toSeq)).toSeq
         .toDF("src", "dst", "dist", "path")
     }.getOrElse {
     val e = eidIndex(spark, view)
@@ -699,7 +720,7 @@ object PathFinder {
     val needVisV = mode == PathMode.Acyclic || mode == PathMode.Simple
     val needVisE = mode == PathMode.Trail
     var frontier = settle(
-      seeds.select(col("id").cast("long").as("src")).distinct()
+      dropNullIds(seeds).select(col("id").cast("long").as("src")).distinct()
       .select(Seq(col("src"), col("src").as("v"),
         array(col("src")).as("path")) ++
         (if (needVisV) Seq(array(col("src")).as("vis")) else Nil) ++
@@ -740,7 +761,7 @@ object PathFinder {
       // (src, v) each level — sound by extension monotonicity (see
       // LocalKernels.kShortestWalks), and it bounds the frontier at
       // k·|V| rows instead of the full walk fan-out
-      val next = (pruneK match {
+      val next = (topK match {
         case Some(kk) if mode == PathMode.Walk =>
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("src", "v").orderBy("path")
@@ -763,7 +784,12 @@ object PathFinder {
     // e is memo-owned (distEidFrame): its cache outlives this call BY
     // DESIGN — fused lazy results stay valid, and repeat queries over
     // the same edge view skip the index build entirely
-    out
+    topK.fold(out) { k =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("src", "dst").orderBy(col("dist"), col("path"))
+      out.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= k).drop("__rn")
+    }
     }
   }
 
@@ -781,12 +807,8 @@ object PathFinder {
       throw GraphAnalysisException(
         "SHORTEST k over path mode WALK needs a finite upper bound — " +
           "bound the quantifier or use a non-WALK path mode")
-    val all = enumerateModePaths(spark, edges, seeds, lower, upper, mode,
-      pruneK = Some(k))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("src", "dst").orderBy(col("dist"), col("path"))
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+    enumerateModePaths(spark, edges, seeds, lower, upper, mode,
+      topK = Some(k))
   }
 
   /** ALL SHORTEST — every shortest path per reached (src, dst) pair, one
@@ -814,7 +836,7 @@ object PathFinder {
     }.getOrElse {
     val e = eidIndex(spark, view)
     val limit = upper.getOrElse(Long.MaxValue)
-    val seedRows = seeds.select(col("id").cast("long").as("src"))
+    val seedRows = dropNullIds(seeds).select(col("id").cast("long").as("src"))
       .distinct().transform(graft.graph.PathFinder.ckpt)
     var frontier = seedRows.select(col("src"), col("src").as("v"))
       .transform(graft.graph.PathFinder.ckpt)
@@ -914,7 +936,7 @@ object PathFinder {
     }.getOrElse {
     // memo-owned distributed CSR (see sessionEdgeIndex)
     val e = sessionEdgeIndex(spark, clean, "wpair")(clean)
-    var dist = seeds.select(col("id").as("src"), col("id").as("dst"),
+    var dist = dropNullIds(seeds).select(col("id").as("src"), col("id").as("dst"),
       lit(0.0).cast("double").as("cost")).distinct().transform(graft.graph.PathFinder.ckpt)
     var changed = true
     var iter = 0
@@ -986,7 +1008,8 @@ object PathFinder {
       else Snapshot.denseEdgeIds(spark, view, Seq("src", "dst", "w"))
     }
     // ---- distributed relaxation: narrow rows only ----
-    var dist = seeds.select(col("id").cast("long").as("src")).distinct()
+    var dist = dropNullIds(seeds).select(col("id").cast("long").as("src"))
+      .distinct()
       .select(col("src"), col("src").as("dst"),
         lit(0.0).as("cost"), lit(0L).as("hops"),
         lit(-1L).as("pv"), lit(-1L).as("pe"))

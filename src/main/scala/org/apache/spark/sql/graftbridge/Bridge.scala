@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` API: Column ⇄ Expression conversion
@@ -12,4 +12,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** `c AS name` whose output attribute carries the table qualifier
+    * `qualifier`, so `qualifier.name` resolves against the projection
+    * as if the column came from a frame aliased `qualifier`. */
+  def qualifiedAs(c: Column, qualifier: String, name: String): Column =
+    column(Alias(expression(c), name)(qualifier = Seq(qualifier)))
 }

@@ -13,15 +13,17 @@ import graft.pgq.PathMode
   * edge multisets (self-loops, parallel edges and null endpoints
   * included) with n cleaned rows, gated at g ∈ {0, n−1, n, n+1}. The
   * strategy gate must hand a local kernel the COMPLETE cleaned multiset
-  * exactly when n ≤ g; BFS and WCC must give the brute-force answer on
-  * both sides of g = n; and the path kernels (with and without declared
-  * eids), cheapestRoutes, the three PageRanks, LCC and both label
-  * propagations must return the same rows at g = n − 1 (distributed) and
-  * g = n (local), n the rows of the frame each kernel gates, path arrays
-  * included — which pins the local CSR's slot order to the distributed
-  * dense-eid and min-struct tie-breaks. The compiler's array id
-  * translation, whose join form runs only past the 65536-row local-map
-  * cap, must equal its local-map form on random arrays and bijections. */
+  * exactly when n ≤ g; BFS, WCC, SCC and earliestArrivalFromMin must
+  * give the brute-force answer on both sides of g = n, null seed, target
+  * and vertex ids dropped on both; and the path kernels (with and
+  * without declared eids), cheapestRoutes, the three PageRanks, LCC and
+  * both label propagations must return the same rows at g = n − 1
+  * (distributed) and g = n (local), n the rows of the frame each kernel
+  * gates, path arrays included — which pins the local CSR's slot order
+  * to the distributed dense-eid and min-struct tie-breaks. The
+  * compiler's array id translation, whose join form runs only past the
+  * 65536-row local-map cap, must equal its local-map form on random
+  * arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -151,6 +153,81 @@ class GateBoundarySpec extends AnyFunSuite {
     })
   }
 
+  test("null seed, target and vertex ids at g = n - 1 (distributed) and " +
+      "g = n (local) are dropped on both branches") {
+    check(4)(Prop.forAll(graphs, seedSets) { (g, seeds) =>
+      val s = init()
+      import s.implicits._
+      val edges = frame(g)
+      def ids(xs: Seq[Long]): DataFrame =
+        (xs.map(Option(_)) :+ Option.empty[Long]).toDF("id")
+      val (sd, vs) = (ids(seeds), ids(vertices))
+      val bfsWant = bruteBfs(g.cleaned, seeds, 2)
+        .map { case (a, b, d) => Seq(a, b, d) }.sortBy(_.mkString(","))
+      agree(g.n) {
+        Seq(PathFinder.bfsDistances(s, edges, sd, Some(2L)),
+          PathFinder.reachablePairs(s, edges, sd),
+          PathFinder.shortestPaths(s, edges, sd, 0L, None),
+          PathFinder.bfsDistances(s, edges, sd, Some(3L),
+            Some(ids(Seq(1L, 3L)))),
+          Algorithms.weaklyConnectedComponents(vs, edges),
+          Algorithms.pageRank(vs, edges, fixedIter = Some(10)))
+      } && Seq(g.n - 1L, g.n.toLong).forall(gate => withGate(spark, gate)(
+        rows(PathFinder.bfsDistances(s, edges, sd, Some(2L)))) == bfsWant)
+    })
+  }
+
+  test("GRAPH_TABLE path query over a vertex table with a null key: the " +
+      "default gate gives the forced-distributed rows") {
+    val s = init()
+    import s.implicits._
+    Seq((Option(0L), "x"), (Option(1L), "y"), (Option(2L), "z"),
+      (Option.empty[Long], "w")).toDF("id", "name")
+      .createOrReplaceTempView("gnv")
+    Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 2L)).toDF("src", "dst")
+      .createOrReplaceTempView("gne")
+    val gr = Graft(s, graft.model.TableResolver.catalog)
+    gr.sql("""CREATE OR REPLACE PROPERTY GRAPH gng
+      VERTEX TABLES (gnv LABEL V)
+      EDGE TABLES (gne SOURCE KEY (src) REFERENCES gnv (id)
+        DESTINATION KEY (dst) REFERENCES gnv (id) LABEL E)""")
+    // reading a.name keeps `a` a join, so its seeds carry the null key
+    Seq("a.id", "a.name").foreach { src =>
+      val q = s"""gng MATCH p = ANY SHORTEST (a:V)-[x:E]->{0,2}(b:V)
+        COLUMNS ($src AS s, b.id AS d, path_length(p) AS n)"""
+      val got = rows(gr.graphTable(q))
+      assert(got.length == 9, got)
+      assert(got == withConf(s)(ForceDist)(rows(gr.graphTable(q))), q)
+    }
+  }
+
+  test("SCC and earliestArrivalFromMin at g = n - 1 (distributed) and " +
+      "g = n (local) equal brute force") {
+    check(6)(Prop.forAll(graphs, seedSets, Gen.choose(1, 3)) {
+      (g, seeds, hops) =>
+        val s = init()
+        import s.implicits._
+        val edges = frame(g)
+        // a timestamp per row, every ninth row's null
+        val timed = g.rows.zipWithIndex.map { case ((a, b), i) =>
+          (a, b, Option(i * 7L % 5L).filter(_ => i % 9 != 8))
+        }
+        val usable = timed.collect {
+          case (Some(a), Some(b), Some(t)) => (a, b, t)
+        }
+        val sccWant = bruteScc(g.cleaned)
+        val eaWant = bruteEarliest(usable, seeds, hops)
+        Seq(g.n - 1L, g.n.toLong).forall(gate => withGate(spark, gate)(
+          Algorithms.stronglyConnectedComponents(vertices.toDF("id"), edges)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap) ==
+          sccWant) &&
+        Seq(usable.length - 1L, usable.length.toLong).forall(gate =>
+          withGate(spark, gate)(rows(Algorithms.earliestArrivalFromMin(
+            timed.toDF("src", "dst", "ts"), seeds.toDF("id"), hops))) ==
+            eaWant)
+    })
+  }
+
   /** A random (`__from` → `__to`) bijection over ids 0..20 and rows of
     * `array<long>` id columns drawn from a small pool (so the join form
     * sees repeated arrays): null and empty arrays, null elements, mapped
@@ -228,6 +305,44 @@ class GateBoundarySpec extends AnyFunSuite {
       case a: scala.collection.Seq[_] => a.toList
       case v => v
     }).sortBy(_.filterNot(_.isInstanceOf[Double]).mkString(","))
+
+  /** Vertices reachable from `v` along `edges` (v included). */
+  private def reach(edges: Seq[(Long, Long)], v: Long): Set[Long] = {
+    var seen = Set(v)
+    var frontier = Set(v)
+    while (frontier.nonEmpty) {
+      frontier = edges.collect { case (a, b) if frontier(a) => b }.toSet -- seen
+      seen ++= frontier
+    }
+    seen
+  }
+
+  /** Strong component of every vertex: its least mutually reachable
+    * vertex. */
+  private def bruteScc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val r = vertices.map(v => v -> reach(edges, v)).toMap
+    vertices.map(v => v -> r(v).filter(u => r(u)(v)).min).toMap
+  }
+
+  /** Earliest arrival over temporal paths of at most `hops` edges with
+    * non-decreasing times from the least time, by synchronous
+    * Bellman-Ford rounds: (seed, vertex, arrival) rows, seeds excluded,
+    * as [[rows]] sorts them. */
+  private def bruteEarliest(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
+      hops: Int): Seq[Seq[Any]] = {
+    val start = if (edges.isEmpty) 0L else edges.map(_._3).min
+    seeds.distinct.flatMap { s =>
+      var arr = Map(s -> start)
+      (1 to hops).foreach { _ =>
+        val prev = arr
+        edges.foreach { case (a, b, t) =>
+          if (prev.get(a).exists(t >= _) && arr.get(b).forall(t < _))
+            arr += b -> t
+        }
+      }
+      (arr - s).map { case (v, t) => Seq[Any](s, v, t) }
+    }.sortBy(_.mkString(","))
+  }
 
   /** Component of every vertex (minimum member id) over the undirected
     * closure of `edges`. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{LongLongMap, LongMapLookupOrSelf}
+import graft.functions.{LongLongMap, LongMapContains, LongMapLookupOrSelf}
 
 /** Unit coverage for the O(1) local-map translation expression that
   * replaced `coalesce(element_at(mapLiteral, x), x)` in the compiler's
@@ -54,5 +54,26 @@ class LongMapLookupSpec extends AnyFunSuite {
     assert(LongMapLookupOrSelf(
       org.apache.spark.sql.catalyst.expressions.Literal(3L), table)
       .eval(null) == 300L)
+  }
+
+  test("contains and the membership predicate: hits, misses, the MinValue " +
+      "key, null input, codegen and interpreted") {
+    val s = init()
+    import s.implicits._
+    val keys = Array(1L, 3L, Long.MinValue)
+    val m = new LongLongMap(keys, keys)
+    assert(m.contains(1L) && m.contains(3L) && m.contains(Long.MinValue))
+    assert(!m.contains(2L) && !new LongLongMap(Array(5L), Array(5L))
+      .contains(Long.MinValue))
+    def member(x: org.apache.spark.sql.Column) =
+      Bridge.column(LongMapContains(Bridge.expression(x), m))
+    val df = Seq[java.lang.Long](1L, 2L, 3L, null, Long.MinValue).toDF("x")
+    assert(df.filter(member($"x")).as[Long].collect().sorted.toList ==
+      List(Long.MinValue, 1L, 3L))
+    assert(df.select(member($"x")).as[Option[Boolean]].collect().toList ==
+      List(Some(true), Some(false), Some(true), None, Some(true)))
+    assert(LongMapContains(
+      org.apache.spark.sql.catalyst.expressions.Literal(3L), m)
+      .eval(null) == true)
   }
 }
