@@ -70,16 +70,31 @@ object GraphTableCompiler {
   private final case class Binding(alias: String, isVertex: Boolean,
       table: String, keyCols: Seq[String] = Nil)
 
-  /** A driver-resident path endpoint: the unique, non-null values of
-    * its vertex table's single integral key `key` (of type `keyType`).
-    * Seeds and targets over it are Project/Filter over a local relation,
-    * which Spark folds at optimization, and its join-back is a membership
-    * test on the kernel's endpoint column. */
+  /** A driver-resident vertex table: the unique, non-null values `keys`
+    * of its single integral key `key` (of type `keyType`), `index`
+    * mapping each to its row, and the `reads` (name, type, one Catalyst
+    * value per row) the query reads of the binding besides the key. A
+    * path endpoint reads only its key: seeds and targets over it are
+    * Project/Filter over a local relation, which Spark folds at
+    * optimization, and its join-back is a membership test on the
+    * kernel's endpoint column. A fixed hop's far vertex is the same
+    * membership test on the edge's key plus one lookup per read. */
   private final class Resident(val key: String,
       val keyType: org.apache.spark.sql.types.DataType,
-      val keys: Array[Long]) {
-    lazy val set = new graft.functions.LongLongMap(keys, keys)
+      val keys: Array[Long], rows: Array[Long],
+      val reads: Seq[(String, org.apache.spark.sql.types.DataType,
+        Array[Any])]) {
+    lazy val index = new graft.functions.LongLongMap(keys, rows)
+    /** Lower-cased names of the columns the binding can serve. */
+    val carries: Set[String] =
+      (key +: reads.map(_._1)).map(_.toLowerCase).toSet
   }
+
+  /** [[Resident]]s by their collected projection (base plan, snapshot
+    * token and read columns) and cap: the index and the boxed reads are
+    * built once per entry, the rows come from the one gate
+    * ([[PathFinder.collectUnder]]). */
+  private val residents = new PlanMemo[Option[Resident]](16)
 
   /** One enumerated quantified segment of the current pattern, for the
     * mixed-pattern mode filters: the in-plan interleaved path column plus
@@ -405,25 +420,42 @@ object GraphTableCompiler {
     // reference `v.prop` in WHERE/COLUMNS must be rewritten to the
     // carrying edge's alias
     val fusedAliases = scala.collection.mutable.Map[String, String]()
+    // plan alias -> its driver-resident table, for vertex bindings read
+    // through lookups (or a one-column key frame) instead of a scan: they
+    // carry only the columns the query reads of them
+    val residentAliases = scala.collection.mutable.Map[String, Resident]()
 
     /** `expr(sql)` with fused-binding qualifiers rewritten: any
-      * `v.prop` where `v` is a fused vertex variable becomes
-      * `edgeAlias.prop`. A no-op (plain `expr`) while nothing is fused —
-      * the overwhelmingly common case. */
-    def rexpr(sql: String): Column =
-      if (fusedAliases.isEmpty) expr(sql)
+      * `v.prop` where `v` is a fused variable becomes `carrier.prop`.
+      * With `bare` = (alias, lower-cased column names), an unqualified
+      * name of one of those columns becomes `alias.name`: an element
+      * WHERE, written against its element's table alone, then reads that
+      * element's columns off the whole plan. A no-op (plain `expr`) when
+      * nothing is rewritten — the overwhelmingly common case. */
+    def rexpr(sql: String, bare: Option[(String, Set[String])] = None)
+        : Column =
+      if (fusedAliases.isEmpty && bare.isEmpty) expr(sql)
       else {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+        import org.apache.spark.sql.catalyst.expressions.LambdaFunction
         val parsed =
           try spark.sessionState.sqlParser.parseExpression(sql)
           catch { case _: Exception => return expr(sql) }
+        val lambdaArgs = parsed.collect {
+          case l: LambdaFunction => l.arguments.map(_.name.toLowerCase)
+        }.flatten.toSet
         val rewritten = parsed.transform {
           case ua: UnresolvedAttribute if ua.nameParts.length >= 2 &&
               fusedAliases.contains(ua.nameParts.head.toLowerCase) =>
             UnresolvedAttribute(
               fusedAliases(ua.nameParts.head.toLowerCase) +: ua.nameParts.tail)
+          case ua: UnresolvedAttribute if ua.nameParts.length == 1 &&
+              bare.exists(_._2(ua.name.toLowerCase)) &&
+              !lambdaArgs(ua.name.toLowerCase) =>
+            UnresolvedAttribute(Seq(bare.get._1, ua.nameParts.head))
         }
-        org.apache.spark.sql.graftbridge.Bridge.column(rewritten)
+        if (rewritten == parsed) expr(sql)
+        else org.apache.spark.sql.graftbridge.Bridge.column(rewritten)
       }
 
     /** The VERTEX binding answering for plan alias `a`: normally the
@@ -484,7 +516,8 @@ object GraphTableCompiler {
         hint: Option[String] = None,
         fuse: Option[(String, String, Seq[String], Seq[String])] = None,
         boundRefKeys: Option[Seq[String]] = None,
-        resident: Option[Resident] = None)
+        resident: Option[Resident] = None,
+        probe: Option[Column] = None)
         : String = {
       val name = vp.varName.getOrElse(freshName("v"))
       bindings.get(name) match {
@@ -542,7 +575,11 @@ object GraphTableCompiler {
               vp.label, vt.tableName, qualifier = Some(eAlias))
             vp.where.foreach(w => plan = plan.filter(rexpr(w)))
             eAlias
+          } else if (plan != null && resident.isDefined && probe.isDefined) {
+            // resident fixed-hop vertex: lookups on the edge's key
+            bindResident(vp, name, vt, resident.get, probe.get)
           } else {
+            resident.foreach(residentAliases(name) = _)
             var df = resident.fold(vertexDF(vt, vp.label))(residentFrame)
               .alias(name)
             vp.where.foreach(w => df = df.filter(expr(w)))
@@ -616,67 +653,145 @@ object GraphTableCompiler {
     def numericKey(vt: VertexTable, key: String): Boolean =
       integral(fieldType(resolver(spark, vt.tableName), key))
 
-    /** The [[Resident]] key set of a quantified path's endpoint `vp` at
-      * hop end `e` of route `r`, or None (→ today's join). Eligible: the
-      * vertex is bound exactly once, carries no sub-label, and has a
-      * single integral key that every hop of the route touching its table
-      * references; and no text that can read it — its element WHERE, the
-      * global WHERE, COLUMNS — reads any property but that key (a star, a
-      * whole-element reference or a bare column name of its table counts
-      * as reading all). Such a vertex adds nothing to a plan row but its
-      * key, which the kernel already carries. The key set is ONE
-      * strategy-gate collect of the base table ([[PathFinder.collectUnder]],
-      * memoized by base plan and snapshot token) at most
-      * min(65536, local gate) rows (a gate of 0 collects nothing); a
-      * null flag rides along so the uniqueness verdict read off it is the
-      * probe's (null keys group together). Over the cap or not unique →
-      * None. */
-    def residentFor(vp: VertexPattern, e: End, r: Route): Option[Resident] = {
+    def lowerEq(xs: Seq[String], ys: Seq[String]): Boolean =
+      xs.map(_.toLowerCase) == ys.map(_.toLowerCase)
+
+    /** The lower-cased columns of `cols` (a table's lower-cased column
+      * names) that `texts` read through the variables `vars`: `v.c` reads
+      * `c`; a whole element `v`, a star over `v` or over everything, and
+      * a bare column name of the table read every column. None when a
+      * text does not parse. */
+    def readsOf(vars: Seq[String], texts: Seq[String], cols: Set[String])
+        : Option[Set[String]] = {
       import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
         UnresolvedStar}
-      val (vt, key) = (e.vt, e.refKeys.head)
-      def lower(ks: Seq[String]): Seq[String] = ks.map(_.toLowerCase)
-      lazy val cols =
-        resolver(spark, vt.tableName).columns.map(_.toLowerCase).toSet
-      def named(n: String): Boolean = vp.varName.exists(_.equalsIgnoreCase(n))
-      def readsKeyOnly(text: String): Boolean =
-        scala.util.Try(spark.sessionState.sqlParser.parseExpression(text))
-          .toOption.exists(!_.exists {
-            case ua: UnresolvedAttribute =>
-              val p = ua.nameParts
-              if (named(p.head)) !(p.length == 2 && p(1).equalsIgnoreCase(key))
-              else p.length == 1 && cols(p.head.toLowerCase)
-            case st: UnresolvedStar => st.target.forall(t => named(t.head))
-            case _ => false
-          })
+      val vs = vars.map(_.toLowerCase).toSet
+      texts.foldLeft(Option(Set.empty[String])) { (acc, text) =>
+        for {
+          read <- acc
+          e <- scala.util.Try(
+            spark.sessionState.sqlParser.parseExpression(text)).toOption
+        } yield read ++ e.collect {
+          case ua: UnresolvedAttribute if vs(ua.nameParts.head.toLowerCase) =>
+            if (ua.nameParts.length == 1) cols
+            else Set(ua.nameParts(1).toLowerCase)
+          case ua: UnresolvedAttribute
+              if ua.nameParts.length == 1 && cols(ua.name.toLowerCase) => cols
+          case st: UnresolvedStar
+              if st.target.forall(t => vs(t.head.toLowerCase)) => cols
+        }.flatten
+      }
+    }
+
+    /** A fixed hop whose edge may answer as its `a` vertex (near-side
+      * identity fusion): a directed hop whose `a`-side edge keys are the
+      * keys it references. The caller checks the rest: the edge lives in
+      * `a`'s table, those keys are the table's and they are unique. */
+    def nearSide(h: Hop): Boolean =
+      h.ep.direction != EdgeDirection.Undirected &&
+        h.ep.direction != EdgeDirection.Both &&
+        lowerEq(h.a.edgeKeys, h.a.refKeys)
+
+    /** What a fixed hop `h` near-side fused onto its `a` vertex reads of
+      * that table: its far-side edge keys, its sub-label discriminator
+      * and whatever the texts read through the edge variable. */
+    def fusedEdgeReads(h: Hop, cols: Set[String]): Option[Set[String]] =
+      readsOf(h.ep.varName.toSeq,
+        h.ep.where.toSeq ++ spec.where ++ spec.columns.map(_.expr), cols)
+        .map(_ ++ h.b.edgeKeys.map(_.toLowerCase) ++
+          h.et.discriminator.filter(_ => h.ep.label.exists(l =>
+            h.et.subLabels.exists(_.equalsIgnoreCase(l)))).map(_.toLowerCase))
+
+    /** The [[Resident]] of vertex `vp` at hop end `e` of route `r`, or
+      * None (→ today's join). One eligibility test serves both uses.
+      * Always: the vertex is bound exactly once, its label's table is
+      * `e`'s, whose single integral key `e` references; the table has no
+      * `__rowid` pseudo-column; the columns read are atomic; and the base
+      * table's non-null keys are unique and number at most
+      * min(65536, local gate) (a gate of 0 collects nothing).
+      *
+      * A quantified path's endpoint (`fixed` None) must also carry no
+      * sub-label, every hop of the route touching its table must
+      * reference the same key, and no text that can read it — its element
+      * WHERE, the global WHERE, COLUMNS — may read any property but that
+      * key: it adds nothing to a plan row but the key the kernel carries.
+      *
+      * A fixed hop's far vertex (`fixed` = the hop and the hop after it)
+      * must be referenced from an integral edge column; it reads what
+      * those texts, its sub-label's discriminator and the next hop read
+      * of it — the next hop's reference keys, and when that hop's edge is
+      * stored in its table and will fuse onto it, that edge's reads.
+      *
+      * The key, its null flag and the reads are ONE strategy-gate collect
+      * of the base table ([[PathFinder.collectUnder]], memoized by base
+      * plan, snapshot token and projection); the null flag makes the
+      * uniqueness verdict the probe's (null keys group together). */
+    def residentFor(vp: VertexPattern, e: End, r: Route,
+        fixed: Option[(Hop, Option[Hop])] = None): Option[Resident] = {
+      val base = resolver(spark, e.table)
+      val key = e.refKeys.head
+      val cols = base.columns.map(_.toLowerCase).toSet
+      val vt = scala.util.Try(pg.vertexLabel(vp.label.getOrElse(e.vt.label)))
+        .toOption.filter(_.tableName == e.table)
+      val subLabeled = vp.label.exists(l =>
+        vt.exists(_.subLabels.exists(_.equalsIgnoreCase(l))))
       val boundOnce = vp.varName.forall(n =>
         spec.patterns.flatMap(_.elements).count {
           case v: VertexPattern => v.varName.contains(n)
           case ep: EdgePattern => ep.varName.contains(n)
         } == 1)
+      val texts = vp.where.toSeq ++ spec.where ++ spec.columns.map(_.expr)
+      val reads: Option[Set[String]] = fixed match {
+        case None =>
+          readsOf(vp.varName.toSeq, texts, cols).filter(rs => !subLabeled &&
+            rs.subsetOf(Set(key.toLowerCase)) &&
+            r.hops.flatMap(h => Seq(h.a, h.b)).forall(x =>
+              x.table != e.table || lowerEq(x.refKeys, e.refKeys)))
+        case Some((h, next)) =>
+          val fuses = next.filter(n => !r.viaKernel(n) && nearSide(n) &&
+            n.et.tableName == e.table && lowerEq(n.a.refKeys, e.refKeys))
+          val keyedByIntegral = h.ep.direction != EdgeDirection.Both &&
+            integral(fieldType(resolver(spark, h.et.tableName),
+              h.b.edgeKeys.head))
+          for {
+            own <- readsOf(vp.varName.toSeq, texts, cols)
+            if keyedByIntegral
+            edge <- fuses.fold(Option(Set.empty[String]))(
+              fusedEdgeReads(_, cols))
+          } yield own ++ edge ++
+            vt.flatMap(_.discriminator).filter(_ => subLabeled)
+              .map(_.toLowerCase) ++
+            next.toSeq.flatMap(_.a.refKeys.map(_.toLowerCase))
+      }
+      val fields = reads.map(rs => base.schema.fields.toSeq.filter(f =>
+        rs(f.name.toLowerCase) && !f.name.equalsIgnoreCase(key))
+        .sortBy(_.name.toLowerCase))
       val cap = math.min(localMapMaxRows, PathFinder.localMaxRows(spark))
       val eligible = cap > 0 && e.numeric && boundOnce &&
-        vp.label.forall(l => !vt.subLabels.exists(_.equalsIgnoreCase(l)) &&
-          scala.util.Try(pg.vertexLabel(l).tableName).toOption
-            .contains(vt.tableName)) &&
-        lower(vt.keyCols) == lower(e.refKeys) &&
-        r.hops.flatMap(h => Seq(h.a, h.b)).forall(x =>
-          x.table != vt.tableName || lower(x.refKeys) == lower(e.refKeys)) &&
-        (vp.where.toSeq ++ spec.where ++ spec.columns.map(_.expr))
-          .forall(readsKeyOnly)
+        vt.exists(v => lowerEq(v.keyCols, e.refKeys)) && !cols("__rowid") &&
+        reads.exists(_.subsetOf(cols)) &&
+        fields.exists(_.forall(f => PathFinder.atomic(f.dataType)))
       val k = col(s"`${key.replace("`", "``")}`")
       if (!eligible) None
-      else PathFinder.collectUnder(resolver(spark, vt.tableName)
-          .select(coalesce(k.cast("long"), lit(0L)), k.isNull.cast("long")),
-        cap).flatMap { c =>
-          val (ks, isNull) = (c.longs(0), c.longs(1))
-          val keys = ks.indices.filter(isNull(_) == 0L).map(ks).toArray
-          val sorted = keys.sorted
-          val unique = ks.length - keys.length <= 1 &&
-            (1 until sorted.length).forall(i => sorted(i) != sorted(i - 1))
-          Option.when(unique)(new Resident(key,
-            fieldType(resolver(spark, vt.tableName), key), keys))
+      else {
+        val frame = base.select(Seq(coalesce(k.cast("long"), lit(0L)),
+          k.isNull.cast("long")) ++
+          fields.get.map(f => col(s"`${f.name.replace("`", "``")}`")): _*)
+        residents.getOrBuild(PlanMemo.id(frame), cap) {
+          PathFinder.collectUnder(frame, cap).flatMap { c =>
+            val (ks, isNull) = (c.longs(0), c.longs(1))
+            val rows = ks.indices.filter(isNull(_) == 0L).toArray
+            val keys = rows.map(ks)
+            val sorted = keys.sorted
+            val unique = ks.length - keys.length <= 1 &&
+              (1 until sorted.length).forall(i => sorted(i) != sorted(i - 1))
+            Option.when(unique)(new Resident(key, fieldType(base, key), keys,
+              rows.map(_.toLong), fields.get.zipWithIndex.map { case (f, j) =>
+                (f.name, f.dataType, c.values(j + 2))
+              }))
+          }
         }
+      }
     }
 
     /** A resident key set as a one-column local frame named and typed
@@ -686,13 +801,37 @@ object GraphTableCompiler {
       res.keys.toSeq.toDF("k").select(col("k").cast(res.keyType).as(res.key))
     }
 
-    /** `df` plus vertex `alias`'s key column, read off the kernel's long
-      * endpoint column `from` and qualified `alias`, so every `alias.key`
+    /** `df` plus vertex `alias`'s key and reads, looked up on the long
+      * key column `from` and qualified `alias`, so every `alias.c`
       * reference resolves as against a joined vertex frame. */
     def withResidentKey(df: DataFrame, alias: String, res: Resident,
-        from: String): DataFrame =
-      df.select(col("*"), Bridge.qualifiedAs(col(from).cast(res.keyType),
-        alias, res.key))
+        from: Column): DataFrame =
+      df.select(col("*") +:
+        Bridge.qualifiedAs(from.cast(res.keyType), alias, res.key) +:
+        res.reads.map { case (c, t, values) =>
+          Bridge.qualifiedAs(Bridge.column(graft.functions.LongMapRowRead(
+            Bridge.expression(from), res.index, values, t)), alias, c)
+        }: _*)
+
+    /** Binds `vp` (label table `vt`) as the resident vertex `name` on the
+      * plan's long column `probe`: rows whose probe is not a key go — the
+      * inner join's rows against unique keys — and the key and every
+      * read come off the probe ([[withResidentKey]]); then its sub-label
+      * and element WHERE. */
+    def bindResident(vp: VertexPattern, name: String, vt: VertexTable,
+        res: Resident, probe: Column): String = {
+      plan = withResidentKey(plan.filter(Bridge.column(
+          graft.functions.LongMapContains(Bridge.expression(probe),
+            res.index))), name, res, probe)
+      bindings(name) = Binding(name, isVertex = true, vt.tableName,
+        vt.keyCols)
+      residentAliases(name) = res
+      plan = subLabelFilter(plan, vt.subLabels, vt.discriminator, vp.label,
+        vt.tableName, qualifier = Some(name))
+      vp.where.foreach(w =>
+        plan = plan.filter(rexpr(w, Some(name -> res.carries))))
+      name
+    }
 
     // enumerated segments of the pattern being processed (cleared per
     // pattern; filled by bindPathEdge on the enumeration route)
@@ -1100,7 +1239,9 @@ object GraphTableCompiler {
         } else {
           val (bAlias, eAlias) = bindFixedEdge(h, vp, prevV,
             withEid = p.mode == PathMode.Trail,
-            allowFuse = p.prefix.isEmpty)
+            allowFuse = p.prefix.isEmpty,
+            lookups = Option.when(p.prefix.isEmpty &&
+              p.mode == PathMode.Walk)((r, r.hops.lift(k + 1))))
           modeEdgePos += ((eAlias, h.et))
           prevV = bAlias
         }
@@ -1324,51 +1465,96 @@ object GraphTableCompiler {
       * (`__geid`) when the table declares no edgeIdCol — named-path and
       * TRAIL hops only. */
     def bindFixedEdge(h: Hop, vp: VertexPattern, aAlias: String,
-        withEid: Boolean, allowFuse: Boolean = false): (String, String) = {
+        withEid: Boolean, allowFuse: Boolean = false,
+        lookups: Option[(Route, Option[Hop])] = None): (String, String) = {
       val (ep, et) = (h.ep, h.et)
       val eName = ep.varName.getOrElse(freshName("e"))
       if (bindings.contains(eName))
         throw GraphAnalysisException(s"Edge variable '$eName' is bound twice")
-      bindings(eName) = Binding(eName, isVertex = false, et.tableName)
 
-      val table = withRowid(
-        if (withEid && et.edgeIdCol.isEmpty) withDenseEid(et)
-        else resolver(spark, et.tableName))
-      val baseDF = edgeSubFilter(table, et, ep.label)
-      val eDF0 = ep.direction match {
-        case EdgeDirection.Undirected => undirectedView(baseDF, h)
-        case _                        => baseDF
+      // Near-side identity fusion: an edge stored in the table of the
+      // already-bound `a`, keyed on that table's unique key, IS `a`'s row
+      // — answer the edge as `a`'s alias instead of self-joining the
+      // table (the mirror of the far-side fusion in bindVertex). A
+      // resident `a` must carry every column the edge reads.
+      val nearFused = allowFuse && !withEid && nearSide(h) && {
+        val ab = vertexBindingAt(aAlias)
+        ab.table == et.tableName && lowerEq(h.a.refKeys, ab.keyCols) &&
+          (residentAliases.get(aAlias) match {
+            case Some(res) => fusedEdgeReads(h,
+                resolver(spark, et.tableName).columns.map(_.toLowerCase).toSet)
+              .exists(_.subsetOf(res.carries))
+            case None => !hasDuplicateKeysTable(et.tableName, h.a.refKeys)
+          })
       }
-      var eDF = eDF0.alias(eName)
-      ep.where.foreach(w => eDF = eDF.filter(expr(w)))
+      val eAlias = if (nearFused) aAlias else eName
+      bindings(eName) = Binding(eAlias, isVertex = false, et.tableName)
 
-      // join edge to the already-bound vertex a; broadcast-side choice +
-      // footprint upkeep: the edge join cannot multiply plan rows iff
-      // every plan row is a distinct a-table row (chainUnique) and the
-      // a-table is unique on the joined ref keys
-      val eBytes = ep.direction match {
-        case EdgeDirection.Undirected | EdgeDirection.Both =>
-          -1L // undirected/both views double/semi-join the table
-        case _ => tableFootprintBytes(et.tableName)
+      if (nearFused) {
+        fusedAliases(eName.toLowerCase) = aAlias
+        // identity-join null semantics, as in the far-side fusion (a
+        // resident key is never null)
+        if (!residentAliases.contains(aAlias))
+          h.a.refKeys.foreach(k => plan = plan.filter(
+            col(s"$aAlias.`${k.replace("`", "``")}`").isNotNull))
+        plan = subLabelFilter(plan, et.subLabels, et.discriminator, ep.label,
+          et.tableName, qualifier = Some(aAlias))
+        val cols = withRowid(resolver(spark, et.tableName)).columns
+          .map(_.toLowerCase).toSet
+        ep.where.foreach(w =>
+          plan = plan.filter(rexpr(w, Some(aAlias -> cols))))
+      } else {
+        val table = withRowid(
+          if (withEid && et.edgeIdCol.isEmpty) withDenseEid(et)
+          else resolver(spark, et.tableName))
+        val baseDF = edgeSubFilter(table, et, ep.label)
+        val eDF0 = ep.direction match {
+          case EdgeDirection.Undirected => undirectedView(baseDF, h)
+          case _                        => baseDF
+        }
+        var eDF = eDF0.alias(eName)
+        ep.where.foreach(w => eDF = eDF.filter(expr(w)))
+
+        // join edge to the already-bound vertex a; broadcast-side choice +
+        // footprint upkeep: the edge join cannot multiply plan rows iff
+        // every plan row is a distinct a-table row (chainUnique) and the
+        // a-table is unique on the joined ref keys
+        val eBytes = ep.direction match {
+          case EdgeDirection.Undirected | EdgeDirection.Both =>
+            -1L // undirected/both views double/semi-join the table
+          case _ => tableFootprintBytes(et.tableName)
+        }
+        sizedJoin(eDF, keysEq(eName, h.a.edgeKeys, aAlias, h.a.refKeys),
+          eBytes)
+        val chainUniqueHere = chainUniqueThunk // this hop's epoch
+        advanceFootprint(eBytes, chainUniqueHere() && {
+          val aTable = vertexBindingAt(aAlias).table
+          !hasDuplicateKeysTable(aTable, h.a.refKeys)
+        })
       }
-      sizedJoin(eDF, keysEq(eName, h.a.edgeKeys, aAlias, h.a.refKeys), eBytes)
-      val chainUniqueHere = chainUniqueThunk // this hop's epoch
-      advanceFootprint(eBytes, chainUniqueHere() && {
-        val aTable = vertexBindingAt(aAlias).table
-        !hasDuplicateKeysTable(aTable, h.a.refKeys)
-      })
 
       // join vertex b with the edge's other side. Identity-fusion
       // candidate for the far vertex: the edge's b-side endpoint/reference
       // keys (never for Undirected — its view swaps key columns, so the
-      // edge row is not the vertex row)
+      // edge row is not the vertex row — nor onto a resident carrier,
+      // which holds only the columns the query reads of it). Otherwise,
+      // in a WALK pattern (`lookups`), the far vertex may be resident: a
+      // membership test plus lookups on the edge's key.
       val fuseInfo =
-        if (allowFuse && ep.direction != EdgeDirection.Undirected)
-          Some((eName, et.tableName, h.b.edgeKeys, h.b.refKeys))
+        if (allowFuse && ep.direction != EdgeDirection.Undirected &&
+            !residentAliases.contains(eAlias))
+          Some((eAlias, et.tableName, h.b.edgeKeys, h.b.refKeys))
         else None
+      val farFusible = fuseInfo.isDefined && h.b.table == et.tableName &&
+        lowerEq(h.b.edgeKeys, h.b.refKeys)
+      val bRes = lookups.filter(_ => !farFusible).flatMap { case (r, next) =>
+        residentFor(vp, h.b, r, Some((h, next)))
+      }
       val bAlias = bindVertex(vp,
-        Some(b => keysEq(eName, h.b.edgeKeys, b, h.b.refKeys)),
-        Some(h.b.vt.label), fuseInfo, boundRefKeys = Some(h.b.refKeys))
+        Some(b => keysEq(eAlias, h.b.edgeKeys, b, h.b.refKeys)),
+        Some(h.b.vt.label), fuseInfo, boundRefKeys = Some(h.b.refKeys),
+        resident = bRes,
+        probe = Some(col(s"$eAlias.${h.b.edgeKeys.head}").cast("long")))
       // the NEXT hop's join key is b's: plan rows stay distinct b-table
       // rows only when this edge's far-endpoint columns are unique on
       // the edge table (no fan-in) — the probe defers until a later hop
@@ -1392,7 +1578,7 @@ object GraphTableCompiler {
         setPlanFootprint(-1L) // parallel reverse edges can multiply rows
         setChainUnique(false)
       }
-      (bAlias, eName)
+      (bAlias, eAlias)
     }
 
     /** Variable-length / shortest-path hop: compute a (src, dst, dist[, path])
@@ -1714,7 +1900,7 @@ object GraphTableCompiler {
       // a resident head's rows are exactly its seeds, which the kernel
       // carries as __psrc: no join-back
       plan = aRes match {
-        case Some(res) => withResidentKey(joined, aAlias, res, "__psrc")
+        case Some(res) => withResidentKey(joined, aAlias, res, col("__psrc"))
         case None =>
           if (joinedBytes >= 0L && joinedBytes <= broadcastMax)
             plan.join(broadcast(joined), srcCond, "inner")
@@ -1726,14 +1912,8 @@ object GraphTableCompiler {
         case Some(res) =>
           // resident far end: the join-back with its unique keys is a
           // membership test on __pdst
-          val name = vp.varName.getOrElse(freshName("v"))
-          bindings(name) = Binding(name, isVertex = true, b.table,
-            b.vt.keyCols)
-          plan = withResidentKey(plan.filter(Bridge.column(
-              graft.functions.LongMapContains(Bridge.expression(
-                col("__pdst")), res.set))), name, res, "__pdst")
-          vp.where.foreach(w => plan = plan.filter(expr(w)))
-          name
+          bindResident(vp, vp.varName.getOrElse(freshName("v")), b.vt, res,
+            col("__pdst"))
         case None => bindVertex(vp, Some(bv =>
           if (keyIsNumeric)
             col(s"$bv.${b.refKeys.head}").cast("long") === col("__pdst")

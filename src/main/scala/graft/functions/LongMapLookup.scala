@@ -1,8 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate,
   UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator,
+  CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Serializable open-addressing primitive long→long hash map.
@@ -58,16 +61,19 @@ final class LongLongMap(keys: Array[Long], values: Array[Long])
 
   /** Mapped value when the key is present, the key itself otherwise —
     * exactly `coalesce(element_at(mapLit, x), x)`. */
-  def getOrSelf(k: Long): Long = {
-    if (k == Long.MinValue) return if (hasMin) minVal else k
+  def getOrSelf(k: Long): Long = getOrElse(k, k)
+
+  /** Mapped value when the key is present, `default` otherwise. */
+  def getOrElse(k: Long, default: Long): Long = {
+    if (k == Long.MinValue) return if (hasMin) minVal else default
     var i = slot(k)
     while (true) {
       val kk = ks(i)
       if (kk == k) return vs(i)
-      if (kk == Long.MinValue) return k
+      if (kk == Long.MinValue) return default
       i = (i + 1) & mask
     }
-    k // unreachable: table load ≤ 50% guarantees an empty slot
+    default // unreachable: table load ≤ 50% guarantees an empty slot
   }
 
   /** Whether `k` is a key of the map. */
@@ -127,6 +133,56 @@ case class LongMapContains(child: Expression, table: LongLongMap)
     val ref = ctx.addReferenceObj("graftLongMap", table,
       classOf[LongLongMap].getName)
     nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.contains($x);")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): Expression = copy(child = newChild)
+}
+
+/** Column read of a driver-resident table: `table` maps a key to its row
+  * index, `values` holds one column of those rows as Catalyst values
+  * (null allowed), so `x` reads `values(table(x))` — the MATCH
+  * compiler's lookup for a resident fixed-hop vertex, one per column the
+  * query reads. A null or absent key reads null (the compiler filters
+  * absent keys out with [[LongMapContains]] first). Like
+  * [[LongMapLookupOrSelf]], map and values ride the plan as opaque
+  * references. */
+case class LongMapRowRead(child: Expression, table: LongLongMap,
+    values: Array[Any], dataType: DataType) extends UnaryExpression {
+  override def nullable: Boolean = true
+  override def prettyName: String = "long_map_row_read"
+
+  override def eval(input: InternalRow): Any = {
+    val x = child.eval(input)
+    if (x == null) null
+    else {
+      val i = table.getOrElse(x.asInstanceOf[Long], -1L)
+      if (i < 0) null else values(i.toInt)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val map = ctx.addReferenceObj("graftLongMap", table,
+      classOf[LongLongMap].getName)
+    val vals = ctx.addReferenceObj("graftValues", values, "java.lang.Object[]")
+    val c = child.genCode(ctx)
+    val (i, o) = (ctx.freshName("row"), ctx.freshName("value"))
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = true;
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        ${CodeGenerator.defaultValue(dataType)};
+      if (!${c.isNull}) {
+        long $i = $map.getOrElse(${c.value}, -1L);
+        if ($i >= 0) {
+          Object $o = $vals[(int) $i];
+          if ($o != null) {
+            ${ev.isNull} = false;
+            ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $o;
+          }
+        }
+      }""")
   }
 
   override protected def withNewChildInternal(

@@ -74,7 +74,35 @@ object PathFinder {
   private[graft] def planIdentity(edges: org.apache.spark.sql.DataFrame)
       : String =
     edges.queryExecution.analyzed.canonicalized.toString +
-      "#tok=" + dataSnapshotToken(edges)
+      "#tok=" + dataSnapshotToken(edges) + localRowsDigest(edges)
+
+  /** Row count and SHA-256 of the rows of every local-relation leaf of
+    * `df`, in leaf order. A canonicalized `LocalRelation` renders only its
+    * output, so without this two same-schema `toDF` frames of different
+    * rows would share one proof and only the 32-bit index would keep
+    * their memo entries apart. O(rows) per render; [[PlanMemo.Id]]
+    * renders a proof at most once, on an index hit or a store. */
+  private def localRowsDigest(df: DataFrame): String = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection,
+      UnsafeRow}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LocalRelation =>
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        lazy val unsafe = UnsafeProjection.create(lr.schema)
+        lr.data.foreach { r =>
+          val u = r match {
+            case u: UnsafeRow => u
+            case other => unsafe(other)
+          }
+          md.update(java.nio.ByteBuffer.allocate(4)
+            .putInt(u.getSizeInBytes).array())
+          md.update(u.getBytes)
+        }
+        s"#local=${lr.data.length}:" +
+          md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }.mkString
+  }
 
   /** Per scan leaf of `df`: Some(files) for a file-source relation, read
     * from its file index's already-materialized listing (the statuses
@@ -162,16 +190,37 @@ object PathFinder {
   }
 
   /** Rows of a collected frame, column-major: one primitive array per
-    * column (`Array[Long]` or `Array[Double]`), the layout of the
-    * reference's CSR arrays — 8 bytes a cell where a boxed tuple or a
-    * `Row` per row cost 100+. An edge view's columns become a [[Csr]].
-    * Shared through [[collectMemo]]: callers never mutate the arrays. */
+    * long or double column (`Array[Long]` or `Array[Double]`), the layout
+    * of the reference's CSR arrays — 8 bytes a cell where a boxed tuple
+    * or a `Row` per row cost 100+. An edge view's columns become a
+    * [[Csr]]. Any other atomic column, and a long or double column
+    * holding a null, is an `Array[Any]` of Catalyst values (null kept),
+    * read through [[values]]. Shared through [[collectMemo]]: callers
+    * never mutate the arrays. */
   private[graft] final class Columns(val length: Int,
       private[graph] val cols: Array[AnyRef]) {
     def width: Int = cols.length
     def longs(j: Int): Array[Long] = cols(j).asInstanceOf[Array[Long]]
     def doubles(j: Int): Array[Double] = cols(j).asInstanceOf[Array[Double]]
-    def bytes: Long = 8L * length * width
+    /** Column `j` as Catalyst values: a primitive column boxed (a fresh
+      * array), a value column as stored. */
+    def values(j: Int): Array[Any] = cols(j) match {
+      case a: Array[Long] => a.map(x => x: Any)
+      case a: Array[Double] => a.map(x => x: Any)
+      case a: Array[Any] => a
+      case other => throw new IllegalStateException(s"column $j: $other")
+    }
+    /** 8 B a primitive cell; a value cell counts its reference, object
+      * header and, for strings and binaries, its bytes. */
+    def bytes: Long = cols.map {
+      case a: Array[Any] => a.foldLeft(0L) {
+        case (n, s: org.apache.spark.unsafe.types.UTF8String) =>
+          n + 32L + s.numBytes
+        case (n, b: Array[Byte]) => n + 32L + b.length
+        case (n, _) => n + 24L
+      }
+      case _ => 8L * length
+    }.sum
   }
 
   /** [[collectUnder]]'s verdicts keyed by (projected plan, cap) — None
@@ -191,29 +240,49 @@ object PathFinder {
   private[graft] val collectMemo = new PlanMemo[Option[Columns]](48,
     weigh = _.fold(0L)(_.bytes), maxWeight = 512L << 20)
 
+  /** Numbers, strings, booleans, dates, timestamps and binaries: the
+    * column types [[collectUnder]] carries. */
+  private[graft] def atomic(t: org.apache.spark.sql.types.DataType)
+      : Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case _: NumericType | _: StringType | BooleanType | DateType |
+          TimestampType | TimestampNTZType | BinaryType => true
+      case _ => false
+    }
+  }
+
   /** THE strategy gate: Some(every row of `df`) iff `df` has at most
     * `cap` rows, else None (→ the distributed branch). One
     * `limit(cap + 1)` collect job per (plan, cap) and session answers the
     * verdict AND, under the cap, IS the local kernel's input: never a
     * full count (at 100 TB a pass over the input just to pick a strategy
     * would itself be a major job), and never more than cap + 1 rows on
-    * the driver, even for a nondeterministic frame. Columns must be long
-    * or double — callers cast the projection their local kernel consumes.
-    * `cap` is clamped to [0, Int.MaxValue − 1]. */
+    * the driver, even for a nondeterministic frame. Columns must be
+    * atomic: kernels cast the long or double projection they consume,
+    * other types come back as Catalyst values ([[Columns]]). `cap` is
+    * clamped to [0, Int.MaxValue − 1]. */
   private[graft] def collectUnder(df: DataFrame, cap: Long)
       : Option[Columns] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val types = df.schema.fields.map(_.dataType)
-    require(types.forall(t => t == LongType || t == DoubleType),
-      s"collectUnder needs long or double columns: ${df.schema.simpleString}")
+    require(types.forall(atomic),
+      s"collectUnder needs atomic columns: ${df.schema.simpleString}")
     val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
     collectMemo.getOrBuild(PlanMemo.id(df), c) {
       val rows = df.limit(c.toInt + 1).collect()
       val n = rows.length
       if (n > c) None
       else Some(new Columns(n, types.zipWithIndex.map {
-        case (DoubleType, j) => Array.tabulate(n)(rows(_).getDouble(j))
-        case (_, j) => Array.tabulate(n)(rows(_).getLong(j))
+        case (DoubleType, j) if rows.forall(!_.isNullAt(j)) =>
+          Array.tabulate(n)(rows(_).getDouble(j))
+        case (LongType, j) if rows.forall(!_.isNullAt(j)) =>
+          Array.tabulate(n)(rows(_).getLong(j))
+        case (t, j) =>
+          val toCatalyst =
+            CatalystTypeConverters.createToCatalystConverter(t)
+          Array.tabulate[Any](n)(i => toCatalyst(rows(i).get(j)))
       }))
     }
   }

@@ -228,6 +228,31 @@ class GateBoundarySpec extends AnyFunSuite {
     })
   }
 
+  test("harmonic and betweenness centrality and k-core at g = n - 1 " +
+      "(distributed) and g = n (local) agree and equal brute force") {
+    check(6)(Prop.forAll(graphs, Gen.choose(1, 3)) { (g, k) =>
+      val s = init()
+      import s.implicits._
+      val (edges, vs) = (frame(g), vertices.toDF("id"))
+      def run = Seq(Algorithms.harmonicCentrality(vs, edges),
+        Algorithms.betweennessCentrality(vs, edges),
+        Algorithms.kCore(vs, edges, k))
+      val want = Seq(bruteHarmonic(g.cleaned), bruteBetweenness(g.cleaned),
+        bruteKCore(g.cleaned, k))
+      agree(g.n)(run) && Seq(g.n - 1L, g.n.toLong).forall { gate =>
+        withGate(spark, gate)(run.map(rows)).zip(want).forall {
+          case (got, w) => got.length == w.size && got.forall { r =>
+            w.get(r.head.asInstanceOf[Long]).exists(x =>
+              x.zip(r.tail).forall {
+                case (a: Double, b: Double) => math.abs(a - b) <= 1e-6
+                case (a, b) => a == b
+              })
+          }
+        }
+      }
+    })
+  }
+
   /** A random (`__from` → `__to`) bijection over ids 0..20 and rows of
     * `array<long>` id columns drawn from a small pool (so the join form
     * sees repeated arrays): null and empty arrays, null elements, mapped
@@ -342,6 +367,70 @@ class GateBoundarySpec extends AnyFunSuite {
       }
       (arr - s).map { case (v, t) => Seq[Any](s, v, t) }
     }.sortBy(_.mkString(","))
+  }
+
+  /** Hop distance and shortest-path count of every vertex reachable
+    * from `s` over the directed simple graph of `edges` (self-loops
+    * dropped, parallel edges one). */
+  private def bruteShortest(edges: Seq[(Long, Long)], s: Long)
+      : Map[Long, (Int, Double)] = {
+    val adj = edges.filter { case (a, b) => a != b }.distinct
+      .groupMap(_._1)(_._2)
+    var found = Map(s -> (0, 1.0))
+    var frontier = Seq(s)
+    while (frontier.nonEmpty) {
+      val level = found(frontier.head)._1 + 1
+      val next = frontier.flatMap(v => adj.getOrElse(v, Nil)
+        .filterNot(found.contains).map(_ -> found(v)._2))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      found ++= next.map { case (w, c) => w -> (level, c) }
+      frontier = next.keys.toSeq
+    }
+    found
+  }
+
+  /** Per vertex: (vertices reached, distance sum, Σ 1/distance, reached /
+    * sum), the last two rounded to 6 places as `harmonicCentrality`
+    * reports them. */
+  private def bruteHarmonic(edges: Seq[(Long, Long)]): Map[Long, Seq[Any]] = {
+    def r6(x: Double) = BigDecimal(x).setScale(6,
+      BigDecimal.RoundingMode.HALF_UP).toDouble
+    vertices.map { v =>
+      val d = bruteShortest(edges, v).values.map(_._1).filter(_ > 0).toSeq
+      v -> Seq[Any](d.length.toLong, d.sum.toLong, r6(d.map(1.0 / _).sum),
+        if (d.isEmpty) 0.0 else r6(d.length.toDouble / d.sum))
+    }.toMap
+  }
+
+  /** Brandes' betweenness by its definition: Σ over ordered pairs (s, t)
+    * of the share of shortest s→t paths through v, v ∉ {s, t}. */
+  private def bruteBetweenness(edges: Seq[(Long, Long)])
+      : Map[Long, Seq[Any]] = {
+    val sp = vertices.map(v => v -> bruteShortest(edges, v)).toMap
+    vertices.map { v =>
+      v -> Seq[Any]((for {
+        s <- vertices; t <- vertices if s != t && s != v && t != v
+        (dst, cst) <- sp(s).get(t)
+        (dsv, csv) <- sp(s).get(v)
+        (dvt, cvt) <- sp(v).get(t) if dsv + dvt == dst
+      } yield csv * cvt / cst).sum)
+    }.toMap
+  }
+
+  /** k-core membership over the undirected simple graph, by peeling. */
+  private def bruteKCore(edges: Seq[(Long, Long)], k: Int)
+      : Map[Long, Seq[Any]] = {
+    val nbrs = edges.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+    var alive = vertices.toSet
+    var peeled = true
+    while (peeled) {
+      val drop = alive.filter(v =>
+        nbrs.count { case (a, b) => a == v && alive(b) } < k)
+      peeled = drop.nonEmpty
+      alive --= drop
+    }
+    vertices.map(v => v -> Seq[Any](alive(v))).toMap
   }
 
   /** Component of every vertex (minimum member id) over the undirected

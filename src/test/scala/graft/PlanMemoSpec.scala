@@ -46,6 +46,23 @@ class PlanMemoSpec extends AnyFunSuite {
     assert(memo.get(a, "x").contains("A's value"))
   }
 
+  test("two local frames of one schema and different rows, forced to " +
+      "one index, miss instead of hitting") {
+    val s = Fixture.init()
+    import s.implicits._
+    val memo = new PlanMemo[String](4)
+    // the index a semanticHash collision would give both frames
+    def forced(df: DataFrame) =
+      new PlanMemo.Id("session", 42, PathFinder.planIdentity(df))
+    memo.put(forced(Seq(1L, 2L).toDF("id")), "x", "rows 1, 2")
+    assert(memo.get(forced(Seq(3L, 4L).toDF("id")), "x").isEmpty,
+      "a same-schema local frame of other rows was served a stale entry")
+    assert(memo.get(forced(Seq(2L, 1L).toDF("id")), "x").isEmpty,
+      "the same rows in another order collect to other columns")
+    assert(memo.get(forced(Seq(1L, 2L).toDF("id")), "x")
+      .contains("rows 1, 2"))
+  }
+
   test("an in-place parquet overwrite plus refreshByPath is a miss") {
     val s = Fixture.init()
     import s.implicits._
