@@ -645,63 +645,37 @@ object Algorithms {
     // aggregation nor any exact prefilter shrinks it before the exchange
     // (NOTES item 54) — which makes the distributed floor ~Σd(d−1)/2
     // packed longs through one full shuffle plus the DISTINCT shuffle
-    // that feeds it. When the RAW membership stream fits the driver
-    // (one stats scan, then the packed collect), a parallel
-    // in-memory kernel absorbs distinct + degree cap + pair counting
-    // into two driver sorts with ZERO exchanges — the strategy DuckDB's
-    // in-memory aggregate wins with at the 10× point. Gates: at most 16M
-    // membership rows are collected, and
-    // `spark.graft.copurchase.localMaxPairs` (default 120M packed longs
-    // ≈ 1 GB + sort workspace; 0 forces distributed) bounds the pair
-    // array — the kernel knows the EXACT volume from the degree
-    // histogram before committing memory and returns None over the gate
-    // (fall through to the distributed branch).
-    val maxPairs = sp2.conf
-      .get("spark.graft.copurchase.localMaxPairs", "120000000").toLong
-    val maxRows = 16000000L
-    // set by the stats scan: whether both id spaces pack into 31 bits
-    var packableDist: Option[Boolean] = None
-    val local: Option[DataFrame] =
-      if (maxPairs <= 0) None
-      else {
-        // decide with ONE exchange-free scan (count + id ranges as partial
-        // aggs) — a limit-probe would route the whole join through
-        // CollectLimitExec's incremental single-task job ladder. The
-        // membership pipeline is cached for JUST this attempt so the
-        // decide pass and the packed collect share one evaluation; on
-        // fall-through it unpersists before the distributed plan builds,
-        // leaving that branch's storage footprint untouched.
-        val m0c = m0.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val st = m0c.agg(count(lit(1)).as("n"), min("u").as("ulo"),
-            max("u").as("uhi"), min("v").as("vlo"), max("v").as("vhi"))
-            .first()
-          if (st.getLong(0) == 0L)
-            Some(Seq.empty[(Long, Long, Long)].toDF("id_a", "id_b", "weight"))
-          else {
-            val packable = st.getLong(1) >= 0L && st.getLong(2) < (1L << 31) &&
-              st.getLong(3) >= 0L && st.getLong(4) < (1L << 31)
-            packableDist = Some(packable)
-            Option.when(st.getLong(0) <= maxRows && packable)(m0c
-                .select(shiftleft(col("v"), 32).bitwiseOR(col("u")).as("__pk"))
-                .as[Long].collect())
-              .flatMap(LocalKernels.copurchaseCounts(_, minWeight,
-                maxKeyDegree, maxPairs))
-              .map(_.toSeq.toDF("id_a", "id_b", "weight"))
-          }
-        } finally m0c.unpersist(false)
-      }
-    local.getOrElse {
+    // that feeds it. When the RAW membership stream fits the session
+    // gate (one gated collect) and both id spaces pack into 31 bits, a
+    // parallel in-memory kernel absorbs distinct + degree cap + pair
+    // counting into two driver sorts with ZERO exchanges — the strategy
+    // DuckDB's in-memory aggregate wins with at the 10× point. The kernel
+    // knows the EXACT pair volume from the degree histogram before
+    // committing memory and returns None over its bound (fall through to
+    // the distributed branch).
+    val collected = PathFinder.collectUnder(m0, PathFinder.localMaxRows(sp2))
+    def fits31(xs: Array[Long]): Boolean =
+      xs.forall(x => x >= 0L && x < (1L << 31))
+    val packed = collected.collect {
+      case c if fits31(c.longs(0)) && fits31(c.longs(1)) =>
+        val (u, v) = (c.longs(0), c.longs(1))
+        Array.tabulate(c.length)(i => v(i) << 32 | u(i))
+    }
+    val local = packed.flatMap(
+      LocalKernels.copurchaseCounts(_, minWeight, maxKeyDegree))
+    local.map(_.toSeq.toDF("id_a", "id_b", "weight")).getOrElse {
       // distributed KERNEL branch (scaladoc above): two bare packed-long
       // exchanges + streaming per-partition kernels when both id spaces
       // pack into 31 bits. Partition counts stay AQE/conf-derived
       // (repartition without an explicit N), never a local constant.
-      val streamable = packableDist.getOrElse {
+      // Under the gate the collected rows answered the 31-bit check;
+      // over it, one min/max probe does.
+      val streamable = collected.fold {
         val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
           min("v").as("vlo"), max("v").as("vhi")).first()
         !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
           st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
-      }
+      }(_ => packed.isDefined)
       if (streamable) {
         val capDeg = maxKeyDegree
         val minW = minWeight

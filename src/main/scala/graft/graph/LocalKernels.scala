@@ -718,6 +718,10 @@ private[graph] object LocalKernels {
     }.toArray
   }
 
+  /** Pair-volume bound of [[copurchaseCounts]]: 120M packed longs, about
+    * 1 GB plus sort workspace, below the JVM's array-length limit. */
+  private val copurchaseMaxPairs = 120000000L
+
   /** Parallel co-purchase (bipartite-projection) pair counting over a
     * PACKED raw membership array — `v << 32 | u`, both ids in [0, 2^31),
     * the same 31-bit packability contract the distributed branch probes.
@@ -730,16 +734,15 @@ private[graph] object LocalKernels {
     * equal pairs, and a run-length scan emits weights. The EXACT pair
     * volume is known from the degree histogram before any pair memory is
     * committed — None (fall back to the distributed branch) when it
-    * exceeds `maxPairs`. `u_i < u_j` holds by the in-group sort — the
-    * blockedBucketJoin pair convention. Mutates its input (sort+dedup
-    * scratch); callers hand over a throwaway collect.
+    * exceeds [[copurchaseMaxPairs]]. `u_i < u_j` holds by the in-group
+    * sort — the blockedBucketJoin pair convention. Mutates its input
+    * (sort+dedup scratch); callers hand over a fresh array.
     *
     * @return Some((id_a, id_b, weight) with weight >= minWeight), or
-    *         None when the pair volume exceeds the gate
+    *         None when the pair volume exceeds the bound
     */
   def copurchaseCounts(packedRaw: Array[Long], minWeight: Long,
-      maxKeyDegree: Long, maxPairs: Long)
-      : Option[Array[(Long, Long, Long)]] = {
+      maxKeyDegree: Long): Option[Array[(Long, Long, Long)]] = {
     if (packedRaw.isEmpty) return Some(Array.empty)
     java.util.Arrays.parallelSort(packedRaw)
     // in-place dedup of the sorted stream — the operator's DISTINCT
@@ -778,7 +781,7 @@ private[graph] object LocalKernels {
       i += 1
     }
     val total = off(nGroups)
-    if (total > maxPairs || total > Int.MaxValue - 8) return None
+    if (total > copurchaseMaxPairs) return None
     val pairs = new Array[Long](total.toInt)
     java.util.stream.IntStream.range(0, nGroups).parallel().forEach { ki =>
       val gi = keptGroups(ki)

@@ -28,12 +28,14 @@ import graft.pgq.PathMode
 object PathFinder {
 
   /** Strategy gate, a session conf: kernel inputs with at most this many
-    * rows (edges, distinct vertex ids) run on the driver-local array
-    * kernels ([[LocalKernels]]) — the analogue of the reference's
-    * in-memory CSR, correct only because it is size-gated. Bigger inputs
-    * take the distributed DataFrame loops; 0 forces every kernel
-    * distributed. Read from the INPUT FRAME's session at probe time, so
-    * two sessions in one JVM never flip each other's branches. */
+    * rows (edges, distinct vertex ids, MinHash documents, co-purchase
+    * memberships, quantile values) run on driver-local array kernels
+    * ([[LocalKernels]] and MinHash's in [[graft.ops.Dedup]]) — the
+    * analogue of the reference's in-memory CSR, correct only because it
+    * is size-gated. Bigger inputs take the distributed DataFrame loops;
+    * 0 forces every kernel distributed. Read from the INPUT FRAME's
+    * session at probe time, so two sessions in one JVM never flip each
+    * other's branches. */
   private[graft] val LocalMaxRowsKey = "spark.graft.local.maxRows"
 
   /** The [[LocalMaxRowsKey]] gate of `spark` (default 2M), clamped to
@@ -193,10 +195,11 @@ object PathFinder {
     * long or double column (`Array[Long]` or `Array[Double]`), the layout
     * of the reference's CSR arrays — 8 bytes a cell where a boxed tuple
     * or a `Row` per row cost 100+. An edge view's columns become a
-    * [[Csr]]. Any other atomic column, and a long or double column
-    * holding a null, is an `Array[Any]` of Catalyst values (null kept),
-    * read through [[values]]. Shared through [[collectMemo]]: callers
-    * never mutate the arrays. */
+    * [[Csr]]. Any other column, and a long or double column holding a
+    * null, is an `Array[Any]` of Catalyst values (null kept), read
+    * through [[values]]; an `array<bigint>` cell without null elements
+    * is a compact `UnsafeArrayData`. Shared through [[collectMemo]]:
+    * callers never mutate the arrays. */
   private[graft] final class Columns(val length: Int,
       private[graph] val cols: Array[AnyRef]) {
     def width: Int = cols.length
@@ -211,12 +214,17 @@ object PathFinder {
       case other => throw new IllegalStateException(s"column $j: $other")
     }
     /** 8 B a primitive cell; a value cell counts its reference, object
-      * header and, for strings and binaries, its bytes. */
+      * header and, for strings, binaries and arrays, its bytes (a boxed
+      * array element 28 B). */
     def bytes: Long = cols.map {
       case a: Array[Any] => a.foldLeft(0L) {
         case (n, s: org.apache.spark.unsafe.types.UTF8String) =>
           n + 32L + s.numBytes
         case (n, b: Array[Byte]) => n + 32L + b.length
+        case (n, u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) =>
+          n + 32L + u.getSizeInBytes
+        case (n, g: org.apache.spark.sql.catalyst.util.ArrayData) =>
+          n + 32L + 28L * g.numElements
         case (n, _) => n + 24L
       }
       case _ => 8L * length
@@ -259,16 +267,22 @@ object PathFinder {
     * full count (at 100 TB a pass over the input just to pick a strategy
     * would itself be a major job), and never more than cap + 1 rows on
     * the driver, even for a nondeterministic frame. Columns must be
-    * atomic: kernels cast the long or double projection they consume,
-    * other types come back as Catalyst values ([[Columns]]). `cap` is
-    * clamped to [0, Int.MaxValue − 1]. */
+    * atomic or `array<bigint>` (MinHash's hashed shingle sets): kernels
+    * cast the long or double projection they consume, other types come
+    * back as Catalyst values ([[Columns]]). `cap` is clamped to
+    * [0, Int.MaxValue − 1]. */
   private[graft] def collectUnder(df: DataFrame, cap: Long)
       : Option[Columns] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.types.{DoubleType, LongType}
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
     val types = df.schema.fields.map(_.dataType)
-    require(types.forall(atomic),
-      s"collectUnder needs atomic columns: ${df.schema.simpleString}")
+    require(types.forall {
+        case ArrayType(LongType, _) => true
+        case t => atomic(t)
+      },
+      s"collectUnder needs atomic or array<bigint> columns: " +
+        df.schema.simpleString)
     val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
     collectMemo.getOrBuild(PlanMemo.id(df), c) {
       val rows = df.limit(c.toInt + 1).collect()
@@ -279,6 +293,15 @@ object PathFinder {
           Array.tabulate(n)(rows(_).getDouble(j))
         case (LongType, j) if rows.forall(!_.isNullAt(j)) =>
           Array.tabulate(n)(rows(_).getLong(j))
+        case (t @ ArrayType(LongType, _), j) =>
+          val toCatalyst =
+            CatalystTypeConverters.createToCatalystConverter(t)
+          Array.tabulate[Any](n) { i =>
+            val a = rows(i).getSeq[Any](j)
+            if (a == null || a.contains(null)) toCatalyst(a)
+            else UnsafeArrayData.fromPrimitiveArray(
+              a.iterator.map(_.asInstanceOf[Long]).toArray)
+          }
         case (t, j) =>
           val toCatalyst =
             CatalystTypeConverters.createToCatalystConverter(t)
@@ -392,8 +415,8 @@ object PathFinder {
       // session-width index (numShufflePartitions partitions) makes EVERY
       // per-level frontier join a session-width stage, so a ≤50-seed
       // depth-2 BFS pays 32 tasks × levels × stages of pure scheduling
-      // (measured: q35 sf4 2.6-2.7 s at 32 partitions vs 1.7-2.1 s at 4 —
-      // ProbeQ35). One count at build time (the edge view is typically
+      // (measured: q35 sf4 2.6-2.7 s at 32 partitions vs 1.7-2.1 s at
+      // 4). One count at build time (the edge view is typically
       // already cached) sizes partitions at ~1M edges (~16 MB) each,
       // floored at 4 for level parallelism and capped at the session
       // width — a 100 TB edge set still gets the full cluster width.

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB posture: hash-partitioned group-bys and bucket-joins only —
-  * no cross joins over the full corpus, no driver-side state.
+  * no cross joins over the full corpus. MinHash-LSH on an input under
+  * the session gate (`spark.graft.local.maxRows`) is one collect plus a
+  * driver kernel instead; every other operator keeps no driver-side
+  * state.
   *
   *  - exact:       one shuffle on a 128-bit content hash
   *  - MinHash+LSH: shingle → k minhashes → b bands → bucket join; only
@@ -46,10 +49,12 @@ object Dedup {
     graft.functions.VectorFunctions.word_shingles(
       TextAnalysis.tokens(lower(text)), k)
 
-  /** Exact Jaccard similarity of the distinct shingle sets of two texts. */
+  /** Exact Jaccard similarity of the distinct shingle sets of two texts;
+    * null when either set is null (`array_size`, unlike `size`, never
+    * reads a null set as −1 elements). */
   def jaccard(a: Column, b: Column): Column = {
-    val ia = size(array_intersect(a, b)).cast("double")
-    val ua = size(array_union(a, b)).cast("double")
+    val ia = array_size(array_intersect(a, b)).cast("double")
+    val ua = array_size(array_union(a, b)).cast("double")
     when(ua === 0, lit(0.0)).otherwise(ia / ua)
   }
 
@@ -155,16 +160,24 @@ object Dedup {
 
   /** MinHash-LSH near-duplicate pairs.
     *
+    * Both branches read ONE key projection ([[lshKeys]]), so their
+    * buckets are the same by construction. An input of at most
+    * `spark.graft.local.maxRows` documents is that projection's one
+    * gated collect ([[graft.graph.PathFinder.collectUnder]]) plus a
+    * driver kernel ([[localLshPairs]]); a bigger input, or one whose
+    * kept buckets hold more candidate pairs than the gate, runs the
+    * banded bucket join.
+    *
     * @param threshold verified Jaccard threshold
     * @param numHashes minhash signature width
     * @param bands LSH bands (rows per band = numHashes / bands)
-    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold
-    */
-  /** @param maxBucketSize skew guard: LSH buckets larger than this are
+    * @param maxBucketSize skew guard: LSH buckets larger than this are
     *   dropped before the candidate join (a bucket of size b creates b²/2
     *   candidates; at corpus scale one hot bucket would dominate the whole
     *   job). Standard large-scale LSH practice — documents in an
-    *   over-full bucket are still paired through their other bands. */
+    *   over-full bucket are still paired through their other bands.
+    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold
+    */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.7, maxBucketSize: Int = 20000): DataFrame = {
@@ -172,24 +185,53 @@ object Dedup {
       s"bands must divide numHashes (got numHashes=$numHashes, " +
         s"bands=$bands) — otherwise band slices are empty or drop " +
         "trailing hashes and the bucketing silently degenerates")
+    val keys = lshKeys(df, idCol, textCol, shingleK, numHashes, bands)
+    val spark = df.sparkSession
+    val gate = graft.graph.PathFinder.localMaxRows(spark)
+    val idType = keys.schema("id").dataType
+    val local =
+      if (!graft.graph.PathFinder.atomic(idType)) None
+      else graft.graph.PathFinder.collectUnder(keys, gate).flatMap(
+        localLshPairs(_, idType, bands, maxBucketSize, threshold, gate))
+    local.map { rows =>
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("id_a", idType), StructField("id_b", idType),
+        StructField("jaccard", DoubleType))))
+    }.getOrElse(bucketJoinPairs(keys, bands, maxBucketSize, threshold))
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** The key projection of [[minHashLshPairs]]: `id`, the distinct
+    * hashed shingle set `hv` (`array<bigint>`; verification runs on it —
+    * the same Jaccard as the string sets up to negligible 2^31 hash
+    * collisions, far cheaper to intersect) and, per band b, the bucket
+    * key `__b<b>` = `hash(slice(sig, b·rows + 1, rows), b)`. Null text ⇒
+    * null `hv`, which never verifies. */
+  private def lshKeys(df: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
-    val withSig = df
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("sh", array_distinct(shingles(col("text"), shingleK)))
-      .withColumn("hv",
-        graft.functions.VectorFunctions.md5_hash31_array(col("sh")))
-      .withColumn("sig", minHashesFromHashed(col("hv"), numHashes))
-    // explode into (bandIdx, bandHash) buckets; join within buckets.
-    // Verification runs on the hashed shingle sets (long arrays): same
-    // Jaccard up to negligible 2^31 hash collisions, far cheaper than
-    // string-set intersection.
-    val banded = withSig.select(col("id"),
-        array_distinct(col("hv")).as("hv"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rows + 1, lit(rows)), b))))
+    df.select(col(idCol).as("id"),
+        graft.functions.VectorFunctions.md5_hash31_array(
+          array_distinct(shingles(col(textCol), shingleK))).as("hv"))
+      .select(col("id"), array_distinct(col("hv")).as("hv"),
+        minHashesFromHashed(col("hv"), numHashes).as("sig"))
+      .select(col("id") +: col("hv") +: (0 until bands).map(b =>
+        hash(slice(col("sig"), b * rows + 1, rows), lit(b)).as(s"__b$b")): _*)
+  }
+
+  /** Distributed branch of [[minHashLshPairs]]: explode the keys into
+    * (band, bucket) rows, drop singleton and over-full buckets, join
+    * within buckets, verify, dedup. Returns the unrounded Jaccard. */
+  private def bucketJoinPairs(keys: DataFrame, bands: Int,
+      maxBucketSize: Int, threshold: Double): DataFrame = {
+    // tracked: the size probe, the kept-bucket join and both join legs
+    // read it, and the lazy result cannot release it
+    val banded = graft.OpCaches.track(keys.select(col("id"), col("hv"),
+        posexplode(array((0 until bands).map(b => col(s"__b$b")): _*)))
       .select(col("id"), col("hv"), col("pos").as("band"),
-        col("col").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("col").as("bucket")))
     val keepBuckets = banded.groupBy("band", "bucket")
       .agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") <= maxBucketSize && col("__bsz") > 1)
@@ -210,8 +252,100 @@ object Dedup {
         jaccard(col("x.hv"), col("y.hv")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
+
+  /** Driver kernel of [[minHashLshPairs]] over the collected [[lshKeys]]
+    * (id, hv, one bucket key per band): the distributed branch's rules on
+    * arrays. Per band, one sort of (key, row) runs the buckets; a bucket
+    * of s rows is kept iff 1 < s ≤ `maxBucketSize`, null ids counted.
+    * Pairs are `id_a < id_b` (null ids never pair), verified by merging
+    * the sorted hashed sets and deduplicated by id. None — the
+    * distributed branch — when the kept buckets hold more than
+    * `maxCandidates` candidate pairs (Σ s(s−1)/2, summed before any pair
+    * work, so one hot bucket cannot stall the driver). Rows are (id_a,
+    * id_b, unrounded jaccard). */
+  private def localLshPairs(c: graft.graph.PathFinder.Columns,
+      idType: org.apache.spark.sql.types.DataType, bands: Int,
+      maxBucketSize: Int, threshold: Double, maxCandidates: Long)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
+    val n = c.length
+    // hv's elements are never null (array<bigint not null>)
+    val sets = c.values(1).map {
+      case a: ArrayData =>
+        val xs = a.toLongArray(); java.util.Arrays.sort(xs); xs
+      case _ => null
+    }
+    // rank of each row's id (equal ids share one), -1 for a null id
+    val ids = c.values(0)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val byId = (0 until n).filter(ids(_) != null)
+      .sortWith((a, b) => ord.lt(ids(a), ids(b)))
+    val rank = Array.fill(n)(-1)
+    byId.indices.foreach { k =>
+      rank(byId(k)) = if (k == 0) 0
+        else if (ord.equiv(ids(byId(k - 1)), ids(byId(k)))) rank(byId(k - 1))
+        else rank(byId(k - 1)) + 1
+    }
+    // per band, (bucket key, row) sorted; the kept buckets are runs
+    // [start, end) of equal keys
+    val runs = (0 until bands).map { b =>
+      val key = c.values(2 + b)
+      val kr = Array.tabulate(n)(i =>
+        (key(i).asInstanceOf[Int].toLong << 32) | i)
+      java.util.Arrays.sort(kr)
+      val kept = Array.newBuilder[(Int, Int)]
+      var start = 0
+      while (start < n) {
+        var end = start + 1
+        while (end < n && (kr(end) >>> 32) == (kr(start) >>> 32)) end += 1
+        if (end - start > 1 && end - start <= maxBucketSize)
+          kept += ((start, end))
+        start = end
+      }
+      (kr, kept.result())
+    }
+    val candidates = runs.iterator.flatMap(_._2).map { case (a, z) =>
+      (z - a).toLong * (z - a - 1) / 2 }.sum
+    if (candidates > maxCandidates) return None
+    // candidate row pairs, lower-id row in the high half
+    val pairs = Array.newBuilder[Long]
+    for ((kr, kept) <- runs; (a, z) <- kept; x <- a until z;
+        y <- x + 1 until z) {
+      val (i, j) = (kr(x).toInt, kr(y).toInt)
+      if (rank(i) >= 0 && rank(j) >= 0 && rank(i) != rank(j))
+        pairs += (if (rank(i) < rank(j)) i.toLong << 32 | j
+          else j.toLong << 32 | i)
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val seen = scala.collection.mutable.LongMap.empty[Unit]
+    Some(pairs.result().distinct.toSeq.flatMap { p =>
+      val (i, j) = ((p >>> 32).toInt, p.toInt)
+      val idPair = rank(i).toLong << 32 | rank(j)
+      jaccardOfSorted(sets(i), sets(j)).filter(jac =>
+          jac >= threshold && !seen.contains(idPair))
+        .map { jac =>
+          seen(idPair) = ()
+          org.apache.spark.sql.Row(toScala(ids(i)), toScala(ids(j)), jac)
+        }
+    })
+  }
+
+  /** [[jaccard]] of two sorted distinct long sets; None when either is
+    * null. */
+  private def jaccardOfSorted(a: Array[Long], b: Array[Long])
+      : Option[Double] =
+    if (a == null || b == null) None
+    else {
+      var (i, j, inter) = (0, 0, 0)
+      while (i < a.length && j < b.length)
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else { inter += 1; i += 1; j += 1 }
+      val union = a.length + b.length - inter
+      Some(if (union == 0) 0.0 else inter.toDouble / union.toDouble)
+    }
 
   /** 64-bit SimHash over [[portableHash64]] token values: sign-sum of
     * each bit weighted by token frequency. */
@@ -256,12 +390,13 @@ object Dedup {
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be in [0, 3] for 4-band blocking (got $maxDist)")
     val withSig = simHashSignatures(df, idCol, textCol)
-    val banded0 = withSig.select(col("id"), col("sig"),
+    // tracked: the size probe, the kept-bucket join and both join legs
+    // read it, and the lazy result cannot release it
+    val banded0 = graft.OpCaches.track(withSig.select(col("id"), col("sig"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
       .select(col("id"), col("sig"), col("pos").as("band"),
-        col("col").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("col").as("bucket")))
     val keep = banded0.groupBy("band", "bucket")
       .agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") <= maxBucketSize && col("__bsz") > 1)
@@ -318,10 +453,10 @@ object Dedup {
       k: Int = 3, threshold: Double = 0.5,
       maxDocFreq: Int = 100000): DataFrame = {
     require(threshold > 0.0, "threshold must be positive")
-    val base = df.select(col(idCol).as("id"),
+    // tracked: the hot-shingle count and both self-join legs read it
+    val base = graft.OpCaches.track(df.select(col(idCol).as("id"),
         array_distinct(shingles(col(textCol), k)).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("sh"))))
     val toks0 = base.select(col("id"), col("sz"), explode(col("sh")).as("s"))
     val hot = toks0.groupBy("s").agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDocFreq).select("s")

@@ -18,8 +18,8 @@ class AlgorithmConsistencySpec extends AnyFunSuite {
   private def withDist[T](body: => T): T =
     withConf(Fixture.spark)(Fixture.ForceDist)(body)
 
-  /** Turns off co-purchase's local kernel (its pair gate is its own). */
-  private val NoLocalPairs = "spark.graft.copurchase.localMaxPairs" -> "0"
+  /** Turns off co-purchase's local kernel. */
+  private val NoLocalPairs = "spark.graft.local.maxRows" -> "0"
 
   /** Co-purchase memberships whose v no longer packs into 31 bits, so
     * the distributed branch runs the blocked join instead of the packed

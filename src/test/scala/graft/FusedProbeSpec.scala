@@ -160,4 +160,81 @@ class FusedProbeSpec extends AnyFunSuite {
     val seeds = Seq(1L, 2L).toDF("id")
     assert(Algorithms.earliestArrivalFromMin(edges, seeds, 4).count() == 0L)
   }
+
+  test("collectUnder carries array<bigint> cells, null sets and null " +
+      "elements kept, and weighs them") {
+    val s = Fixture.init()
+    import s.implicits._
+    val df = Seq[(Long, Seq[java.lang.Long])]((1L, Seq(5L, 7L)), (2L, null),
+      (3L, Seq(9L, null))).toDF("id", "hv")
+    val got = PathFinder.collectUnder(df, 3L)
+    assert(got.isDefined)
+    val cells = got.get.values(1).map(Option(_).map(
+      _.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]))
+    assert(cells(0).map(_.toLongArray().toSeq) == Some(Seq(5L, 7L)))
+    assert(cells(1).isEmpty)
+    assert(cells(2).exists(a => a.numElements == 2 && a.isNullAt(1)))
+    // 3 × 8 B ids, plus per set its reference and header and its bytes
+    assert(got.get.bytes > 24L + 2 * 32L + 16L)
+    assert(PathFinder.collectUnder(df, 2L).isEmpty)
+  }
+
+  /** Runs `body` and returns its value with the stage names (call sites
+    * such as "first at Algorithms.scala:N") of every job it ran and
+    * whether any job read or wrote a persisted RDD. */
+  private def jobsOf[T](body: => T): (T, Seq[String], Boolean) = {
+    val s = Fixture.init()
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val cached = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        j.stageInfos.foreach { st =>
+          names.add(st.name)
+          if (st.rddInfos.exists(_.storageLevel.isValid)) cached.set(true)
+        }
+    }
+    // listener events are posted asynchronously
+    Thread.sleep(200)
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(300)
+      import scala.jdk.CollectionConverters._
+      (out, names.asScala.toSeq, cached.get)
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A one-partition RDD-backed frame: a local `toDF` frame would fold
+    * into a driver relation and run no job at all. */
+  private def rddFrame(rows: Seq[org.apache.spark.sql.Row],
+      schema: String): org.apache.spark.sql.DataFrame = {
+    val s = Fixture.init()
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1),
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  }
+
+  test("job budget: MinHash LSH under the gate is one collect job; " +
+      "co-purchase under the gate persists nothing and runs no stats " +
+      "first()") {
+    import org.apache.spark.sql.Row
+    val text = "a b c d e f g h i j k l"
+    val docs = rddFrame(Seq(Row(1L, text), Row(2L, text + " m"),
+      Row(3L, "n o p q r s t u v w x y")), "doc_id BIGINT, text STRING")
+    PlanMemo.clearAll()
+    val (pairs, mhJobs, mhCached) = jobsOf(graft.ops.Dedup.minHashLshPairs(
+      docs, "doc_id", "text", threshold = 0.5).collect())
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 2L)))
+    assert(mhJobs.length == 1 && mhJobs.head.startsWith("collect at"),
+      mhJobs)
+    assert(!mhCached)
+    val ms = rddFrame((0L until 12L).map(i => Row(i % 5, i % 3)),
+      "u BIGINT, v BIGINT")
+    val (weights, cpJobs, cpCached) = jobsOf(
+      Algorithms.bipartiteProjection(ms).collect())
+    assert(weights.nonEmpty)
+    assert(!cpJobs.exists(_.startsWith("first at")), cpJobs)
+    assert(!cpCached, cpJobs)
+  }
 }

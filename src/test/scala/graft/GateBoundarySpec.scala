@@ -20,8 +20,9 @@ import graft.pgq.PathMode
   * both label propagations must return the same rows at g = n − 1
   * (distributed) and g = n (local), n the rows of the frame each kernel
   * gates, path arrays included — which pins the local CSR's slot order
-  * to the distributed dense-eid and min-struct tie-breaks. The
-  * compiler's array id translation, whose join form runs only past the
+  * to the distributed dense-eid and min-struct tie-breaks. MinHash LSH
+  * (documents) and co-purchase (memberships) must also give the same
+  * rows on both sides of g = n. The compiler's array id translation, whose join form runs only past the
   * 65536-row local-map cap, must equal its local-map form on random
   * arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
@@ -294,6 +295,127 @@ class GateBoundarySpec extends AnyFunSuite {
           rows(translateLocal(df, "ids", bij.toMap, vertexSlotsOnly))
       }
     })
+  }
+
+  /** Documents (id, text): 3–10 random texts over a 12-word vocabulary,
+    * each followed by 0–2 near copies (one word replaced or appended),
+    * about one id in eight and one text in eight null. */
+  private val corpora: Gen[Seq[(Option[Long], Option[String])]] = {
+    val words = Gen.oneOf("ant bee cat dog elk fox gnu hen ibis jay kid lark"
+      .split(' ').toSeq)
+    def copyOf(t: Seq[String]): Gen[Seq[String]] = for {
+      i <- Gen.choose(0, t.length - 1); w <- words
+      append <- Gen.oneOf(true, false)
+    } yield if (append) t :+ w else t.updated(i, w)
+    val family = for {
+      n <- Gen.choose(4, 9); base <- Gen.listOfN(n, words)
+      k <- Gen.choose(0, 2); copies <- Gen.listOfN(k, copyOf(base))
+    } yield base +: copies
+    for {
+      fs <- Gen.choose(3, 10).flatMap(Gen.listOfN(_, family))
+      texts = fs.flatten
+      nullId <- Gen.listOfN(texts.length, Gen.choose(0, 7).map(_ == 0))
+      nullText <- Gen.listOfN(texts.length, Gen.choose(0, 7).map(_ == 0))
+    } yield texts.indices.map(i => (Option(i * 3L + 1).filterNot(_ => nullId(i)),
+      Option(texts(i).mkString(" ")).filterNot(_ => nullText(i))))
+  }
+
+  /** MinHash pairs of `docs` at each gate: rows, column types, and
+    * whether the call left a tracked cache (only the bucket join does,
+    * so false means the local kernel answered). */
+  private def minHashAt(docs: Seq[(Option[Long], Option[String])],
+      maxBucketSize: Int, gates: Seq[Long])
+      : Seq[(Seq[Seq[Any]], Seq[String], Boolean)] = {
+    val s = init()
+    import s.implicits._
+    val df = docs.toDF("doc_id", "text")
+    gates.map(gate => withGate(s, gate) {
+      graft.OpCaches.releaseAll()
+      val out = graft.ops.Dedup.minHashLshPairs(df, "doc_id", "text",
+        shingleK = 2, numHashes = 8, bands = 4, threshold = 0.4,
+        maxBucketSize = maxBucketSize)
+      val got = (rows(out), out.schema.fields.map(_.dataType.simpleString)
+        .toSeq, graft.OpCaches.trackedCount > 0)
+      graft.OpCaches.releaseAll()
+      got
+    })
+  }
+
+  test("MinHash LSH at g = n - 1 (distributed), g = n and the default " +
+      "gate (local) agree: planted near-duplicates, null ids and texts, " +
+      "buckets over a small maxBucketSize") {
+    var paired = 0
+    check(10)(Prop.forAll(corpora, Gen.choose(2, 4)) { (docs, small) =>
+      Seq(20000, small).forall { maxBucket =>
+        val n = docs.length.toLong
+        // g = n takes the local kernel unless its kept buckets hold more
+        // than n candidate pairs, so the default gate pins it too
+        val Seq(dist, atN, default) =
+          minHashAt(docs, maxBucket, Seq(n - 1, n, 2000000L))
+        if (default._1.nonEmpty) paired += 1
+        dist._3 && !default._3 && dist._1 == atN._1 &&
+          dist._1 == default._1 && dist._2 == default._2
+      }
+    })
+    assert(paired > 0, "no case found a near-duplicate pair")
+  }
+
+  test("MinHash LSH at g = n: within the candidate bound the local " +
+      "kernel answers, past it the bucket join; a null id fills its " +
+      "buckets; empty input is empty") {
+    val text = "ant bee cat dog elk fox gnu hen ibis"
+    val words = text.split(' ')
+    // one near-duplicate pair among eight unrelated texts: at most four
+    // candidate pairs (one per band), under the gate of ten documents
+    val sparse = (Some(1L), Some(text)) +: (Some(2L), Some(text + " jay")) +:
+      (0 until 8).map(i => (Option(10L + i),
+        Option(words.map(w => s"$w$i").mkString(" "))))
+    val Seq(sd, sl) = minHashAt(sparse, 20000, Seq(9L, 10L))
+    assert(sd._3 && !sl._3 && sd == sl.copy(_3 = true))
+    assert(sl._1.map(_.take(2)) == Seq(Seq(1L, 2L)))
+    // six copies of one text: each band has one bucket of six, 4 × 15
+    // candidate pairs past the gate of six, so g = n falls through
+    val hot = (1L to 6L).map(i => (Option(i), Option(text)))
+    val Seq(hd, hl) = minHashAt(hot, 20000, Seq(5L, 6L))
+    assert(hd._3 && hl._3 && hd == hl && hl._1.length == 15)
+    // a null id never pairs but still fills its buckets: three copies,
+    // one without an id, overflow maxBucketSize = 2 in every band
+    val crowded = Seq((Some(1L), Some(text)), (Some(2L), Some(text)),
+      (None, Some(text)))
+    val Seq(cd, cl) = minHashAt(crowded, 2, Seq(2L, 3L))
+    assert(cd._3 && !cl._3 && cd._1.isEmpty && cl._1.isEmpty)
+    val Seq(empty) = minHashAt(Nil, 20000, Seq(0L))
+    assert(empty._1.isEmpty && !empty._3)
+  }
+
+  /** Memberships (u, v): 3–20 rows over u in 0..5 and v in 0..3, about
+    * one u and one v in eight null; `shift` offsets every non-null id. */
+  private def memberships(shift: Long): Gen[Seq[(Option[Long], Option[Long])]] =
+    Gen.choose(3, 20).flatMap(Gen.listOfN(_, for {
+      u <- Gen.choose(0L, 5L); v <- Gen.choose(0L, 3L)
+      nu <- Gen.choose(0, 7); nv <- Gen.choose(0, 7)
+    } yield (Option(u + shift).filter(_ => nu > 0),
+      Option(v + shift).filter(_ => nv > 0))))
+
+  test("co-purchase at g = n - 1 (distributed) and g = n (local) agree: " +
+      "null u and v, unpackable ids, a hot key under maxKeyDegree") {
+    val s = init()
+    import s.implicits._
+    check(8)(Prop.forAll(
+        Gen.oneOf(0L, 1L << 31, -(1L << 40)).flatMap(memberships),
+        Gen.choose(2L, 3L)) { (ms, maxDeg) =>
+      val n = ms.count { case (u, v) => u.isDefined && v.isDefined }
+      val df = ms.toDF("u", "v")
+      agree(n) {
+        Seq(Algorithms.bipartiteProjection(df),
+          Algorithms.bipartiteProjection(df, minWeight = 2L),
+          Algorithms.bipartiteProjection(df, maxKeyDegree = maxDeg))
+      }
+    })
+    // empty input: the gate of 0 admits it, so both read the kernel
+    val empty = Seq.empty[(Long, Long)].toDF("u", "v")
+    Seq(0L, 2000000L).foreach(gate => assert(withGate(s, gate)(
+      Algorithms.bipartiteProjection(empty).collect()).isEmpty))
   }
 
   /** [[frame]] plus per-row `w` and `eid` columns that both fall along

@@ -117,6 +117,28 @@ class OpsSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("MinHash, SimHash and n-gram Jaccard pairs release their caches") {
+    val s = init()
+    import s.implicits._
+    graft.OpCaches.releaseAll()
+    graft.graph.PlanMemo.clearAll()
+    s.catalog.clearCache()
+    val text = "a b c d e f g h i j k l"
+    val docs = Seq((1L, text), (2L, text + " m"),
+      (3L, "n o p q r s t u v w x y")).toDF("doc_id", "text")
+    // forced distributed: the under-gate MinHash kernel persists nothing
+    val got = withConf(s)(ForceDist)(Seq(
+      Dedup.minHashLshPairs(docs, "doc_id", "text", threshold = 0.5),
+      Dedup.simHashPairs(docs, "doc_id", "text"),
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text")).map(_.collect()))
+    assert(got.head.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 2L)))
+    assert(graft.OpCaches.trackedCount == 3)
+    graft.OpCaches.releaseAll()
+    assert(graft.OpCaches.trackedCount == 0)
+    assert(s.sharedState.cacheManager.isEmpty)
+  }
+
   test("duplicateGroups: transitive closure over near-dup pairs") {
     val s = init()
     import s.implicits._
