@@ -645,37 +645,39 @@ object Algorithms {
     // aggregation nor any exact prefilter shrinks it before the exchange
     // (NOTES item 54) — which makes the distributed floor ~Σd(d−1)/2
     // packed longs through one full shuffle plus the DISTINCT shuffle
-    // that feeds it. When the RAW membership stream fits the session
-    // gate (one gated collect) and both id spaces pack into 31 bits, a
-    // parallel in-memory kernel absorbs distinct + degree cap + pair
-    // counting into two driver sorts with ZERO exchanges — the strategy
-    // DuckDB's in-memory aggregate wins with at the 10× point. The kernel
-    // knows the EXACT pair volume from the degree histogram before
-    // committing memory and returns None over its bound (fall through to
-    // the distributed branch).
-    val collected = PathFinder.collectUnder(m0, PathFinder.localMaxRows(sp2))
-    def fits31(xs: Array[Long]): Boolean =
-      xs.forall(x => x >= 0L && x < (1L << 31))
-    val packed = collected.collect {
-      case c if fits31(c.longs(0)) && fits31(c.longs(1)) =>
-        val (u, v) = (c.longs(0), c.longs(1))
-        Array.tabulate(c.length)(i => v(i) << 32 | u(i))
-    }
-    val local = packed.flatMap(
-      LocalKernels.copurchaseCounts(_, minWeight, maxKeyDegree))
+    // that feeds it. When the RAW membership stream fits the driver and
+    // both id spaces pack into 31 bits, a parallel in-memory kernel
+    // absorbs distinct + degree cap + pair counting into two driver
+    // sorts with ZERO exchanges — the strategy DuckDB's in-memory
+    // aggregate wins with at the 10× point. ONE aggregate scan (count +
+    // id ranges, partial aggregates) decides: a limit probe would haul
+    // up to the cap's rows to the driver for an input over it,
+    // re-evaluating the join through CollectLimitExec's incremental job
+    // ladder. A
+    // membership is collected as one packed 8 B long, so the cap is 8 ×
+    // the session gate (16M at the default gate; sf1's q114, about 6M
+    // memberships, keeps the kernel, NOTES item 75). The kernel knows the
+    // EXACT pair volume from the degree histogram before committing
+    // memory and returns None over its bound (fall through to the
+    // distributed branch).
+    val st = m0.agg(count(lit(1)), min("u"), max("u"), min("v"), max("v"))
+      .first()
+    val n = st.getLong(0)
+    val streamable = n > 0L && st.getLong(1) >= 0L &&
+      st.getLong(2) < (1L << 31) && st.getLong(3) >= 0L &&
+      st.getLong(4) < (1L << 31)
+    val cap = math.min(8L * PathFinder.localMaxRows(sp2), Int.MaxValue - 8L)
+    val local =
+      if (n == 0L) Some(Array.empty[(Long, Long, Long)])
+      else Option.when(streamable && n <= cap)(m0
+          .select(shiftleft(col("v"), 32).bitwiseOR(col("u"))).as[Long]
+          .collect())
+        .flatMap(LocalKernels.copurchaseCounts(_, minWeight, maxKeyDegree))
     local.map(_.toSeq.toDF("id_a", "id_b", "weight")).getOrElse {
       // distributed KERNEL branch (scaladoc above): two bare packed-long
       // exchanges + streaming per-partition kernels when both id spaces
       // pack into 31 bits. Partition counts stay AQE/conf-derived
       // (repartition without an explicit N), never a local constant.
-      // Under the gate the collected rows answered the 31-bit check;
-      // over it, one min/max probe does.
-      val streamable = collected.fold {
-        val st = m0.agg(min("u").as("ulo"), max("u").as("uhi"),
-          min("v").as("vlo"), max("v").as("vhi")).first()
-        !st.isNullAt(0) && st.getLong(0) >= 0L && st.getLong(1) < (1L << 31) &&
-          st.getLong(2) >= 0L && st.getLong(3) < (1L << 31)
-      }(_ => packed.isDefined)
       if (streamable) {
         val capDeg = maxKeyDegree
         val minW = minWeight

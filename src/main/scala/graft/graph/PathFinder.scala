@@ -28,8 +28,9 @@ import graft.pgq.PathMode
 object PathFinder {
 
   /** Strategy gate, a session conf: kernel inputs with at most this many
-    * rows (edges, distinct vertex ids, MinHash documents, co-purchase
-    * memberships, quantile values) run on driver-local array kernels
+    * rows (edges, distinct vertex ids, quantile values; MinHash
+    * documents up to 65536; co-purchase memberships up to 8 × the gate,
+    * one packed long each) run on driver-local array kernels
     * ([[LocalKernels]] and MinHash's in [[graft.ops.Dedup]]) — the
     * analogue of the reference's in-memory CSR, correct only because it
     * is size-gated. Bigger inputs take the distributed DataFrame loops;
@@ -197,8 +198,8 @@ object PathFinder {
     * or a `Row` per row cost 100+. An edge view's columns become a
     * [[Csr]]. Any other column, and a long or double column holding a
     * null, is an `Array[Any]` of Catalyst values (null kept), read
-    * through [[values]]; an `array<bigint>` cell without null elements
-    * is a compact `UnsafeArrayData`. Shared through [[collectMemo]]:
+    * through [[values]]; an `array<bigint>` cell is a compact
+    * `UnsafeArrayData` (or null). Shared through [[collectMemo]]:
     * callers never mutate the arrays. */
   private[graft] final class Columns(val length: Int,
       private[graph] val cols: Array[AnyRef]) {
@@ -214,8 +215,7 @@ object PathFinder {
       case other => throw new IllegalStateException(s"column $j: $other")
     }
     /** 8 B a primitive cell; a value cell counts its reference, object
-      * header and, for strings, binaries and arrays, its bytes (a boxed
-      * array element 28 B). */
+      * header and, for strings, binaries and arrays, its bytes. */
     def bytes: Long = cols.map {
       case a: Array[Any] => a.foldLeft(0L) {
         case (n, s: org.apache.spark.unsafe.types.UTF8String) =>
@@ -223,8 +223,6 @@ object PathFinder {
         case (n, b: Array[Byte]) => n + 32L + b.length
         case (n, u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) =>
           n + 32L + u.getSizeInBytes
-        case (n, g: org.apache.spark.sql.catalyst.util.ArrayData) =>
-          n + 32L + 28L * g.numElements
         case (n, _) => n + 24L
       }
       case _ => 8L * length
@@ -267,7 +265,8 @@ object PathFinder {
     * full count (at 100 TB a pass over the input just to pick a strategy
     * would itself be a major job), and never more than cap + 1 rows on
     * the driver, even for a nondeterministic frame. Columns must be
-    * atomic or `array<bigint>` (MinHash's hashed shingle sets): kernels
+    * atomic or `array<bigint>` without null elements (MinHash's hashed
+    * shingle sets; the caller bounds `cap` by their size): kernels
     * cast the long or double projection they consume, other types come
     * back as Catalyst values ([[Columns]]). `cap` is clamped to
     * [0, Int.MaxValue − 1]. */
@@ -278,10 +277,10 @@ object PathFinder {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
     val types = df.schema.fields.map(_.dataType)
     require(types.forall {
-        case ArrayType(LongType, _) => true
+        case ArrayType(LongType, false) => true
         case t => atomic(t)
       },
-      s"collectUnder needs atomic or array<bigint> columns: " +
+      s"collectUnder needs atomic or array<bigint not null> columns: " +
         df.schema.simpleString)
     val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
     collectMemo.getOrBuild(PlanMemo.id(df), c) {
@@ -293,15 +292,11 @@ object PathFinder {
           Array.tabulate(n)(rows(_).getDouble(j))
         case (LongType, j) if rows.forall(!_.isNullAt(j)) =>
           Array.tabulate(n)(rows(_).getLong(j))
-        case (t @ ArrayType(LongType, _), j) =>
-          val toCatalyst =
-            CatalystTypeConverters.createToCatalystConverter(t)
-          Array.tabulate[Any](n) { i =>
-            val a = rows(i).getSeq[Any](j)
-            if (a == null || a.contains(null)) toCatalyst(a)
+        case (ArrayType(LongType, _), j) =>
+          Array.tabulate[Any](n)(i =>
+            if (rows(i).isNullAt(j)) null
             else UnsafeArrayData.fromPrimitiveArray(
-              a.iterator.map(_.asInstanceOf[Long]).toArray)
-          }
+              rows(i).getSeq[Long](j).toArray))
         case (t, j) =>
           val toCatalyst =
             CatalystTypeConverters.createToCatalystConverter(t)

@@ -21,10 +21,12 @@ import graft.pgq.PathMode
   * (distributed) and g = n (local), n the rows of the frame each kernel
   * gates, path arrays included — which pins the local CSR's slot order
   * to the distributed dense-eid and min-struct tie-breaks. MinHash LSH
-  * (documents) and co-purchase (memberships) must also give the same
-  * rows on both sides of g = n. The compiler's array id translation, whose join form runs only past the
-  * 65536-row local-map cap, must equal its local-map form on random
-  * arrays and bijections. */
+  * (documents) must also give the same rows on both sides of g = n,
+  * co-purchase on both sides of its cap of 8 × g memberships, and
+  * MinHash past its 65536-document cap must take the bucket join at any
+  * gate. The compiler's array id translation, whose join form runs only
+  * past the 65536-row local-map cap, must equal its local-map form on
+  * random arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -388,6 +390,28 @@ class GateBoundarySpec extends AnyFunSuite {
     assert(empty._1.isEmpty && !empty._3)
   }
 
+  test("MinHash LSH past its document cap takes the bucket join at the " +
+      "default gate; at the cap the local kernel answers the same pair") {
+    import org.apache.spark.sql.functions.{concat, lit, when}
+    val s = init()
+    val cap = graft.ops.Dedup.lshLocalMaxDocs
+    // two copies of one text and unrelated three-word texts
+    def corpus(n: Long): DataFrame = s.range(n).select(col("id").as("doc_id"),
+      when(col("id") < 2, lit("ant bee cat dog")).otherwise(concat(
+        lit("a"), col("id"), lit(" b"), col("id"), lit(" c"), col("id")))
+        .as("text"))
+    val Seq(over, at) = Seq(cap + 1, cap).map(n => withGate(s, 2000000L) {
+      graft.OpCaches.releaseAll()
+      val out = graft.ops.Dedup.minHashLshPairs(corpus(n), "doc_id", "text",
+        shingleK = 2, numHashes = 8, bands = 4, threshold = 0.4)
+      val got = (rows(out), graft.OpCaches.trackedCount > 0)
+      graft.OpCaches.releaseAll()
+      got
+    })
+    assert(over._2 && !at._2)
+    assert(over._1 == Seq(Seq(0L, 1L, 1.0)) && at._1 == over._1)
+  }
+
   /** Memberships (u, v): 3–20 rows over u in 0..5 and v in 0..3, about
     * one u and one v in eight null; `shift` offsets every non-null id. */
   private def memberships(shift: Long): Gen[Seq[(Option[Long], Option[Long])]] =
@@ -397,8 +421,8 @@ class GateBoundarySpec extends AnyFunSuite {
     } yield (Option(u + shift).filter(_ => nu > 0),
       Option(v + shift).filter(_ => nv > 0))))
 
-  test("co-purchase at g = n - 1 (distributed) and g = n (local) agree: " +
-      "null u and v, unpackable ids, a hot key under maxKeyDegree") {
+  test("co-purchase on both sides of its cap of 8 × g memberships " +
+      "agrees: null u and v, unpackable ids, a hot key under maxKeyDegree") {
     val s = init()
     import s.implicits._
     check(8)(Prop.forAll(
@@ -406,7 +430,9 @@ class GateBoundarySpec extends AnyFunSuite {
         Gen.choose(2L, 3L)) { (ms, maxDeg) =>
       val n = ms.count { case (u, v) => u.isDefined && v.isDefined }
       val df = ms.toDF("u", "v")
-      agree(n) {
+      // 8 × (g − 1) < n ≤ 8 × g
+      val g = (n + 7L) / 8L
+      agreeAt(g - 1L, g) {
         Seq(Algorithms.bipartiteProjection(df),
           Algorithms.bipartiteProjection(df, minWeight = 2L),
           Algorithms.bipartiteProjection(df, maxKeyDegree = maxDeg))
@@ -432,8 +458,13 @@ class GateBoundarySpec extends AnyFunSuite {
   /** Every frame of `run`, built and collected at g = n − 1 (distributed)
     * and at g = n (local): equal rows, path arrays included, doubles
     * within 1e-9. */
-  private def agree(n: Int)(run: => Seq[DataFrame]): Boolean = {
-    val Seq(dist, local) = Seq(n - 1L, n.toLong).map(gate =>
+  private def agree(n: Int)(run: => Seq[DataFrame]): Boolean =
+    agreeAt(n - 1L, n.toLong)(run)
+
+  /** [[agree]] at the given distributed and local gates. */
+  private def agreeAt(distGate: Long, localGate: Long)
+      (run: => Seq[DataFrame]): Boolean = {
+    val Seq(dist, local) = Seq(distGate, localGate).map(gate =>
       withGate(spark, gate)(run.map(rows)))
     dist.zip(local).forall { case (d, l) =>
       d.length == l.length && d.zip(l).forall { case (x, y) =>
