@@ -649,30 +649,41 @@ object Algorithms {
     // both id spaces pack into 31 bits, a parallel in-memory kernel
     // absorbs distinct + degree cap + pair counting into two driver
     // sorts with ZERO exchanges — the strategy DuckDB's in-memory
-    // aggregate wins with at the 10× point. ONE aggregate scan (count +
-    // id ranges, partial aggregates) decides: a limit probe would haul
-    // up to the cap's rows to the driver for an input over it,
-    // re-evaluating the join through CollectLimitExec's incremental job
-    // ladder. A
-    // membership is collected as one packed 8 B long, so the cap is 8 ×
-    // the session gate (16M at the default gate; sf1's q114, about 6M
-    // memberships, keeps the kernel, NOTES item 75). The kernel knows the
-    // EXACT pair volume from the degree histogram before committing
-    // memory and returns None over its bound (fall through to the
-    // distributed branch).
-    val st = m0.agg(count(lit(1)), min("u"), max("u"), min("v"), max("v"))
-      .first()
-    val n = st.getLong(0)
-    val streamable = n > 0L && st.getLong(1) >= 0L &&
-      st.getLong(2) < (1L << 31) && st.getLong(3) >= 0L &&
-      st.getLong(4) < (1L << 31)
-    val cap = math.min(8L * PathFinder.localMaxRows(sp2), Int.MaxValue - 8L)
-    val local =
-      if (n == 0L) Some(Array.empty[(Long, Long, Long)])
-      else Option.when(streamable && n <= cap)(m0
-          .select(shiftleft(col("v"), 32).bitwiseOR(col("u"))).as[Long]
-          .collect())
-        .flatMap(LocalKernels.copurchaseCounts(_, minWeight, maxKeyDegree))
+    // aggregate wins with at the 10× point. Up to min(gate, 65536) rows
+    // one gated collect is the kernel's input. Past that a limit probe
+    // would haul up to the cap's rows to the driver, re-evaluating the
+    // join through CollectLimitExec's incremental job ladder, so ONE
+    // aggregate scan (count + id ranges) over a membership frame cached
+    // for just this attempt decides, and the packed collect reads the
+    // cache. A membership is collected as one packed 8 B long, so that
+    // cap is 8 × the session gate (16M at the default gate; sf1's q114,
+    // about 6M memberships, keeps the kernel, NOTES item 75). The kernel
+    // knows the EXACT pair volume from the degree histogram before
+    // committing memory and returns None over its bound (fall through
+    // to the distributed branch).
+    def fits31(lo: Long, hi: Long): Boolean = lo >= 0L && hi < (1L << 31)
+    val gate = PathFinder.localMaxRows(sp2)
+    val (packed, streamable) =
+      PathFinder.collectUnder(m0, math.min(gate, 65536L)) match {
+        case Some(c) =>
+          val (u, v) = (c.longs(0), c.longs(1))
+          val ok = c.length == 0 || fits31(u.min, u.max) && fits31(v.min, v.max)
+          (Option.when(ok)(Array.tabulate(c.length)(i => v(i) << 32 | u(i))),
+            c.length > 0 && ok)
+        case None =>
+          val m0c = m0.persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            val st = m0c.agg(count(lit(1)), min("u"), max("u"), min("v"),
+              max("v")).first()
+            val ok = fits31(st.getLong(1), st.getLong(2)) &&
+              fits31(st.getLong(3), st.getLong(4))
+            (Option.when(ok && st.getLong(0) <= 8L * gate)(m0c
+                .select(shiftleft(col("v"), 32).bitwiseOR(col("u"))).as[Long]
+                .collect()), ok)
+          } finally m0c.unpersist(false)
+      }
+    val local = packed.flatMap(
+      LocalKernels.copurchaseCounts(_, minWeight, maxKeyDegree))
     local.map(_.toSeq.toDF("id_a", "id_b", "weight")).getOrElse {
       // distributed KERNEL branch (scaladoc above): two bare packed-long
       // exchanges + streaming per-partition kernels when both id spaces

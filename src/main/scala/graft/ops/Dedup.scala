@@ -162,7 +162,8 @@ object Dedup {
     *
     * Both branches read ONE key projection ([[lshKeys]]), so their
     * buckets are the same by construction. An input of at most
-    * [[lshLocalMaxDocs]] documents is that projection's one gated
+    * [[lshLocalMaxDocs]] documents, and at most
+    * `spark.graft.local.maxRows`, is that projection's one gated
     * collect ([[graft.graph.PathFinder.collectUnder]]) plus a driver
     * kernel ([[localLshPairs]]); a bigger input, or one whose kept
     * buckets hold more candidate pairs than `spark.graft.local.maxRows`,

@@ -218,7 +218,8 @@ class FusedProbeSpec extends AnyFunSuite {
   }
 
   test("job budget: MinHash LSH under the gate is one collect job; " +
-      "co-purchase under its cap persists nothing and collects once") {
+      "co-purchase under the gate persists nothing and runs no stats " +
+      "first()") {
     import org.apache.spark.sql.Row
     val text = "a b c d e f g h i j k l"
     val docs = rddFrame(Seq(Row(1L, text), Row(2L, text + " m"),
@@ -236,9 +237,7 @@ class FusedProbeSpec extends AnyFunSuite {
     val (weights, cpJobs, cpCached) = jobsOf(
       Algorithms.bipartiteProjection(ms).collect())
     assert(weights.nonEmpty)
-    // the aggregate's shuffle stage may run as an AQE job of its own
-    assert(cpJobs.count(_.startsWith("collect at")) == 1 &&
-      cpJobs.exists(_.startsWith("collect at Algorithms")), cpJobs)
+    assert(!cpJobs.exists(_.startsWith("first at")), cpJobs)
     assert(!cpCached, cpJobs)
   }
 }

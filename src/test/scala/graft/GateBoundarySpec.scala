@@ -22,9 +22,9 @@ import graft.pgq.PathMode
   * gates, path arrays included — which pins the local CSR's slot order
   * to the distributed dense-eid and min-struct tie-breaks. MinHash LSH
   * (documents) must also give the same rows on both sides of g = n,
-  * co-purchase on both sides of its cap of 8 × g memberships, and
-  * MinHash past its 65536-document cap must take the bucket join at any
-  * gate. The compiler's array id translation, whose join form runs only
+  * co-purchase on both sides of its cap of 8 × g memberships and at
+  * g = n, and MinHash past its 65536-document cap must take the bucket
+  * join at any gate. The compiler's array id translation, whose join form runs only
   * past the 65536-row local-map cap, must equal its local-map form on
   * random arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
@@ -421,8 +421,9 @@ class GateBoundarySpec extends AnyFunSuite {
     } yield (Option(u + shift).filter(_ => nu > 0),
       Option(v + shift).filter(_ => nv > 0))))
 
-  test("co-purchase on both sides of its cap of 8 × g memberships " +
-      "agrees: null u and v, unpackable ids, a hot key under maxKeyDegree") {
+  test("co-purchase past its cap of 8 × g memberships (distributed), " +
+      "under it and under g itself (local) agrees: null u and v, " +
+      "unpackable ids, a hot key under maxKeyDegree") {
     val s = init()
     import s.implicits._
     check(8)(Prop.forAll(
@@ -430,13 +431,14 @@ class GateBoundarySpec extends AnyFunSuite {
         Gen.choose(2L, 3L)) { (ms, maxDeg) =>
       val n = ms.count { case (u, v) => u.isDefined && v.isDefined }
       val df = ms.toDF("u", "v")
-      // 8 × (g − 1) < n ≤ 8 × g
+      // 8 × (g − 1) < n ≤ 8 × g: the aggregate decides at g, the gated
+      // collect answers at n
       val g = (n + 7L) / 8L
-      agreeAt(g - 1L, g) {
+      Seq(g, n.toLong).forall(local => agreeAt(g - 1L, local) {
         Seq(Algorithms.bipartiteProjection(df),
           Algorithms.bipartiteProjection(df, minWeight = 2L),
           Algorithms.bipartiteProjection(df, maxKeyDegree = maxDeg))
-      }
+      })
     })
     // empty input: the gate of 0 admits it, so both read the kernel
     val empty = Seq.empty[(Long, Long)].toDF("u", "v")
