@@ -29,9 +29,9 @@ object PathFinder {
 
   /** Strategy gate, a session conf: kernel inputs with at most this many
     * rows (edges, distinct vertex ids, quantile values; MinHash
-    * documents up to 65536; co-purchase memberships up to 8 × the gate,
-    * one packed long each) run on driver-local array kernels
-    * ([[LocalKernels]] and MinHash's in [[graft.ops.Dedup]]) — the
+    * documents up to 65536; co-purchase memberships up to 65536, and up
+    * to 8 × the gate past an aggregate scan) run on driver-local array
+    * kernels ([[LocalKernels]] and MinHash's in [[graft.ops.Dedup]]) — the
     * analogue of the reference's in-memory CSR, correct only because it
     * is size-gated. Bigger inputs take the distributed DataFrame loops;
     * 0 forces every kernel distributed. Read from the INPUT FRAME's
