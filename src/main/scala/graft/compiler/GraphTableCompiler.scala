@@ -29,12 +29,9 @@ object GraphTableCompiler {
   private val uniqueKeyVerdicts = new PlanMemo[Boolean](64)
 
   /** Dense-id mapping frames (composite rowid maps, dense edge ids) by
-    * tag, keyed on the BASE table plan. These were per-compile caches,
-    * which made every graphTable() call (a) re-run the distinct+sort+
-    * zipWithIndex jobs at COMPILE time and (b) produce a FRESH
-    * RDD-backed plan, so every downstream plan-identity memo (edge
-    * memo, gate memo, session edge index) missed on every call — the
-    * measured q93 warm-compile wall was exactly these rebuild jobs.
+    * tag, keyed on the BASE table plan: a per-compile build re-ran the
+    * distinct+sort+zipWithIndex jobs on every graphTable() call and gave
+    * a fresh RDD plan that missed every downstream plan-identity memo.
     * Every frame the memo lets go of is unpersisted (lazy consumers
     * recompute — same contract as the session edge index). */
   private[graft] val idMapMemo =
@@ -67,34 +64,13 @@ object GraphTableCompiler {
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private final case class Binding(alias: String, isVertex: Boolean,
-      table: String, keyCols: Seq[String] = Nil)
-
-  /** A driver-resident vertex table: the unique, non-null values `keys`
-    * of its single integral key `key` (of type `keyType`), `index`
-    * mapping each to its row, and the `reads` (name, type, one Catalyst
-    * value per row) the query reads of the binding besides the key. A
-    * path endpoint reads only its key: seeds and targets over it are
-    * Project/Filter over a local relation, which Spark folds at
-    * optimization, and its join-back is a membership test on the
-    * kernel's endpoint column. A fixed hop's far vertex is the same
-    * membership test on the edge's key plus one lookup per read. */
-  private final class Resident(val key: String,
-      val keyType: org.apache.spark.sql.types.DataType,
-      val keys: Array[Long], rows: Array[Long],
-      val reads: Seq[(String, org.apache.spark.sql.types.DataType,
-        Array[Any])]) {
-    lazy val index = new graft.functions.LongLongMap(keys, rows)
-    /** Lower-cased names of the columns the binding can serve. */
-    val carries: Set[String] =
-      (key +: reads.map(_._1)).map(_.toLowerCase).toSet
+  /** A value computed at most once, on first use. */
+  private final class Once[T](f: => T) {
+    lazy val value: T = f
   }
 
-  /** [[Resident]]s by their collected projection (base plan, snapshot
-    * token and read columns) and cap: the index and the boxed reads are
-    * built once per entry, the rows come from the one gate
-    * ([[PathFinder.collectUnder]]). */
-  private val residents = new PlanMemo[Option[Resident]](16)
+  private final case class Binding(alias: String, isVertex: Boolean,
+      table: String, keyCols: Seq[String] = Nil)
 
   /** One enumerated quantified segment of the current pattern, for the
     * mixed-pattern mode filters: the in-plan interleaved path column plus
@@ -190,13 +166,6 @@ object GraphTableCompiler {
       df.withColumn("rowid", col("__rowid"))
     else df
 
-  /** Edge sub-label inheritance filter — same bitmask semantics as
-    * vertices (reference match.cpp:278-296; edge tables share the
-    * discriminator fields, property_graph_table.hpp:40-54). */
-  private def edgeSubFilter(df: DataFrame, et: EdgeTable,
-      label: Option[String]): DataFrame =
-    subLabelFilter(df, et.subLabels, et.discriminator, label, et.tableName)
-
   /** Undirected edge view: original UNION ALL swapped src/dst
     * (reference `EdgeTypeAny` match.cpp:365-392). Requires both
     * endpoints in one key space — swapping src/dst values is meaningless
@@ -257,16 +226,12 @@ object GraphTableCompiler {
       case None => translateArrayJoin(df, c, m, vertexSlotsOnly)
     }
 
-  /** Local-map projection form of [[translateIds]]: the whole translate
-    * collapses to one codegen'd transform over an O(1) hash-probe
-    * expression — zero joins, zero exchanges, no per-split job fan-out
-    * (the join pipeline cost q93 ~2 s of driver plan-building plus
-    * several tiny shuffle stages PER quantifier split on a 25-row
-    * graph). The map rides the expression as an opaque
-    * [[graft.functions.LongLongMap]] reference, NOT a MapType literal:
-    * `element_at` on a map literal is a linear scan per slot (65k
-    * comparisons worst-case at the default gate) and the literal itself
-    * made plan canonicalization O(map). */
+  /** Local-map projection form of [[translateIds]]: one codegen'd
+    * transform over an O(1) hash probe — no join, no exchange, no job.
+    * The map rides the expression as an opaque
+    * [[graft.functions.LongLongMap]] reference, not a MapType literal,
+    * whose `element_at` scans linearly and whose size would make plan
+    * canonicalization O(map). */
   private[graft] def translateLocal(df: DataFrame, c: String,
       m: Map[Long, Long], vertexSlotsOnly: Boolean): DataFrame = {
     val table = new graft.functions.LongLongMap(m)
@@ -318,73 +283,50 @@ object GraphTableCompiler {
     var plan: DataFrame = null
     var anonCounter = 0
 
-    // --- Compile-time broadcast-side choice (r15; guide §3.1/§3.2) ---
-    // Catalyst's non-CBO size estimate for a JOIN node is the product of
-    // its children, so an accumulated chain like customer⋈orders is never
-    // estimated small enough to broadcast against the next big table: the
-    // join plans as sort-merge and AQE converts it mid-query — after the
-    // big side's map stage already wrote its shuffle. The compiler knows
-    // more than Catalyst here: every chain join binds a fresh base table
-    // on key equality, so the Σ of the bound tables' ON-DISK footer bytes
-    // is a sound size signal for the accumulated side WHILE row counts
-    // provably cannot multiply (tracked below). When a side's footprint
-    // is under 64 MB on disk (far under the guide's "few hundred MB is
-    // fine" and Spark's 8 GB broadcast cap), hint THAT side. The decision
-    // input is the data's actual footprint, never a tuned constant: at
-    // production scale no side qualifies and plans are unchanged.
+    // --- Compile-time broadcast-side choice ---
+    // Catalyst's non-CBO size estimate for a JOIN is the product of its
+    // children, so an accumulated chain like customer⋈orders never looks
+    // small enough to broadcast: it plans as sort-merge and AQE converts
+    // it only after the big side's shuffle is written. Every chain join
+    // binds a fresh base table on key equality, so the Σ of the bound
+    // tables' ON-DISK footer bytes is a sound size bound for the
+    // accumulated side WHILE row counts provably cannot multiply (tracked
+    // below). A side under 64 MB on disk is hinted; at production scale
+    // no side qualifies and plans are unchanged.
     val broadcastMax = 64L * 1024 * 1024
     // Σ on-disk bytes of the tables joined into `plan`; -1 = unknown or
     // poisoned (kernel frames, cross joins, possible row multiplication,
     // or simply grown past broadcastMax — no future plan-side hint, so
     // stop paying for bound upkeep, including its uniqueness probes).
-    // LAZY with force-once caching: the uniqueness probes that certify
+    // Forced once, on first consult: the uniqueness probes that certify
     // row preservation run only when a LATER join actually consults the
     // bound — a terminal hop never pays for probes that only matter to
     // hops that never come.
-    object footprintState {
-      var planFootprintEval: () => Long = () => -1L
-      var chainUniqueEval: () => Boolean = () => false
-    }
-    def planFootprint: Long = {
-      val v = footprintState.planFootprintEval()
-      footprintState.planFootprintEval = () => v
-      v
-    }
-    def setPlanFootprint(v: Long): Unit =
-      footprintState.planFootprintEval = () => v
+    var footprint = new Once(-1L)
     // every current plan row is a DISTINCT row of the last-bound vertex's
     // table — the precondition under which the NEXT edge join cannot
     // multiply rows beyond that edge's own row count
-    def chainUnique: Boolean = {
-      val v = footprintState.chainUniqueEval()
-      footprintState.chainUniqueEval = () => v
-      v
+    var chainUnique = new Once(false)
+    /** Poisons both bounds past a join the compiler cannot size: a
+      * kernel or derived frame, a cross join, rows that may multiply. */
+    def unbounded(): Unit = {
+      footprint = new Once(-1L)
+      chainUnique = new Once(false)
     }
-    def setChainUnique(v: Boolean): Unit =
-      footprintState.chainUniqueEval = () => v
-    def chainUniqueLazy(f: () => Boolean): Unit =
-      footprintState.chainUniqueEval = f
-    /** The CURRENT chainUnique thunk — capture at join-emission time so
-      * a preserved-thunk forced hops later reads the flag of ITS epoch,
-      * not whatever a later hop installed. */
-    def chainUniqueThunk: () => Boolean = footprintState.chainUniqueEval
 
     def tableFootprintBytes(tableName: String): Long =
       graft.graph.PathFinder.relationFootprintBytes(
         resolver(spark, tableName))
 
     /** Emit `plan ⋈ df` with a broadcast hint on a side whose footprint
-      * bound qualifies. The LEAF side is preferred when it qualifies:
-      * hinting a base table needs no uniqueness probes, so the
-      * accumulated bound (and the probe jobs that keep it sound) is
-      * forced ONLY when the incoming table is too big to broadcast —
-      * i.e. exactly when the plan-side hint is the one that can save a
-      * big-side shuffle. Callers advance or poison the bound with the
-      * join's multiplicity knowledge. */
+      * bound qualifies, the LEAF side first: hinting a base table needs
+      * no uniqueness probes, so the accumulated bound (and its probe
+      * jobs) is forced ONLY when the incoming table is too big to
+      * broadcast. Callers advance or poison the bound. */
     def sizedJoin(df: DataFrame, cond: Column, dfBytes: Long): Unit = {
       val hintDf = dfBytes >= 0 && dfBytes <= broadcastMax
       val hintPlan = !hintDf && {
-        val pB = planFootprint // forces the bound (and its lazy probes)
+        val pB = footprint.value // forces the bound and its lazy probes
         pB >= 0 && pB <= broadcastMax
       }
       plan = (if (hintPlan) broadcast(plan) else plan)
@@ -396,18 +338,17 @@ object GraphTableCompiler {
       * probe) certifies the join could not multiply plan rows. Deferred:
       * `preserved` is forced only if a later join consults the bound. */
     def advanceFootprint(addBytes: Long, preserved: => Boolean): Unit = {
-      // capture the PREVIOUS thunk, never force here: the whole chain of
+      // capture the PREVIOUS bound, never force here: the whole chain of
       // bounds (and their uniqueness probes) evaluates only if a later
-      // join actually consults it, and the force-once caching collapses
-      // the chain after the first consult
-      val prev = footprintState.planFootprintEval
-      footprintState.planFootprintEval = () => {
-        val base = prev()
+      // join actually consults it
+      val prev = footprint
+      footprint = new Once({
+        val base = prev.value
         if (base < 0 || addBytes < 0) -1L
         else if (base + addBytes > broadcastMax) -1L
         else if (preserved) base + addBytes
         else -1L
-      }
+      })
     }
     // varName -> binding (shared across comma-separated patterns, reference
     // match.cpp:982-989)
@@ -420,11 +361,14 @@ object GraphTableCompiler {
     // reference `v.prop` in WHERE/COLUMNS must be rewritten to the
     // carrying edge's alias
     val fusedAliases = scala.collection.mutable.Map[String, String]()
-    // plan alias -> its driver-resident table, for vertex bindings read
-    // through lookups (or a one-column key frame) instead of a scan: they
-    // carry only the columns the query reads of them
-    val residentAliases = scala.collection.mutable.Map[String, Resident]()
-
+    // every WHERE and COLUMNS text, parsed once per compile (None: it
+    // does not parse) for the binding pass, `rexpr` and `checkRefs`
+    val parsed = scala.collection.mutable.Map[String,
+      Option[org.apache.spark.sql.catalyst.expressions.Expression]]()
+    def parse(sql: String)
+        : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+      parsed.getOrElseUpdate(sql, scala.util.Try(
+        spark.sessionState.sqlParser.parseExpression(sql)).toOption)
     /** `expr(sql)` with fused-binding qualifiers rewritten: any
       * `v.prop` where `v` is a fused variable becomes `carrier.prop`.
       * With `bare` = (alias, lower-cased column names), an unqualified
@@ -438,9 +382,7 @@ object GraphTableCompiler {
       else {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
         import org.apache.spark.sql.catalyst.expressions.LambdaFunction
-        val parsed =
-          try spark.sessionState.sqlParser.parseExpression(sql)
-          catch { case _: Exception => return expr(sql) }
+        val parsed = parse(sql).getOrElse(return expr(sql))
         val lambdaArgs = parsed.collect {
           case l: LambdaFunction => l.arguments.map(_.name.toLowerCase)
         }.flatten.toSet
@@ -506,18 +448,27 @@ object GraphTableCompiler {
       subLabelFilter(withRowid(resolver(spark, v.tableName)), v.subLabels,
         v.discriminator, label, v.tableName)
 
-    /** Bind a vertex pattern: join (or reuse) its table; returns alias.
-      * `joinCond` builds the join condition given the final alias.
-      * `hint` resolves a label-less vertex from its adjacent edge's
-      * declared endpoint (the reference resolves unlabeled bindings the
-      * same way — grammar permits omission, pgq.gram:54-63). */
+    /** The table of `vp`'s label, of `hint` (its edge's declared endpoint,
+      * as the reference resolves unlabeled bindings, pgq.gram:54-63), or
+      * the graph's only vertex table. */
+    def labelTable(vp: VertexPattern, name: String, hint: Option[String])
+        : VertexTable =
+      pg.vertexLabel(vp.label.orElse(hint).getOrElse(
+        if (pg.vertexTables.length == 1) pg.vertexTables.head.label
+        else throw GraphAnalysisException(
+          s"Vertex '$name' needs a label (no adjacent edge determines " +
+            "it and multiple vertex tables are registered)")))
+
+    /** Bind a vertex pattern: its table's frame (a resident chain head's
+      * key set), joined on `joinCond` — built given the final alias — or
+      * starting the plan; returns its alias. A variable bound before
+      * (cycles) reuses its alias, the join condition and the label/WHERE
+      * this occurrence carries becoming filters. */
     def bindVertex(vp: VertexPattern,
         joinCond: Option[String => Column],
         hint: Option[String] = None,
-        fuse: Option[(String, String, Seq[String], Seq[String])] = None,
-        boundRefKeys: Option[Seq[String]] = None,
-        resident: Option[Resident] = None,
-        probe: Option[Column] = None)
+        access: Access = Access.Join,
+        boundRefKeys: Option[Seq[String]] = None)
         : String = {
       val name = vp.varName.getOrElse(freshName("v"))
       bindings.get(name) match {
@@ -537,77 +488,55 @@ object GraphTableCompiler {
           vp.where.foreach(w => plan = plan.filter(rexpr(w)))
           b.alias
         case None =>
-          // label-less vertex: the adjacent edge's endpoint table, or the
-          // graph's only vertex table when unambiguous
-          val label = vp.label.orElse(hint).getOrElse(
-            if (pg.vertexTables.length == 1) pg.vertexTables.head.label
-            else throw GraphAnalysisException(
-              s"Vertex '$name' needs a label (no adjacent edge determines " +
-                "it and multiple vertex tables are registered)"))
-          val vt = pg.vertexLabel(label)
-          // Identity self-join fusion: when the adjacent edge's endpoint
-          // columns ARE this vertex's key columns on the SAME table
-          // (`orders.o_orderkey = orders.o_orderkey`) and the key is
-          // unique (memoized probe), the join is the identity — serve
-          // the vertex from the edge's own row instead of re-scanning
-          // the table and self-joining. DuckDB's optimizer recovers this
-          // from the reference's cross-join soup (SURVEY §4); Spark has
-          // no self-join elimination, so the compiler must not emit it.
-          // Qualified references `v.prop` rewrite to the edge alias
-          // through [[rexpr]]/[[fusedAliases]].
-          val fusible = fuse.exists { case (_, eTable, eKeys, eRefKeys) =>
-            plan != null && vt.tableName == eTable &&
-            eKeys.map(_.toLowerCase) == eRefKeys.map(_.toLowerCase) &&
-            eRefKeys.map(_.toLowerCase) == vt.keyCols.map(_.toLowerCase) &&
-            !hasDuplicateKeys(vt, vt.keyCols)
+          val vt = labelTable(vp, name, hint)
+          var df = (access match {
+            case Access.Resident(res, _) => residentFrame(res)
+            case _ => vertexDF(vt, vp.label)
+          }).alias(name)
+          vp.where.foreach(w => df = df.filter(expr(w)))
+          bindings(name) = Binding(name, isVertex = true, vt.tableName,
+            vt.keyCols)
+          val vBytes = tableFootprintBytes(vt.tableName)
+          (plan, joinCond) match {
+            case (null, _) =>
+              // chain head: one plan row per (distinct) table row
+              footprint = new Once(
+                if (vBytes >= 0 && vBytes <= broadcastMax) vBytes else -1L)
+              chainUnique = new Once(true)
+              plan = df
+            case (_, Some(c)) =>
+              // vertex joined on its declared reference keys: rows
+              // preserved iff those keys are unique on the table
+              // (memoized probe, forced only while the bound is live)
+              sizedJoin(df, c(name), vBytes)
+              advanceFootprint(vBytes, boundRefKeys.exists(ks =>
+                !hasDuplicateKeysTable(vt.tableName, ks)))
+            case (_, None) =>
+              plan = plan.crossJoin(df)
+              unbounded()
           }
-          if (fusible) {
-            val eAlias = fuse.get._1
-            bindings(name) = Binding(eAlias, isVertex = true, vt.tableName,
-              vt.keyCols)
-            fusedAliases(name.toLowerCase) = eAlias
-            // identity-join null semantics: a null endpoint key matches
-            // no vertex row (same column on both sides of the eliminated
-            // equality)
-            vt.keyCols.foreach(k => plan = plan.filter(
-              col(s"$eAlias.`${k.replace("`", "``")}`").isNotNull))
-            plan = subLabelFilter(plan, vt.subLabels, vt.discriminator,
-              vp.label, vt.tableName, qualifier = Some(eAlias))
-            vp.where.foreach(w => plan = plan.filter(rexpr(w)))
-            eAlias
-          } else if (plan != null && resident.isDefined && probe.isDefined) {
-            // resident fixed-hop vertex: lookups on the edge's key
-            bindResident(vp, name, vt, resident.get, probe.get)
-          } else {
-            resident.foreach(residentAliases(name) = _)
-            var df = resident.fold(vertexDF(vt, vp.label))(residentFrame)
-              .alias(name)
-            vp.where.foreach(w => df = df.filter(expr(w)))
-            bindings(name) = Binding(name, isVertex = true, vt.tableName,
-              vt.keyCols)
-            val vBytes = tableFootprintBytes(vt.tableName)
-            (plan, joinCond) match {
-              case (null, _) =>
-                // chain head: one plan row per (distinct) table row
-                setPlanFootprint(
-                  if (vBytes >= 0 && vBytes <= broadcastMax) vBytes else -1L)
-                setChainUnique(true)
-                plan = df
-              case (_, Some(c)) =>
-                // vertex joined on its declared reference keys: rows
-                // preserved iff those keys are unique on the table
-                // (memoized probe, forced only while the bound is live)
-                sizedJoin(df, c(name), vBytes)
-                advanceFootprint(vBytes, boundRefKeys.exists(ks =>
-                  !hasDuplicateKeysTable(vt.tableName, ks)))
-              case (_, None) =>
-                plan = plan.crossJoin(df)
-                setPlanFootprint(-1L)
-                setChainUnique(false)
-            }
-            name
-          }
+          name
       }
+    }
+
+    /** Binds fresh `vp` as `name` (label table `vt`) answered by edge
+      * alias `onto`'s row: the join `orders.o_orderkey = o.o_orderkey` on
+      * a unique key is the identity, which DuckDB's optimizer removes
+      * (SURVEY §4) and Spark cannot. `v.prop` rewrites to `onto` through
+      * [[rexpr]]/[[fusedAliases]]. */
+    def bindFused(vp: VertexPattern, name: String, vt: VertexTable,
+        onto: String): String = {
+      bindings(name) = Binding(onto, isVertex = true, vt.tableName,
+        vt.keyCols)
+      fusedAliases(name.toLowerCase) = onto
+      // identity-join null semantics: a null endpoint key matches no
+      // vertex row (same column on both sides of the eliminated equality)
+      vt.keyCols.foreach(k => plan = plan.filter(
+        col(s"$onto.`${k.replace("`", "``")}`").isNotNull))
+      plan = subLabelFilter(plan, vt.subLabels, vt.discriminator, vp.label,
+        vt.tableName, qualifier = Some(onto))
+      vp.where.foreach(w => plan = plan.filter(rexpr(w)))
+      onto
     }
 
     /** A hop's physical edge id as a long, qualified by `alias` when
@@ -628,20 +557,15 @@ object GraphTableCompiler {
     }
 
     def requireUniqueKeys(vt: VertexTable, keys: Seq[String]): Unit =
-      if (hasDuplicateKeys(vt, keys)) throw GraphAnalysisException(
-        "Non-existent/non-unique vertices detected. Make sure all " +
-          "vertices referred by edge tables exist and are unique for " +
-          "path-finding queries")
-
-    def hasDuplicateKeys(vt: VertexTable, keys: Seq[String]): Boolean =
-      hasDuplicateKeysTable(vt.tableName, keys)
+      if (hasDuplicateKeysTable(vt.tableName, keys))
+        throw GraphAnalysisException("Non-existent/non-unique vertices " +
+          "detected. Make sure all vertices referred by edge tables exist " +
+          "and are unique for path-finding queries")
 
     def hasDuplicateKeysTable(tableName: String, keys: Seq[String])
         : Boolean = {
       val df = resolver(spark, tableName)
       // repeated queries over the same tables skip the probe job
-      // entirely (it cost ~0.3 s of local-mode job overhead PER QUERY on
-      // the composite-path bench set)
       GraphTableCompiler.uniqueKeyVerdicts.getOrBuild(PlanMemo.id(df),
           keys.map(_.toLowerCase).mkString(",")) {
         df.groupBy(keys.map(col): _*)
@@ -650,187 +574,44 @@ object GraphTableCompiler {
       }
     }
 
-    def numericKey(vt: VertexTable, key: String): Boolean =
-      integral(fieldType(resolver(spark, vt.tableName), key))
-
-    def lowerEq(xs: Seq[String], ys: Seq[String]): Boolean =
-      xs.map(_.toLowerCase) == ys.map(_.toLowerCase)
-
-    /** The lower-cased columns of `cols` (a table's lower-cased column
-      * names) that `texts` read through the variables `vars`: `v.c` reads
-      * `c`; a whole element `v`, a star over `v` or over everything, and
-      * a bare column name of the table read every column. None when a
-      * text does not parse. */
-    def readsOf(vars: Seq[String], texts: Seq[String], cols: Set[String])
-        : Option[Set[String]] = {
-      import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
-        UnresolvedStar}
-      val vs = vars.map(_.toLowerCase).toSet
-      texts.foldLeft(Option(Set.empty[String])) { (acc, text) =>
-        for {
-          read <- acc
-          e <- scala.util.Try(
-            spark.sessionState.sqlParser.parseExpression(text)).toOption
-        } yield read ++ e.collect {
-          case ua: UnresolvedAttribute if vs(ua.nameParts.head.toLowerCase) =>
-            if (ua.nameParts.length == 1) cols
-            else Set(ua.nameParts(1).toLowerCase)
-          case ua: UnresolvedAttribute
-              if ua.nameParts.length == 1 && cols(ua.name.toLowerCase) => cols
-          case st: UnresolvedStar
-              if st.target.forall(t => vs(t.head.toLowerCase)) => cols
-        }.flatten
-      }
-    }
-
-    /** A fixed hop whose edge may answer as its `a` vertex (near-side
-      * identity fusion): a directed hop whose `a`-side edge keys are the
-      * keys it references. The caller checks the rest: the edge lives in
-      * `a`'s table, those keys are the table's and they are unique. */
-    def nearSide(h: Hop): Boolean =
-      h.ep.direction != EdgeDirection.Undirected &&
-        h.ep.direction != EdgeDirection.Both &&
-        lowerEq(h.a.edgeKeys, h.a.refKeys)
-
-    /** What a fixed hop `h` near-side fused onto its `a` vertex reads of
-      * that table: its far-side edge keys, its sub-label discriminator
-      * and whatever the texts read through the edge variable. */
-    def fusedEdgeReads(h: Hop, cols: Set[String]): Option[Set[String]] =
-      readsOf(h.ep.varName.toSeq,
-        h.ep.where.toSeq ++ spec.where ++ spec.columns.map(_.expr), cols)
-        .map(_ ++ h.b.edgeKeys.map(_.toLowerCase) ++
-          h.et.discriminator.filter(_ => h.ep.label.exists(l =>
-            h.et.subLabels.exists(_.equalsIgnoreCase(l)))).map(_.toLowerCase))
-
-    /** The [[Resident]] of vertex `vp` at hop end `e` of route `r`, or
-      * None (→ today's join). One eligibility test serves both uses.
-      * Always: the vertex is bound exactly once, its label's table is
-      * `e`'s, whose single integral key `e` references; the table has no
-      * `__rowid` pseudo-column; the columns read are atomic; and the base
-      * table's non-null keys are unique and number at most
-      * min(65536, local gate) (a gate of 0 collects nothing).
-      *
-      * A quantified path's endpoint (`fixed` None) must also carry no
-      * sub-label, every hop of the route touching its table must
-      * reference the same key, and no text that can read it — its element
-      * WHERE, the global WHERE, COLUMNS — may read any property but that
-      * key: it adds nothing to a plan row but the key the kernel carries.
-      *
-      * A fixed hop's far vertex (`fixed` = the hop and the hop after it)
-      * must be referenced from an integral edge column; it reads what
-      * those texts, its sub-label's discriminator and the next hop read
-      * of it — the next hop's reference keys, and when that hop's edge is
-      * stored in its table and will fuse onto it, that edge's reads.
-      *
-      * The key, its null flag and the reads are ONE strategy-gate collect
-      * of the base table ([[PathFinder.collectUnder]], memoized by base
-      * plan, snapshot token and projection); the null flag makes the
-      * uniqueness verdict the probe's (null keys group together). */
-    def residentFor(vp: VertexPattern, e: End, r: Route,
-        fixed: Option[(Hop, Option[Hop])] = None): Option[Resident] = {
-      val base = resolver(spark, e.table)
-      val key = e.refKeys.head
-      val cols = base.columns.map(_.toLowerCase).toSet
-      val vt = scala.util.Try(pg.vertexLabel(vp.label.getOrElse(e.vt.label)))
-        .toOption.filter(_.tableName == e.table)
-      val subLabeled = vp.label.exists(l =>
-        vt.exists(_.subLabels.exists(_.equalsIgnoreCase(l))))
-      val boundOnce = vp.varName.forall(n =>
-        spec.patterns.flatMap(_.elements).count {
-          case v: VertexPattern => v.varName.contains(n)
-          case ep: EdgePattern => ep.varName.contains(n)
-        } == 1)
-      val texts = vp.where.toSeq ++ spec.where ++ spec.columns.map(_.expr)
-      val reads: Option[Set[String]] = fixed match {
-        case None =>
-          readsOf(vp.varName.toSeq, texts, cols).filter(rs => !subLabeled &&
-            rs.subsetOf(Set(key.toLowerCase)) &&
-            r.hops.flatMap(h => Seq(h.a, h.b)).forall(x =>
-              x.table != e.table || lowerEq(x.refKeys, e.refKeys)))
-        case Some((h, next)) =>
-          val fuses = next.filter(n => !r.viaKernel(n) && nearSide(n) &&
-            n.et.tableName == e.table && lowerEq(n.a.refKeys, e.refKeys))
-          val keyedByIntegral = h.ep.direction != EdgeDirection.Both &&
-            integral(fieldType(resolver(spark, h.et.tableName),
-              h.b.edgeKeys.head))
-          for {
-            own <- readsOf(vp.varName.toSeq, texts, cols)
-            if keyedByIntegral
-            edge <- fuses.fold(Option(Set.empty[String]))(
-              fusedEdgeReads(_, cols))
-          } yield own ++ edge ++
-            vt.flatMap(_.discriminator).filter(_ => subLabeled)
-              .map(_.toLowerCase) ++
-            next.toSeq.flatMap(_.a.refKeys.map(_.toLowerCase))
-      }
-      val fields = reads.map(rs => base.schema.fields.toSeq.filter(f =>
-        rs(f.name.toLowerCase) && !f.name.equalsIgnoreCase(key))
-        .sortBy(_.name.toLowerCase))
-      val cap = math.min(localMapMaxRows, PathFinder.localMaxRows(spark))
-      val eligible = cap > 0 && e.numeric && boundOnce &&
-        vt.exists(v => lowerEq(v.keyCols, e.refKeys)) && !cols("__rowid") &&
-        reads.exists(_.subsetOf(cols)) &&
-        fields.exists(_.forall(f => PathFinder.atomic(f.dataType)))
-      val k = col(s"`${key.replace("`", "``")}`")
-      if (!eligible) None
-      else {
-        val frame = base.select(Seq(coalesce(k.cast("long"), lit(0L)),
-          k.isNull.cast("long")) ++
-          fields.get.map(f => col(s"`${f.name.replace("`", "``")}`")): _*)
-        residents.getOrBuild(PlanMemo.id(frame), cap) {
-          PathFinder.collectUnder(frame, cap).flatMap { c =>
-            val (ks, isNull) = (c.longs(0), c.longs(1))
-            val rows = ks.indices.filter(isNull(_) == 0L).toArray
-            val keys = rows.map(ks)
-            val sorted = keys.sorted
-            val unique = ks.length - keys.length <= 1 &&
-              (1 until sorted.length).forall(i => sorted(i) != sorted(i - 1))
-            Option.when(unique)(new Resident(key, fieldType(base, key), keys,
-              rows.map(_.toLong), fields.get.zipWithIndex.map { case (f, j) =>
-                (f.name, f.dataType, c.values(j + 2))
-              }))
-          }
-        }
-      }
-    }
+    def integralCol(table: String, c: String): Boolean =
+      integral(fieldType(resolver(spark, table), c))
 
     /** A resident key set as a one-column local frame named and typed
       * like the key. */
-    def residentFrame(res: Resident): DataFrame = {
+    def residentFrame(res: ResidentTable): DataFrame = {
       import spark.implicits._
       res.keys.toSeq.toDF("k").select(col("k").cast(res.keyType).as(res.key))
     }
 
-    /** `df` plus vertex `alias`'s key and reads, looked up on the long
-      * key column `from` and qualified `alias`, so every `alias.c`
-      * reference resolves as against a joined vertex frame. */
-    def withResidentKey(df: DataFrame, alias: String, res: Resident,
+    /** `df` plus the key of resident vertex `alias`, the long column
+      * `from` cast back, qualified `alias` so `alias.key` resolves as
+      * against a joined vertex frame. */
+    def withResidentKey(df: DataFrame, alias: String, res: ResidentTable,
         from: Column): DataFrame =
-      df.select(col("*") +:
-        Bridge.qualifiedAs(from.cast(res.keyType), alias, res.key) +:
-        res.reads.map { case (c, t, values) =>
-          Bridge.qualifiedAs(Bridge.column(graft.functions.LongMapRowRead(
-            Bridge.expression(from), res.index, values, t)), alias, c)
-        }: _*)
+      df.select(col("*"),
+        Bridge.qualifiedAs(from.cast(res.keyType), alias, res.key))
 
-    /** Binds `vp` (label table `vt`) as the resident vertex `name` on the
-      * plan's long column `probe`: rows whose probe is not a key go — the
-      * inner join's rows against unique keys — and the key and every
-      * read come off the probe ([[withResidentKey]]); then its sub-label
-      * and element WHERE. */
-    def bindResident(vp: VertexPattern, name: String, vt: VertexTable,
-        res: Resident, probe: Column): String = {
-      plan = withResidentKey(plan.filter(Bridge.column(
-          graft.functions.LongMapContains(Bridge.expression(probe),
-            res.index))), name, res, probe)
+    /** `df` with fresh `vp` (label table `vt`) bound as resident vertex
+      * `name`, looked up on the long column `probe`: rows whose probe is
+      * not a key go — the inner join's rows against unique keys — and
+      * the reads come off one lookup per row, `inline`d as columns
+      * qualified `name` beside the key ([[withResidentKey]]); then its
+      * sub-label and element WHERE, whose bare names of the columns it
+      * carries read them. */
+    def bindResident(df: DataFrame, vp: VertexPattern, name: String,
+        vt: VertexTable, acc: Access.Resident, probe: Column): DataFrame = {
+      val look = graft.functions.LongMapLookup(Bridge.expression(probe),
+        acc.res.index, acc.reads)
       bindings(name) = Binding(name, isVertex = true, vt.tableName,
         vt.keyCols)
-      residentAliases(name) = res
-      plan = subLabelFilter(plan, vt.subLabels, vt.discriminator, vp.label,
-        vt.tableName, qualifier = Some(name))
-      vp.where.foreach(w =>
-        plan = plan.filter(rexpr(w, Some(name -> res.carries))))
-      name
+      vp.where.foldLeft(subLabelFilter(withResidentKey(
+          if (acc.reads.isEmpty) df.filter(Bridge.column(look).isNotNull)
+          else Bridge.generate(df,
+            org.apache.spark.sql.catalyst.expressions.Inline(look), name),
+          name, acc.res, probe), vt.subLabels, vt.discriminator, vp.label,
+        vt.tableName, qualifier = Some(name)))((d, w) =>
+        d.filter(rexpr(w, Some(name -> acc.carries))))
     }
 
     // enumerated segments of the pattern being processed (cleared per
@@ -886,8 +667,7 @@ object GraphTableCompiler {
         plan = plan.join(
           ids.select(col("__raw"), col("__rowid").as(c)),
           keyStruct(keys, Some(alias)) === col("__raw")).drop("__raw")
-        setPlanFootprint(-1L) // derived mapping frame: size unknown
-        setChainUnique(false)
+        unbounded() // derived mapping frame: size unknown
         c
       })
 
@@ -1163,11 +943,7 @@ object GraphTableCompiler {
       * kernel — and the segments are concatenated dropping each subsequent
       * segment's overlapping head vertex, mirroring the reference's
       * `list_concat`/`array_pop_front` assembly (match.cpp:573-616). */
-    def processPattern(p0: PathPattern): Unit = {
-      val r = Route.resolve(p0,
-        p0.elements.collect { case e: EdgePattern => e }
-          .map(Hop.resolve(pg, _, numericKey)),
-        spec, freshName("hidden"))
+    def processPattern(r: Route, acc: PatternAccess): Unit = {
       val p = r.p
       if (r.needPath && pathCols.contains(p.pathVar.get))
         throw GraphAnalysisException(
@@ -1175,19 +951,15 @@ object GraphTableCompiler {
       val elems = p.elements
       require(elems.nonEmpty && elems.head.isInstanceOf[VertexPattern],
         "pattern must start with a vertex")
-      // Path-mode support matrix (the reference raises NotImplemented for
-      // every non-WALK mode, match.cpp:80-108 — implementing them exceeds
-      // parity): a single quantified segment is enforced inside the
-      // kernel (visited-set BFS / shortest-walks-are-simple); an all-fixed
-      // pattern by pairwise distinctness filters; a MIXED pattern (fixed +
-      // quantified, or several quantified segments) is supported for
-      // prefix-less ENUMERATION, where every output row is one concrete
-      // full path and cross-element distinctness filters over the segment
-      // arrays are exact whole-path semantics. A non-WALK mode UNDER a
-      // search prefix rides the same enumeration (per-segment
-      // representatives cannot express "exists a mode-valid combination",
-      // so the prefix becomes a whole-path ranking AFTER the mode
-      // filters — applyWholePathPrefix).
+      // Path modes (the reference raises NotImplemented for every
+      // non-WALK mode, match.cpp:80-108): a single quantified segment
+      // enforces its mode inside the kernel; an all-fixed pattern by
+      // pairwise distinctness filters; a MIXED pattern by enumeration,
+      // where each row is one concrete path and cross-element filters
+      // over the segment arrays are exact whole-path semantics. Under a
+      // search prefix the mode rides the same enumeration and the prefix
+      // becomes a whole-path ranking AFTER the filters
+      // (applyWholePathPrefix).
       currentModeSegs.clear()
       pendingPathSurrogate = None
       segSpaces.clear()
@@ -1199,49 +971,36 @@ object GraphTableCompiler {
       // a label-less head vertex resolves from the first edge's endpoint;
       // a resident head seeding the first pattern's kernel hop binds its
       // key set, so its seeds need no job and its rows no join-back
-      val head = elems.head.asInstanceOf[VertexPattern]
-      val headRes = r.hops.headOption.filter(h => plan == null &&
-          r.viaKernel(h) && h.a.numeric && h.b.numeric)
-        .flatMap(h => residentFor(head, h.a, r))
-      var prevV = bindVertex(head, None, r.hops.headOption.map(_.a.vt.label),
-        resident = headRes)
+      val headRes = Some(acc.vertex(0)).collect {
+        case Access.Resident(res, _) => res
+      }
+      var prevV = bindVertex(elems.head.asInstanceOf[VertexPattern], None,
+        r.hops.headOption.map(_.a.vt.label), acc.vertex(0))
       modeVertexPos += prevV
 
       val segCols = scala.collection.mutable.ArrayBuffer[Column]()
       r.hops.zipWithIndex.foreach { case (h, k) =>
         val vp = elems(2 * k + 2).asInstanceOf[VertexPattern]
 
-        // TRAIL over a bidirectional FIXED edge: the traversed edge is the
-        // FORWARD orientation's row (its eid sits in modeEdgePos via the
-        // forward alias); the hidden reverse copy is an existence witness,
-        // not a traversed edge — the same rule the quantified `<-[e]->`
-        // kernel applies (path arrays carry the forward edge id), so fixed
-        // and quantified bidirectional hops agree under TRAIL. Stored
-        // reverse rows remain parallel distinct edges (bb2c319 semantics):
-        // 0-3-0 over a 2-cycle IS a trail (two distinct stored rows), while
-        // 0-3-0-3 repeats the forward row and is not.
+        // TRAIL over a bidirectional FIXED edge traverses the FORWARD
+        // row (its eid sits in modeEdgePos); the reverse copy is only an
+        // existence witness, as in the quantified `<-[e]->` kernel. Stored
+        // reverse rows stay distinct edges: 0-3-0 over a 2-cycle IS a
+        // trail, 0-3-0-3 repeats the forward row and is not.
         if (r.viaKernel(h)) {
           val (bAlias, pcol) = bindPathEdge(r, h, vp, prevV,
-            headRes.filter(_ => k == 0))
+            headRes.filter(_ => k == 0), acc.vertex(k + 1))
           pcol.foreach(c => segCols += col(c))
           prevV = bAlias
-        } else if (r.segments) {
-          // fixed hop inside a named path (or the enumPrefix route, whose
-          // whole-path ranking needs every hop's segment even without a
-          // path variable): ordinary join (multiplicity preserved, like
-          // the reference's list_value over plain aliases) plus its
-          // 3-element path segment
-          val aAlias = prevV
-          val (bAlias, eAlias) = bindFixedEdge(h, vp, prevV, withEid = true)
-          segCols += fixedSegment(r, h, aAlias, eAlias, bAlias)
-          modeEdgePos += ((eAlias, h.et))
-          prevV = bAlias
         } else {
+          // a fixed hop inside a named path (or the enumPrefix route,
+          // whose ranking needs every hop's segment) is an ordinary join,
+          // multiplicity preserved, plus its 3-element path segment
           val (bAlias, eAlias) = bindFixedEdge(h, vp, prevV,
-            withEid = p.mode == PathMode.Trail,
-            allowFuse = p.prefix.isEmpty,
-            lookups = Option.when(p.prefix.isEmpty &&
-              p.mode == PathMode.Walk)((r, r.hops.lift(k + 1))))
+            r.segments || p.mode == PathMode.Trail, acc.vertex(k),
+            acc.edge(k), acc.vertex(k + 1))
+          if (r.segments)
+            segCols += fixedSegment(r, h, prevV, eAlias, bAlias)
           modeEdgePos += ((eAlias, h.et))
           prevV = bAlias
         }
@@ -1463,10 +1222,11 @@ object GraphTableCompiler {
       * (reference A2-A5, match.cpp:365-444); returns the far vertex's and
       * the edge's aliases. `withEid` attaches the synthetic dense edge id
       * (`__geid`) when the table declares no edgeIdCol — named-path and
-      * TRAIL hops only. */
+      * TRAIL hops only. `aAcc`, `eAcc` and `bAcc` are the accesses of the
+      * near vertex, the edge and the far vertex. */
     def bindFixedEdge(h: Hop, vp: VertexPattern, aAlias: String,
-        withEid: Boolean, allowFuse: Boolean = false,
-        lookups: Option[(Route, Option[Hop])] = None): (String, String) = {
+        withEid: Boolean, aAcc: Access, eAcc: Access, bAcc: Access)
+        : (String, String) = {
       val (ep, et) = (h.ep, h.et)
       val eName = ep.varName.getOrElse(freshName("e"))
       if (bindings.contains(eName))
@@ -1475,26 +1235,25 @@ object GraphTableCompiler {
       // Near-side identity fusion: an edge stored in the table of the
       // already-bound `a`, keyed on that table's unique key, IS `a`'s row
       // — answer the edge as `a`'s alias instead of self-joining the
-      // table (the mirror of the far-side fusion in bindVertex). A
-      // resident `a` must carry every column the edge reads.
-      val nearFused = allowFuse && !withEid && nearSide(h) && {
-        val ab = vertexBindingAt(aAlias)
-        ab.table == et.tableName && lowerEq(h.a.refKeys, ab.keyCols) &&
-          (residentAliases.get(aAlias) match {
-            case Some(res) => fusedEdgeReads(h,
-                resolver(spark, et.tableName).columns.map(_.toLowerCase).toSet)
-              .exists(_.subsetOf(res.carries))
-            case None => !hasDuplicateKeysTable(et.tableName, h.a.refKeys)
-          })
-      }
-      val eAlias = if (nearFused) aAlias else eName
+      // table (the mirror of the far-side fusion, [[bindFused]]).
+      val eAlias = if (eAcc == Access.Fused) aAlias else eName
       bindings(eName) = Binding(eAlias, isVertex = false, et.tableName)
+      // a resident far vertex is looked up on the edge's key: on the
+      // edge's own frame before it joins, or on the plan when the edge
+      // answers as `a`
+      lazy val bName = vp.varName.getOrElse(freshName("v"))
+      def lookupFar(df: DataFrame): DataFrame = bAcc match {
+        case r: Access.Resident => bindResident(df, vp, bName,
+          labelTable(vp, bName, Some(h.b.vt.label)), r,
+          col(s"$eAlias.${h.b.edgeKeys.head}").cast("long"))
+        case _ => df
+      }
 
-      if (nearFused) {
+      if (eAcc == Access.Fused) {
         fusedAliases(eName.toLowerCase) = aAlias
         // identity-join null semantics, as in the far-side fusion (a
         // resident key is never null)
-        if (!residentAliases.contains(aAlias))
+        if (!aAcc.isInstanceOf[Access.Resident])
           h.a.refKeys.foreach(k => plan = plan.filter(
             col(s"$aAlias.`${k.replace("`", "``")}`").isNotNull))
         plan = subLabelFilter(plan, et.subLabels, et.discriminator, ep.label,
@@ -1503,11 +1262,13 @@ object GraphTableCompiler {
           .map(_.toLowerCase).toSet
         ep.where.foreach(w =>
           plan = plan.filter(rexpr(w, Some(aAlias -> cols))))
+        plan = lookupFar(plan)
       } else {
         val table = withRowid(
           if (withEid && et.edgeIdCol.isEmpty) withDenseEid(et)
           else resolver(spark, et.tableName))
-        val baseDF = edgeSubFilter(table, et, ep.label)
+        val baseDF = subLabelFilter(table, et.subLabels, et.discriminator,
+          ep.label, et.tableName)
         val eDF0 = ep.direction match {
           case EdgeDirection.Undirected => undirectedView(baseDF, h)
           case _                        => baseDF
@@ -1524,42 +1285,31 @@ object GraphTableCompiler {
             -1L // undirected/both views double/semi-join the table
           case _ => tableFootprintBytes(et.tableName)
         }
-        sizedJoin(eDF, keysEq(eName, h.a.edgeKeys, aAlias, h.a.refKeys),
-          eBytes)
-        val chainUniqueHere = chainUniqueThunk // this hop's epoch
-        advanceFootprint(eBytes, chainUniqueHere() && {
+        sizedJoin(lookupFar(eDF),
+          keysEq(eName, h.a.edgeKeys, aAlias, h.a.refKeys), eBytes)
+        val chainUniqueHere = chainUnique // this hop's epoch
+        advanceFootprint(eBytes, chainUniqueHere.value && {
           val aTable = vertexBindingAt(aAlias).table
           !hasDuplicateKeysTable(aTable, h.a.refKeys)
         })
       }
 
-      // join vertex b with the edge's other side. Identity-fusion
-      // candidate for the far vertex: the edge's b-side endpoint/reference
-      // keys (never for Undirected — its view swaps key columns, so the
-      // edge row is not the vertex row — nor onto a resident carrier,
-      // which holds only the columns the query reads of it). Otherwise,
-      // in a WALK pattern (`lookups`), the far vertex may be resident: a
-      // membership test plus lookups on the edge's key.
-      val fuseInfo =
-        if (allowFuse && ep.direction != EdgeDirection.Undirected &&
-            !residentAliases.contains(eAlias))
-          Some((eAlias, et.tableName, h.b.edgeKeys, h.b.refKeys))
-        else None
-      val farFusible = fuseInfo.isDefined && h.b.table == et.tableName &&
-        lowerEq(h.b.edgeKeys, h.b.refKeys)
-      val bRes = lookups.filter(_ => !farFusible).flatMap { case (r, next) =>
-        residentFor(vp, h.b, r, Some((h, next)))
+      // join vertex b with the edge's other side, unless it is fused
+      // onto the edge or resident
+      val bAlias = bAcc match {
+        case _: Access.Resident => bName
+        case Access.Fused => bindFused(vp, bName,
+          labelTable(vp, bName, Some(h.b.vt.label)), eAlias)
+        case _ => bindVertex(vp,
+          Some(b => keysEq(eAlias, h.b.edgeKeys, b, h.b.refKeys)),
+          Some(h.b.vt.label), boundRefKeys = Some(h.b.refKeys))
       }
-      val bAlias = bindVertex(vp,
-        Some(b => keysEq(eAlias, h.b.edgeKeys, b, h.b.refKeys)),
-        Some(h.b.vt.label), fuseInfo, boundRefKeys = Some(h.b.refKeys),
-        resident = bRes,
-        probe = Some(col(s"$eAlias.${h.b.edgeKeys.head}").cast("long")))
       // the NEXT hop's join key is b's: plan rows stay distinct b-table
       // rows only when this edge's far-endpoint columns are unique on
       // the edge table (no fan-in) — the probe defers until a later hop
       // actually consults the bound (a terminal hop never pays it)
-      chainUniqueLazy(() => !hasDuplicateKeysTable(et.tableName, h.b.edgeKeys))
+      chainUnique = new Once(
+        !hasDuplicateKeysTable(et.tableName, h.b.edgeKeys))
 
       // Bidirectional `<-[e]->`: additionally join a second copy of the edge
       // table in the reverse direction (reference `EdgeTypeLeftRight`
@@ -1570,13 +1320,12 @@ object GraphTableCompiler {
         // sub-label bitmask applies to it too (the element's inline WHERE
         // references the first alias and is hoisted there only, like the
         // reference's element-WHERE handling)
-        val e2DF = edgeSubFilter(withRowid(resolver(spark, et.tableName)), et,
-          ep.label).alias(e2)
+        val e2DF = subLabelFilter(withRowid(resolver(spark, et.tableName)),
+          et.subLabels, et.discriminator, ep.label, et.tableName).alias(e2)
         val cond = keysEq(e2, et.srcKeys, bAlias, et.srcRefKeys) &&
           keysEq(e2, et.dstKeys, aAlias, et.dstRefKeys)
         plan = plan.join(e2DF, cond, "inner")
-        setPlanFootprint(-1L) // parallel reverse edges can multiply rows
-        setChainUnique(false)
+        unbounded() // parallel reverse edges can multiply rows
       }
       (bAlias, eAlias)
     }
@@ -1586,7 +1335,7 @@ object GraphTableCompiler {
       * Spark-plan mirror of reference `AddPathFinding` match.cpp:673-707 and
       * `CheckNamedSubpath`/shortest-path CTE :709-790. */
     def bindPathEdge(r: Route, h: Hop, vp: VertexPattern,
-        aAlias: String, aRes: Option[Resident])
+        aAlias: String, aRes: Option[ResidentTable], bAcc: Access)
         : (String, Option[String]) = {
       val (p, ep, et, a, b) = (r.p, h.ep, h.et, h.a, h.b)
       val q = ep.quantifier.getOrElse(Quantifier(1, Some(1)))
@@ -1601,23 +1350,18 @@ object GraphTableCompiler {
             "could lead to infinite results. Consider specifying an " +
             "upper bound or path mode other than WALK")
 
-      // Traversal endpoints: for a Left edge the traversal follows
-      // reversed edges ([[Hop.resolve]]) — the synthetic dense edge
-      // id (`__geid`, [[withDenseEid]]) is attached to the row before any
-      // direction handling, so it is orientation-independent and matches
-      // what a fixed hop over the same physical edge emits.
-      // The plan joins use the edge's declared reference keys, matching
-      // bindFixedEdge (not the vertex tables' own key columns, which may
-      // legitimately differ).
-      // The edge's inline WHERE constrains the traversed edge set (same
-      // hoisting as bindFixedEdge — the kernel must never walk excluded
-      // edges). For Undirected the filter applies AFTER the orientation
-      // doubling, exactly like bindFixedEdge, so the predicate sees both
-      // orientations.
+      // A Left edge traverses reversed edges ([[Hop.resolve]]); the dense
+      // edge id (`__geid`, [[withDenseEid]]) is attached before any
+      // direction handling, so it matches what a fixed hop over the same
+      // physical edge emits. The plan joins use the edge's declared
+      // reference keys, as bindFixedEdge does. The edge's inline WHERE
+      // constrains the traversed edge set — after the orientation
+      // doubling for Undirected, so it sees both orientations.
       val eName = ep.varName.getOrElse(freshName("e"))
       val baseTable = if (r.needEid && et.edgeIdCol.isEmpty) withDenseEid(et)
         else resolver(spark, et.tableName)
-      val edgesRaw = edgeSubFilter(baseTable, et, ep.label)
+      val edgesRaw = subLabelFilter(baseTable, et.subLabels,
+        et.discriminator, ep.label, et.tableName)
       def applyWhere(df: DataFrame): DataFrame =
         ep.where.foldLeft(df.alias(eName))((d, w) => d.filter(expr(w)))
       val edges = ep.direction match {
@@ -1653,14 +1397,10 @@ object GraphTableCompiler {
         case _ => applyWhere(edgesRaw)
       }
 
-      // Filter-before-pathfinding (SURVEY §4), extended to the whole
-      // pattern prefix: seed the BFS from the DISTINCT `a` keys of the
-      // partial plan, so everything accumulated so far — earlier fixed
-      // hops, element WHEREs, sub-label masks, cross-pattern bindings —
-      // prunes the seed set. An IC13-style selective prefix seeds a
-      // handful of vertices instead of the whole vertex table; strictly
-      // better than the reference, which runs the kernel over the full
-      // a×b cross product.
+      // Filter-before-pathfinding (SURVEY §4) over the whole pattern
+      // prefix: the BFS seeds are the DISTINCT `a` keys of the partial
+      // plan, so earlier hops, WHEREs, sub-labels and cross-pattern
+      // bindings prune them (the reference runs the full a×b product).
       require(plan != null, "pattern prefix must be bound before a path edge")
 
       // Single-column numeric keys drive the long-typed kernels directly;
@@ -1669,7 +1409,7 @@ object GraphTableCompiler {
       // physical rowids and CSR construction maps PK/FK tuples to them
       // (compressed_sparse_row.cpp:194-204,238-250).
       val keyIsNumeric = a.numeric && b.numeric
-      val bRes = if (keyIsNumeric) residentFor(vp, b, r) else None
+      val bRes = Some(bAcc).collect { case res: Access.Resident => res }
 
       // the reference's CSR build refuses duplicate vertex keys for
       // path-finding queries (csr_creation.cpp:121-125,
@@ -1717,16 +1457,13 @@ object GraphTableCompiler {
                 "require source and destination vertices from the same " +
                 "table and key columns")
           // element_id/vertices/edges over composite/non-numeric keys:
-          // the kernels run in dense-rowid space, so exposed arrays are
-          // translated to STABLE SURROGATES (vertices → the '|'-joined
-          // declared key tuple; edges → their edge id, which is the
-          // declared id column when one exists). The reference leaks its
-          // physical rowids here (match.cpp:731-788) — a surrogate
-          // derived from declared keys survives reloads and engine
-          // swaps. Search-prefix segments translate right after the
-          // kernel; ENUMERATION segments must stay long-typed for the
-          // cross-element mode filters, so their translation is deferred
-          // to the concatenated path column (processPattern).
+          // the kernels run in dense-rowid space, so exposed arrays become
+          // STABLE SURROGATES (vertices → the '|'-joined declared key
+          // tuple, edges → their edge id) where the reference leaks
+          // physical rowids (match.cpp:731-788). Search-prefix segments
+          // translate right after the kernel; ENUMERATION segments stay
+          // long-typed for the mode filters and translate as the
+          // concatenated path column (processPattern).
           val exposing = r.needPath && r.exposed
           // shared dense-rowid space (memoized — fixed hops and mode
           // filters over the same (table, keys) use the SAME mapping)
@@ -1868,7 +1605,8 @@ object GraphTableCompiler {
                 vp.label.exists(l =>
                   b.vt.subLabels.exists(_.equalsIgnoreCase(l))))) {
               try {
-                var tDF = bRes.fold(vertexDF(b.vt, vp.label))(residentFrame)
+                var tDF = bRes.fold(vertexDF(b.vt, vp.label))(res =>
+                  residentFrame(res.res))
                   .alias(vp.varName.getOrElse(freshName("t")))
                 vp.where.foreach(w => tDF = tDF.filter(expr(w)))
                 Some(tDF.select(col(b.refKeys.head).cast("long").as("id")))
@@ -1906,14 +1644,14 @@ object GraphTableCompiler {
             plan.join(broadcast(joined), srcCond, "inner")
           else plan.join(joined, srcCond, "inner")
       }
-      setPlanFootprint(-1L) // kernel frame: rows may multiply downstream
-      setChainUnique(false)
+      unbounded() // kernel frame: rows may multiply downstream
       val bAlias = bRes match {
         case Some(res) =>
           // resident far end: the join-back with its unique keys is a
           // membership test on __pdst
-          bindResident(vp, vp.varName.getOrElse(freshName("v")), b.vt, res,
-            col("__pdst"))
+          val name = vp.varName.getOrElse(freshName("v"))
+          plan = bindResident(plan, vp, name, b.vt, res, col("__pdst"))
+          name
         case None => bindVertex(vp, Some(bv =>
           if (keyIsNumeric)
             col(s"$bv.${b.refKeys.head}").cast("long") === col("__pdst")
@@ -1926,15 +1664,22 @@ object GraphTableCompiler {
       (bAlias, segColOpt)
     }
 
-    spec.patterns.foreach(processPattern)
+    val routes = spec.patterns.map(p0 => Route.resolve(p0,
+      p0.elements.collect { case e: EdgePattern => e }
+        .map(Hop.resolve(pg, _, (vt, k) => integralCol(vt.tableName, k))),
+      spec, freshName("hidden")))
+    routes.zip(new BindingPass(spec, parse, resolver(spark, _),
+        (vp, hint) => scala.util.Try(labelTable(vp, "", hint)).toOption,
+        hasDuplicateKeysTable, integralCol,
+        math.min(localMapMaxRows, PathFinder.localMaxRows(spark)))(routes))
+      .foreach { case (r, acc) => processPattern(r, acc) }
 
     // Column-binding validation (reference `CheckColumnBinding`
     // match.cpp:925-967): any `binding.prop` reference in WHERE/COLUMNS
     // must be a registered property of that binding's table.
     def checkRefs(sql: String): Unit = {
-      val e = try spark.sessionState.sqlParser.parseExpression(
-          rewritePathFunctions(sql, pathCols.toMap))
-        catch { case _: Exception => return }
+      val e = parse(rewritePathFunctions(sql, pathCols.toMap))
+        .getOrElse(return)
       // registered property set of one binding; None = ALL COLUMNS
       // (unknowable without schema ⇒ unchecked, like the reference's
       // all-columns expansion)

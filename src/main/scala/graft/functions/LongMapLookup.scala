@@ -1,25 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate,
-  UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator,
-  CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType,
+  StructField, StructType}
 
-/** Serializable open-addressing primitive long→long hash map.
-  *
-  * Replaces `element_at` over a `MapType` literal in the compiler's
-  * local id-translation fast path: Catalyst's `GetMapValue` on an
-  * ArrayBasedMapData literal is a LINEAR scan per lookup, so a 65k-entry
-  * map (the compiler's local-map row cap) paid up
-  * to 65k comparisons per array slot — O(1) probing here. Linear
-  * probing, power-of-two table at ≤50% load, `Long.MinValue` as the
-  * empty-slot sentinel (a real `Long.MinValue` key is carried in a side
-  * field). Arrays serialize compactly with the task closure — the same
-  * shipping cost profile as the map literal it replaces.
-  */
+/** Serializable open-addressing primitive long→long hash map: O(1)
+  * probes where `element_at` over a `MapType` literal scans linearly (up
+  * to 65k comparisons per lookup at the compiler's local-map row cap).
+  * Linear probing, power-of-two table at ≤50% load, `Long.MinValue` as
+  * the empty-slot sentinel (a real `Long.MinValue` key is carried in a
+  * side field). The arrays ship compactly with the task closure. */
 final class LongLongMap(keys: Array[Long], values: Array[Long])
     extends Serializable {
   def this(m: Map[Long, Long]) = this(m.keys.toArray, m.values.toArray)
@@ -75,19 +69,6 @@ final class LongLongMap(keys: Array[Long], values: Array[Long])
     }
     default // unreachable: table load ≤ 50% guarantees an empty slot
   }
-
-  /** Whether `k` is a key of the map. */
-  def contains(k: Long): Boolean = {
-    if (k == Long.MinValue) return hasMin
-    var i = slot(k)
-    while (true) {
-      val kk = ks(i)
-      if (kk == k) return true
-      if (kk == Long.MinValue) return false
-      i = (i + 1) & mask
-    }
-    false // unreachable, as in getOrSelf
-  }
 }
 
 
@@ -116,73 +97,44 @@ case class LongMapLookupOrSelf(child: Expression, table: LongLongMap)
       newChild: Expression): Expression = copy(child = newChild)
 }
 
-/** `x IN (keys of table)` as one codegen'd O(1) hash probe: the MATCH
-  * compiler's membership test for a driver-resident vertex key set.
-  * Null input → null, which a filter drops (an IN list's semantics for a
-  * null probe). Like [[LongMapLookupOrSelf]], the table rides the plan
-  * as an opaque reference, never as a literal list. */
-case class LongMapContains(child: Expression, table: LongLongMap)
-    extends UnaryExpression with Predicate {
-  override def prettyName: String = "long_map_contains"
-
-  override def nullSafeEval(x: Any): Any =
-    table.contains(x.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftLongMap", table,
-      classOf[LongLongMap].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.contains($x);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Column read of a driver-resident table: `table` maps a key to its row
-  * index, `values` holds one column of those rows as Catalyst values
-  * (null allowed), so `x` reads `values(table(x))` — the MATCH
-  * compiler's lookup for a resident fixed-hop vertex, one per column the
-  * query reads. A null or absent key reads null (the compiler filters
-  * absent keys out with [[LongMapContains]] first). Like
-  * [[LongMapLookupOrSelf]], map and values ride the plan as opaque
-  * references. */
-case class LongMapRowRead(child: Expression, table: LongLongMap,
-    values: Array[Any], dataType: DataType) extends UnaryExpression {
+/** The MATCH compiler's lookup of a driver-resident vertex table:
+  * `table` maps a key to its row index and `columns` hold the columns
+  * the query reads of those rows, as Catalyst values (null allowed). `x`
+  * probes the map once and yields that row as a one-element array of
+  * structs, or null when `x` is null or not a key. So
+  * `isnotnull(long_map_lookup(x))` is the key-set membership test (a
+  * null probe matches nothing, like `IN`), and `inline` of it binds every
+  * read with one probe per row where a lookup per column would re-probe
+  * for each. Like [[LongMapLookupOrSelf]], map and columns ride the plan
+  * as an opaque reference. */
+case class LongMapLookup(child: Expression, table: LongLongMap,
+    columns: Seq[(String, DataType, Array[Any])]) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StructType(columns.map {
+    case (n, t, _) => StructField(n, t) }), containsNull = false)
   override def nullable: Boolean = true
-  override def prettyName: String = "long_map_row_read"
+  override def prettyName: String = "long_map_lookup"
+  /** The probe and the read columns' names: the map and the value arrays
+    * would print as object hashes. */
+  override def toString: String =
+    (child +: columns.map(_._1)).mkString(s"$prettyName(", ", ", ")")
 
-  override def eval(input: InternalRow): Any = {
-    val x = child.eval(input)
-    if (x == null) null
-    else {
-      val i = table.getOrElse(x.asInstanceOf[Long], -1L)
-      if (i < 0) null else values(i.toInt)
-    }
+  private val cols = columns.map(_._3).toArray
+
+  /** The row of key `k` as a one-element array, null when absent. */
+  def rowOf(k: Long): ArrayData = {
+    val i = table.getOrElse(k, -1L).toInt
+    if (i < 0) null
+    else new GenericArrayData(Array[Any](
+      new GenericInternalRow(Array.tabulate[Any](cols.length)(cols(_)(i)))))
   }
+
+  override def nullSafeEval(x: Any): Any = rowOf(x.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val map = ctx.addReferenceObj("graftLongMap", table,
-      classOf[LongLongMap].getName)
-    val vals = ctx.addReferenceObj("graftValues", values, "java.lang.Object[]")
-    val c = child.genCode(ctx)
-    val (i, o) = (ctx.freshName("row"), ctx.freshName("value"))
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        ${CodeGenerator.defaultValue(dataType)};
-      if (!${c.isNull}) {
-        long $i = $map.getOrElse(${c.value}, -1L);
-        if ($i >= 0) {
-          Object $o = $vals[(int) $i];
-          if ($o != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $o;
-          }
-        }
-      }""")
+    val ref = ctx.addReferenceObj("graftLookup", this)
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = $ref.rowOf($x); ${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(

@@ -1358,10 +1358,13 @@ object Algorithms {
       steps)
       .toSeq.toDF("start", "r", "cur", "path")
     local.getOrElse {
+      // null endpoints and starts are dropped, as the local collects do
       val e = edges.select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var w = starts.select(col("id").cast("long").as("start")).distinct()
+      var w = PathFinder.dropNullIds(starts)
+        .select(col("id").cast("long").as("start")).distinct()
         .crossJoin(sp.range(walksPerStart).select(col("id").cast("int").as("r")))
         .select(col("start"), col("r"), col("start").as("cur"),
           array(col("start")).as("path"))

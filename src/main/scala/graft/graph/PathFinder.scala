@@ -237,12 +237,7 @@ object PathFinder {
     * cheapestRoutes' (src, dst, w, eid), is 4 × 8 B × 2M = 64 MB, so the
     * worst case pins 8 of them: 512 MiB ≈ 537 MB. The MATCH compiler's
     * bijection maps are entries too, at most 65536 × 2 × 8 B = 1 MB
-    * each; 16 of the 48 entries stand for the 16 its own map memo held.
-    * The four memos the gate replaced could pin 3 boxed-tuple edge
-    * arrays of 2M edges (a 4 B array slot, a 24 B Tuple3 and three 24 B
-    * boxed Longs: 100 B an edge, 600 MB) plus 4 `Row` arrays of 262144
-    * rows (a 4 B slot, a 24 B row, a 32 B value array and three 24 B
-    * boxes: 132 B a row, 138 MB) — ≈ 738 MB. */
+    * each. */
   private[graft] val collectMemo = new PlanMemo[Option[Columns]](48,
     weigh = _.fold(0L)(_.bytes), maxWeight = 512L << 20)
 
@@ -269,9 +264,11 @@ object PathFinder {
     * shingle sets; the caller bounds `cap` by their size): kernels
     * cast the long or double projection they consume, other types come
     * back as Catalyst values ([[Columns]]). `cap` is clamped to
-    * [0, Int.MaxValue − 1]. */
-  private[graft] def collectUnder(df: DataFrame, cap: Long)
-      : Option[Columns] = {
+    * [0, Int.MaxValue − 1]. Without `memo` the rows are not kept: for a
+    * caller whose own memo keeps what it derives from them (the MATCH
+    * compiler's resident tables). */
+  private[graft] def collectUnder(df: DataFrame, cap: Long,
+      memo: Boolean = true): Option[Columns] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
@@ -283,7 +280,7 @@ object PathFinder {
       s"collectUnder needs atomic or array<bigint not null> columns: " +
         df.schema.simpleString)
     val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
-    collectMemo.getOrBuild(PlanMemo.id(df), c) {
+    def collect: Option[Columns] = {
       val rows = df.limit(c.toInt + 1).collect()
       val n = rows.length
       if (n > c) None
@@ -303,6 +300,7 @@ object PathFinder {
           Array.tabulate[Any](n)(i => toCatalyst(rows(i).get(j)))
       }))
     }
+    if (memo) collectMemo.getOrBuild(PlanMemo.id(df), c)(collect) else collect
   }
 
   /** Null endpoints can never join (SQL semantics already drop them in

@@ -51,14 +51,15 @@ private[graft] final class PlanMemo[V](capacity: Int,
 
   /** Stores a freshly built value and returns the one the memo now holds:
     * if an entry with the same proof landed first (a concurrent build),
-    * that entry wins and `v` is released. */
-  def put(id: PlanMemo.Id, slot: Any, v: V): V = {
+    * that entry wins and `v` is released — unless `replace`, where `v`
+    * supersedes it (a wider value built from a narrower hit). */
+  def put(id: PlanMemo.Id, slot: Any, v: V, replace: Boolean = false): V = {
     val proof = id.proof
     synchronized {
       buildCount += 1
       val k = id.key(slot)
       val e = lru.get(k)
-      if (e != null && e._1 == proof) { release(v); e._2 }
+      if (e != null && e._1 == proof && !replace) { release(v); e._2 }
       else {
         if (e != null) { weightSum -= weigh(e._2); release(e._2) }
         lru.put(k, (proof, v))

@@ -24,6 +24,8 @@ import graft.model.TableResolver
 class FixedHopResidentSpec extends AnyFunSuite {
   import Fixture._
 
+  private val sf = "/root/testdata/sf0.001"
+
   /** Vertex ids (plus a null-keyed row when `nullKey`, plus a repeat of
     * the first id when `dup`) and edges over ids 0..9, so references
     * outside the ids dangle. */
@@ -175,7 +177,7 @@ class FixedHopResidentSpec extends AnyFunSuite {
       "build with no job, execute with one, broadcast nothing and never " +
       "self-join customer") {
     val s = init()
-    val gr = TradeGraph.graft(s, "/root/testdata/sf0.001")
+    val gr = TradeGraph.graft(s, sf)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -218,5 +220,49 @@ class FixedHopResidentSpec extends AnyFunSuite {
           rows(gr.graphTable(q))), q)
       }
     } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  test("q7's chain of residents probes the nation and the region map once " +
+      "per customer row each, over one customer scan with no exchange") {
+    val s = init()
+    val q7 = SparkEntry.queries("q7_match_2hop")
+    val df = q7(s, sf)
+    val plan = df.queryExecution.executedPlan
+    val lookups = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case l: graft.functions.LongMapLookup => l })
+    assert(lookups.map(_.columns.map(_._1)).sortBy(_.head) ==
+      Seq(Seq("n_name", "n_regionkey"), Seq("r_name")), plan)
+    assert(lookups.map(l => System.identityHashCode(l.table)).distinct
+      .length == 2, plan)
+    assert("FileScan parquet [^\\n]*customer".r
+      .findAllIn(plan.toString).length == 1, plan)
+    assert(!plan.toString.contains("Exchange"), plan)
+    assert(rows(df) == withConf(s)(ForceDist)(rows(q7(s, sf))))
+  }
+
+  test("one resident per table and key: the three_hop and sublabel shapes " +
+      "share one part entry, a wider read replacing the narrower one") {
+    val s = init()
+    val gr = TradeGraph.graft(s, sf)
+    val threeHop = """trade MATCH (c:Customer)-[pl:Placed]->(o:Order)
+        -[ct:Contains]->(p:Part)
+      WHERE c.c_custkey BETWEEN 10 AND 160 AND o.o_totalprice > 1000.0
+      COLUMNS (c.c_custkey AS custkey, o.o_orderkey AS orderkey,
+               p.p_partkey AS partkey)"""
+    val sublabel = """trade MATCH (o:Order)-[ct:OddLine]->(p:OddSizePart)
+      WHERE o.o_totalprice > 100000.0
+      COLUMNS (o.o_orderkey AS orderkey, p.p_partkey AS partkey,
+               p.p_size AS size)"""
+    val memo = graft.compiler.ResidentTable.memo
+    memo.clear()
+    val built = memo.builds
+    Seq(threeHop, sublabel, threeHop, sublabel).foreach { q =>
+      val got = rows(gr.graphTable(q))
+      assert(got.nonEmpty && got == withConf(s)(ForceDist)(
+        rows(gr.graphTable(q))), q)
+    }
+    assert(memo.size == 1, s"${memo.size} resident entries")
+    // the narrow shape, run first, was widened once; nothing since built
+    assert(memo.builds - built == 2, s"${memo.builds - built} builds")
   }
 }

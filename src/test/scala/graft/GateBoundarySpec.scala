@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{Algorithms, PathFinder}
+import graft.ops.Sampling
 import graft.pgq.PathMode
 
 /** Property checks at the local/distributed gate boundary: random small
@@ -24,9 +26,12 @@ import graft.pgq.PathMode
   * (documents) must also give the same rows on both sides of g = n,
   * co-purchase on both sides of its cap of 8 × g memberships and at
   * g = n, and MinHash past its 65536-document cap must take the bucket
-  * join at any gate. The compiler's array id translation, whose join form runs only
-  * past the 65536-row local-map cap, must equal its local-map form on
-  * random arrays and bijections. */
+  * join at any gate. k-truss, deterministic walks, earliest arrival from
+  * a given start and exact quantiles must give the same rows at g = n − 1
+  * and g = n, null ids dropped and an empty input empty, and all but the
+  * walks the brute-force answer. The compiler's array id translation,
+  * whose join form runs only past the 65536-row local-map cap, must
+  * equal its local-map form on random arrays and bijections. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -253,6 +258,49 @@ class GateBoundarySpec extends AnyFunSuite {
           }
         }
       }
+    })
+  }
+
+  test("k-truss, deterministic walks, earliest arrival from a given " +
+      "start and exact quantiles at g = n - 1 (distributed) and g = n " +
+      "(local) agree and equal brute force; null ids dropped, empty input " +
+      "empty") {
+    check(4)(Prop.forAllNoShrink(graphs, seedSets, Gen.choose(3, 4),
+        Gen.choose(1, 3), Gen.choose(0L, 4L)) { (g0, seeds, k, hops, start) =>
+      val s = init()
+      import s.implicits._
+      // the empty graph too: its kernels see no row on either branch
+      Prop.all(Seq(g0, Graph(Nil, g0.nulls)).map { g =>
+        val edges = frame(g)
+        val starts = (seeds.map(Option(_)) :+ None).toDF("id")
+        // a timestamp per row, every ninth row's null
+        val timed = g.rows.zipWithIndex.map { case ((a, b), i) =>
+          (a, b, Option(i * 7L % 5L).filter(_ => i % 9 != 8))
+        }
+        val usable = timed.collect {
+          case (Some(a), Some(b), Some(t)) => (a, b, t)
+        }
+        // quantile values: the source ids scaled, null where it is null
+        val values = g.rows.map(_._1.map(_ * 1.5 + 0.25))
+        val probs = Seq(0.1, 0.5, 0.9, 1.0)
+        def quantiles = Sampling.exactQuantiles(values.toDF("v"), "v", probs)
+          .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
+          .toSeq.sorted
+        val kept = values.flatten.length
+        def at[T](n: Int)(run: => T): Seq[T] =
+          Seq(n - 1L, n.toLong).map(gate => withGate(spark, gate)(run))
+        (agree(g.n)(Seq(Algorithms.kTruss(edges, k),
+            Algorithms.deterministicWalks(starts, edges, 2, 3))) :|
+          s"${g.n} edges: k-truss or walks differ") &&
+        (at(g.n)(rows(Algorithms.kTruss(edges, k)))
+          .forall(_ == bruteKTruss(g.cleaned, k)) :| "k-truss") &&
+        (at(usable.length)(rows(Algorithms.earliestArrival(
+            timed.toDF("src", "dst", "ts"), starts, start, hops)))
+          .forall(_ == bruteEarliest(usable, seeds, hops, Some(start))) :|
+          "earliest arrival") &&
+        (at(kept)(quantiles).forall(_ == bruteQuantiles(values.flatten,
+          probs)) :| "quantiles")
+      }: _*)
     })
   }
 
@@ -505,12 +553,12 @@ class GateBoundarySpec extends AnyFunSuite {
   }
 
   /** Earliest arrival over temporal paths of at most `hops` edges with
-    * non-decreasing times from the least time, by synchronous
-    * Bellman-Ford rounds: (seed, vertex, arrival) rows, seeds excluded,
-    * as [[rows]] sorts them. */
+    * non-decreasing times from `from` (default the least time), by
+    * synchronous Bellman-Ford rounds: (seed, vertex, arrival) rows, seeds
+    * excluded, as [[rows]] sorts them. */
   private def bruteEarliest(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
-      hops: Int): Seq[Seq[Any]] = {
-    val start = if (edges.isEmpty) 0L else edges.map(_._3).min
+      hops: Int, from: Option[Long] = None): Seq[Seq[Any]] = {
+    val start = from.getOrElse(if (edges.isEmpty) 0L else edges.map(_._3).min)
     seeds.distinct.flatMap { s =>
       var arr = Map(s -> start)
       (1 to hops).foreach { _ =>
@@ -522,6 +570,33 @@ class GateBoundarySpec extends AnyFunSuite {
       }
       (arr - s).map { case (v, t) => Seq[Any](s, v, t) }
     }.sortBy(_.mkString(","))
+  }
+
+  /** The k-truss of the simple undirected graph of `edges` (self-loops
+    * dropped, parallel and reverse edges one): edges peeled until each
+    * closes at least k − 2 triangles, (src < dst) as [[rows]] sorts them. */
+  private def bruteKTruss(edges: Seq[(Long, Long)], k: Int): Seq[Seq[Any]] = {
+    var es = edges.collect { case (a, b) if a != b => (a min b, a max b) }.toSet
+    var changed = true
+    while (changed) {
+      val adj = es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSet }
+      val kept = es.filter { case (a, b) => (adj(a) & adj(b)).size >= k - 2 }
+      changed = kept != es
+      es = kept
+    }
+    es.toSeq.map { case (a, b) => Seq[Any](a, b) }.sortBy(_.mkString(","))
+  }
+
+  /** `quantile_disc` of `values` at each of `probs`: (p, the value at
+    * rank ceil(p·n), n), none when there is no value. */
+  private def bruteQuantiles(values: Seq[Double], probs: Seq[Double])
+      : Seq[(Double, Double, Long)] = {
+    val sorted = values.sorted
+    if (sorted.isEmpty) Nil
+    else probs.sorted.map(p => (p,
+      sorted((math.ceil(p * sorted.length).toInt max 1) - 1),
+      sorted.length.toLong))
   }
 
   /** Hop distance and shortest-path count of every vertex reachable

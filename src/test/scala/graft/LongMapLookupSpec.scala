@@ -4,13 +4,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{LongLongMap, LongMapContains, LongMapLookupOrSelf}
+import org.apache.spark.sql.catalyst.expressions.{Inline, Literal}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Unit coverage for the O(1) local-map translation expression that
-  * replaced `coalesce(element_at(mapLiteral, x), x)` in the compiler's
-  * local id-translation fast path. */
+import graft.functions.{LongLongMap, LongMapLookup, LongMapLookupOrSelf}
+
+/** Unit coverage for the O(1) `LongLongMap` expressions: the local-map
+  * translation that replaced `coalesce(element_at(mapLiteral, x), x)` in
+  * the compiler's id-translation fast path, and the resident row lookup
+  * behind a resident vertex's membership filter and reads. */
 class LongMapLookupSpec extends AnyFunSuite {
-  import Fixture.init
+  import Fixture.{init, withConf}
 
   test("LongLongMap: hits, misses, MinValue sentinel key, collisions") {
     val m = new LongLongMap(Map(1L -> 10L, 2L -> 20L, Long.MinValue -> 7L))
@@ -61,19 +66,53 @@ class LongMapLookupSpec extends AnyFunSuite {
     val s = init()
     import s.implicits._
     val keys = Array(1L, 3L, Long.MinValue)
-    val m = new LongLongMap(keys, keys)
-    assert(m.contains(1L) && m.contains(3L) && m.contains(Long.MinValue))
-    assert(!m.contains(2L) && !new LongLongMap(Array(5L), Array(5L))
-      .contains(Long.MinValue))
+    val m = new LongLongMap(keys, keys.indices.map(_.toLong).toArray)
+    assert(m.getOrElse(1L, -1L) == 0L && m.getOrElse(Long.MinValue, -1L) == 2L)
+    assert(m.getOrElse(2L, -1L) == -1L && new LongLongMap(Array(5L),
+      Array(0L)).getOrElse(Long.MinValue, -1L) == -1L)
+    val look = LongMapLookup(_: org.apache.spark.sql.catalyst.expressions
+      .Expression, m, Nil)
     def member(x: org.apache.spark.sql.Column) =
-      Bridge.column(LongMapContains(Bridge.expression(x), m))
+      Bridge.column(look(Bridge.expression(x))).isNotNull
     val df = Seq[java.lang.Long](1L, 2L, 3L, null, Long.MinValue).toDF("x")
     assert(df.filter(member($"x")).as[Long].collect().sorted.toList ==
       List(Long.MinValue, 1L, 3L))
-    assert(df.select(member($"x")).as[Option[Boolean]].collect().toList ==
-      List(Some(true), Some(false), Some(true), None, Some(true)))
-    assert(LongMapContains(
-      org.apache.spark.sql.catalyst.expressions.Literal(3L), m)
-      .eval(null) == true)
+    assert(df.select(member($"x")).as[Boolean].collect().toList ==
+      List(true, false, true, false, true))
+    // interpreted: a hit is a one-row array, a miss and a null probe null
+    assert(look(Literal(3L)).eval(null) != null)
+    assert(look(Literal(2L)).eval(null) == null)
+    assert(look(Literal(null, LongType)).eval(null) == null)
+  }
+
+  test("row lookup: one probe yields every read column, nulls kept; " +
+      "a miss or a null probe drops the row, the MinValue key reads its " +
+      "own; codegen and interpreted agree") {
+    val s = init()
+    import s.implicits._
+    val keys = Array(7L, Long.MinValue, 9L)
+    val m = new LongLongMap(keys, keys.indices.map(_.toLong).toArray)
+    val cols = Seq(
+      ("name", StringType, Array[Any](UTF8String.fromString("a"), null,
+        UTF8String.fromString("c"))),
+      ("size", IntegerType, Array[Any](10, 20, null)))
+    val df = Seq[java.lang.Long](9L, 8L, null, Long.MinValue, 7L).toDF("x")
+    val want = List("-9223372036854775808|null|20", "7|a|10", "9|c|null")
+    def rows(d: org.apache.spark.sql.DataFrame): List[String] =
+      d.collect().map(_.toSeq.mkString("|")).sorted.toList
+    val looked = Bridge.generate(df,
+      Inline(LongMapLookup(Bridge.expression($"x"), m, cols)), "v")
+      .select($"x", $"v.name", $"v.size")
+    assert(rows(looked) == want)
+    withConf(s)("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      assert(rows(Bridge.generate(df,
+        Inline(LongMapLookup(Bridge.expression($"x"), m, cols)), "v")
+        .select($"x", $"v.name", $"v.size")) == want)
+    }
+    val row = LongMapLookup(Literal(Long.MinValue), m, cols).eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    assert(row.numElements() == 1 && row.getStruct(0, 2).isNullAt(0) &&
+      row.getStruct(0, 2).getInt(1) == 20)
   }
 }
