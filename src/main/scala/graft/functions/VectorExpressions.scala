@@ -26,31 +26,13 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-        int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += $x.getDouble($i) * $y.getDouble($i);
-        }
-        ${ev.value} = $s;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.functions.VecMath.dot($x, $y);")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(newLeft, newRight)
@@ -62,35 +44,39 @@ case class L2Norm(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_norm"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var s = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) { val v = x.getDouble(i); s += v * v; i += 1 }
-    math.sqrt(s)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VecMath.norm(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      s"""
-        int $n = $x.numElements();
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $v = $x.getDouble($i);
-          $s += $v * $v;
-        }
-        ${ev.value} = java.lang.Math.sqrt($s);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.functions.VecMath.norm($x);")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(c)
+}
+
+/** The arithmetic of [[DotProduct]] and [[L2Norm]], shared with the
+  * driver kernels (the local IVF search in [[graft.ops.Similarity]]) so
+  * both branches compute bit-identical values. The dot runs over
+  * min(lengths), the norm over the whole array; a null element reads as
+  * 0.0. */
+object VecMath {
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
+  }
+
+  def norm(x: ArrayData): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val v = x.getDouble(i); s += v * v; i += 1 }
+    math.sqrt(s)
+  }
 }
 
 /** All `numHashes` MinHash permutation minima in one fused loop over the
@@ -648,10 +634,7 @@ object IvfAssign {
   def assign(x: ArrayData, cents: Array[Double], cnorms: Array[Double],
       ids: Array[Long], dims: Int): Long = {
     val n = x.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) { val v = x.getDouble(i); s += v * v; i += 1 }
-    val xn = math.sqrt(s)
+    val xn = VecMath.norm(x)
     // ids(0) (non-empty by the caller's rows.isEmpty guard), not 0L: when
     // every cosine is NaN (a NaN vector element poisons the dot product)
     // the strict > never fires, and the declarative window form this

@@ -649,8 +649,9 @@ object Algorithms {
     // both id spaces pack into 31 bits, a parallel in-memory kernel
     // absorbs distinct + degree cap + pair counting into two driver
     // sorts with ZERO exchanges — the strategy DuckDB's in-memory
-    // aggregate wins with at the 10× point. Up to min(gate, 65536) rows
-    // one gated collect is the kernel's input. Past that a limit probe
+    // aggregate wins with at the 10× point. Up to min(gate,
+    // PathFinder.localMaxArrayRows) rows one gated collect is the
+    // kernel's input. Past that a limit probe
     // would haul up to the cap's rows to the driver, re-evaluating the
     // join through CollectLimitExec's incremental job ladder, so ONE
     // aggregate scan (count + id ranges) over a membership frame cached
@@ -664,7 +665,8 @@ object Algorithms {
     def fits31(lo: Long, hi: Long): Boolean = lo >= 0L && hi < (1L << 31)
     val gate = PathFinder.localMaxRows(sp2)
     val (packed, streamable) =
-      PathFinder.collectUnder(m0, math.min(gate, 65536L)) match {
+      PathFinder.collectUnder(m0,
+          math.min(gate, PathFinder.localMaxArrayRows)) match {
         case Some(c) =>
           val (u, v) = (c.longs(0), c.longs(1))
           val ok = c.length == 0 || fits31(u.min, u.max) && fits31(v.min, v.max)

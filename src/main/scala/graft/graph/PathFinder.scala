@@ -29,15 +29,25 @@ object PathFinder {
 
   /** Strategy gate, a session conf: kernel inputs with at most this many
     * rows (edges, distinct vertex ids, quantile values; MinHash
-    * documents up to 65536; co-purchase memberships up to 65536, and up
-    * to 8 × the gate past an aggregate scan) run on driver-local array
-    * kernels ([[LocalKernels]] and MinHash's in [[graft.ops.Dedup]]) — the
-    * analogue of the reference's in-memory CSR, correct only because it
-    * is size-gated. Bigger inputs take the distributed DataFrame loops;
-    * 0 forces every kernel distributed. Read from the INPUT FRAME's
-    * session at probe time, so two sessions in one JVM never flip each
-    * other's branches. */
+    * documents, IVF vectors and co-purchase memberships up to
+    * [[localMaxArrayRows]], memberships up to 8 × the gate past an
+    * aggregate scan) run on driver-local array kernels ([[LocalKernels]],
+    * MinHash's in [[graft.ops.Dedup]], IVF's in [[graft.ops.Similarity]])
+    * — the analogue of the reference's in-memory CSR, correct only
+    * because it is size-gated. Bigger inputs take the distributed
+    * DataFrame loops; 0 forces every kernel distributed. Read from the
+    * INPUT FRAME's session at probe time, so two sessions in one JVM
+    * never flip each other's branches. */
   private[graft] val LocalMaxRowsKey = "spark.graft.local.maxRows"
+
+  /** Row cap, below [[LocalMaxRowsKey]], of a local kernel whose
+    * collected row carries a whole array (a MinHash document's hashed
+    * shingle set, an IVF vector) or whose over-cap probe would haul a
+    * limit prefix through the join feeding it (co-purchase): the gate's
+    * 2M rows of 500 shingles would haul 8 GB, and 65536 such rows are
+    * 256 MiB (65536 × 500 × 8 B), the resident-vertex cap of the MATCH
+    * compiler. */
+  private[graft] val localMaxArrayRows = 65536L
 
   /** The [[LocalMaxRowsKey]] gate of `spark` (default 2M), clamped to
     * what a `limit(gate + 1)` probe can express. */
@@ -198,9 +208,9 @@ object PathFinder {
     * or a `Row` per row cost 100+. An edge view's columns become a
     * [[Csr]]. Any other column, and a long or double column holding a
     * null, is an `Array[Any]` of Catalyst values (null kept), read
-    * through [[values]]; an `array<bigint>` cell is a compact
-    * `UnsafeArrayData` (or null). Shared through [[collectMemo]]:
-    * callers never mutate the arrays. */
+    * through [[values]]; an `array<bigint>` or `array<double>` cell is a
+    * compact `UnsafeArrayData` with its null elements kept (or null).
+    * Shared through [[collectMemo]]: callers never mutate the arrays. */
   private[graft] final class Columns(val length: Int,
       private[graph] val cols: Array[AnyRef]) {
     def width: Int = cols.length
@@ -260,25 +270,27 @@ object PathFinder {
     * full count (at 100 TB a pass over the input just to pick a strategy
     * would itself be a major job), and never more than cap + 1 rows on
     * the driver, even for a nondeterministic frame. Columns must be
-    * atomic or `array<bigint>` without null elements (MinHash's hashed
-    * shingle sets; the caller bounds `cap` by their size): kernels
-    * cast the long or double projection they consume, other types come
-    * back as Catalyst values ([[Columns]]). `cap` is clamped to
+    * atomic, `array<bigint>` without null elements (MinHash's hashed
+    * shingle sets) or `array<double>` (IVF vectors); for arrays the
+    * caller bounds `cap` by [[localMaxArrayRows]]. Kernels cast the long
+    * or double projection they consume, other types come back as
+    * Catalyst values ([[Columns]]). `cap` is clamped to
     * [0, Int.MaxValue − 1]. Without `memo` the rows are not kept: for a
     * caller whose own memo keeps what it derives from them (the MATCH
     * compiler's resident tables). */
   private[graft] def collectUnder(df: DataFrame, cap: Long,
       memo: Boolean = true): Option[Columns] = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+      LongType}
     val types = df.schema.fields.map(_.dataType)
     require(types.forall {
-        case ArrayType(LongType, false) => true
+        case ArrayType(LongType, false) | ArrayType(DoubleType, _) => true
         case t => atomic(t)
       },
-      s"collectUnder needs atomic or array<bigint not null> columns: " +
-        df.schema.simpleString)
+      s"collectUnder needs atomic, array<bigint not null> or " +
+        s"array<double> columns: ${df.schema.simpleString}")
     val c = math.max(0L, math.min(Int.MaxValue - 1L, cap))
     def collect: Option[Columns] = {
       val rows = df.limit(c.toInt + 1).collect()
@@ -289,11 +301,13 @@ object PathFinder {
           Array.tabulate(n)(rows(_).getDouble(j))
         case (LongType, j) if rows.forall(!_.isNullAt(j)) =>
           Array.tabulate(n)(rows(_).getLong(j))
-        case (ArrayType(LongType, _), j) =>
+        case (t: ArrayType, j) =>
+          val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+          val unsafe = UnsafeProjection.create(Array[DataType](t))
           Array.tabulate[Any](n)(i =>
             if (rows(i).isNullAt(j)) null
-            else UnsafeArrayData.fromPrimitiveArray(
-              rows(i).getSeq[Long](j).toArray))
+            else unsafe(InternalRow(toCatalyst(rows(i).get(j))))
+              .getArray(0).copy())
         case (t, j) =>
           val toCatalyst =
             CatalystTypeConverters.createToCatalystConverter(t)

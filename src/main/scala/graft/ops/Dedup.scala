@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB posture: hash-partitioned group-bys and bucket-joins only —
-  * no cross joins over the full corpus. MinHash-LSH on at most 65536
-  * documents (and at most `spark.graft.local.maxRows`) is one collect
+  * no cross joins over the full corpus. MinHash-LSH on at most
+  * `PathFinder.localMaxArrayRows` (65536) documents (and at most `spark.graft.local.maxRows`) is one collect
   * plus a driver kernel instead; every other operator keeps no
   * driver-side state.
   *
@@ -162,7 +162,7 @@ object Dedup {
     *
     * Both branches read ONE key projection ([[lshKeys]]), so their
     * buckets are the same by construction. An input of at most
-    * [[lshLocalMaxDocs]] documents, and at most
+    * [[graft.graph.PathFinder.localMaxArrayRows]] documents, and at most
     * `spark.graft.local.maxRows`, is that projection's one gated
     * collect ([[graft.graph.PathFinder.collectUnder]]) plus a driver
     * kernel ([[localLshPairs]]); a bigger input, or one whose kept
@@ -193,7 +193,7 @@ object Dedup {
     val local =
       if (!graft.graph.PathFinder.atomic(idType)) None
       else graft.graph.PathFinder.collectUnder(keys,
-          math.min(gate, lshLocalMaxDocs)).flatMap(
+          math.min(gate, graft.graph.PathFinder.localMaxArrayRows)).flatMap(
         localLshPairs(_, idType, bands, maxBucketSize, threshold, gate))
     local.map { rows =>
       import scala.jdk.CollectionConverters._
@@ -204,13 +204,6 @@ object Dedup {
     }.getOrElse(bucketJoinPairs(keys, bands, maxBucketSize, threshold))
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
-
-  /** Document cap of [[minHashLshPairs]]' local branch, below the
-    * session gate: a collected row carries the document's whole hashed
-    * shingle set, not a few 8 B cells, so the gate's 2M rows of 500
-    * shingles would haul 8 GB; 65536 such documents are 256 MiB, the
-    * resident-vertex cap of the MATCH compiler. */
-  private[graft] val lshLocalMaxDocs = 65536L
 
   /** The key projection of [[minHashLshPairs]]: `id`, the distinct
     * hashed shingle set `hv` (`array<bigint>`; verification runs on it —

@@ -1,8 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+
+import graft.functions.VecMath
+import graft.graph.PathFinder
 
 /** Embedding similarity search.
   *
@@ -177,10 +184,12 @@ object Similarity {
 
   /** Deterministic coarse centroids for IVF: vectors are hashed into `k`
     * groups and averaged per dimension (a seedless k-means initialization;
-    * one shuffle on (group, dim)). Returns (centroid_id, vec). */
+    * one shuffle on (group, dim)). A vector with a null id names no group
+    * and is skipped. Returns (centroid_id, vec). */
   def coarseCentroids(df: DataFrame, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
-    df.select(pmod(col(idCol), lit(k)).as("centroid_id"),
+    df.where(col(idCol).isNotNull)
+      .select(pmod(col(idCol), lit(k)).as("centroid_id"),
         posexplode(col(vecCol).cast("array<double>")))
       .groupBy(col("centroid_id"), col("pos"))
       .agg(avg("col").as("v"))
@@ -241,44 +250,53 @@ object Similarity {
     * broadcast of the centroid table; search shuffles on centroid_id).
     * Argument order matches [[bruteForceTopK]] (queries first) — the two
     * frames have identical types, so a swapped call would compile and
-    * silently return wrong neighbor sets.
+    * silently return wrong neighbor sets. A corpus under the gate is
+    * [[buildIvfIndex]]'s local index plus [[searchIvf]].
     * @return (query_id, neighbor_id, rank, cosine)
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numCentroids: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroids: Option[DataFrame] = None): DataFrame = {
-    // tracked, not bare-persisted: the result is lazy, so release is the
-    // harness's job via graft.OpCaches.releaseAll() per query — a raw
-    // persist here outlives every query of the session. For an index
-    // that SHOULD outlive the query, use [[buildIvfIndex]].
-    val cents = graft.OpCaches.track(centroids
-      .getOrElse(coarseCentroids(corpus, numCentroids, idCol, vecCol))
-      .select(col("centroid_id"), col("vec")))
-    searchIvfFrames(queries, cents,
-      ivfCorpusFrame(corpus, cents, idCol, vecCol), k, nprobe, idCol, vecCol)
-  }
+      centroids: Option[DataFrame] = None): DataFrame =
+    localIvfIndex(corpus, numCentroids, idCol, vecCol, centroids) match {
+      case Some(index) => searchIvf(index, queries, k, nprobe, idCol, vecCol)
+      case None =>
+        // tracked, not bare-persisted: the result is lazy, so release is
+        // the harness's job via graft.OpCaches.releaseAll() per query — a
+        // raw persist here outlives every query of the session. For an
+        // index that SHOULD outlive the query, use [[buildIvfIndex]].
+        val cents = graft.OpCaches.track(centroids
+          .getOrElse(coarseCentroids(corpus, numCentroids, idCol, vecCol))
+          .select(col("centroid_id"), col("vec")))
+        searchIvfFrames(queries, cents,
+          ivfCorpusFrame(corpus, cents, idCol, vecCol), k, nprobe, idCol,
+          vecCol)
+    }
 
-  /** The IVF corpus side: each vector tagged with its inverted list plus
-    * a precomputed norm — the frame an [[IvfIndex]] persists. */
+  /** The IVF corpus side: each vector with a non-null id tagged with its
+    * inverted list plus a precomputed norm — the frame an [[IvfIndex]]
+    * persists. A null id never survives the search's
+    * `query_id <> neighbor_id` filter, so it is dropped here. */
   private def ivfCorpusFrame(corpus: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String): DataFrame =
-    ivfAssign(corpus, cents.select(col("centroid_id"), col("vec")),
-        idCol, vecCol)
+    ivfAssign(corpus.where(col(idCol).isNotNull),
+        cents.select(col("centroid_id"), col("vec")), idCol, vecCol)
       .select(col(idCol).as("neighbor_id"),
         col(vecCol).cast("array<double>").as("cv"), col("centroid_id"))
       .withColumn("cn", norm(col("cv")))
 
   /** Probe + in-list exact-cosine scan shared by [[ivfTopK]] (build
     * inline) and [[searchIvf]] (prebuilt index): nprobe nearest
-    * centroids per query from a broadcast of the centroid table, then a
+    * centroids per query from a broadcast of the centroid table (a null
+    * centroid id, which no list carries, is skipped), then a
     * centroid_id equi-join against the assigned corpus and one per-query
     * top-k window. */
   private def searchIvfFrames(queries: DataFrame, cents: DataFrame,
       assigned: DataFrame, k: Int, nprobe: Int, idCol: String,
       vecCol: String): DataFrame = {
     require(nprobe >= 1, s"nprobe must be positive (got $nprobe)")
-    val c = cents.select(col("centroid_id"), col("vec").as("cvv"))
+    val c = cents.where(col("centroid_id").isNotNull)
+      .select(col("centroid_id"), col("vec").as("cvv"))
     val probes = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))
@@ -296,10 +314,242 @@ object Similarity {
         cosinePre(col("qv"), col("cv"), col("qn"), col("cn")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long"),
-        round(col("cosine"), 6).as("cosine"))
+    ivfResult(scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k))
+  }
+
+  /** The IVF result columns of both search branches; Spark rounds the
+    * cosine on both. */
+  private def ivfResult(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("neighbor_id"),
+      col("rank").cast("long"), round(col("cosine"), 6).as("cosine"))
+
+  /** Integral ids are compared as longs on the driver; other id types take
+    * the distributed IVF plans. */
+  private def longIds(t: DataType): Boolean =
+    t == IntegerType || t == LongType
+
+  /** `v` as a value of the integral id type `t`. */
+  private def idValue(t: DataType, v: Long): Any =
+    if (t == IntegerType) v.toInt else v
+
+  /** A collected vector cell as external values, null elements kept. */
+  private def boxed(v: ArrayData): Seq[Any] =
+    if (v == null) null
+    else Seq.tabulate(v.numElements())(i =>
+      if (v.isNullAt(i)) null else v.getDouble(i))
+
+  /** `ORDER BY score DESC NULLS LAST, id ASC` (Spark's default for a
+    * descending key) as a strict less-than on row indexes. Scores order
+    * as Spark orders doubles: NaN above every number, -0.0 = 0.0. */
+  private def descThenId(score: Array[java.lang.Double],
+      id: Array[Long])(a: Int, b: Int): Boolean = {
+    val (x, y) = (score(a), score(b))
+    val c =
+      if (x == null || y == null)
+        java.lang.Boolean.compare(x == null, y == null)
+      else if (x.doubleValue == y.doubleValue) 0
+      else java.lang.Double.compare(y, x)
+    if (c != 0) c < 0 else id(a) < id(b)
+  }
+
+  /** A centroid table packed for [[graft.functions.IvfAssign.assign]]:
+    * rows sorted by id (stable), each vector's first `dims` components
+    * (the first centroid's length; a null element, or one past a shorter
+    * vector, reads 0.0) at `c · dims`, and the norm of those components.
+    * [[ivfAssign]] and the local build assign through it. */
+  private final class PackedCentroids(rows: Seq[(Long, ArrayData)]) {
+    private val sorted = rows.sortBy(_._1)
+    val ids: Array[Long] = sorted.map(_._1).toArray
+    val dims: Int = sorted.head._2.numElements()
+    val cents = new Array[Double](ids.length * dims)
+    val norms = new Array[Double](ids.length)
+    sorted.zipWithIndex.foreach { case ((_, v), c) =>
+      var s = 0.0
+      var i = 0
+      while (i < v.numElements() && i < dims) {
+        val x = v.getDouble(i)
+        cents(c * dims + i) = x; s += x * x; i += 1
+      }
+      norms(c) = math.sqrt(s)
+    }
+    def assign(v: ArrayData): Long =
+      graft.functions.IvfAssign.assign(v, cents, norms, ids, dims)
+    def column(v: Column): Column =
+      graft.functions.VectorFunctions.ivf_assign(v, cents, norms, ids, dims)
+  }
+
+  /** The gate of the local IVF branch: `spark.graft.local.maxRows`,
+    * capped by [[graft.graph.PathFinder.localMaxArrayRows]] since each
+    * collected row carries a whole vector. */
+  private def ivfCap(df: DataFrame): Long = math.min(
+    PathFinder.localMaxRows(df.sparkSession), PathFinder.localMaxArrayRows)
+
+  /** The local branch of [[buildIvfIndex]] and [[ivfTopK]]: when the
+    * corpus's non-null-id vectors fit [[ivfCap]], one memoized
+    * [[graft.graph.PathFinder.collectUnder]] of (id, vector) — a
+    * repeated corpus plan runs no job — and the driver computes the
+    * index the distributed plan would: the hash-mod centroids (per
+    * `pmod(id, k)` group and position the mean of the non-null
+    * components, positions ascending, a group without components
+    * absent) or the collected caller `centroids`, then each vector's
+    * list through the same [[PackedCentroids]] as [[ivfAssign]]. The
+    * index holds two local relations, nothing persisted. None — the
+    * distributed build — over the gate, for non-integral ids, or for
+    * hash-mod centroids with `numCentroids` < 1. */
+  private def localIvfIndex(corpus: DataFrame, numCentroids: Int,
+      idCol: String, vecCol: String,
+      centroids: Option[DataFrame]): Option[IvfIndex] = {
+    val spark = corpus.sparkSession
+    val idType = corpus.schema(idCol).dataType
+    val centType = centroids.fold[DataType](idType)(
+      _.schema("centroid_id").dataType)
+    val cap = ivfCap(corpus)
+    def vectors(df: DataFrame, id: String, vec: String) =
+      PathFinder.collectUnder(df.where(col(id).isNotNull)
+        .select(col(id).cast("long"), col(vec).cast("array<double>")), cap)
+    if (!longIds(idType) || !longIds(centType) ||
+        centroids.isEmpty && numCentroids < 1) return None
+    for {
+      c <- vectors(corpus, idCol, vecCol)
+      cents <- centroids match {
+        case Some(df) => vectors(df, "centroid_id", "vec").map(t =>
+          t.longs(0).toSeq.zip(t.values(1).map(_.asInstanceOf[ArrayData])))
+        case None => Some(hashModCentroids(c, numCentroids))
+      }
+    } yield {
+      val ids = c.longs(0)
+      val vecs = c.values(1).map(_.asInstanceOf[ArrayData])
+      val packed = Option.when(cents.nonEmpty)(new PackedCentroids(cents))
+      val centRows = cents.map { case (id, v) =>
+        Row(idValue(centType, id), boxed(v)) }
+      // no centroid: ivfAssign's empty plan, no corpus row
+      val corpusRows = packed.toSeq.flatMap(p => ids.indices.map { i =>
+        val v = vecs(i)
+        Row(idValue(idType, ids(i)), boxed(v),
+          if (v == null) null else p.assign(v),
+          if (v == null) null else VecMath.norm(v))
+      })
+      val vecType = ArrayType(DoubleType, containsNull = true)
+      IvfIndex(
+        spark.createDataFrame(centRows.asJava, StructType(Seq(
+          StructField("centroid_id", centType),
+          StructField("vec", vecType)))),
+        spark.createDataFrame(corpusRows.asJava, StructType(Seq(
+          StructField("neighbor_id", idType), StructField("cv", vecType),
+          StructField("centroid_id", LongType),
+          StructField("cn", DoubleType)))))
+    }
+  }
+
+  /** [[coarseCentroids]] on the driver over collected (id, vector)
+    * columns: per `pmod(id, k)` group and position, the sum and count of
+    * the non-null components in row order, then `sum / count` as `avg`
+    * computes it (null without a component). Groups ascending. */
+  private def hashModCentroids(c: PathFinder.Columns,
+      k: Int): Seq[(Long, ArrayData)] = {
+    val sums = scala.collection.mutable.TreeMap.empty[Long,
+      (Array[Double], Array[Long])]
+    val ids = c.longs(0)
+    c.values(1).iterator.zipWithIndex.foreach {
+      case (v: ArrayData, i) if v.numElements() > 0 =>
+        val g = java.lang.Math.floorMod(ids(i), k.toLong)
+        val n = v.numElements()
+        val (s0, c0) = sums.getOrElse(g, (new Array[Double](0),
+          new Array[Long](0)))
+        val (s, cnt) = if (s0.length >= n) (s0, c0)
+          else (java.util.Arrays.copyOf(s0, n), java.util.Arrays.copyOf(c0, n))
+        var p = 0
+        while (p < n) {
+          if (!v.isNullAt(p)) { s(p) += v.getDouble(p); cnt(p) += 1 }
+          p += 1
+        }
+        sums(g) = (s, cnt)
+      case _ =>
+    }
+    sums.toSeq.map { case (g, (s, cnt)) =>
+      g -> (new GenericArrayData(Array.tabulate[Any](s.length)(p =>
+        if (cnt(p) == 0) null else s(p) / cnt(p))): ArrayData)
+    }
+  }
+
+  /** The local branch of [[searchIvf]]: when the index's centroids and
+    * listed vectors and the non-null-id queries each fit [[ivfCap]], they
+    * are collected (the index frames memoized, the queries not: a query
+    * batch rarely repeats) and probe, in-list scan and top-k run on the
+    * driver with the arithmetic of `vec_dot` and `vec_norm`
+    * ([[graft.functions.VecMath]]) and the distributed plan's orders:
+    * probes by `sim DESC, centroid_id ASC`, neighbours by
+    * `cosine DESC, neighbor_id ASC`, a null score last. A null query
+    * vector scores null. Returns the unrounded cosine; None over the
+    * gate or for non-integral ids. */
+  private def localIvfSearch(index: IvfIndex, queries: DataFrame, k: Int,
+      nprobe: Int, idCol: String, vecCol: String): Option[DataFrame] = {
+    import PathFinder.collectUnder
+    val qType = queries.schema(idCol).dataType
+    val nType = index.corpus.schema("neighbor_id").dataType
+    val cap = ivfCap(queries)
+    if (!Seq(qType, nType, index.centroids.schema("centroid_id").dataType)
+        .forall(longIds)) return None
+    for {
+      cents <- collectUnder(index.centroids
+        .where(col("centroid_id").isNotNull)
+        .select(col("centroid_id").cast("long"),
+          col("vec").cast("array<double>")), cap)
+      listed <- collectUnder(index.corpus
+        .where(col("neighbor_id").isNotNull &&
+          col("centroid_id").isNotNull && col("cv").isNotNull)
+        .select(col("neighbor_id").cast("long"),
+          col("cv").cast("array<double>"), col("centroid_id").cast("long"),
+          col("cn").cast("double")), cap)
+      qs <- collectUnder(queries.where(col(idCol).isNotNull)
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<double>")),
+        cap, memo = false)
+    } yield {
+      val cIds = cents.longs(0)
+      val cVecs = cents.values(1).map(_.asInstanceOf[ArrayData])
+      val cNorms = cVecs.map(v => if (v == null) 0.0 else VecMath.norm(v))
+      val (nIds, nVecs, nLists, nNorms) = (listed.longs(0),
+        listed.values(1).map(_.asInstanceOf[ArrayData]), listed.longs(2),
+        listed.doubles(3))
+      val lists = nLists.indices.groupBy(nLists(_))
+      // [[cosinePre]] given both norms: null for a null vector, 0.0 for a
+      // zero norm product
+      def cosine(a: ArrayData, an: Double, b: ArrayData,
+          bn: Double): java.lang.Double =
+        if (a == null || b == null) null
+        else if (an * bn == 0.0) 0.0
+        else VecMath.dot(a, b) / (an * bn)
+      val qIds = qs.longs(0)
+      val qVecs = qs.values(1).map(_.asInstanceOf[ArrayData])
+      val qNorms = qVecs.map(v => if (v == null) 0.0 else VecMath.norm(v))
+      val out = Seq.newBuilder[Row]
+      // both windows partition by query id: the rows of one id share
+      // their nprobe (row, centroid) probes and their top k
+      qIds.indices.groupBy(qIds(_)).foreach { case (qid, qrows) =>
+        val pairs = for (q <- qrows; c <- cIds.indices) yield (q, c)
+        val sim = pairs.map { case (q, c) =>
+          cosine(qVecs(q), qNorms(q), cVecs(c), cNorms(c)) }.toArray
+        val cand = pairs.indices
+          .sortWith(descThenId(sim, pairs.map(p => cIds(p._2)).toArray))
+          .take(nprobe)
+          .flatMap { i => val (q, c) = pairs(i)
+            lists.getOrElse(cIds(c), Nil).filter(nIds(_) != qid).map(q -> _)
+          }
+        val cos = cand.map { case (q, j) =>
+          cosine(qVecs(q), qNorms(q), nVecs(j), nNorms(j)) }.toArray
+        val candIds = cand.map(c => nIds(c._2)).toArray
+        cand.indices.sortWith(descThenId(cos, candIds)).take(k)
+          .zipWithIndex.foreach { case (j, r) =>
+            out += Row(idValue(qType, qid), idValue(nType, candIds(j)),
+              (r + 1).toLong, cos(j))
+          }
+      }
+      queries.sparkSession.createDataFrame(out.result().asJava,
+        StructType(Seq(StructField("query_id", qType),
+          StructField("neighbor_id", nType), StructField("rank", LongType),
+          StructField("cosine", DoubleType))))
+    }
   }
 
   // ===========================================================================
@@ -321,14 +571,16 @@ object Similarity {
   // per-query releaseAll must not drop it. The handle owner calls
   // `release()` when done. For a built/appended index release is a plain
   // uncache (idempotent; the index still answers searches, it just
-  // recomputes). For a COMPACTED index release also frees the checkpoint
-  // blocks backing the flattened frames — their lineage was truncated,
-  // so a compacted index must not be searched after release; the durable
-  // alternative is [[saveIvfIndex]]/[[loadIvfIndex]].
+  // recomputes); a locally built index holds local relations, so
+  // release does nothing. For a COMPACTED index release also frees the
+  // checkpoint blocks backing the flattened frames — their lineage was
+  // truncated, so a compacted index must not be searched after release;
+  // the durable alternative is [[saveIvfIndex]]/[[loadIvfIndex]].
 
   /** Prebuilt IVF index: `centroids` (centroid_id, vec) and the assigned
-    * `corpus` (neighbor_id, cv, cn, centroid_id), both persisted and
-    * materialized by [[buildIvfIndex]]. */
+    * `corpus` (neighbor_id, cv, centroid_id, cn), both persisted and
+    * materialized by [[buildIvfIndex]], or two local relations under the
+    * gate (release is then a no-op). */
   final case class IvfIndex(centroids: DataFrame, corpus: DataFrame) {
     def release(): Unit = Seq(centroids, corpus).foreach { df =>
       try df.unpersist(blocking = false) catch { case _: Exception => () }
@@ -340,31 +592,42 @@ object Similarity {
   /** Build an [[IvfIndex]] over `corpus`: coarse centroids (hash-mod
     * [[coarseCentroids]] by default — [[ivfTopK]]'s convention; pass
     * `centroids = Some(kMeans(...))` for trained lists) and the per-list
-    * corpus assignment, persisted + materialized. One centroid pass +
-    * one fused assignment projection over the corpus — the same work a
-    * single [[ivfTopK]] call does, paid once. */
+    * corpus assignment. A corpus under the gate is one memoized collect
+    * plus a driver build ([[localIvfIndex]]); a bigger one is persisted
+    * + materialized: one centroid pass + one fused assignment projection
+    * over the corpus — the same work a single [[ivfTopK]] call does,
+    * paid once. */
   def buildIvfIndex(corpus: DataFrame, numCentroids: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroids: Option[DataFrame] = None): IvfIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cents = centroids
-      .getOrElse(coarseCentroids(corpus, numCentroids, idCol, vecCol))
-      .select(col("centroid_id"), col("vec"))
-      .persist(lvl)
-    val assigned = ivfCorpusFrame(corpus, cents, idCol, vecCol).persist(lvl)
-    cents.count()
-    assigned.count()
-    IvfIndex(cents, assigned)
-  }
+      centroids: Option[DataFrame] = None): IvfIndex =
+    localIvfIndex(corpus, numCentroids, idCol, vecCol, centroids)
+      .getOrElse {
+        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+        val cents = centroids
+          .getOrElse(coarseCentroids(corpus, numCentroids, idCol, vecCol))
+          .select(col("centroid_id"), col("vec"))
+          .persist(lvl)
+        val assigned =
+          ivfCorpusFrame(corpus, cents, idCol, vecCol).persist(lvl)
+        cents.count()
+        assigned.count()
+        IvfIndex(cents, assigned)
+      }
 
   /** Search a prebuilt [[IvfIndex]]: identical semantics (and results)
     * to [[ivfTopK]] with the index's centroids, minus the per-call
-    * build. @return (query_id, neighbor_id, rank, cosine) */
+    * build. Index frames and queries under the gate are searched on the
+    * driver ([[localIvfSearch]]). @return (query_id, neighbor_id, rank,
+    * cosine) */
   def searchIvf(index: IvfIndex, queries: DataFrame, k: Int,
       nprobe: Int = 4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    searchIvfFrames(queries, index.centroids, index.corpus, k, nprobe,
-      idCol, vecCol)
+      vecCol: String = "embedding"): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be positive (got $nprobe)")
+    localIvfSearch(index, queries, k, nprobe, idCol, vecCol)
+      .map(ivfResult)
+      .getOrElse(searchIvfFrames(queries, index.centroids, index.corpus, k,
+        nprobe, idCol, vecCol))
+  }
 
   /** Prebuilt IVF-PQ index: coarse `centroids` (centroid_id, vec),
     * inverted `lists` (neighbor_id, centroid_id), PQ `codebooks`
@@ -676,27 +939,18 @@ object Similarity {
     // smallest-id tie-break are bit-identical to the declarative form
     // (IvfAssign scaladoc); an empty centroid table keeps the previous
     // crossJoin-with-empty semantics (no output rows).
+    // A null centroid id names no list and is skipped.
     val rows = centroids
+      .where(col("centroid_id").isNotNull)
       .select(col("centroid_id").cast("long"),
         col("vec").cast("array<double>"))
-      .collect().sortBy(_.getLong(0))
+      .collect()
     if (rows.isEmpty)
       return df.withColumn("centroid_id", lit(0L)).filter(lit(false))
-    val dims = rows.head.getSeq[Double](1).length
-    val ids = rows.map(_.getLong(0))
-    val cents = new Array[Double](rows.length * dims)
-    val cnorms = new Array[Double](rows.length)
-    rows.zipWithIndex.foreach { case (r, c) =>
-      val v = r.getSeq[Double](1)
-      var s = 0.0
-      var i = 0
-      while (i < v.length && i < dims) {
-        cents(c * dims + i) = v(i); s += v(i) * v(i); i += 1
-      }
-      cnorms(c) = math.sqrt(s)
-    }
-    df.withColumn("centroid_id", graft.functions.VectorFunctions.ivf_assign(
-      col(vecCol).cast("array<double>"), cents, cnorms, ids, dims))
+    val packed = new PackedCentroids(rows.toSeq.map(r =>
+      r.getLong(0) -> new GenericArrayData(r.getSeq[Any](1).toArray)))
+    df.withColumn("centroid_id",
+      packed.column(col(vecCol).cast("array<double>")))
   }
 
   // ===========================================================================

@@ -240,4 +240,42 @@ class FusedProbeSpec extends AnyFunSuite {
     assert(!cpJobs.exists(_.startsWith("first at")), cpJobs)
     assert(!cpCached, cpJobs)
   }
+
+  test("job budget: an IVF index under the gate builds warm with no job " +
+      "and no storage level and searches with one query collect; one " +
+      "vector past the array cap builds persisted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{array, col, lit}
+    import org.apache.spark.storage.StorageLevel
+    import graft.ops.Similarity
+    val schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    val vecs = (0L until 40L).map(i =>
+      Row(i, Seq((i % 5).toDouble, (i % 3).toDouble + 1.0)))
+    val corpus = rddFrame(vecs, schema)
+    PlanMemo.clearAll()
+    Similarity.buildIvfIndex(corpus, numCentroids = 4) // primes the memo
+    val (idx, buildJobs, _) =
+      jobsOf(Similarity.buildIvfIndex(corpus, numCentroids = 4))
+    assert(buildJobs.isEmpty, buildJobs)
+    assert(Seq(idx.centroids, idx.corpus).forall(
+      _.storageLevel == StorageLevel.NONE))
+    val queries = rddFrame(vecs.take(5), schema)
+    val (res, searchJobs, _) =
+      jobsOf(Similarity.searchIvf(idx, queries, k = 3, nprobe = 2))
+    assert(searchJobs.length == 1 && searchJobs.head.startsWith("collect at"),
+      searchJobs)
+    val (out, runJobs, _) = jobsOf(res.collect())
+    assert(runJobs.isEmpty, runJobs)
+    assert(out.length == 15)
+    idx.release()
+    assert(Similarity.searchIvf(idx, queries, k = 3, nprobe = 2).count() == 15)
+    val s = Fixture.init()
+    val big = s.range(PathFinder.localMaxArrayRows + 1).select(
+      col("id").as("vec_id"),
+      array(col("id").cast("double"), lit(1.0)).as("embedding"))
+    val persisted = Similarity.buildIvfIndex(big, numCentroids = 4)
+    try assert(Seq(persisted.centroids, persisted.corpus).forall(
+      _.storageLevel != StorageLevel.NONE))
+    finally { persisted.release(); PlanMemo.clearAll() }
+  }
 }

@@ -31,7 +31,9 @@ import graft.pgq.PathMode
   * and g = n, null ids dropped and an empty input empty, and all but the
   * walks the brute-force answer. The compiler's array id translation,
   * whose join form runs only past the 65536-row local-map cap, must
-  * equal its local-map form on random arrays and bijections. */
+  * equal its local-map form on random arrays and bijections. IVF build,
+  * search and one-shot top-k must give the same rows and column types at
+  * g = n − 1 and g = n, n the corpus vectors with an id. */
 class GateBoundarySpec extends AnyFunSuite {
   import Fixture._
 
@@ -85,7 +87,7 @@ class GateBoundarySpec extends AnyFunSuite {
 
   test("BFS and WCC at g = n - 1 (distributed) and g = n (local) equal " +
       "brute force") {
-    check(6)(Prop.forAll(graphs, seedSets, Gen.choose(1L, 4L)) {
+    check(6)(Prop.forAllNoShrink(graphs, seedSets, Gen.choose(1L, 4L)) {
       (g, seeds, depth) =>
         val s = init()
         import s.implicits._
@@ -211,7 +213,7 @@ class GateBoundarySpec extends AnyFunSuite {
 
   test("SCC and earliestArrivalFromMin at g = n - 1 (distributed) and " +
       "g = n (local) equal brute force") {
-    check(6)(Prop.forAll(graphs, seedSets, Gen.choose(1, 3)) {
+    check(6)(Prop.forAllNoShrink(graphs, seedSets, Gen.choose(1, 3)) {
       (g, seeds, hops) =>
         val s = init()
         import s.implicits._
@@ -238,7 +240,7 @@ class GateBoundarySpec extends AnyFunSuite {
 
   test("harmonic and betweenness centrality and k-core at g = n - 1 " +
       "(distributed) and g = n (local) agree and equal brute force") {
-    check(6)(Prop.forAll(graphs, Gen.choose(1, 3)) { (g, k) =>
+    check(6)(Prop.forAllNoShrink(graphs, Gen.choose(1, 3)) { (g, k) =>
       val s = init()
       import s.implicits._
       val (edges, vs) = (frame(g), vertices.toDF("id"))
@@ -395,7 +397,8 @@ class GateBoundarySpec extends AnyFunSuite {
       "gate (local) agree: planted near-duplicates, null ids and texts, " +
       "buckets over a small maxBucketSize") {
     var paired = 0
-    check(10)(Prop.forAll(corpora, Gen.choose(2, 4)) { (docs, small) =>
+    check(10)(Prop.forAllNoShrink(corpora, Gen.choose(2, 4)) {
+        (docs, small) =>
       Seq(20000, small).forall { maxBucket =>
         val n = docs.length.toLong
         // g = n takes the local kernel unless its kept buckets hold more
@@ -442,7 +445,7 @@ class GateBoundarySpec extends AnyFunSuite {
       "default gate; at the cap the local kernel answers the same pair") {
     import org.apache.spark.sql.functions.{concat, lit, when}
     val s = init()
-    val cap = graft.ops.Dedup.lshLocalMaxDocs
+    val cap = PathFinder.localMaxArrayRows
     // two copies of one text and unrelated three-word texts
     def corpus(n: Long): DataFrame = s.range(n).select(col("id").as("doc_id"),
       when(col("id") < 2, lit("ant bee cat dog")).otherwise(concat(
@@ -474,7 +477,7 @@ class GateBoundarySpec extends AnyFunSuite {
       "unpackable ids, a hot key under maxKeyDegree") {
     val s = init()
     import s.implicits._
-    check(8)(Prop.forAll(
+    check(8)(Prop.forAllNoShrink(
         Gen.oneOf(0L, 1L << 31, -(1L << 40)).flatMap(memberships),
         Gen.choose(2L, 3L)) { (ms, maxDeg) =>
       val n = ms.count { case (u, v) => u.isDefined && v.isDefined }
@@ -492,6 +495,98 @@ class GateBoundarySpec extends AnyFunSuite {
     val empty = Seq.empty[(Long, Long)].toDF("u", "v")
     Seq(0L, 2000000L).foreach(gate => assert(withGate(s, gate)(
       Algorithms.bipartiteProjection(empty).collect()).isEmpty))
+  }
+
+  private type IvfRow = (Option[Long], Option[List[java.lang.Double]])
+
+  /** 0–12 IVF corpus or query rows: an id in 0..20 and a vector of 0–3
+    * dyadic components in [−2, 2], so every centroid mean is exact on
+    * both branches; about one id, one vector and one component in eight
+    * is null. */
+  private val ivfRows: Gen[List[IvfRow]] =
+    Gen.choose(0, 12).flatMap(Gen.listOfN(_, for {
+      id <- Gen.choose(0L, 20L); nid <- Gen.choose(0, 7)
+      nv <- Gen.choose(0, 7)
+      comps <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, for {
+        x <- Gen.choose(-8, 8); nx <- Gen.choose(0, 7)
+      } yield if (nx > 0) java.lang.Double.valueOf(x / 4.0) else null))
+    } yield (Option(id).filter(_ => nid > 0),
+      Option(comps).filter(_ => nv > 0))))
+
+  /** `rows` as (vec_id, embedding `array<float>`, as the benchmark's). */
+  private def ivfFrame(rows: Seq[IvfRow]): DataFrame = {
+    val s = init()
+    import s.implicits._
+    rows.toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+  }
+
+  /** Caller centroids for IVF: three dyadic vectors and a null id. */
+  private def ivfCentroids: DataFrame = {
+    val s = init()
+    import s.implicits._
+    Seq[(Option[Long], Seq[Double])]((Some(2L), Seq(1.0, 0.5)),
+      (Some(0L), Seq(-1.0, 0.25, 2.0)), (Some(1L), Seq(0.0, -0.75)),
+      (None, Seq(1.0, 1.0))).toDF("centroid_id", "vec")
+  }
+
+  /** Per IVF entry point — build + search, one-shot top-k with hash-mod
+    * and with caller centroids — its rows and its column types, run at
+    * `gate` with every cache released after. */
+  private def ivfAt(gate: Long, corpus: DataFrame, queries: DataFrame,
+      lists: Int, nprobe: Int, k: Int, cents: Option[DataFrame])
+      : Seq[(Seq[Seq[Any]], Seq[String])] = withGate(spark, gate) {
+    import graft.ops.Similarity
+    def out(df: DataFrame) =
+      (rows(df), df.schema.fields.map(_.dataType.simpleString).toSeq)
+    val idx = Similarity.buildIvfIndex(corpus, lists, centroids = cents)
+    try Seq(out(Similarity.searchIvf(idx, queries, k, nprobe)),
+      out(Similarity.ivfTopK(queries, corpus, k, lists, nprobe,
+        centroids = cents)))
+    finally { idx.release(); graft.OpCaches.releaseAll() }
+  }
+
+  test("IVF build + search and one-shot top-k at g = n - 1 (distributed) " +
+      "and g = n (local) agree: null ids, vectors and components in " +
+      "corpus and queries, nprobe past the list count, caller centroids") {
+    check(10)(Prop.forAllNoShrink(ivfRows, ivfRows, Gen.choose(1, 4),
+        Gen.choose(1, 5), Gen.choose(1, 3), Gen.oneOf(false, true)) {
+        (rows, qrows, lists, nprobe, k, given) =>
+      val corpus = ivfFrame(rows)
+      val n = rows.count(_._1.isDefined).toLong
+      // at most n queries with distinct ids: of two query rows sharing an
+      // id, the distributed probe window breaks a tie between them
+      // arbitrarily
+      val queries = ivfFrame(qrows.distinctBy(_._1).take(n.toInt))
+      val cents = Option.when(given)(ivfCentroids)
+      val Seq(dist, local) = Seq(n - 1, n).map(ivfAt(_, corpus, queries,
+        lists, nprobe, k, cents))
+      dist.zip(local).forall { case ((dr, dt), (lr, lt)) =>
+        sameRows(dr, lr) && dt == lt }
+    })
+  }
+
+  test("IVF: a query equidistant from two centroids probes the smaller " +
+      "id at both gates; an empty corpus or query set answers nothing") {
+    val s = init()
+    import s.implicits._
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("centroid_id", "vec")
+    val corpus = Seq((10L, Seq(2.0, 0.0)), (11L, Seq(0.0, 2.0)),
+      (12L, Seq(1.0, 1.0))).toDF("vec_id", "embedding")
+    val queries = corpus.where(col("vec_id") === 12L)
+    // [1, 1] ties both centroids: it is listed under 0 and probes list 0
+    val want = Seq(Seq[Any](12L, 10L, 1L, 0.707107))
+    Seq(2L, 3L).foreach(gate => ivfAt(gate, corpus, queries, 2, 1, 3,
+      Some(cents)).foreach { case (got, _) => assert(got == want, gate) })
+    val empty = corpus.limit(0)
+    Seq(0L, 2000000L).foreach { gate =>
+      val outs = ivfAt(gate, empty, queries, 2, 2, 3, None) ++
+        ivfAt(gate, corpus, empty, 2, 2, 3, None)
+      assert(outs.forall(_._1.isEmpty), gate)
+      assert(outs.map(_._2).distinct == Seq(
+        Seq("bigint", "bigint", "bigint", "double")), gate)
+    }
   }
 
   /** [[frame]] plus per-row `w` and `eid` columns that both fall along
@@ -516,15 +611,17 @@ class GateBoundarySpec extends AnyFunSuite {
       (run: => Seq[DataFrame]): Boolean = {
     val Seq(dist, local) = Seq(distGate, localGate).map(gate =>
       withGate(spark, gate)(run.map(rows)))
-    dist.zip(local).forall { case (d, l) =>
-      d.length == l.length && d.zip(l).forall { case (x, y) =>
-        x.zip(y).forall {
-          case (a: Double, b: Double) => math.abs(a - b) <= 1e-9
-          case (a, b) => a == b
-        }
+    dist.zip(local).forall { case (d, l) => sameRows(d, l) }
+  }
+
+  /** Equal [[rows]], doubles within 1e-9. */
+  private def sameRows(d: Seq[Seq[Any]], l: Seq[Seq[Any]]): Boolean =
+    d.length == l.length && d.zip(l).forall { case (x, y) =>
+      x.zip(y).forall {
+        case (a: Double, b: Double) => math.abs(a - b) <= 1e-9
+        case (a, b) => a == b
       }
     }
-  }
 
   /** A frame's rows as value lists, arrays as lists, sorted by their
     * non-double values. */

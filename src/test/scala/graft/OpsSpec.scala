@@ -8,7 +8,7 @@ import graft.ops.{Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis
 /** Unit coverage for the pipeline ops: IVF vs brute-force recall,
   * mapPartitions decode, LSH determinism, dedup invariants. */
 class OpsSpec extends AnyFunSuite {
-  import Fixture.{init, withConf, ForceDist}
+  import Fixture.{init, withConf, withGate, ForceDist}
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -1253,9 +1253,10 @@ class OpsSpec extends AnyFunSuite {
       "ivfTopK and survive repeated query batches") {
     val s = init()
     val e = s.read.parquet(s"$sf/embeddings.parquet")
-    val idx = Similarity.buildIvfIndex(e, numCentroids = 8)
+    // over the gate the build persists + materializes: both frames carry
+    // a storage level (under it they are local relations)
+    val idx = withGate(s, 0L)(Similarity.buildIvfIndex(e, numCentroids = 8))
     try {
-      // persisted + materialized: both frames carry a storage level
       assert(idx.centroids.storageLevel.useMemory ||
         idx.centroids.storageLevel.useDisk)
       assert(idx.corpus.storageLevel.useMemory ||
@@ -1297,6 +1298,43 @@ class OpsSpec extends AnyFunSuite {
     // (per-query release), never raw session-lifetime persists
     graft.OpCaches.releaseAll()
     assert(graft.OpCaches.trackedCount == 0)
+  }
+
+  test("IVF index built under the gate (local) searches as one built " +
+      "over it (g = n - 1) after append, compact and save + load; " +
+      "release on a local index is a no-op") {
+    val s = init()
+    val e = s.read.parquet(s"$sf/embeddings.parquet")
+    val half = e.filter(col("vec_id") % 2 === 0)
+    val delta = e.filter(col("vec_id") % 2 === 1)
+    val q = e.filter(col("vec_id") < 10)
+    val n = half.count()
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_local")
+      .toString
+    def search(idx: Similarity.IvfIndex) =
+      annRows(Similarity.searchIvf(idx, q, k = 5, nprobe = 3))
+    def lifecycle(gate: Long): Seq[Any] = withGate(s, gate) {
+      val built = Similarity.buildIvfIndex(half, numCentroids = 8)
+      val local = built.corpus.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      Similarity.saveIvfIndex(built, dir)
+      val loaded = Similarity.loadIvfIndex(s, dir)
+      val saved = try search(loaded) finally loaded.release()
+      built.release()
+      val before = search(built)
+      val appended = Similarity.appendToIvfIndex(built, delta)
+      val afterAppend = search(appended)
+      val flat = Similarity.compactIvfIndex(appended)
+      try Seq(local, before, saved, afterAppend, search(flat))
+      finally flat.release()
+    }
+    try {
+      val Seq(dist, local) = Seq(n - 1, n).map(lifecycle)
+      assert(!dist.head.asInstanceOf[Boolean] &&
+        local.head.asInstanceOf[Boolean])
+      assert(dist.tail == local.tail)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
   }
 
   test("appendToIvfIndex: frozen-quantizer append searches identically " +
